@@ -13,11 +13,13 @@ job:
 - ``--log-dir``: directory of staged ``…postgresql.log.YYYY-MM-DD-HH``
   files (stage from RDS with sources/rds_ingest.py, which adds the
   retries/status checks the reference lacks — rds_download_log.py:119-125).
-- Selection = sources/logcatalog.select_log_files (O2–O8 as one plan).
+- Selection = sources/logcatalog.select_names (O2–O8 over the listing).
 - Parsing = operators/logparse.parse_logs (P1–P4).
-- Report = plans/reports.full_report (P5–P11), written hour-partitioned
-  (P12) with dynamic partition overwrite for idempotent re-runs (O15),
-  plus the reference-shaped single HTML artifact on request.
+- Events are written hour-partitioned (P12) with dynamic partition
+  overwrite for idempotent re-runs (O15).
+- Report = plans/reports.full_report (P5–P11), collected in one Spark
+  action and written one parquet table per section, plus the
+  reference-shaped single HTML artifact on request, from the same rows.
 
 Parameters fall back to environment variables like the reference's click
 ``envvar`` bindings (rds_pgbadger.py:133-134).
@@ -284,6 +286,13 @@ def _parser(spark, strategy: str, paths: list[str]):
     return parse_logs_splitwise if strategy == "splitwise" else parse_logs
 
 
+def _list_names(log_dir: str) -> list[str]:
+    return [
+        f for f in os.listdir(log_dir)
+        if os.path.isfile(os.path.join(log_dir, f))
+    ]
+
+
 def run_pipeline(
     spark,
     log_dir: str,
@@ -292,26 +301,18 @@ def run_pipeline(
     max_records: int = 5,
     html_path: str | None = None,
     strategy: str = "auto",
-) -> dict[str, int]:
-    """Select → parse → report → sink; returns row counts per stage."""
-    from pyspark.sql import functions as F
+) -> dict:
+    """Select → parse → report → sink; returns row counts per stage and,
+    under ``report_rows``, the row count of each report section."""
     from rds_pgbadger_etl_spark.plans.reports import full_report
     from rds_pgbadger_etl_spark.sinks.report_sink import (
         render_html,
         write_events_partitioned,
         write_report,
     )
-    from rds_pgbadger_etl_spark.sources.logcatalog import select_log_files
+    from rds_pgbadger_etl_spark.sources.logcatalog import select_names
 
-    names = [
-        f for f in os.listdir(log_dir)
-        if os.path.isfile(os.path.join(log_dir, f))
-    ]
-    catalog = spark.createDataFrame([(n,) for n in names] or [("",)], ["file_name"])
-    selected = [
-        r.file_name
-        for r in select_log_files(catalog, reference_dt, max_records).collect()
-    ]
+    selected = select_names(_list_names(log_dir), reference_dt, max_records)
     if not selected:
         raise SystemExit(f"no closed-hour log files in {log_dir} before {reference_dt}")
 
@@ -324,10 +325,10 @@ def run_pipeline(
     # other queries in this session still hold handles to (plans/_shared)
     release_parse_caches()
 
-    # Report from the just-written parquet, NOT the parse plan: each of
-    # the 11 section writes (plus the HTML render) is its own action, so
-    # feeding them the raw plan re-parses the logs once per section.
-    # Re-reading also gives every section column pruning at the scan.
+    # Report from the just-written parquet, NOT the parse plan: the
+    # report's one action would otherwise re-parse the logs inside each
+    # of its 11 section branches. Re-reading also gives every section
+    # column pruning at the scan.
     # Filter to THIS run's (log_date, log_hour) partitions: with dynamic
     # partition overwrite, hours written by earlier runs into the same
     # out_dir survive the write and must not leak into this run's report
@@ -337,13 +338,16 @@ def run_pipeline(
     stored = spark.read.parquet(os.path.join(out_dir, "events")).filter(
         _hours_predicate(selected)
     )
-    sections = full_report(stored)
-    write_report(sections, os.path.join(out_dir, "report"))
+    tables = write_report(full_report(stored), os.path.join(out_dir, "report"))
     if html_path:
-        render_html(sections, html_path)
+        render_html(tables, html_path)
 
     # counts come from the write-side Observation — no extra scan action
-    return {"files": len(selected), **quality}
+    return {
+        "files": len(selected),
+        **quality,
+        "report_rows": {n: t.num_rows for n, t in tables.items()},
+    }
 
 
 def _parse_hour(name: str) -> tuple[str, int]:
@@ -385,17 +389,20 @@ def _hours_predicate(file_names: list[str]):
     )
 
 
-def _write_hourly_reports(spark, out_dir: str, file_names: list[str]) -> None:
+def _write_hourly_reports(
+    spark, out_dir: str, file_names: list[str]
+) -> dict[str, int]:
     """One report per newly processed hour — the reference's per-file
     artifact semantics (one pgBadger HTML per input log,
     rds_pgbadger.py:44-45,124-129) in the cron mode. Each hour's
     sections read ONLY that hour's partition of the stored events
-    (partition-pruned scan), and land under
+    (partition-pruned scan) in one Spark action, and land under
     report/log_date=…/log_hour=…/<section>, so a re-processed hour
     replaces exactly its own report. The per-hour loop is cron-scale by
     construction: the reference caps files per run (max_records,
     rds_pgbadger.py:80); a backfill uses run_pipeline's corpus-level
-    report instead.
+    report instead. Returns each section's row count, summed over the
+    hours.
     """
     from pyspark.sql import functions as F
 
@@ -403,16 +410,19 @@ def _write_hourly_reports(spark, out_dir: str, file_names: list[str]) -> None:
     from rds_pgbadger_etl_spark.sinks.report_sink import write_report
 
     stored = spark.read.parquet(os.path.join(out_dir, "events"))
+    rows: dict[str, int] = {}
     for name in file_names:
         d, h = _parse_hour(name)
         ev_h = stored.filter(
             (F.col("log_date") == d) & (F.col("log_hour") == h)
         )
-        sections = full_report(ev_h)
-        write_report(
-            sections,
+        tables = write_report(
+            full_report(ev_h),
             os.path.join(out_dir, "report", f"log_date={d}", f"log_hour={h}"),
         )
+        for n, t in tables.items():
+            rows[n] = rows.get(n, 0) + t.num_rows
+    return rows
 
 
 def run_incremental(
@@ -421,7 +431,7 @@ def run_incremental(
     out_dir: str,
     reference_dt: datetime,
     strategy: str = "auto",
-) -> dict[str, int]:
+) -> dict:
     """The reference's cron mode (Dockerfile:15: run hourly, process
     what's new, skip what's done) for a staged local/object-store dir.
 
@@ -433,9 +443,13 @@ def run_incremental(
     checkpoint cannot express (a source-tracked file is never
     re-offered). Events append hour-partitioned with dynamic partition
     overwrite, so a re-processed hour replaces exactly itself.
+
+    Returns files processed and skipped; when files were processed, also
+    the write's parse-quality counters and ``report_rows`` (each
+    section's row count, summed over the processed hours).
     """
     from rds_pgbadger_etl_spark.sinks.report_sink import write_events_partitioned
-    from rds_pgbadger_etl_spark.sources.logcatalog import select_log_files
+    from rds_pgbadger_etl_spark.sources.logcatalog import select_names
 
     os.makedirs(out_dir, exist_ok=True)
     manifest = os.path.join(out_dir, "_processed_files.txt")
@@ -444,15 +458,7 @@ def run_incremental(
         with open(manifest) as f:
             done = set(f.read().split())
 
-    names = [
-        f for f in os.listdir(log_dir)
-        if os.path.isfile(os.path.join(log_dir, f))
-    ]
-    catalog = spark.createDataFrame([(n,) for n in names] or [("",)], ["file_name"])
-    closed = [
-        r.file_name
-        for r in select_log_files(catalog, reference_dt, max_records=None).collect()
-    ]
+    closed = select_names(_list_names(log_dir), reference_dt, max_records=None)
     todo = [n for n in closed if n not in done]
     quality: dict = {}
     if todo:
@@ -466,7 +472,7 @@ def run_incremental(
             events, os.path.join(out_dir, "events")
         )
         release_parse_caches()  # splitwise segment cache, if any
-        _write_hourly_reports(spark, out_dir, todo)
+        quality["report_rows"] = _write_hourly_reports(spark, out_dir, todo)
         # atomic manifest update (temp + rename), mirroring O13
         tmp = manifest + ".tmp"
         with open(tmp, "w") as f:
@@ -522,6 +528,8 @@ def main(argv: list[str] | None = None) -> None:
     if not args.log_dir or not args.out_dir:
         raise SystemExit("--log-dir and --out-dir are required (or env vars)")
 
+    import json
+
     from rds_pgbadger_etl_spark.session import get_spark
 
     spark = get_spark(app_name="rds-pgbadger-etl-spark", cpus=args.cpus)
@@ -534,6 +542,8 @@ def main(argv: list[str] | None = None) -> None:
             strategy=args.strategy,
         )
         print(f"processed {stats['files']} new files ({stats['skipped']} already done)")
+        if "report_rows" in stats:
+            print(f"report rows: {json.dumps(stats['report_rows'])}")
         return
     stats = run_pipeline(
         spark,

@@ -2,22 +2,35 @@
 
 Replaces the reference's Luigi-target plumbing (atomic temp-path write
 rds_pgbadger.py:47-49; local→S3 copy rds_pgbadger.py:14-31; per-target
-idempotency rds_pgbadger.py:25-26,44-45,70-71) with Spark-native writes:
+idempotency rds_pgbadger.py:25-26,44-45,70-71):
 
-- the file-output committer gives atomic commit (O13) for free;
-- ``partitionBy(log_date, log_hour)`` + dynamic partition overwrite gives
-  deterministic, idempotent re-runs per hour partition (O15) — re-running
-  an hour replaces exactly that hour;
+- events: ``partitionBy(log_date, log_hour)`` + dynamic partition
+  overwrite through Spark's file-output committer gives atomic commit
+  (O13) and deterministic, idempotent re-runs per hour partition (O15) —
+  re-running an hour replaces exactly that hour;
+- report: every section is bounded (a top-N, a per-bucket table, a cube
+  over distinct keys), so ``collect_report`` brings all sections of one
+  report to the driver in ONE Spark action, and ``write_report`` writes
+  each with pyarrow: temp file, ``os.replace`` into a fixed name, earlier
+  part files removed, ``_SUCCESS`` last — atomic and idempotent per
+  section;
 - an optional HTML rendering step reproduces the reference's one-HTML-
-  per-run artifact (rds_pgbadger.py:26,45) from the section tables.
+  per-run artifact (rds_pgbadger.py:26,45) from the same collected rows.
 """
 
 from __future__ import annotations
 
 import html as _html
+import os
+import tempfile
+from functools import reduce
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, StructField, StructType
 
 from rds_pgbadger_etl_spark.functions.scalar import extract_date_from_name
 
@@ -61,19 +74,100 @@ def write_events_partitioned(events: DataFrame, out_dir: str) -> dict:
     return {k: (v or 0) for k, v in m.items()}
 
 
-def write_report(sections: dict[str, DataFrame], out_dir: str) -> None:
-    """Write each report section as its own parquet table."""
-    for name, df in sections.items():
-        df.write.mode("overwrite").parquet(f"{out_dir}/{name}")
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every nested field and array element nullable."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    return dt
 
 
-def render_html(sections: dict[str, DataFrame], path: str, max_rows: int = 200) -> None:
+def collect_report(sections: dict[str, DataFrame]) -> dict[str, pa.Table]:
+    """All sections' rows in one Spark action, as one Arrow table each.
+
+    Branch i of a ``unionAll`` carries section i's row as the struct
+    column ``_s<i>`` and a null in every other section's column; one
+    ``toArrow()`` brings the union back and the ``_section`` index
+    splits it. Every struct field is cast to nullable: Arrow rejects a
+    null parent over a non-null child. Each branch keeps its own row
+    order (a top-N stays sorted)."""
+    names = list(sections)
+    types = [_nullable(sections[n].schema) for n in names]
+    branches = [
+        sections[n].select(
+            F.lit(i).alias("_section"),
+            *[
+                (
+                    F.struct(*[F.col(f"`{c}`") for c in sections[n].columns])
+                    if j == i
+                    else F.lit(None)
+                ).cast(t).alias(f"_s{j}")
+                for j, t in enumerate(types)
+            ],
+        )
+        for i, n in enumerate(names)
+    ]
+    rows = reduce(DataFrame.unionAll, branches).toArrow()
+    section = rows.column("_section")
+    return {
+        n: pa.Table.from_struct_array(
+            rows.filter(pc.equal(section, i)).column(f"_s{i}").combine_chunks()
+        )
+        for i, n in enumerate(names)
+    }
+
+
+def _write_section(table: pa.Table, path: str) -> None:
+    """Write one section table as ``path/part-00000.parquet``: a hidden
+    temp file ``os.replace``d into place, then every earlier file of the
+    directory removed (a re-run leaves one data file), then ``_SUCCESS``.
+    Readers skip names starting with ``.`` or ``_``, and the rename
+    replaces the previous run's file in one step, so they see either
+    the old table or the new one, never a partial file."""
+    os.makedirs(path, exist_ok=True)
+    final = os.path.join(path, "part-00000.parquet")
+    fd, tmp = tempfile.mkstemp(prefix=".part-", suffix=".tmp", dir=path)
+    os.close(fd)
+    try:
+        pq.write_table(table, tmp)
+        os.replace(tmp, final)
+    except BaseException:
+        os.unlink(tmp)
+        raise
+    for f in os.listdir(path):
+        p = os.path.join(path, f)
+        if p != final and os.path.isfile(p):
+            os.unlink(p)
+    open(os.path.join(path, "_SUCCESS"), "w").close()
+
+
+def write_report(sections: dict[str, DataFrame], out_dir: str) -> dict[str, pa.Table]:
+    """Write each report section as its own parquet table under
+    ``out_dir/<section>``, from one collect of all sections; returns the
+    collected tables (for ``render_html``)."""
+    tables = collect_report(sections)
+    for name, table in tables.items():
+        _write_section(table, os.path.join(out_dir, name))
+    return tables
+
+
+def render_html(
+    sections: dict[str, DataFrame] | dict[str, pa.Table],
+    path: str,
+    max_rows: int = 200,
+) -> None:
     """Materialize the report as one HTML document (the reference's
     artifact shape). Driver-side by design: sections are already
-    aggregated top-K/small tables."""
+    aggregated top-K/small tables. Takes the tables ``write_report``
+    returned, or DataFrames, which it collects in one action."""
+    if any(isinstance(v, DataFrame) for v in sections.values()):
+        sections = collect_report(sections)
     parts = ["<html><head><title>log report</title></head><body>"]
-    for name, df in sections.items():
-        pdf = df.limit(max_rows).toPandas()
+    for name, table in sections.items():
+        pdf = table.slice(0, max_rows).to_pandas()
         parts.append(f"<h2>{_html.escape(name)}</h2>")
         parts.append(pdf.to_html(index=False, border=0))
     parts.append("</body></html>")

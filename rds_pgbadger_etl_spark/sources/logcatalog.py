@@ -8,12 +8,13 @@ still-open reference hour (O5), sort by the timestamp parsed from the last
 13 name chars (O6), keep the newest ``max_records`` (O7), and fan out one
 task per file (O8).
 
-Here the whole selection is ONE declarative plan over a file-catalog
-DataFrame: deriving the hour window first makes the reference's day-chunk
-union and boundary-fill edge case (rds_pgbadger.py:104-110) structurally
-impossible, and Catalyst executes sort+limit as TakeOrderedAndProject
-(top-K, no global sort). Fan-out (O8) is just Spark reading the selected
-paths — one partition per file split.
+Here the whole selection is ONE function over the listed names
+(``select_names``): deriving the hour window first makes the reference's
+day-chunk union and boundary-fill edge case (rds_pgbadger.py:104-110)
+structurally impossible. The listing is already a Python list on the
+driver, so selecting there costs no Spark job; ``select_log_files`` adapts
+it to a file-catalog DataFrame for the registry. Fan-out (O8) is just
+Spark reading the selected paths — one partition per file split.
 
 File-name format: ``…postgresql.log.YYYY-MM-DD-HH`` (reference
 rds_pgbadger.py:120; rds_download_log.py:58).
@@ -21,23 +22,47 @@ rds_pgbadger.py:120; rds_download_log.py:58).
 
 from __future__ import annotations
 
-from datetime import datetime
+import re
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 # trailing-13-char timestamp, e.g. 2019-04-01-10
-NAME_TS_FORMAT = "yyyy-MM-dd-HH"
-NAME_TS_RE = r"(\d{4}-\d{2}-\d{2}-\d{2})$"
+_NAME_TS = re.compile(r"(\d{4}-\d{2}-\d{2}-\d{2})$", re.ASCII)
 
 
-def file_timestamp(col) -> F.Column:
-    """Parse the trailing YYYY-MM-DD-HH of a log file name; null when the
-    name does not end in a timestamp (quarantine, don't drop — O17)."""
-    c = F.col(col) if isinstance(col, str) else col
-    raw = F.regexp_extract(c, NAME_TS_RE, 1)
-    return F.try_to_timestamp(F.when(raw == "", None).otherwise(raw),
-                              F.lit(NAME_TS_FORMAT))
+def _name_ts(name: str) -> datetime | None:
+    """The trailing YYYY-MM-DD-HH of ``name`` as a datetime; None when the
+    name does not end in a valid timestamp (``garbage``, a month 13, a
+    ``.gz`` suffix): quarantine, don't drop — O17."""
+    m = _NAME_TS.search(name)
+    if m is None:
+        return None
+    try:
+        return datetime.strptime(m.group(1), "%Y-%m-%d-%H")
+    except ValueError:
+        return None
+
+
+def select_names(
+    names: list[str],
+    reference_dt: datetime,
+    max_records: int | None = 5,
+) -> list[str]:
+    """Pick the newest ``max_records`` *closed*-hour file names before the
+    reference hour — the reference's entire planning pipeline
+    (rds_pgbadger.py:83-129) over the listed names.
+
+    Newest first (timestamp, then name, descending). The reference-hour
+    file is excluded because it is still being written (O5 — the batch
+    twin of a 1-hour watermark). Names without a valid trailing
+    timestamp are quarantined, not failed on (O17). ``max_records=None``
+    means every closed hour.
+    """
+    ref_hour = reference_dt.replace(minute=0, second=0, microsecond=0)
+    dated = [(ts, n) for n in names if (ts := _name_ts(n)) is not None]
+    picked = sorted((d for d in dated if d[0] < ref_hour), reverse=True)
+    return [n for _ts, n in picked[:max_records]]
 
 
 def select_log_files(
@@ -46,24 +71,15 @@ def select_log_files(
     max_records: int | None = 5,
     name_col: str = "file_name",
 ) -> DataFrame:
-    """Pick the newest ``max_records`` *closed*-hour files at or before
-    the reference hour — the reference's entire planning pipeline
-    (rds_pgbadger.py:83-129) as one Catalyst plan.
-
-    Output: file_name, file_ts (desc order). The reference-hour file is
-    excluded because it is still being written (O5 — the batch twin of a
-    1-hour watermark). ``max_records=None`` means every closed hour —
-    expressed by OMITTING the limit, never by a huge K: ``.limit(k)``
-    compiles to TakeOrderedAndProject, which allocates a k-sized top-K
-    buffer per partition.
-    """
-    ref_hour = reference_dt.replace(minute=0, second=0, microsecond=0)
-    out = (
-        files.withColumn("file_ts", file_timestamp(name_col))
-        .filter(F.col("file_ts").isNotNull())
-        .filter(F.col("file_ts") < F.lit(ref_hour))  # closed hours only
-        .orderBy(F.col("file_ts").desc(), F.col(name_col).desc())
+    """``select_names`` over a file-catalog DataFrame: collects the names,
+    selects on the driver and returns (``name_col``, file_ts), newest
+    first. ``file_ts`` is the name's hour in UTC, the session time zone
+    (a naive datetime would be read in the process's local zone)."""
+    names = [r[0] for r in files.select(name_col).collect() if r[0] is not None]
+    return files.sparkSession.createDataFrame(
+        [
+            (n, _name_ts(n).replace(tzinfo=timezone.utc))
+            for n in select_names(names, reference_dt, max_records)
+        ],
+        f"`{name_col}` string, file_ts timestamp",
     )
-    if max_records is not None:
-        out = out.limit(max_records)
-    return out.select(name_col, "file_ts")

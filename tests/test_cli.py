@@ -14,7 +14,8 @@ from datetime import datetime
 
 from tests.test_logparse import FIXTURES
 
-from rds_pgbadger_etl_spark.cli import _parse_reference, run_pipeline
+from rds_pgbadger_etl_spark.cli import _parse_reference, main, run_pipeline
+from rds_pgbadger_etl_spark.plans.reports import REPORT_SECTIONS
 
 
 def _stage(tmp_path, hours: list[str]) -> str:
@@ -80,6 +81,9 @@ def test_run_incremental_manifest_semantics(spark, tmp_path):
     s1 = run_incremental(spark, log_dir, out_dir, ref)
     assert (s1["files"], s1["skipped"]) == (1, 0)
     assert s1["events"] > 0 and s1["malformed"] == 0
+    # each section's row count; basic.log holds 3 normalized queries
+    assert set(s1["report_rows"]) == set(REPORT_SECTIONS)
+    assert s1["report_rows"]["top_queries"] == 3
     # run 2: nothing new (no write happened -> no quality counters)
     s2 = run_incremental(spark, log_dir, out_dir, ref)
     assert s2 == {"files": 0, "skipped": 1}
@@ -98,6 +102,62 @@ def test_run_incremental_manifest_semantics(spark, tmp_path):
             f"{out_dir}/report/log_date={d}/log_hour={h}/top_queries"
         )
         assert top.count() > 0
+
+
+def test_rerun_hour_replaces_its_report_atomically(spark, tmp_path):
+    """Re-processing an hour rewrites each section in place: exactly one
+    data file per section, holding only the new run's rows, with
+    _SUCCESS — also over a section directory an earlier Spark write left
+    with its own part and checksum files."""
+    from rds_pgbadger_etl_spark.cli import run_incremental
+
+    log_dir = _stage(tmp_path, ["2024-01-15-09"])
+    out_dir = tmp_path / "out_rerun"
+    ref = datetime(2024, 1, 15, 10, 0)
+    report = out_dir / "report" / "log_date=2024-01-15" / "log_hour=9"
+    spark.range(3).write.parquet(str(report / "phase_timing"))  # old layout
+
+    s1 = run_incremental(spark, log_dir, str(out_dir), ref)
+    assert s1["report_rows"]["top_queries"] == 3
+    # the hour's file is re-staged with other contents and re-processed
+    shutil.copy(
+        os.path.join(FIXTURES, "errors.log"),
+        os.path.join(log_dir, "postgresql.log.2024-01-15-09"),
+    )
+    os.remove(out_dir / "_processed_files.txt")
+    s2 = run_incremental(spark, log_dir, str(out_dir), ref)
+    assert s2["files"] == 1 and s2["events"] == 9
+
+    for section, n in s2["report_rows"].items():
+        d = report / section
+        assert sorted(os.listdir(d)) == ["_SUCCESS", "part-00000.parquet"]
+        assert spark.read.parquet(str(d)).count() == n, section
+    hist = spark.read.parquet(str(report / "time_histogram")).collect()
+    assert sum(r.n_events for r in hist) == 9
+    top = spark.read.parquet(str(report / "top_queries")).collect()
+    assert [r.normalized_query for r in top] == [
+        "insert into users values (?, ?)"
+    ]
+
+
+def test_cli_incremental_prints_report_rows(capsys, spark, tmp_path):
+    """--incremental prints each section's row count when it processed
+    files, and no row counts when there was nothing new."""
+    import json
+
+    log_dir = _stage(tmp_path, ["2024-01-15-09"])
+    argv = ["--log-dir", log_dir, "--out-dir", str(tmp_path / "out"),
+            "--reference-datetime", "2024-01-15-10", "--incremental"]
+    main(argv)
+    lines = capsys.readouterr().out.splitlines()
+    assert lines[0] == "processed 1 new files (0 already done)"
+    assert lines[1].startswith("report rows: ")
+    rows = json.loads(lines[1][len("report rows: "):])
+    assert set(rows) == set(REPORT_SECTIONS) and rows["top_queries"] == 3
+    main(argv)
+    assert capsys.readouterr().out.splitlines() == [
+        "processed 0 new files (1 already done)"
+    ]
 
 
 def test_cli_query_registry_access(capsys, spark):

@@ -108,15 +108,79 @@ def test_normalize_properties(spark):
     assert df.filter(F.col("q1") != F.col("q2")).count() == 0
 
 
-def test_report_sink_roundtrip(spark, tmp_path):
-    ev = parse_logs(spark, fixture("basic.log"))
-    from rds_pgbadger_etl_spark.sinks.report_sink import write_report
+# top-N / sorted sections -> the columns of their ORDER BY
+ORDER_KEYS = {
+    "top_queries": ("total_ms", "normalized_query"),
+    "slowest_statements": ("duration_ms", "query"),
+    "error_report": ("n", "level", "normalized_message"),
+    "table_workload": ("total_ms", "table_name"),
+    "duration_ranges": ("bucket",),
+    "error_templates": ("n_errors", "template"),
+}
 
+
+def _canon_value(v):
+    if isinstance(v, float):
+        return f"{v:.9g}"
+    if isinstance(v, (list, tuple)):
+        return tuple(_canon_value(x) for x in v)
+    return v
+
+
+def _canon_rows(rows) -> list[tuple]:
+    return [tuple(_canon_value(v) for v in r) for r in rows]
+
+
+def test_report_sink_roundtrip(spark, tmp_path):
+    """write_report collects every section in one Spark action and writes
+    it with pyarrow: each table read back with spark.read.parquet has its
+    section DataFrame's columns, types and rows, top-N sections keep
+    their order, and the HTML rendered from the same rows holds every
+    section."""
+    from rds_pgbadger_etl_spark.sinks.report_sink import (
+        render_html,
+        write_report,
+    )
+
+    ev = parse_logs(spark, FIXTURES)
     sections = reports.full_report(ev)
+    assert set(ORDER_KEYS) < set(sections)
     out = str(tmp_path / "report")
-    write_report(sections, out)
-    back = spark.read.parquet(f"{out}/top_queries")
-    assert back.count() > 0
+    tables = write_report(sections, out)
+    assert list(tables) == list(sections)
+    for name, df in sections.items():
+        back = spark.read.parquet(f"{out}/{name}")
+        assert [(f.name, f.dataType.simpleString()) for f in back.schema] == [
+            (f.name, f.dataType.simpleString()) for f in df.schema
+        ], name
+        want = _canon_rows(df.collect())
+        got = _canon_rows(back.collect())
+        assert want, f"fixture leaves {name} empty"
+        assert sorted(got, key=repr) == sorted(want, key=repr), name
+        assert tables[name].num_rows == len(want)
+        if name in ORDER_KEYS:
+            idx = [df.columns.index(c) for c in ORDER_KEYS[name]]
+            assert [[r[i] for i in idx] for r in got] == [
+                [r[i] for i in idx] for r in want
+            ], name
+
+    # a section with no rows still gets a table with its schema
+    empty_out = str(tmp_path / "empty")
+    empty = reports.full_report(ev.limit(0))
+    assert all(t.num_rows == 0 for t in write_report(empty, empty_out).values())
+    for name, df in empty.items():
+        assert os.path.exists(f"{empty_out}/{name}/_SUCCESS"), name
+        back = spark.read.parquet(f"{empty_out}/{name}")
+        assert back.columns == df.columns and back.count() == 0, name
+
+    # rendered from the collected tables, or from the DataFrames
+    for i, src in enumerate((tables, sections)):
+        html = str(tmp_path / f"report{i}.html")
+        render_html(src, html)
+        with open(html) as f:
+            body = f.read()
+        for name in sections:
+            assert f"<h2>{name}</h2>" in body, name
 
 
 def test_classify_statement(spark):

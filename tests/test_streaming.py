@@ -31,6 +31,11 @@ def test_catalog_streaming_oracle(spark, sf_oracle, name, fn, sql):
 
 
 def test_select_log_files_semantics(spark):
+    """select_names over the listed names, and select_log_files, its
+    adapter over a file-catalog DataFrame, pick the same files: newest
+    first, closed hours only, undated names quarantined."""
+    from rds_pgbadger_etl_spark.sources.logcatalog import select_names
+
     names = [
         "x/postgresql.log.2019-04-01-10",
         "x/postgresql.log.2019-04-01-09",
@@ -38,20 +43,31 @@ def test_select_log_files_semantics(spark):
         "x/postgresql.log.2019-04-01-11",  # the open reference hour → excluded
         "x/postgresql.log.2019-04-02-00",  # future → excluded
         "x/garbage",  # unparseable → quarantined
+        "x/postgresql.log.2019-13-01-00",  # no month 13 → quarantined
+        "x/postgresql.log.2019-04-01-08.gz",  # not a trailing hour → quarantined
     ]
     files = spark.createDataFrame([(n,) for n in names], ["file_name"])
-    picked = select_log_files(
-        files, datetime.datetime(2019, 4, 1, 11, 30), max_records=2
-    ).collect()
-    assert [r.file_name[-13:] for r in picked] == ["2019-04-01-10", "2019-04-01-09"]
-    picked_all = select_log_files(
-        files, datetime.datetime(2019, 4, 1, 11, 0), max_records=10
-    ).collect()
-    assert [r.file_name[-13:] for r in picked_all] == [
-        "2019-04-01-10",
-        "2019-04-01-09",
-        "2019-03-31-23",
-    ]
+    for ref, k, want in (
+        (datetime.datetime(2019, 4, 1, 11, 30), 2,
+         ["2019-04-01-10", "2019-04-01-09"]),
+        (datetime.datetime(2019, 4, 1, 11, 0), 10,
+         ["2019-04-01-10", "2019-04-01-09", "2019-03-31-23"]),
+        (datetime.datetime(2019, 4, 1, 11, 0), None,
+         ["2019-04-01-10", "2019-04-01-09", "2019-03-31-23"]),
+        (datetime.datetime(2019, 3, 31, 23, 0), None, []),
+    ):
+        picked = select_names(names, ref, k)
+        assert [n[-13:] for n in picked] == want
+        got = select_log_files(files, ref, k).toArrow().to_pydict()
+        assert got["file_name"] == picked
+        # file_ts is the name's hour in the session's UTC zone, whatever
+        # the process's local zone
+        assert got["file_ts"] == [
+            datetime.datetime.strptime(n[-13:], "%Y-%m-%d-%H").replace(
+                tzinfo=datetime.timezone.utc
+            )
+            for n in picked
+        ]
 
 
 def test_streaming_hourly_counts_watermark(spark, sf_oracle, tmp_path):
