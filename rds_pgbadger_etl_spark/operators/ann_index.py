@@ -39,14 +39,20 @@ hash-match the in-session ann_*_topk oracles exactly.
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rds_pgbadger_etl_spark.operators import index_maintenance as M
 from rds_pgbadger_etl_spark.operators import similarity as S
+from rds_pgbadger_etl_spark.session import max_partition_bytes
 
 Query = tuple[int, list[float]]
 
@@ -750,67 +756,52 @@ def _probe_cells(
     return out
 
 
-def _adc_lut_flat(
-    spark: SparkSession, index_dir: str, queries: list[Query]
-) -> DataFrame:
-    """(q_id, d_flat) rows: the query's exact integer squared distance
-    to every PQ centroid — pq_distances in the local domain — flattened
-    to one PQ_M*PQ_K long array per query (``d_flat[s*PQ_K + code]``),
-    so ADC scoring is a broadcast join on q_id plus a MAP-SIDE array
-    aggregate: no per-subspace join, no re-aggregation shuffle."""
-    ic = _load_codebook(spark, index_dir)
+def _adc_lut(ic: np.ndarray, iq: np.ndarray) -> np.ndarray:
+    """Exact integer squared distance of each integer query row in
+    ``iq`` to every PQ centroid — pq_distances in the local domain —
+    flattened to one ``n_sub * n_cells`` int64 row per query
+    (``lut[i, s * n_cells + code]``), so ADC scoring is a sum of
+    PQ_M lookups per vector: a map-side array aggregate in Spark
+    (:func:`_adc_dist_col`), fancy indexing on the driver."""
     n_sub, n_cells, sub_dim = ic.shape
-    rows = []
-    for q_id, vec in queries:
-        # HALF_UP, not np.round: every other PQ quantization path
-        # (pq_long_form's F.round, pq_encode_udf's _half_up) rounds
-        # half away from zero; banker's rounding here would flip any
-        # query component landing exactly on .5 and silently break the
-        # bit-identical parity with the in-session ivfpq_topk twin.
-        iq = S._half_up(np.asarray(vec, dtype=np.float64) * S.PQ_INT_SCALE)
-        flat: list[int] = []
-        for s in range(n_sub):
-            qs = iq[s * sub_dim : (s + 1) * sub_dim]
-            d = ((ic[s] - qs) ** 2).sum(axis=1)
-            flat.extend(int(d[c]) for c in range(n_cells))
-        rows.append((int(q_id), flat))
-    return spark.createDataFrame(rows, "q_id long, d_flat array<long>")
+    q = iq[:, : n_sub * sub_dim].reshape(len(iq), n_sub, 1, sub_dim)
+    return ((ic[None] - q) ** 2).sum(axis=3).reshape(len(iq), n_sub * n_cells)
 
 
-def _adc_lut_flat_residual(
+def _search_luts(
     spark: SparkSession,
     index_dir: str,
     queries: list[Query],
-    probes: list[tuple[int, int]],
-) -> DataFrame:
-    """(q_id, cell, d_flat) rows — the residual-PQ LUT: the query's
-    residual DEPENDS ON THE PROBED CELL (r = q - c), so each (query,
-    probed cell) pair gets its own flattened distance array against the
-    residual codebook. Rows = |queries| x n_probe — still broadcast
-    metadata; the scoring join gains the cell key and nothing else
-    changes (same map-side higher-order aggregate)."""
+    probes: list[tuple],
+    int_centroids_of,
+) -> tuple[np.ndarray, bool]:
+    """The search's ADC lookup tables and the index's residual flag.
+    Standard index: one row per query, in query order. Residual index
+    (the manifest flag): the query's residual DEPENDS ON THE PROBED
+    CELL (r = q - c), so one row per probe, in probe order, against the
+    residual codebook; ``int_centroids_of(probes)`` gives the probed
+    cells' integer centroids."""
     ic = _load_codebook(spark, index_dir)
-    n_sub, n_cells, sub_dim = ic.shape
-    _, cent_mat = _read_centroids(spark, index_dir)
-    icent = _int_centroids(cent_mat)
-    qvec = {q_id: vec for q_id, vec in queries}
-    rows = []
-    for q_id, cell in probes:
-        iq = (
-            S._half_up(
-                np.asarray(qvec[q_id], dtype=np.float64) * S.PQ_INT_SCALE
-            )
-            - icent[cell]
-        )
-        flat: list[int] = []
-        for s in range(n_sub):
-            qs = iq[s * sub_dim : (s + 1) * sub_dim]
-            d = ((ic[s] - qs) ** 2).sum(axis=1)
-            flat.extend(int(d[c]) for c in range(n_cells))
-        rows.append((int(q_id), int(cell), flat))
-    return spark.createDataFrame(
-        rows, "q_id long, cell int, d_flat array<long>"
+    width = ic.shape[0] * ic.shape[2]
+    # HALF_UP, not np.round: every other PQ quantization path
+    # (pq_long_form's F.round, pq_encode_udf's _half_up) rounds half
+    # away from zero; banker's rounding here would flip any query
+    # component landing exactly on .5 and silently break the
+    # bit-identical parity with the in-session ivfpq_topk twin.
+    iq = S._half_up(
+        np.array(
+            [np.asarray(v, dtype=np.float64)[:width] for _, v in queries],
+            dtype=np.float64,
+        ).reshape(-1, width)
+        * S.PQ_INT_SCALE
     )
+    residual = bool(M.read_meta(index_dir, _RESIDUAL_KEY, False))
+    if residual:
+        row_of = {q_id: i for i, (q_id, _) in enumerate(queries)}
+        iq = iq[[row_of[p[0]] for p in probes]]
+        if probes:
+            iq = iq - int_centroids_of(probes)[:, :width]
+    return _adc_lut(ic, iq), residual
 
 
 def _adc_dist_col(n_cells: int = S.PQ_K):
@@ -818,7 +809,7 @@ def _adc_dist_col(n_cells: int = S.PQ_K):
     array — exact int64 arithmetic, whole-stage-codegen higher-order
     function (Spark array subscripts are 0-based). ``n_cells`` is the
     LUT's packing stride and MUST be the stored codebook's actual
-    per-subspace cell count (``ic.shape[1]`` — what _adc_lut_flat packs
+    per-subspace cell count (``ic.shape[1]`` — what _adc_lut packs
     with): a corpus without a full vec_id 0..PQ_K-1 prefix stores fewer
     than PQ_K cells, and indexing with the nominal PQ_K would silently
     misalign every subspace past the first."""
@@ -828,9 +819,18 @@ def _adc_dist_col(n_cells: int = S.PQ_K):
     )
 
 
+def _probe_predicate(parts: list[str], probes: list[tuple]):
+    """Partition filter for probe rows ``(q_id, *parts)``: each
+    partition column IN its probed values (what reaches the scan as
+    PartitionFilters)."""
+    pred = F.col(parts[0]).isin(sorted({p[1] for p in probes}))
+    for i, c in enumerate(parts[1:], 2):
+        pred = pred & F.col(c).isin(sorted({p[i] for p in probes}))
+    return pred
+
+
 def _cell_predicate(pairs: list[tuple[int, int]]):
-    cells = sorted({c for _, c in pairs})
-    return F.col("cell").isin(cells)
+    return _probe_predicate(["cell"], pairs)
 
 
 _PROBE_SCHEMA = "q_id long, cell int"
@@ -848,6 +848,201 @@ def _queries_df(spark: SparkSession, queries: list[Query]) -> DataFrame:
     )
 
 
+# Probe-row schemas of the two layouts' IVF-PQ arms: q_id, then the
+# ``vectors/`` partition columns.
+_PQ_PROBES = T.StructType(
+    [T.StructField("q_id", T.LongType()), T.StructField("cell", T.IntegerType())]
+)
+_PQ_PROBES_2L = T.StructType(
+    [
+        T.StructField("q_id", T.LongType()),
+        T.StructField("group", T.LongType()),
+        T.StructField("cell", T.LongType()),
+    ]
+)
+# The Spark plan's output schema (``rank`` is a row_number: non-null).
+_ADC_TOPK = pa.schema(
+    [
+        ("q_id", pa.int64()),
+        ("vec_id", pa.int64()),
+        ("adc_dist", pa.int64()),
+        pa.field("rank", pa.int32(), nullable=False),
+    ]
+)
+
+
+def _local_df(
+    spark: SparkSession,
+    rows: list[tuple],
+    schema: T.StructType,
+    lut: np.ndarray | None = None,
+) -> DataFrame:
+    """``rows`` (plus ``lut`` as a ``d_flat array<long>`` column) as a
+    LocalRelation: built from an Arrow table, so broadcasting it starts
+    no Spark job (a Python list would become a LogicalRDD: a job and a
+    Python worker)."""
+    cols = {f.name: [r[i] for r in rows] for i, f in enumerate(schema.fields)}
+    fields = list(schema.fields)
+    if lut is not None:
+        width = lut.shape[1]
+        offsets = np.arange(0, (len(lut) + 1) * width, width, dtype=np.int32)
+        cols["d_flat"] = pa.ListArray.from_arrays(offsets, pa.array(lut.ravel()))
+        fields.append(T.StructField("d_flat", T.ArrayType(T.LongType())))
+    return spark.createDataFrame(pa.table(cols), T.StructType(fields))
+
+
+def _spark_adc_topk(
+    spark: SparkSession,
+    index_dir: str,
+    queries: list[Query],
+    probes: list[tuple],
+    schema: T.StructType,
+    lut: np.ndarray,
+    residual: bool,
+    k: int,
+) -> DataFrame:
+    """IVF-PQ scoring as a Spark plan over the probe rows ``(q_id,
+    *partition columns)``: a scan of ``vectors/`` pruned to the probed
+    partitions, broadcast probe and LUT joins (the LUT keyed on q_id, or
+    on the whole probe row for a residual index), the map-side ADC sum,
+    and a per-query top-k by (adc_dist, vec_id)."""
+    parts = schema.names[1:]
+    lut_schema = schema if residual else T.StructType(schema.fields[:1])
+    lut_keys = probes if residual else [(q_id,) for q_id, _ in queries]
+    lut_df = _local_df(spark, lut_keys, lut_schema, lut)
+    vectors = _live(
+        spark,
+        index_dir,
+        spark.read.parquet(M.table_path(index_dir, "vectors")).where(
+            _probe_predicate(parts, probes)
+        ),
+    )
+    scored = (
+        vectors.join(F.broadcast(_local_df(spark, probes, schema)), parts)
+        .filter(F.col("vec_id") != F.col("q_id"))
+        .join(F.broadcast(lut_df), lut_schema.names)
+        .select("q_id", "vec_id", _adc_dist_col(
+            _load_codebook(spark, index_dir).shape[1]
+        ).alias("adc_dist"))
+    )
+    return S.topk_per_key(
+        scored, "q_id", [F.col("adc_dist"), F.col("vec_id")], k
+    )
+
+
+def _probed_files(
+    index_dir: str, parts: list[str], probes: list[tuple]
+) -> dict[tuple, list[tuple[str, int]]]:
+    """(path, bytes) of every data file in each probed ``vectors/``
+    partition, listed as Spark lists them: names starting with ``.`` or
+    ``_`` (checksums, markers) are hidden; a partition with no
+    directory has no files."""
+    root = M.table_path(index_dir, "vectors")
+    out = {}
+    for part in {p[1:] for p in probes}:
+        d = os.path.join(root, *(f"{c}={v}" for c, v in zip(parts, part)))
+        if not os.path.isdir(d):
+            out[part] = []
+            continue
+        with os.scandir(d) as entries:
+            out[part] = sorted(
+                (e.path, e.stat().st_size)
+                for e in entries
+                if e.is_file() and not e.name.startswith((".", "_"))
+            )
+    return out
+
+
+def _driver_adc_topk(
+    spark: SparkSession,
+    index_dir: str,
+    queries: list[Query],
+    probes: list[tuple],
+    files: dict[tuple, list[tuple[str, int]]],
+    lut: np.ndarray,
+    residual: bool,
+    k: int,
+) -> DataFrame:
+    """:func:`_spark_adc_topk`'s rows, computed on the driver: read each
+    probed partition's ``(vec_id, codes)`` with pyarrow, drop tombstoned
+    ids and the query's own id, sum the same integer LUT entries and keep
+    each query's top-k by (adc_dist, vec_id). The result is a
+    LocalRelation, so collecting it starts no Spark job."""
+    tomb = M._tombstone_files(index_dir)
+    dead = (
+        pq.read_table(tomb, columns=["vec_id"])["vec_id"].to_numpy() if tomb else []
+    )
+    codes = {}
+    for part, listed in files.items():
+        if not listed:
+            continue
+        t = pq.read_table([path for path, _ in listed], columns=["vec_id", "codes"])
+        ids = t["vec_id"].to_numpy()
+        c = pc.list_flatten(t["codes"]).to_numpy().reshape(-1, S.PQ_M)
+        keep = ~np.isin(ids, dead)
+        codes[part] = (ids[keep], c[keep])
+    offsets = np.arange(S.PQ_M) * _load_codebook(spark, index_dir).shape[1]
+    row_of = {q_id: i for i, (q_id, _) in enumerate(queries)}
+    scored: dict[int, list] = {}
+    for i, (q_id, *part) in enumerate(probes):
+        if tuple(part) not in codes:
+            continue
+        ids, c = codes[tuple(part)]
+        dist = lut[i if residual else row_of[q_id]][c + offsets].sum(axis=1)
+        other = ids != q_id
+        scored.setdefault(q_id, []).append((ids[other], dist[other]))
+    out = {name: [] for name in _ADC_TOPK.names}
+    for q_id, hits in scored.items():
+        ids = np.concatenate([h[0] for h in hits])
+        dist = np.concatenate([h[1] for h in hits])
+        top = np.lexsort((ids, dist))[:k]
+        out["q_id"].append(np.full(len(top), q_id, dtype=np.int64))
+        out["vec_id"].append(ids[top])
+        out["adc_dist"].append(dist[top])
+        out["rank"].append(np.arange(1, len(top) + 1, dtype=np.int32))
+    table = pa.table(
+        {
+            name: np.concatenate(cols) if cols else np.empty(0)
+            for name, cols in out.items()
+        }
+    )
+    return spark.createDataFrame(table.cast(_ADC_TOPK))
+
+
+def _ivfpq_topk(
+    spark: SparkSession,
+    index_dir: str,
+    queries: list[Query],
+    probes: list[tuple],
+    schema: T.StructType,
+    int_centroids_of,
+    k: int,
+) -> DataFrame:
+    """IVF-PQ top-k over the probe rows of either layout. A search whose
+    probed partitions fit one scan split (data-file bytes summed over
+    the (query, partition) pairs, against
+    ``spark.sql.files.maxPartitionBytes``) is scored on the driver with
+    no Spark job; a larger one runs the Spark plan."""
+    lut, residual = _search_luts(
+        spark, index_dir, queries, probes, int_centroids_of
+    )
+    files = _probed_files(index_dir, schema.names[1:], probes)
+    probed_bytes = sum(b for p in probes for _, b in files[p[1:]])
+    if probed_bytes <= max_partition_bytes(spark):
+        return _driver_adc_topk(
+            spark, index_dir, queries, probes, files, lut, residual, k
+        )
+    return _spark_adc_topk(
+        spark, index_dir, queries, probes, schema, lut, residual, k
+    )
+
+
+def _int_centroids_1level(spark: SparkSession, index_dir: str):
+    _, mat = _read_centroids(spark, index_dir)
+    icent = _int_centroids(mat)
+    return lambda probes: icent[[cell for _, cell in probes]]
+
+
 def ann_index_ivfpq_topk(
     spark: SparkSession,
     index_dir: str,
@@ -855,42 +1050,18 @@ def ann_index_ivfpq_topk(
     k: int = 5,
     n_probe: int = S.N_PROBE,
 ) -> DataFrame:
-    """IVF-PQ search from the artifact: partition-pruned scan of the
-    probed cells' PQ codes, broadcast ADC LUT, integer ranking — the
-    same output contract as similarity.ivfpq_topk (q_id, vec_id,
-    adc_dist, rank), with zero corpus access. Residual indexes (the
-    manifest flag) swap in the per-(query, probed cell) residual LUT —
-    the scoring join gains the cell key, nothing else changes."""
+    """IVF-PQ search from the artifact: the probed cells' PQ codes, the
+    integer ADC LUT, integer ranking — the same output contract as
+    similarity.ivfpq_topk (q_id, vec_id, adc_dist, rank), with zero
+    corpus access. Residual indexes (the manifest flag) swap in the
+    per-(query, probed cell) residual LUT. Small searches are scored on
+    the driver, larger ones by a partition-pruned Spark scan
+    (:func:`_ivfpq_topk`)."""
     cells, mat = _read_centroids(spark, index_dir)
     probes = _probe_cells(queries, cells, mat, n_probe)
-    probes_df = spark.createDataFrame(probes, _PROBE_SCHEMA)
-    residual = M.read_meta(index_dir, _RESIDUAL_KEY, False)
-    lut_df = (
-        _adc_lut_flat_residual(spark, index_dir, queries, probes)
-        if residual
-        else _adc_lut_flat(spark, index_dir, queries)
-    )
-
-    vectors = _live(
-        spark,
-        index_dir,
-        spark.read.parquet(M.table_path(index_dir, "vectors")).where(
-            _cell_predicate(probes)
-        ),
-    )
-    scored = (
-        vectors.join(F.broadcast(probes_df), "cell")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .join(
-            F.broadcast(lut_df),
-            ["q_id", "cell"] if residual else ["q_id"],
-        )
-        .select("q_id", "vec_id", _adc_dist_col(
-            _load_codebook(spark, index_dir).shape[1]
-        ).alias("adc_dist"))
-    )
-    return S.topk_per_key(
-        scored, "q_id", [F.col("adc_dist"), F.col("vec_id")], k
+    return _ivfpq_topk(
+        spark, index_dir, queries, probes, _PQ_PROBES,
+        _int_centroids_1level(spark, index_dir), k,
     )
 
 
@@ -3315,46 +3486,16 @@ def ann_index_2level_truncated_topk(
     )
 
 
-def _adc_lut_flat_residual_2level(
-    spark: SparkSession,
-    index_dir: str,
-    queries: list[Query],
-    probes: list[tuple[int, int, int]],
-) -> DataFrame:
-    """(q_id, group, cell, d_flat) — the residual LUT for the 2-level
-    PQ arm: each probed (query, group, cell) triple scores the query's
-    residual AGAINST THAT FINE CENTROID over the residual codebook.
-    The fine components come from a partition-pruned ``fine/`` read of
-    just the probed groups (the probe pass reads the same shards)."""
-    ic = _load_codebook(spark, index_dir)
-    n_sub, n_cells, sub_dim = ic.shape
-    probed_groups = sorted({g for _, g, _ in probes})
-    probed_cells = {c for _, _, c in probes}
-    by_group = _fine_shards(spark, index_dir, probed_groups)
-    icent_by_cell = {
-        c: _int_centroids(emb[None, :])[0]
-        for g in probed_groups
-        for c, emb in by_group[g]
-        if c in probed_cells
-    }
-    qvec = {q_id: vec for q_id, vec in queries}
-    rows = []
-    for q_id, g, cell in probes:
-        iq = (
-            S._half_up(
-                np.asarray(qvec[q_id], dtype=np.float64) * S.PQ_INT_SCALE
-            )
-            - icent_by_cell[cell]
-        )
-        flat: list[int] = []
-        for s in range(n_sub):
-            qs = iq[s * sub_dim : (s + 1) * sub_dim]
-            d = ((ic[s] - qs) ** 2).sum(axis=1)
-            flat.extend(int(d[c]) for c in range(n_cells))
-        rows.append((int(q_id), int(g), int(cell), flat))
-    return spark.createDataFrame(
-        rows, "q_id long, group long, cell long, d_flat array<long>"
-    )
+def _int_centroids_2level(spark: SparkSession, index_dir: str):
+    """Integer fine centroids of probe triples (q_id, group, cell), from
+    the probed groups' shards (the probe pass read the same shards)."""
+
+    def of(probes: list[tuple[int, int, int]]) -> np.ndarray:
+        shards = _fine_shards(spark, index_dir, sorted({g for _, g, _ in probes}))
+        emb = {c: e for shard in shards.values() for c, e in shard}
+        return _int_centroids(np.array([emb[c] for _, _, c in probes]))
+
+    return of
 
 
 def ann_index_2level_ivfpq_topk(
@@ -3379,35 +3520,9 @@ def ann_index_2level_ivfpq_topk(
     probes = _probe_cells_2level(
         spark, index_dir, queries, n_probe_groups, n_probe
     )
-    probes_df = spark.createDataFrame(probes, "q_id long, group long, cell long")
-    residual = M.read_meta(index_dir, _RESIDUAL_KEY, False)
-    lut_df = (
-        _adc_lut_flat_residual_2level(spark, index_dir, queries, probes)
-        if residual
-        else _adc_lut_flat(spark, index_dir, queries)
-    )
-
-    vectors = _live(
-        spark,
-        index_dir,
-        spark.read.parquet(M.table_path(index_dir, "vectors")).where(
-            F.col("group").isin(sorted({g for _, g, _ in probes}))
-            & F.col("cell").isin(sorted({c for _, _, c in probes}))
-        ),
-    )
-    scored = (
-        vectors.join(F.broadcast(probes_df), ["group", "cell"])
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .join(
-            F.broadcast(lut_df),
-            ["q_id", "group", "cell"] if residual else ["q_id"],
-        )
-        .select("q_id", "vec_id", _adc_dist_col(
-            _load_codebook(spark, index_dir).shape[1]
-        ).alias("adc_dist"))
-    )
-    return S.topk_per_key(
-        scored, "q_id", [F.col("adc_dist"), F.col("vec_id")], k
+    return _ivfpq_topk(
+        spark, index_dir, queries, probes, _PQ_PROBES_2L,
+        _int_centroids_2level(spark, index_dir), k,
     )
 
 
@@ -3440,34 +3555,13 @@ def ann_index_ivfpq_rerank_topk(
     shortlist = 4 * k if shortlist is None else shortlist
     cells, mat = _read_centroids(spark, index_dir)
     probes = _probe_cells(queries, cells, mat, n_probe)
-    probes_df = spark.createDataFrame(probes, _PROBE_SCHEMA)
-    residual = M.read_meta(index_dir, _RESIDUAL_KEY, False)
-    lut_df = (
-        _adc_lut_flat_residual(spark, index_dir, queries, probes)
-        if residual
-        else _adc_lut_flat(spark, index_dir, queries)
+    lut, residual = _search_luts(
+        spark, index_dir, queries, probes,
+        _int_centroids_1level(spark, index_dir),
     )
-
-    vectors = _live(
-        spark,
-        index_dir,
-        spark.read.parquet(M.table_path(index_dir, "vectors")).where(
-            _cell_predicate(probes)
-        ),
-    )
-    scored = (
-        vectors.join(F.broadcast(probes_df), "cell")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .join(
-            F.broadcast(lut_df),
-            ["q_id", "cell"] if residual else ["q_id"],
-        )
-        .select("q_id", "vec_id", _adc_dist_col(
-            _load_codebook(spark, index_dir).shape[1]
-        ).alias("adc_dist"))
-    )
-    short = S.topk_per_key(
-        scored, "q_id", [F.col("adc_dist"), F.col("vec_id")], shortlist
+    short = _spark_adc_topk(
+        spark, index_dir, queries, probes, _PQ_PROBES, lut, residual,
+        shortlist,
     ).select("q_id", "vec_id")
 
     raw = spark.read.parquet(M.table_path(index_dir, "raw")).where(
@@ -3507,40 +3601,17 @@ def ann_index_2level_ivfpq_rerank_topk(
     probes = _probe_cells_2level(
         spark, index_dir, queries, n_probe_groups, n_probe
     )
-    probes_df = spark.createDataFrame(probes, "q_id long, group long, cell long")
-    residual = M.read_meta(index_dir, _RESIDUAL_KEY, False)
-    lut_df = (
-        _adc_lut_flat_residual_2level(spark, index_dir, queries, probes)
-        if residual
-        else _adc_lut_flat(spark, index_dir, queries)
+    lut, residual = _search_luts(
+        spark, index_dir, queries, probes,
+        _int_centroids_2level(spark, index_dir),
     )
-    g_pred = F.col("group").isin(sorted({g for _, g, _ in probes}))
-    c_pred = F.col("cell").isin(sorted({c for _, _, c in probes}))
-
-    vectors = _live(
-        spark,
-        index_dir,
-        spark.read.parquet(M.table_path(index_dir, "vectors")).where(
-            g_pred & c_pred
-        ),
-    )
-    scored = (
-        vectors.join(F.broadcast(probes_df), ["group", "cell"])
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .join(
-            F.broadcast(lut_df),
-            ["q_id", "group", "cell"] if residual else ["q_id"],
-        )
-        .select("q_id", "vec_id", _adc_dist_col(
-            _load_codebook(spark, index_dir).shape[1]
-        ).alias("adc_dist"))
-    )
-    short = S.topk_per_key(
-        scored, "q_id", [F.col("adc_dist"), F.col("vec_id")], shortlist
+    short = _spark_adc_topk(
+        spark, index_dir, queries, probes, _PQ_PROBES_2L, lut, residual,
+        shortlist,
     ).select("q_id", "vec_id")
 
     raw = spark.read.parquet(M.table_path(index_dir, "raw")).where(
-        g_pred & c_pred
+        _probe_predicate(_PQ_PROBES_2L.names[1:], probes)
     )
     reranked = (
         raw.join(F.broadcast(short), "vec_id")

@@ -39,6 +39,7 @@ from rds_pgbadger_etl_spark.functions.normalize import (
     extract_statement,
     normalize_query,
 )
+from rds_pgbadger_etl_spark.session import max_partition_bytes
 
 # %t:%r:%u@%d:[%p]:LEVEL: payload   (groups: ts, tz, host, port, user, db,
 # pid, level, payload). %r may be empty or [local]; port optional.
@@ -87,15 +88,6 @@ def release_parse_caches() -> None:
 SPLITWISE_SIZE_FACTOR = 2
 
 
-def _max_partition_bytes(spark: SparkSession) -> int:
-    raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
-    s = raw.strip().lower()
-    units = {"b": 1, "k": 1024, "m": 1024**2, "g": 1024**3}
-    if s and s[-1] in units:
-        return int(s[:-1]) * units[s[-1]]
-    return int(s)
-
-
 def choose_parse_strategy(spark: SparkSession, paths: list[str]) -> str:
     """Pick the reassembly plan from the catalog listing already in hand:
     ``windowed`` (one bounded shuffle, all-JVM) while every file fits a
@@ -106,7 +98,7 @@ def choose_parse_strategy(spark: SparkSession, paths: list[str]) -> str:
     import os
 
     max_bytes = max((os.path.getsize(p) for p in paths), default=0)
-    threshold = SPLITWISE_SIZE_FACTOR * _max_partition_bytes(spark)
+    threshold = SPLITWISE_SIZE_FACTOR * max_partition_bytes(spark)
     return "splitwise" if max_bytes > threshold else "windowed"
 
 

@@ -87,6 +87,19 @@ def size_shuffle_partitions(
     return n
 
 
+def max_partition_bytes(spark: SparkSession) -> int:
+    """``spark.sql.files.maxPartitionBytes`` in bytes — the size of one
+    file-scan split. Rules that pick a plan from input size compare
+    against it (logparse.choose_parse_strategy, the driver-side ANN
+    search in ann_index)."""
+    raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
+    s = raw.strip().lower()
+    units = {"b": 1, "k": 1024, "m": 1024**2, "g": 1024**3}
+    if s and s[-1] in units:
+        return int(s[:-1]) * units[s[-1]]
+    return int(s)
+
+
 def get_spark(
     app_name: str = "rds-pgbadger-etl-spark",
     cpus: str | int | None = None,

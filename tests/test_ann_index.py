@@ -6,10 +6,14 @@ the index build is paid once, not per session)."""
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 import textwrap
+import uuid
+from contextlib import contextmanager
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -64,11 +68,84 @@ def test_lsh_reader_matches_in_session(spark, index_dir):
     assert got == expected and len(got) > 0
 
 
+# The IVF-PQ search of each layout: build, append, search.
+_PQ_LAYOUTS = {
+    "1level": (
+        AI.build_ann_index,
+        AI.append_to_ann_index,
+        AI.ann_index_ivfpq_topk,
+    ),
+    "2level": (
+        AI.build_ann_index_2level,
+        AI.append_to_ann_index_2level,
+        AI.ann_index_2level_ivfpq_topk,
+    ),
+}
+
+
+def _pq_probes(spark, d, layout, qs):
+    """The IVF-PQ search's probe rows and its partition columns."""
+    if layout == "2level":
+        return AI._probe_cells_2level(spark, d, qs), ["group", "cell"]
+    cells, mat = AI._read_centroids(spark, d)
+    return AI._probe_cells(qs, cells, mat, S.N_PROBE), ["cell"]
+
+
+def _probed_bytes(spark, d, layout, qs):
+    """The driver-path rule's input: data-file bytes of the probed
+    ``vectors/`` partitions, summed over (query, partition) pairs."""
+    probes, parts = _pq_probes(spark, d, layout, qs)
+    files = AI._probed_files(d, parts, probes)
+    return sum(b for p in probes for _, b in files[p[1:]])
+
+
+@contextmanager
+def _max_partition_bytes(spark, value):
+    """Set ``spark.sql.files.maxPartitionBytes`` for a block, then put
+    the previous setting back."""
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, str(value))
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
+def _spark_plan(spark, d, layout, qs):
+    """Run the IVF-PQ search above the driver-path rule: one byte less
+    than the probed bytes per scan split."""
+    return _max_partition_bytes(spark, _probed_bytes(spark, d, layout, qs) - 1)
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _jobs(spark, fn):
+    """Number of Spark jobs ``fn()`` starts."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_reader_plan_is_pruned_and_corpus_free(spark, index_dir):
     """The search plan must (a) partition-prune the vectors scan to the
     probed cells and (b) never touch the raw corpus table — the whole
-    point of the artifact."""
-    df = AI.ann_index_ivfpq_topk(spark, index_dir, _queries(spark), K)
+    point of the artifact. This is the Spark plan, which runs above the
+    driver-path rule; the driver path's counterpart is
+    test_driver_scoring_opens_only_probed_codes."""
+    qs = _queries(spark)
+    with _spark_plan(spark, index_dir, "1level", qs):
+        df = AI.ann_index_ivfpq_topk(spark, index_dir, qs, K)
     plan = df._jdf.queryExecution().executedPlan().toString()
     explain = df._jdf.queryExecution().toString()
     assert "embeddings.parquet" not in explain
@@ -674,8 +751,11 @@ def test_2level_ivfpq_plan_reads_codes_not_floats(spark, index2_dir):
     """The PQ arm's plan must (a) prune BOTH partition levels of the
     vectors table, (b) never touch the corpus, and (c) never scan the
     raw-embedding table — codes are the only per-vector bytes read (the
-    ~100x probed-IO cut the two-level layout exists for)."""
-    df = AI.ann_index_2level_ivfpq_topk(spark, index2_dir, _queries(spark), K)
+    ~100x probed-IO cut the two-level layout exists for). This is the
+    Spark plan, above the driver-path rule."""
+    qs = _queries(spark)
+    with _spark_plan(spark, index2_dir, "2level", qs):
+        df = AI.ann_index_2level_ivfpq_topk(spark, index2_dir, qs, K)
     plan = df._jdf.queryExecution().executedPlan().toString()
     explain = df._jdf.queryExecution().toString()
     assert "embeddings.parquet" not in explain
@@ -1998,3 +2078,139 @@ def test_2level_cascade_covering_anchor(spark, tmp_path):
         AI.ann_index_2level_cascade_topk(spark, d, qs, K).count()
         == len(QUERY_IDS) * K
     )
+
+
+# ---------------------------------------------------------------------------
+# Driver-side IVF-PQ scoring: a search whose probed partitions fit one
+# scan split (spark.sql.files.maxPartitionBytes) is scored on the driver
+# with no Spark job; the Spark plan above the rule is its reference.
+
+
+def test_adc_lut_matches_per_element_loop():
+    """The vectorized LUT builder equals the per-subspace, per-centroid
+    loop it replaced, including a short codebook (fewer than PQ_K
+    cells)."""
+    import numpy as np
+
+    rng = np.random.default_rng(0)
+    for n_cells in (S.PQ_K, 10):
+        ic = rng.integers(-1000, 1000, (S.PQ_M, n_cells, S.PQ_SUB))
+        iq = rng.integers(-2000, 2000, (7, S.DIM))
+        want = [
+            [
+                int(((ic[s][c] - q[s * S.PQ_SUB:(s + 1) * S.PQ_SUB]) ** 2).sum())
+                for s in range(S.PQ_M)
+                for c in range(n_cells)
+            ]
+            for q in iq
+        ]
+        got = AI._adc_lut(ic, iq)
+        assert got.dtype == np.int64 and got.tolist() == want
+
+
+@pytest.mark.parametrize("residual", [False, True], ids=["raw", "residual"])
+@pytest.mark.parametrize("layout", sorted(_PQ_LAYOUTS))
+def test_driver_scoring_matches_spark_plan(spark, tmp_path, layout, residual):
+    """Driver path and Spark plan return identical rows and schema on an
+    appended index with tombstones, for indexed query ids (self hits
+    excluded), for k above the candidate count, and with a probed
+    partition that has no data files."""
+    build, append, search = _PQ_LAYOUTS[layout]
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    n = emb.count()
+    d = str(tmp_path / "idx")
+    build(spark, emb.filter(F.col("vec_id") < n // 2), d, residual=residual)
+    append(spark, emb.filter(F.col("vec_id") >= n // 2), d)
+    qs = _queries(spark)
+    victims = sorted({r.vec_id for r in search(spark, d, qs, K).collect()})
+    victims = victims[::2]
+    AI.delete_from_ann_index(spark, victims, d)
+
+    def both(k):
+        driver = search(spark, d, qs, k)
+        with _spark_plan(spark, d, layout, qs):
+            ref = search(spark, d, qs, k)
+        assert "FileScan" not in _plan(driver)
+        assert "FileScan parquet" in _plan(ref)
+        assert driver.schema == ref.schema
+        got = sorted(driver.collect())
+        assert got == sorted(ref.collect())
+        assert not {r.vec_id for r in got} & set(victims)
+        assert all(r.vec_id != r.q_id for r in got)
+        return got
+
+    assert len(both(K)) == len(QUERY_IDS) * K
+    every = both(10**4)  # every live candidate of every query
+    assert len(every) > len(QUERY_IDS) * K
+    for q in QUERY_IDS:
+        ranks = [r.rank for r in every if r.q_id == q]
+        assert sorted(ranks) == list(range(1, len(ranks) + 1))
+
+    probes, parts = _pq_probes(spark, d, layout, qs)
+    emptied = probes[0][1:]
+    files = [path for path, _ in AI._probed_files(d, parts, probes)[emptied]]
+    removed = set(pq.read_table(files, columns=["vec_id"])["vec_id"].to_pylist())
+    for path in files:
+        os.remove(path)
+    part_dir = os.path.join(
+        M.table_path(d, "vectors"),
+        *(f"{c}={v}" for c, v in zip(parts, emptied)),
+    )
+    # only hidden names (checksums) are left, which both paths skip
+    assert all(n.startswith((".", "_")) for n in os.listdir(part_dir))
+    after = both(10**4)
+    assert removed and after
+    assert not {r.vec_id for r in after} & removed
+
+
+@pytest.mark.parametrize("layout", sorted(_PQ_LAYOUTS))
+def test_small_search_starts_no_job_and_large_one_runs_spark(
+    spark, index_dir, index2_dir, layout
+):
+    """At the rule's boundary (probed bytes == maxPartitionBytes) the
+    search and its collect start 0 Spark jobs; one byte below it the
+    Spark plan runs. The conf is restored afterwards."""
+    d = index_dir if layout == "1level" else index2_dir
+    search = _PQ_LAYOUTS[layout][2]
+    qs = _queries(spark)[:1]
+    search(spark, d, qs, K).collect()  # quantizer caches are warm
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key, None)
+    probed = _probed_bytes(spark, d, layout, qs)
+    with _max_partition_bytes(spark, probed):
+        assert _jobs(spark, lambda: search(spark, d, qs, K).collect()) == 0
+    with _max_partition_bytes(spark, probed - 1):
+        assert _jobs(spark, lambda: search(spark, d, qs, K).collect()) > 0
+    assert spark.conf.get(key, None) == before
+
+
+@pytest.mark.parametrize("layout", sorted(_PQ_LAYOUTS))
+def test_driver_scoring_opens_only_probed_codes(
+    spark, index_dir, index2_dir, layout, monkeypatch
+):
+    """The driver path's counterpart of the plan tests: it opens only the
+    data files of the probed ``vectors/`` partitions, each once —
+    nothing under ``raw/`` and nothing of the corpus."""
+    d = index_dir if layout == "1level" else index2_dir
+    search = _PQ_LAYOUTS[layout][2]
+    qs = _queries(spark)
+    probes, parts = _pq_probes(spark, d, layout, qs)
+    vectors = M.table_path(d, "vectors")
+    probed_dirs = {
+        os.path.join(vectors, *(f"{c}={v}" for c, v in zip(parts, p[1:])))
+        for p in probes
+    }
+    opened = []
+    read_table = AI.pq.read_table
+
+    def recording(source, *args, **kwargs):
+        opened.extend([source] if isinstance(source, str) else source)
+        return read_table(source, *args, **kwargs)
+
+    monkeypatch.setattr(AI.pq, "read_table", recording)
+    df = search(spark, d, qs, K)
+    assert "FileScan" not in _plan(df)
+    assert len(df.collect()) == len(QUERY_IDS) * K
+    assert opened and len(opened) == len(set(opened))
+    assert {os.path.dirname(p) for p in opened} <= probed_dirs
+    assert not any("/raw" in p or "embeddings" in p for p in opened)
