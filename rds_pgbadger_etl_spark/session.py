@@ -91,13 +91,10 @@ def max_partition_bytes(spark: SparkSession) -> int:
     """``spark.sql.files.maxPartitionBytes`` in bytes — the size of one
     file-scan split. Rules that pick a plan from input size compare
     against it (logparse.choose_parse_strategy, the driver-side ANN
-    search in ann_index)."""
-    raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
-    s = raw.strip().lower()
-    units = {"b": 1, "k": 1024, "m": 1024**2, "g": 1024**3}
-    if s and s[-1] in units:
-        return int(s[:-1]) * units[s[-1]]
-    return int(s)
+    search in ann_index). The value Spark itself parsed (any byte-string
+    form it accepts: ``134217728``, ``128m``, ``128MB``, ``64kb``), read
+    over py4j with no job."""
+    return int(spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
 
 
 def get_spark(

@@ -62,3 +62,28 @@ def test_size_shuffle_partitions_applies_to_session(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
         spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+
+
+def test_max_partition_bytes_reads_every_spark_byte_string(spark):
+    """The conf is read as Spark parses it: plain bytes, one-letter and
+    two-letter suffixes in either case (``128MB`` and ``64kb`` are as
+    valid as ``128m``); unset means Spark's 128 MiB default."""
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key, None)
+    try:
+        for raw, want in [
+            ("128MB", 128 * 2**20),
+            ("64kb", 64 * 2**10),
+            ("4m", 4 * 2**20),
+            ("1g", 2**30),
+            ("1024", 1024),
+        ]:
+            spark.conf.set(key, raw)
+            assert SES.max_partition_bytes(spark) == want, raw
+        spark.conf.unset(key)
+        assert SES.max_partition_bytes(spark) == 128 * 2**20
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
