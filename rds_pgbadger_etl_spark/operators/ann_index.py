@@ -40,6 +40,7 @@ hash-match the in-session ann_*_topk oracles exactly.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -49,6 +50,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from rds_pgbadger_etl_spark.operators import index_maintenance as M
 from rds_pgbadger_etl_spark.operators import similarity as S
@@ -393,9 +395,6 @@ def build_ann_index(
     (:func:`_resolve_residual_auto` — clustered corpora get residual,
     uniform ones raw; the choice and ratio are stamped in the manifest).
     """
-    _CENTROIDS.pop(index_dir, None)  # rebuilt index invalidates the
-    _CODEBOOKS.pop(index_dir, None)  # in-process quantizer cache
-    _SQ_STATS.pop(index_dir, None)
     _stamp_layout(index_dir)
     # a rebuild orphans any derived SQ8 arm (its grid was trained on the
     # old corpus); drop the flag so readers fail loudly until it's re-added
@@ -403,7 +402,6 @@ def build_ann_index(
     M.write_meta(index_dir, _SQ8_PREFIX_DIMS_KEY, None)
     # ... and any derived binary arm (thresholds trained on the old
     # corpus) — same fail-loudly contract
-    _BIN_THRESH.pop(index_dir, None)
     M.write_meta(index_dir, _BINARY_KEY, False)
     if n_centroids is None:  # auto: sqrt-of-corpus rule (one count job)
         n_centroids = auto_n_centroids(emb.count())
@@ -706,32 +704,29 @@ def _rounded_cosines(q: np.ndarray, mat: np.ndarray) -> np.ndarray:
     return np.round(dots / norms, 6)
 
 
-# The quantizer tables (centroids, PQ codebook) are metadata-sized and
-# immutable once built — every real ANN service pins them in memory.
-# Cached per index_dir so repeated searches in one process pay the two
-# tiny collect jobs once.
-_CENTROIDS: dict[str, tuple] = {}
-_CODEBOOKS: dict[str, np.ndarray] = {}
+# The quantizer tables (centroids, PQ codebook, SQ8 grid, binary
+# thresholds, two-level coarse/fine) are metadata-sized — every real ANN
+# service pins them in memory. They are cached per process through
+# M.cached_table, keyed on the files they were read from, so repeated
+# searches pay each tiny collect job once and a table rewritten by any
+# process is read again.
 
 
 def _read_centroids(spark: SparkSession, index_dir: str):
-    cached = _CENTROIDS.get(index_dir)
-    if cached is not None:
-        return cached
-    _check_layout(index_dir)  # every single-level reader passes here
-    rows = spark.read.parquet(M.table_path(index_dir, "centroids")).collect()
-    rows.sort(key=lambda r: r.cell)
-    cells = [int(r.cell) for r in rows]
-    mat = np.array([r.c_emb for r in rows], dtype=np.float64)
-    _CENTROIDS[index_dir] = (cells, mat)
-    return cells, mat
+    def load():
+        _check_layout(index_dir)  # every single-level reader passes here
+        rows = spark.read.parquet(M.table_path(index_dir, "centroids")).collect()
+        rows.sort(key=lambda r: r.cell)
+        cells = [int(r.cell) for r in rows]
+        return cells, np.array([r.c_emb for r in rows], dtype=np.float64)
+
+    return M.cached_table(index_dir, "centroids", load)
 
 
 def _load_codebook(spark: SparkSession, index_dir: str) -> np.ndarray:
-    """Stored integer codebook as ``ic[subspace][cell][dim]`` (cached
-    per index_dir — metadata-sized, immutable once built)."""
-    ic = _CODEBOOKS.get(index_dir)
-    if ic is None:
+    """Stored integer codebook as ``ic[subspace][cell][dim]``."""
+
+    def load():
         cb = spark.read.parquet(M.table_path(index_dir, "codebook")).collect()
         n_sub = max(r.subspace for r in cb) + 1
         n_cells = max(r.cell for r in cb) + 1
@@ -739,8 +734,9 @@ def _load_codebook(spark: SparkSession, index_dir: str) -> np.ndarray:
         ic = np.zeros((n_sub, n_cells, sub_dim), dtype=np.int64)
         for r in cb:
             ic[r.subspace, r.cell, r.dim] = r.ic
-        _CODEBOOKS[index_dir] = ic
-    return ic
+        return ic
+
+    return M.cached_table(index_dir, "codebook", load)
 
 
 def _probe_cells(
@@ -829,11 +825,17 @@ def _probe_predicate(parts: list[str], probes: list[tuple]):
     return pred
 
 
-def _cell_predicate(pairs: list[tuple[int, int]]):
-    return _probe_predicate(["cell"], pairs)
-
-
-_PROBE_SCHEMA = "q_id long, cell int"
+def _scan(
+    spark: SparkSession,
+    index_dir: str,
+    table: str,
+    parts: list[str],
+    probes: list[tuple],
+) -> DataFrame:
+    """``table`` read with only the probed partitions."""
+    return spark.read.parquet(M.table_path(index_dir, table)).where(
+        _probe_predicate(parts, probes)
+    )
 
 
 def _queries_df(spark: SparkSession, queries: list[Query]) -> DataFrame:
@@ -848,8 +850,8 @@ def _queries_df(spark: SparkSession, queries: list[Query]) -> DataFrame:
     )
 
 
-# Probe-row schemas of the two layouts' IVF-PQ arms: q_id, then the
-# ``vectors/`` partition columns.
+# Probe-row schemas of the two layouts: q_id, then the partition columns
+# every probed table (raw/, vectors/, sq8/, binary/) is written under.
 _PQ_PROBES = T.StructType(
     [T.StructField("q_id", T.LongType()), T.StructField("cell", T.IntegerType())]
 )
@@ -881,7 +883,10 @@ def _local_df(
     LocalRelation: built from an Arrow table, so broadcasting it starts
     no Spark job (a Python list would become a LogicalRDD: a job and a
     Python worker)."""
-    cols = {f.name: [r[i] for r in rows] for i, f in enumerate(schema.fields)}
+    cols = {
+        f.name: pa.array([r[i] for r in rows], type=to_arrow_type(f.dataType))
+        for i, f in enumerate(schema.fields)
+    }
     fields = list(schema.fields)
     if lut is not None:
         width = lut.shape[1]
@@ -911,11 +916,7 @@ def _spark_adc_topk(
     lut_keys = probes if residual else [(q_id,) for q_id, _ in queries]
     lut_df = _local_df(spark, lut_keys, lut_schema, lut)
     vectors = _live(
-        spark,
-        index_dir,
-        spark.read.parquet(M.table_path(index_dir, "vectors")).where(
-            _probe_predicate(parts, probes)
-        ),
+        spark, index_dir, _scan(spark, index_dir, "vectors", parts, probes)
     )
     scored = (
         vectors.join(F.broadcast(_local_df(spark, probes, schema)), parts)
@@ -1050,10 +1051,76 @@ def _ivfpq_topk(
     )
 
 
-def _int_centroids_1level(spark: SparkSession, index_dir: str):
-    _, mat = _read_centroids(spark, index_dir)
-    icent = _int_centroids(mat)
-    return lambda probes: icent[[cell for _, cell in probes]]
+def _probes(
+    spark: SparkSession,
+    index_dir: str,
+    queries: list[Query],
+    n_probe: int,
+    n_probe_groups: int,
+) -> tuple[list[tuple], T.StructType, Callable[[list[tuple]], np.ndarray]]:
+    """The probe step every search arm shares, for whichever layout
+    lives at ``index_dir``: the probe rows ``(q_id, *partition
+    columns)``, their schema (``_PQ_PROBES`` or ``_PQ_PROBES_2L``), and
+    a function giving the probed cells' integer centroids for a list of
+    probe rows (the residual LUT's input). A single-level index ranks
+    all its centroids per query; a two-level one ranks its coarse
+    groups, then the fine cells of its ``n_probe_groups`` nearest
+    groups (:func:`_probe_cells_2level`). Both keep ``n_probe`` cells
+    by (rounded sim desc, cell asc), so a two-level index with one
+    group answers exactly like the single-level index over the same
+    centroids."""
+    if _is_2level(index_dir):
+        probes = _probe_cells_2level(
+            spark, index_dir, queries, n_probe_groups, n_probe
+        )
+
+        def int_centroids(rows: list[tuple]) -> np.ndarray:
+            groups = sorted({g for _, g, _ in rows})
+            shards = _fine_shards(spark, index_dir, groups)
+            emb = {c: e for shard in shards.values() for c, e in shard}
+            return _int_centroids(np.array([emb[c] for _, _, c in rows]))
+
+        return probes, _PQ_PROBES_2L, int_centroids
+    cells, mat = _read_centroids(spark, index_dir)
+    return (
+        _probe_cells(queries, cells, mat, n_probe),
+        _PQ_PROBES,
+        lambda rows: _int_centroids(mat)[[c for _, c in rows]],
+    )
+
+
+def _with_field(schema: T.StructType, name: str, dtype) -> T.StructType:
+    return T.StructType(list(schema.fields) + [T.StructField(name, dtype)])
+
+
+def _exact_rerank(
+    spark: SparkSession,
+    index_dir: str,
+    queries: list[Query],
+    parts: list[str],
+    probes: list[tuple],
+    short: DataFrame,
+    k: int,
+) -> DataFrame:
+    """The exact tail of the shortlist arms: the shortlist's (q_id,
+    vec_id) rows fetch their raw embeddings (a broadcast semi-join onto
+    the probed raw partitions), score the rounded full-dimension cosine
+    and keep each query's top-k (q_id, vec_id, sim, rank). The shortlist
+    is bounded (≤ queries × shortlist rows), so a JVM cosine and a
+    single-window top-k serve it with no Arrow boundary."""
+    reranked = (
+        _scan(spark, index_dir, "raw", parts, probes)
+        .join(F.broadcast(short), "vec_id")
+        .join(F.broadcast(_queries_df(spark, queries)), "q_id")
+        .select(
+            "q_id",
+            "vec_id",
+            S.cosine_rounded(F.col("q_emb"), F.col("embedding")).alias("sim"),
+        )
+    )
+    return S.topk_bounded(
+        reranked, "q_id", [F.col("sim").desc(), F.col("vec_id")], k
+    )
 
 
 def ann_index_ivfpq_topk(
@@ -1062,6 +1129,8 @@ def ann_index_ivfpq_topk(
     queries: list[Query],
     k: int = 5,
     n_probe: int = S.N_PROBE,
+    *,
+    n_probe_groups: int = N_PROBE_GROUPS,
 ) -> DataFrame:
     """IVF-PQ search from the artifact: the probed cells' PQ codes, the
     integer ADC LUT, integer ranking — the same output contract as
@@ -1069,12 +1138,58 @@ def ann_index_ivfpq_topk(
     corpus access. Residual indexes (the manifest flag) swap in the
     per-(query, probed cell) residual LUT. Small searches are scored on
     the driver, larger ones by a partition-pruned Spark scan
-    (:func:`_ivfpq_topk`)."""
-    cells, mat = _read_centroids(spark, index_dir)
-    probes = _probe_cells(queries, cells, mat, n_probe)
+    (:func:`_ivfpq_topk`). On the two-level layout — the billion-vector
+    arm it exists for — the codes are the only per-vector bytes read,
+    ~100x less probed IO than raw floats. ``n_probe_groups`` applies to
+    a two-level index only (:func:`_probes`), like in every arm."""
+    probes, schema, int_centroids_of = _probes(
+        spark, index_dir, queries, n_probe, n_probe_groups
+    )
     return _ivfpq_topk(
-        spark, index_dir, queries, probes, _PQ_PROBES,
-        _int_centroids_1level(spark, index_dir), k,
+        spark, index_dir, queries, probes, schema, int_centroids_of, k
+    )
+
+
+# Two-stage search: ADC shortlist + exact rerank — the standard
+# production composition (a PQ scan alone trades recall for IO; the
+# rerank buys exactness back for shortlist x 256 B of targeted raw
+# reads): probe -> integer-ADC-score the probed cells' CODES -> keep the
+# top `shortlist` per query -> fetch ONLY those vectors' raw embeddings
+# (broadcast semijoin against the already-pruned raw partitions) ->
+# exact rounded cosine -> top-k. With shortlist >= the probed
+# population the result equals the IVF-Flat reader exactly
+# (test-pinned), which is the semantics anchor.
+
+
+def ann_index_ivfpq_rerank_topk(
+    spark: SparkSession,
+    index_dir: str,
+    queries: list[Query],
+    k: int = 5,
+    shortlist: int | None = None,
+    n_probe: int = S.N_PROBE,
+    *,
+    n_probe_groups: int = N_PROBE_GROUPS,
+) -> DataFrame:
+    """ADC-shortlist + exact-rerank over the artifact: scan codes for
+    the probed cells (partition-pruned, 2 bytes/vector), rank by the
+    broadcast integer LUT, keep ``shortlist`` candidates per query
+    (ties to lower vec_id — the ivfpq contract), then exact cosine ONLY
+    on those candidates' raw rows. At billion-vector scale on the
+    two-level layout this is THE search. Output contract matches
+    ann_index_ivf_topk: (q_id, vec_id, sim, rank)."""
+    shortlist = 4 * k if shortlist is None else shortlist
+    probes, schema, int_centroids_of = _probes(
+        spark, index_dir, queries, n_probe, n_probe_groups
+    )
+    lut, residual = _search_luts(
+        spark, index_dir, queries, probes, int_centroids_of
+    )
+    short = _spark_adc_topk(
+        spark, index_dir, queries, probes, schema, lut, residual, shortlist
+    ).select("q_id", "vec_id")
+    return _exact_rerank(
+        spark, index_dir, queries, schema.names[1:], probes, short, k
     )
 
 
@@ -1084,21 +1199,19 @@ def ann_index_ivf_topk(
     queries: list[Query],
     k: int = 5,
     n_probe: int = S.N_PROBE,
+    *,
+    n_probe_groups: int = N_PROBE_GROUPS,
 ) -> DataFrame:
     """IVF-Flat search from the artifact: exact cosine inside the probed
     cells' raw partitions only (same output contract as
     similarity.ivf_topk: q_id, vec_id, sim, rank)."""
-    cells, mat = _read_centroids(spark, index_dir)
-    probes = _probe_cells(queries, cells, mat, n_probe)
-    probes_df = spark.createDataFrame(probes, _PROBE_SCHEMA)
-
-    raw = _live(
-        spark,
-        index_dir,
-        spark.read.parquet(M.table_path(index_dir, "raw")).where(_cell_predicate(probes)),
+    probes, schema, _ = _probes(
+        spark, index_dir, queries, n_probe, n_probe_groups
     )
+    parts = schema.names[1:]
+    raw = _live(spark, index_dir, _scan(spark, index_dir, "raw", parts, probes))
     scored = (
-        raw.join(F.broadcast(probes_df), "cell")
+        raw.join(F.broadcast(_local_df(spark, probes, schema)), parts)
         .filter(F.col("vec_id") != F.col("q_id"))
         .join(F.broadcast(_queries_df(spark, queries)), "q_id")
         .select(
@@ -1139,6 +1252,8 @@ def ann_index_truncated_topk(
     dims: int = S.MRL_DIMS,
     shortlist: int = S.MRL_SHORTLIST,
     n_probe: int = S.N_PROBE,
+    *,
+    n_probe_groups: int = N_PROBE_GROUPS,
 ) -> DataFrame:
     """Adaptive retrieval over the artifact — BOTH pruning axes composed
     at the reader with no new index state: the IVF probe prunes WHICH
@@ -1159,22 +1274,16 @@ def ann_index_truncated_topk(
     0/0 = NaN truncated cosine (which Spark sorts above every real
     similarity) can never pollute the shortlist."""
     queries = _nonzero_prefix_queries(queries, dims)
-    cells, mat = _read_centroids(spark, index_dir)
-    probes = _probe_cells(queries, cells, mat, n_probe)
-    probes_df = spark.createDataFrame(probes, _PROBE_SCHEMA)
-    qdf = _queries_df(spark, queries)
-    q_sliced = qdf.select(
+    probes, schema, _ = _probes(
+        spark, index_dir, queries, n_probe, n_probe_groups
+    )
+    parts = schema.names[1:]
+    q_sliced = _queries_df(spark, queries).select(
         "q_id", F.slice("q_emb", 1, dims).alias("q_emb")
     )
-    raw = _live(
-        spark,
-        index_dir,
-        spark.read.parquet(M.table_path(index_dir, "raw")).where(
-            _cell_predicate(probes)
-        ),
-    )
+    raw = _live(spark, index_dir, _scan(spark, index_dir, "raw", parts, probes))
     tscored = (
-        raw.join(F.broadcast(probes_df), "cell")
+        raw.join(F.broadcast(_local_df(spark, probes, schema)), parts)
         .filter(F.col("vec_id") != F.col("q_id"))
         .filter(_nonzero_prefix_col(dims))
         .join(F.broadcast(q_sliced), "q_id")
@@ -1189,21 +1298,7 @@ def ann_index_truncated_topk(
     short = S.topk_per_key(
         tscored, "q_id", [F.col("tsim").desc(), F.col("vec_id")], shortlist
     ).select("q_id", "vec_id")
-    rescored = (
-        raw.select("vec_id", "embedding")
-        .join(F.broadcast(short), "vec_id")
-        .join(F.broadcast(qdf), "q_id")
-        .select(
-            "q_id",
-            "vec_id",
-            # bounded rerank (≤ queries × shortlist rows): JVM cosine +
-            # single-window top-k — no Arrow boundary, one less exchange
-            S.cosine_rounded(F.col("q_emb"), F.col("embedding")).alias("sim"),
-        )
-    )
-    return S.topk_bounded(
-        rescored, "q_id", [F.col("sim").desc(), F.col("vec_id")], k
-    )
+    return _exact_rerank(spark, index_dir, queries, parts, probes, short, k)
 
 
 def _query_buckets(
@@ -1329,23 +1424,25 @@ _SQ8_PREFIX_DIMS_KEY = "__sq8_prefix_dims__"
 # add_sq8_to_ann_index so the stats audit can report how far the corpus
 # has grown past the grid (the drift-age signal).
 _SQ8_TRAINED_ROWS_KEY = "__sq8_trained_rows__"
-_SQ_STATS: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-
-
 def _read_sq_stats(spark: SparkSession, index_dir: str):
     """(vmin, scale) per dim from the stored ``sq_stats/`` table —
-    metadata-sized, immutable once built, cached per index_dir like the
-    centroid/codebook quantizers."""
-    cached = _SQ_STATS.get(index_dir)
-    if cached is not None:
-        return cached
-    rows = spark.read.parquet(M.table_path(index_dir, "sq_stats")).collect()
-    rows.sort(key=lambda r: r.dim)
-    vmin = np.array([r.vmin for r in rows], dtype=np.float64)
-    vmax = np.array([r.vmax for r in rows], dtype=np.float64)
-    scale = (vmax - vmin) / 255.0
-    _SQ_STATS[index_dir] = (vmin, scale)
-    return vmin, scale
+    metadata-sized, cached like the centroid/codebook quantizers."""
+
+    def load():
+        rows = spark.read.parquet(M.table_path(index_dir, "sq_stats")).collect()
+        rows.sort(key=lambda r: r.dim)
+        vmin = np.array([r.vmin for r in rows], dtype=np.float64)
+        vmax = np.array([r.vmax for r in rows], dtype=np.float64)
+        return vmin, (vmax - vmin) / 255.0
+
+    return M.cached_table(index_dir, "sq_stats", load)
+
+
+def _require_sq8(index_dir: str) -> None:
+    if not M.read_meta(index_dir, _SQ8_KEY, False):
+        raise ValueError(
+            f"no SQ8 arm at {index_dir}: run add_sq8_to_ann_index first"
+        )
 
 
 def _sq8_encode_udf(vmin: np.ndarray, scale: np.ndarray):
@@ -1471,7 +1568,6 @@ def add_sq8_to_ann_index(spark: SparkSession, index_dir: str) -> None:
     grid AND re-encodes every stored vector from ``raw/``, so the arm
     comes back clean in one idempotent pass."""
     _check_layout(index_dir)
-    _SQ_STATS.pop(index_dir, None)
     pcols = ["group", "cell"] if _is_2level(index_dir) else ["cell"]
     raw = _live(
         spark, index_dir, spark.read.parquet(M.table_path(index_dir, "raw"))
@@ -1541,10 +1637,7 @@ def add_sq8_prefix_to_ann_index(
     filter it through the same ``_live`` anti-join, and a grid retrain
     re-derives it automatically (:func:`add_sq8_to_ann_index`)."""
     _check_layout(index_dir)
-    if not M.read_meta(index_dir, _SQ8_KEY, False):
-        raise ValueError(
-            f"no SQ8 arm at {index_dir}: run add_sq8_to_ann_index first"
-        )
+    _require_sq8(index_dir)
     pcols = ["group", "cell"] if _is_2level(index_dir) else ["cell"]
     sq8 = spark.read.parquet(M.table_path(index_dir, "sq8"))
     (
@@ -1579,6 +1672,8 @@ def ann_index_sq8_topk(
     shortlist: int | None = None,
     n_probe: int = S.N_PROBE,
     dims: int | None = None,
+    *,
+    n_probe_groups: int = N_PROBE_GROUPS,
 ) -> DataFrame:
     """Two-stage SQ8 search: partition-pruned scan of the probed cells'
     int8 codes (~64 B/vector — 4x less IO than raw), exact-integer
@@ -1599,13 +1694,12 @@ def ann_index_sq8_topk(
     codes column. Results are bit-identical either way (per-dim grid
     independence; pinned by test). The rerank stays exact
     full-dimension cosine."""
-    if not M.read_meta(index_dir, _SQ8_KEY, False):
-        raise ValueError(
-            f"no SQ8 arm at {index_dir}: run add_sq8_to_ann_index first"
-        )
+    _require_sq8(index_dir)
     shortlist = 4 * k if shortlist is None else shortlist
-    cells, mat = _read_centroids(spark, index_dir)
-    probes = _probe_cells(queries, cells, mat, n_probe)
+    probes, schema, _ = _probes(
+        spark, index_dir, queries, n_probe, n_probe_groups
+    )
+    parts = schema.names[1:]
     vmin, scale = _read_sq_stats(spark, index_dir)
     q_mat = np.vstack(
         [_sq8_encode_np(vec, vmin, scale) for _, vec in queries]
@@ -1615,25 +1709,22 @@ def ann_index_sq8_topk(
     # probe rows carry the query's position in the closure matrix so the
     # join can index the per-row distance array
     q_pos = {int(q): i for i, (q, _) in enumerate(queries)}
-    probes_df = spark.createDataFrame(
-        [(q, q_pos[q], c) for q, c in probes],
-        "q_id long, q_idx int, cell int",
+    probes_df = _local_df(
+        spark,
+        [(*p, q_pos[p[0]]) for p in probes],
+        _with_field(schema, "q_idx", T.IntegerType()),
     )
 
     scan_table, needs_slice = _sq8_scan_table(index_dir, dims)
     sq8 = _live(
-        spark,
-        index_dir,
-        spark.read.parquet(M.table_path(index_dir, scan_table)).where(
-            _cell_predicate(probes)
-        ),
+        spark, index_dir, _scan(spark, index_dir, scan_table, parts, probes)
     )
     code_col = (
         F.slice("codes", 1, dims) if needs_slice else F.col("codes")
     )
     scored = (
         sq8.withColumn("dists", _sq8_dists_udf(q_mat)(code_col))
-        .join(F.broadcast(probes_df), "cell")
+        .join(F.broadcast(probes_df), parts)
         .filter(F.col("vec_id") != F.col("q_id"))
         .select(
             "q_id",
@@ -1644,24 +1735,7 @@ def ann_index_sq8_topk(
     short = S.topk_per_key(
         scored, "q_id", [F.col("sq_dist"), F.col("vec_id")], shortlist
     ).select("q_id", "vec_id")
-
-    raw = spark.read.parquet(M.table_path(index_dir, "raw")).where(
-        _cell_predicate(probes)
-    )
-    reranked = (
-        raw.join(F.broadcast(short), "vec_id")
-        .join(F.broadcast(_queries_df(spark, queries)), "q_id")
-        .select(
-            "q_id",
-            "vec_id",
-            # bounded rerank (≤ queries × shortlist rows): JVM cosine +
-            # single-window top-k — no Arrow boundary, one less exchange
-            S.cosine_rounded(F.col("q_emb"), F.col("embedding")).alias("sim"),
-        )
-    )
-    return S.topk_bounded(
-        reranked, "q_id", [F.col("sim").desc(), F.col("vec_id")], k
-    )
+    return _exact_rerank(spark, index_dir, queries, parts, probes, short, k)
 
 
 # --------------------------------------------------------------------------
@@ -1704,21 +1778,27 @@ _BINARY_TRAINED_ONES_KEY = "__binary_trained_ones_frac__"
 # degrades as the balance skews, which is why the audit exists.
 _BINARY_ONES_KEY = "__binary_ones__"
 _BINARY_ROWS_KEY = "__binary_rows__"
-_BIN_THRESH: dict[str, np.ndarray] = {}
 
 
 def _read_bin_thresh(spark: SparkSession, index_dir: str) -> np.ndarray:
     """Per-dim midrange thresholds from the stored ``bin_stats/`` table
-    — metadata-sized, immutable once trained, cached per index_dir like
-    the centroid/codebook/SQ-grid quantizers."""
-    cached = _BIN_THRESH.get(index_dir)
-    if cached is not None:
-        return cached
-    rows = spark.read.parquet(M.table_path(index_dir, "bin_stats")).collect()
-    rows.sort(key=lambda r: r.dim)
-    thresh = np.array([r.thresh for r in rows], dtype=np.float64)
-    _BIN_THRESH[index_dir] = thresh
-    return thresh
+    — metadata-sized, cached like the centroid/codebook/SQ-grid
+    quantizers."""
+
+    def load():
+        rows = spark.read.parquet(M.table_path(index_dir, "bin_stats")).collect()
+        rows.sort(key=lambda r: r.dim)
+        return np.array([r.thresh for r in rows], dtype=np.float64)
+
+    return M.cached_table(index_dir, "bin_stats", load)
+
+
+def _require_binary(index_dir: str) -> None:
+    if not M.read_meta(index_dir, _BINARY_KEY, False):
+        raise ValueError(
+            f"no binary arm at {index_dir}: run add_binary_to_ann_index"
+            " first"
+        )
 
 
 def _pack_bits(bits: np.ndarray) -> np.ndarray:
@@ -1832,7 +1912,6 @@ def add_binary_to_ann_index(spark: SparkSession, index_dir: str) -> None:
     re-runs this verb automatically (same no-knob contract as the SQ8
     drift retrain)."""
     _check_layout(index_dir)
-    _BIN_THRESH.pop(index_dir, None)
     pcols = ["group", "cell"] if _is_2level(index_dir) else ["cell"]
     raw = _live(
         spark, index_dir, spark.read.parquet(M.table_path(index_dir, "raw"))
@@ -1876,25 +1955,27 @@ def add_binary_to_ann_index(spark: SparkSession, index_dir: str) -> None:
 def _binary_scored(
     spark: SparkSession,
     index_dir: str,
-    probe_rows: list[tuple],
-    probe_schema: str,
-    join_keys: list[str],
-    predicate,
+    queries: list[Query],
+    probes: list[tuple],
+    schema: T.StructType,
 ) -> DataFrame:
-    """Shared Hamming-shortlist stage for both layouts: pruned scan of
-    ``binary/``, broadcast probe join (each probe row carries its
+    """The Hamming stage of the binary arm and the cascade: pruned scan
+    of ``binary/``, broadcast probe join (each probe row carries its
     query's packed words, so no second join attaches them), and the
     codegen Hamming column. Returns (q_id, vec_id, ham)."""
-    probes_df = spark.createDataFrame(probe_rows, probe_schema)
-    words = _live(
+    parts = schema.names[1:]
+    thresh = _read_bin_thresh(spark, index_dir)
+    q_words = {int(q): _binary_encode_np(vec, thresh) for q, vec in queries}
+    probes_df = _local_df(
         spark,
-        index_dir,
-        spark.read.parquet(M.table_path(index_dir, "binary")).where(
-            predicate
-        ),
+        [(*p, q_words[p[0]]) for p in probes],
+        _with_field(schema, "q_words", T.ArrayType(T.LongType())),
+    )
+    words = _live(
+        spark, index_dir, _scan(spark, index_dir, "binary", parts, probes)
     )
     return (
-        words.join(F.broadcast(probes_df), join_keys)
+        words.join(F.broadcast(probes_df), parts)
         .filter(F.col("vec_id") != F.col("q_id"))
         .select(
             "q_id",
@@ -1911,6 +1992,8 @@ def ann_index_binary_topk(
     k: int = 5,
     shortlist: int | None = None,
     n_probe: int = S.N_PROBE,
+    *,
+    n_probe_groups: int = N_PROBE_GROUPS,
 ) -> DataFrame:
     """Two-stage binary search: partition-pruned scan of the probed
     cells' packed sign bits (~dims/8 B per vector — 8 B at DIM=64, 8x
@@ -1918,70 +2001,61 @@ def ann_index_binary_topk(
     query words ENTIRELY in whole-stage codegen (ties to lower
     vec_id), exact cosine rerank on the shortlist only. Output
     contract matches ann_index_ivf_topk: (q_id, vec_id, sim, rank)."""
-    if not M.read_meta(index_dir, _BINARY_KEY, False):
-        raise ValueError(
-            f"no binary arm at {index_dir}: run add_binary_to_ann_index"
-            " first"
-        )
+    _require_binary(index_dir)
     shortlist = 4 * k if shortlist is None else shortlist
-    cells, mat = _read_centroids(spark, index_dir)
-    probes = _probe_cells(queries, cells, mat, n_probe)
-    thresh = _read_bin_thresh(spark, index_dir)
-    q_words = {
-        int(q): _binary_encode_np(vec, thresh) for q, vec in queries
-    }
-    scored = _binary_scored(
-        spark,
-        index_dir,
-        [(q, c, q_words[q]) for q, c in probes],
-        "q_id long, cell int, q_words array<long>",
-        ["cell"],
-        _cell_predicate(probes),
+    probes, schema, _ = _probes(
+        spark, index_dir, queries, n_probe, n_probe_groups
     )
+    scored = _binary_scored(spark, index_dir, queries, probes, schema)
     short = S.topk_per_key(
         scored, "q_id", [F.col("ham"), F.col("vec_id")], shortlist
     ).select("q_id", "vec_id")
-
-    raw = spark.read.parquet(M.table_path(index_dir, "raw")).where(
-        _cell_predicate(probes)
-    )
-    reranked = (
-        raw.join(F.broadcast(short), "vec_id")
-        .join(F.broadcast(_queries_df(spark, queries)), "q_id")
-        .select(
-            "q_id",
-            "vec_id",
-            # bounded rerank (≤ queries × shortlist rows): JVM cosine +
-            # single-window top-k — no Arrow boundary, one less exchange
-            S.cosine_rounded(F.col("q_emb"), F.col("embedding")).alias("sim"),
-        )
-    )
-    return S.topk_bounded(
-        reranked, "q_id", [F.col("sim").desc(), F.col("vec_id")], k
+    return _exact_rerank(
+        spark, index_dir, queries, schema.names[1:], probes, short, k
     )
 
 
-def _cascade_stage23(
+def ann_index_cascade_topk(
     spark: SparkSession,
     index_dir: str,
     queries: list[Query],
-    scored_bin: DataFrame,
-    predicate,
-    k: int,
-    shortlist: int,
-    coarse_shortlist: int,
+    k: int = 5,
+    shortlist: int | None = None,
+    coarse_shortlist: int | None = None,
+    n_probe: int = S.N_PROBE,
+    *,
+    n_probe_groups: int = N_PROBE_GROUPS,
 ) -> DataFrame:
-    """Stages 2+3 of the three-stage cascade, shared by both layouts:
-    the binary Hamming survivors (stage 1, ``scored_bin``) are cut to
-    ``coarse_shortlist`` per query, code-space SQ8 L2 re-scores ONLY
-    those survivors (broadcast semi-join onto the pruned codes scan —
-    the integer distance work shrinks from the probed population to
-    |queries| x coarse_shortlist pairs, and the per-pair L2 is a
-    ``zip_with`` square-sum that stays in whole-stage codegen, so the
-    cascade's first TWO stages run with no Python at all), and the
-    exact cosine rerank reads only the final ``shortlist`` rows."""
+    """The probed-bytes ladder COMPOSED as a three-stage cascade:
+    binary Hamming over the packed sign bits (~dims/8 B per scanned
+    vector) covers the whole probed population and keeps
+    ``coarse_shortlist`` candidates; exact-integer SQ8 code-space L2
+    re-scores only those survivors down to ``shortlist``; exact cosine
+    reranks only those to the final k. The deep-but-cheap first stage
+    absorbs the 1-bit rung's precision loss (its honest 8M recall at a
+    4K shortlist is 0.82; with the cascade's deeper coarse cut the SQ8
+    stage re-ranks with 8x the precision before anything exact runs).
+    The SQ8 stage is a broadcast semi-join of the survivors onto the
+    pruned codes scan — the integer distance work shrinks from the
+    probed population to |queries| x coarse_shortlist pairs, and the
+    per-pair L2 is a ``zip_with`` square-sum in whole-stage codegen —
+    so no stage evaluates Python. Requires both derived arms. Output
+    contract matches ann_index_ivf_topk: (q_id, vec_id, sim, rank)."""
+    _require_binary(index_dir)
+    _require_sq8(index_dir)
+    shortlist = 4 * k if shortlist is None else shortlist
+    coarse_shortlist = (
+        4 * shortlist if coarse_shortlist is None else coarse_shortlist
+    )
+    probes, schema, _ = _probes(
+        spark, index_dir, queries, n_probe, n_probe_groups
+    )
+    parts = schema.names[1:]
     short1 = S.topk_per_key(
-        scored_bin, "q_id", [F.col("ham"), F.col("vec_id")], coarse_shortlist
+        _binary_scored(spark, index_dir, queries, probes, schema),
+        "q_id",
+        [F.col("ham"), F.col("vec_id")],
+        coarse_shortlist,
     ).select("q_id", "vec_id")
     vmin, scale = _read_sq_stats(spark, index_dir)
     q_codes_df = spark.createDataFrame(
@@ -1991,11 +2065,7 @@ def _cascade_stage23(
         ],
         "q_id long, q_codes array<int>",
     )
-    sq8 = _live(
-        spark,
-        index_dir,
-        spark.read.parquet(M.table_path(index_dir, "sq8")).where(predicate),
-    )
+    sq8 = _live(spark, index_dir, _scan(spark, index_dir, "sq8", parts, probes))
     # (a-b)^2 summed as int: bounded by dims * 255^2 (~4.2M at dims=64,
     # overflow-safe far past any real embedding width)
     sq_dist = F.aggregate(
@@ -2013,140 +2083,7 @@ def _cascade_stage23(
     short2 = S.topk_bounded(
         sq_scored, "q_id", [F.col("sq_dist"), F.col("vec_id")], shortlist
     ).select("q_id", "vec_id")
-    raw = spark.read.parquet(M.table_path(index_dir, "raw")).where(predicate)
-    reranked = (
-        raw.join(F.broadcast(short2), "vec_id")
-        .join(F.broadcast(_queries_df(spark, queries)), "q_id")
-        .select(
-            "q_id",
-            "vec_id",
-            # bounded rerank (≤ queries × shortlist rows): JVM cosine +
-            # single-window top-k — no Arrow boundary, one less exchange
-            S.cosine_rounded(F.col("q_emb"), F.col("embedding")).alias("sim"),
-        )
-    )
-    return S.topk_bounded(
-        reranked, "q_id", [F.col("sim").desc(), F.col("vec_id")], k
-    )
-
-
-def ann_index_cascade_topk(
-    spark: SparkSession,
-    index_dir: str,
-    queries: list[Query],
-    k: int = 5,
-    shortlist: int | None = None,
-    coarse_shortlist: int | None = None,
-    n_probe: int = S.N_PROBE,
-) -> DataFrame:
-    """The probed-bytes ladder COMPOSED as a three-stage cascade:
-    binary Hamming over the packed sign bits (~dims/8 B per scanned
-    vector) covers the whole probed population and keeps
-    ``coarse_shortlist`` candidates; exact-integer SQ8 code-space L2
-    re-scores only those survivors down to ``shortlist``; exact cosine
-    reranks only those to the final k. The deep-but-cheap first stage
-    absorbs the 1-bit rung's precision loss (its honest 8M recall at a
-    4K shortlist is 0.82; with the cascade's deeper coarse cut the SQ8
-    stage re-ranks with 8x the precision before anything exact runs),
-    and the first TWO stages are pure whole-stage codegen — the only
-    Python in the plan is the final |q| x shortlist cosine kernel.
-    Requires both derived arms. Output contract matches
-    ann_index_ivf_topk: (q_id, vec_id, sim, rank)."""
-    if not M.read_meta(index_dir, _BINARY_KEY, False):
-        raise ValueError(
-            f"no binary arm at {index_dir}: run add_binary_to_ann_index"
-            " first"
-        )
-    if not M.read_meta(index_dir, _SQ8_KEY, False):
-        raise ValueError(
-            f"no SQ8 arm at {index_dir}: run add_sq8_to_ann_index first"
-        )
-    shortlist = 4 * k if shortlist is None else shortlist
-    coarse_shortlist = (
-        4 * shortlist if coarse_shortlist is None else coarse_shortlist
-    )
-    cells, mat = _read_centroids(spark, index_dir)
-    probes = _probe_cells(queries, cells, mat, n_probe)
-    thresh = _read_bin_thresh(spark, index_dir)
-    q_words = {
-        int(q): _binary_encode_np(vec, thresh) for q, vec in queries
-    }
-    scored = _binary_scored(
-        spark,
-        index_dir,
-        [(q, c, q_words[q]) for q, c in probes],
-        "q_id long, cell int, q_words array<long>",
-        ["cell"],
-        _cell_predicate(probes),
-    )
-    return _cascade_stage23(
-        spark,
-        index_dir,
-        queries,
-        scored,
-        _cell_predicate(probes),
-        k,
-        shortlist,
-        coarse_shortlist,
-    )
-
-
-def ann_index_2level_cascade_topk(
-    spark: SparkSession,
-    index_dir: str,
-    queries: list[Query],
-    k: int = 5,
-    shortlist: int | None = None,
-    coarse_shortlist: int | None = None,
-    n_probe_groups: int | None = None,
-    n_probe: int = S.N_PROBE,
-) -> DataFrame:
-    """:func:`ann_index_cascade_topk` on the sharded-quantizer layout —
-    the three-stage binary → SQ8 → exact cascade over the
-    (group, cell)-pruned scans, so the composed ladder exists on BOTH
-    layouts like each of its rungs."""
-    if not M.read_meta(index_dir, _BINARY_KEY, False):
-        raise ValueError(
-            f"no binary arm at {index_dir}: run add_binary_to_ann_index"
-            " first"
-        )
-    if not M.read_meta(index_dir, _SQ8_KEY, False):
-        raise ValueError(
-            f"no SQ8 arm at {index_dir}: run add_sq8_to_ann_index first"
-        )
-    shortlist = 4 * k if shortlist is None else shortlist
-    coarse_shortlist = (
-        4 * shortlist if coarse_shortlist is None else coarse_shortlist
-    )
-    if n_probe_groups is None:
-        n_probe_groups = N_PROBE_GROUPS
-    probes = _probe_cells_2level(
-        spark, index_dir, queries, n_probe_groups, n_probe
-    )
-    thresh = _read_bin_thresh(spark, index_dir)
-    q_words = {
-        int(q): _binary_encode_np(vec, thresh) for q, vec in queries
-    }
-    g_pred = F.col("group").isin(sorted({g for _, g, _ in probes}))
-    c_pred = F.col("cell").isin(sorted({c for _, _, c in probes}))
-    scored = _binary_scored(
-        spark,
-        index_dir,
-        [(q, g, c, q_words[q]) for q, g, c in probes],
-        "q_id long, group long, cell long, q_words array<long>",
-        ["group", "cell"],
-        g_pred & c_pred,
-    )
-    return _cascade_stage23(
-        spark,
-        index_dir,
-        queries,
-        scored,
-        g_pred & c_pred,
-        k,
-        shortlist,
-        coarse_shortlist,
-    )
+    return _exact_rerank(spark, index_dir, queries, parts, probes, short2, k)
 
 
 # --------------------------------------------------------------------------
@@ -2198,8 +2135,6 @@ def _is_2level(index_dir: str) -> bool:
     are disjoint markers (2-level has ``coarse/``, single-level has
     ``centroids/``), so maintenance verbs can dispatch without a flag.
     (Local-FS probe, like ann_index_exists.)"""
-    import os
-
     return os.path.isdir(M.table_path(index_dir, "coarse"))
 
 
@@ -2512,10 +2447,7 @@ def sq8_drift_stats(
     keep one row) — O(metadata) from the manifest counters by default,
     ``exact=True`` for the full-scan audit. Raises if the store has no
     SQ8 arm, like the sq8 readers."""
-    if not M.read_meta(index_dir, _SQ8_KEY, False):
-        raise ValueError(
-            f"no SQ8 arm at {index_dir}: run add_sq8_to_ann_index first"
-        )
+    _require_sq8(index_dir)
     frac, n_rows, past = _sq8_drift_numbers(spark, index_dir, exact=exact)
     return spark.createDataFrame(
         [("sq8", n_rows, frac, past)],
@@ -2550,13 +2482,15 @@ def sq8_drift_stats(
 #   cell)** — the PQ-encoded corpus, packed: the billion-vector arm. The layout
 #   exists precisely for corpora past ~270M vectors, where a probed-cell
 #   scan of raw floats (256 B/vector at DIM=64 float32) costs ~100x the
-#   IO of 2-byte PQ codes; ``ann_index_2level_ivfpq_topk`` reads ONLY
-#   this table plus the metadata-sized quantizers.
+#   IO of 2-byte PQ codes; ``ann_index_ivfpq_topk`` on this layout reads
+#   ONLY this table plus the metadata-sized quantizers.
 #
-# Assignment, probe selection, and scoring all use the same rounded-6
-# cosine + (sim desc, id asc) tie-break as the single-level family, so
-# the DuckDB twin (_ANN_2LEVEL_SQL in plans/llm_ops.py) reproduces every
-# step bit-identically.
+# The search arms are the single-level ones: each reads the layout from
+# disk (:func:`_probes`) and scans its tables over (group, cell) probe
+# rows. Assignment, probe selection, and scoring all use the same
+# rounded-6 cosine + (sim desc, id asc) tie-break as the single-level
+# layout, so the DuckDB twin (_ANN_2LEVEL_SQL in plans/llm_ops.py)
+# reproduces every step bit-identically.
 
 
 def _group_of_cells(c_mat: np.ndarray, g_mat: np.ndarray) -> np.ndarray:
@@ -2917,10 +2851,6 @@ def build_ann_index_2level(
         auto_g, auto_c = auto_quantizer_shape(emb.count())
         n_groups = auto_g if n_groups is None else n_groups
         n_cells = auto_c if n_cells is None else n_cells
-    _COARSE.pop(index_dir, None)
-    _FINE.pop(index_dir, None)
-    _CODEBOOKS.pop(index_dir, None)
-    _SQ_STATS.pop(index_dir, None)
     _stamp_layout(index_dir)
     # the residual flag is stamped by _land_2level_corpus AFTER the
     # assignment exists (residual="auto" decides from it)
@@ -2930,7 +2860,6 @@ def build_ann_index_2level(
     M.write_meta(index_dir, _SQ8_PREFIX_DIMS_KEY, None)
     # ... and any derived binary arm (thresholds trained on the old
     # corpus) — same fail-loudly contract
-    _BIN_THRESH.pop(index_dir, None)
     M.write_meta(index_dir, _BINARY_KEY, False)
 
     if refine_iters > 0:
@@ -3181,8 +3110,7 @@ def append_to_ann_index_2level(
     corpus is pinned by tests (same quantizers => identical
     assignments and search results). Deletes need no 2-level twin:
     :func:`delete_from_ann_index` writes the layout-agnostic tombstone
-    side table and the 2-level reader anti-joins it like every other
-    reader."""
+    side table and every reader anti-joins it on either layout."""
     _check_layout(index_dir)
     groups, g_mat = _read_coarse(spark, index_dir)
     fine = spark.read.parquet(M.table_path(index_dir, "fine")).collect()
@@ -3293,21 +3221,16 @@ def append_to_ann_index_2level(
         assigned.unpersist()
 
 
-_COARSE: dict[str, tuple] = {}
-# Per-(index_dir, group) fine-centroid shards — quantizer metadata,
-# immutable once built (appends/retrains never touch ``fine/``; a
-# compaction rewrite preserves its content), cached like _COARSE /
-# _CENTROIDS so repeated probes skip the per-evaluation shard collect.
-_FINE: dict[str, dict[int, list]] = {}
-
-
+# Per-group fine-centroid shards, loaded lazily: a reader fetches only
+# the groups it probes. The dict is cached against the ``fine/`` files,
+# so a rebuild (or a compaction rewrite) starts a fresh one.
 def _fine_shards(
     spark: SparkSession, index_dir: str, groups: list[int]
 ) -> dict[int, list]:
-    """(cell, c_emb) rows of the requested groups' fine shards, from
-    the per-process cache; only never-seen groups hit the (partition-
-    pruned) ``fine/`` table."""
-    cache = _FINE.setdefault(index_dir, {})
+    """(cell, c_emb) rows of the requested groups' fine shards; only
+    groups not yet loaded for the current ``fine/`` files hit the
+    (partition-pruned) table."""
+    cache = M.cached_table(index_dir, "fine", dict)
     missing = sorted(g for g in groups if g not in cache)
     if missing:
         rows = (
@@ -3327,16 +3250,14 @@ def _fine_shards(
 
 
 def _read_coarse(spark: SparkSession, index_dir: str):
-    cached = _COARSE.get(index_dir)
-    if cached is not None:
-        return cached
-    _check_layout(index_dir)  # every two-level reader passes here
-    rows = spark.read.parquet(M.table_path(index_dir, "coarse")).collect()
-    rows.sort(key=lambda r: r.group)
-    groups = [int(r.group) for r in rows]
-    mat = np.array([r.g_emb for r in rows], dtype=np.float64)
-    _COARSE[index_dir] = (groups, mat)
-    return groups, mat
+    def load():
+        _check_layout(index_dir)  # every two-level reader passes here
+        rows = spark.read.parquet(M.table_path(index_dir, "coarse")).collect()
+        rows.sort(key=lambda r: r.group)
+        groups = [int(r.group) for r in rows]
+        return groups, np.array([r.g_emb for r in rows], dtype=np.float64)
+
+    return M.cached_table(index_dir, "coarse", load)
 
 
 def _probe_cells_2level(
@@ -3351,9 +3272,10 @@ def _probe_cells_2level(
     fetch ONLY the probed groups' fine-centroid shards (partition-pruned
     ``fine/`` read), then rank each query's candidate cells within its
     own probed groups — n_groups + n_probe_groups*(n_cells/n_groups)
-    cosines per query, never n_cells. Shared by the IVF-Flat and IVF-PQ
-    readers so both arms probe identically (same rounded-6 cosine +
-    (sim desc, cell asc) tie-break as the single-level _probe_cells)."""
+    cosines per query, never n_cells. Every search arm probes a
+    two-level index through here (:func:`_probes`), with the same
+    rounded-6 cosine + (sim desc, cell asc) tie-break as the
+    single-level _probe_cells."""
     groups, g_mat = _read_coarse(spark, index_dir)
     q_groups: dict[int, list[int]] = {}
     for q_id, vec in queries:
@@ -3380,414 +3302,6 @@ def _probe_cells_2level(
         )
         probes.extend((q_id, g, c) for g, c, _ in ranked[:n_probe])
     return probes
-
-
-def ann_index_2level_topk(
-    spark: SparkSession,
-    index_dir: str,
-    queries: list[Query],
-    k: int = 5,
-    n_probe_groups: int = N_PROBE_GROUPS,
-    n_probe: int = S.N_PROBE,
-) -> DataFrame:
-    """Two-level IVF search from the artifact: coarse-probe the live
-    groups (driver, n_groups cosines), fetch ONLY the probed groups'
-    fine-centroid shards (partition-pruned ``fine/`` read), rank each
-    query's candidate cells within its own probed groups, then exact
-    cosine inside the probed (group, cell) raw partitions. Output
-    contract matches similarity.ivf_topk: (q_id, vec_id, sim, rank).
-    Per query the quantizer work is n_groups + n_probe_groups *
-    n_cells/n_groups cosines — never n_cells — which is what lets the
-    cell count keep the constant-volume rule uncapped."""
-    probes = _probe_cells_2level(
-        spark, index_dir, queries, n_probe_groups, n_probe
-    )
-    probes_df = spark.createDataFrame(probes, "q_id long, group long, cell long")
-    cells = sorted({c for _, _, c in probes})
-    raw = _live(
-        spark,
-        index_dir,
-        spark.read.parquet(M.table_path(index_dir, "raw")).where(
-            F.col("group").isin(sorted({g for _, g, _ in probes}))
-            & F.col("cell").isin(cells)
-        ),
-    )
-    scored = (
-        raw.join(F.broadcast(probes_df), ["group", "cell"])
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .join(F.broadcast(_queries_df(spark, queries)), "q_id")
-        .select(
-            "q_id",
-            "vec_id",
-            S.cosine_batch(F.col("q_emb"), F.col("embedding")).alias("sim"),
-        )
-    )
-    return S.topk_per_key(
-        scored, "q_id", [F.col("sim").desc(), F.col("vec_id")], k
-    )
-
-
-def ann_index_2level_truncated_topk(
-    spark: SparkSession,
-    index_dir: str,
-    queries: list[Query],
-    k: int = 5,
-    dims: int = S.MRL_DIMS,
-    shortlist: int = S.MRL_SHORTLIST,
-    n_probe_groups: int = N_PROBE_GROUPS,
-    n_probe: int = S.N_PROBE,
-) -> DataFrame:
-    """Adaptive retrieval on the sharded-quantizer layout — the same
-    composition :func:`ann_index_truncated_topk` makes on the
-    single-level artifact, so the dimension ladder exists on BOTH
-    layouts like every other arm (flat/PQ/residual/SQ8): two-level
-    probe prunes the (group, cell) partitions read, the matryoshka
-    slice prunes the shortlist arithmetic to dims/DIM, and the exact
-    full-dimension rerank re-scores only ≤ queries × shortlist
-    survivors from the same pruned partitions. ``sim`` is the exact
-    full-dim cosine; shortlist ≥ probed volume reproduces the flat
-    2-level reader bit-for-bit (pinned in tests). Zero-prefix rows are
-    dropped from the shortlist stage on both sides, exactly like
-    :func:`ann_index_truncated_topk` (NaN-pollution guard)."""
-    queries = _nonzero_prefix_queries(queries, dims)
-    probes = _probe_cells_2level(
-        spark, index_dir, queries, n_probe_groups, n_probe
-    )
-    probes_df = spark.createDataFrame(
-        probes, "q_id long, group long, cell long"
-    )
-    qdf = _queries_df(spark, queries)
-    q_sliced = qdf.select("q_id", F.slice("q_emb", 1, dims).alias("q_emb"))
-    raw = _live(
-        spark,
-        index_dir,
-        spark.read.parquet(M.table_path(index_dir, "raw")).where(
-            F.col("group").isin(sorted({g for _, g, _ in probes}))
-            & F.col("cell").isin(sorted({c for _, _, c in probes}))
-        ),
-    )
-    tscored = (
-        raw.join(F.broadcast(probes_df), ["group", "cell"])
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .filter(_nonzero_prefix_col(dims))
-        .join(F.broadcast(q_sliced), "q_id")
-        .select(
-            "q_id",
-            "vec_id",
-            S.cosine_batch(
-                F.col("q_emb"), F.slice("embedding", 1, dims)
-            ).alias("tsim"),
-        )
-    )
-    short = S.topk_per_key(
-        tscored, "q_id", [F.col("tsim").desc(), F.col("vec_id")], shortlist
-    ).select("q_id", "vec_id")
-    rescored = (
-        raw.select("vec_id", "embedding")
-        .join(F.broadcast(short), "vec_id")
-        .join(F.broadcast(qdf), "q_id")
-        .select(
-            "q_id",
-            "vec_id",
-            # bounded rerank (≤ queries × shortlist rows): JVM cosine +
-            # single-window top-k — no Arrow boundary, one less exchange
-            S.cosine_rounded(F.col("q_emb"), F.col("embedding")).alias("sim"),
-        )
-    )
-    return S.topk_bounded(
-        rescored, "q_id", [F.col("sim").desc(), F.col("vec_id")], k
-    )
-
-
-def _int_centroids_2level(spark: SparkSession, index_dir: str):
-    """Integer fine centroids of probe triples (q_id, group, cell), from
-    the probed groups' shards (the probe pass read the same shards)."""
-
-    def of(probes: list[tuple[int, int, int]]) -> np.ndarray:
-        shards = _fine_shards(spark, index_dir, sorted({g for _, g, _ in probes}))
-        emb = {c: e for shard in shards.values() for c, e in shard}
-        return _int_centroids(np.array([emb[c] for _, _, c in probes]))
-
-    return of
-
-
-def ann_index_2level_ivfpq_topk(
-    spark: SparkSession,
-    index_dir: str,
-    queries: list[Query],
-    k: int = 5,
-    n_probe_groups: int = N_PROBE_GROUPS,
-    n_probe: int = S.N_PROBE,
-) -> DataFrame:
-    """IVF-PQ search over the sharded-quantizer layout — the
-    billion-vector arm the two-level index exists for: probe selection
-    is the shared two-level term (n_groups + n_probe_groups *
-    n_cells/n_groups cosines per query), and the corpus is touched ONLY
-    through the (group, cell)-pruned ``vectors/`` PQ codes — log2(PQ_K)
-    bits per subspace per vector instead of full raw floats, the ~100x
-    probed-IO cut at scale. Scoring is the exact single-level ADC math
-    (broadcast integer LUT from the shared ``codebook/`` table, sum of
-    per-subspace squared distances, vec_id tie-break), so the output
-    contract matches :func:`ann_index_ivfpq_topk`: (q_id, vec_id,
-    adc_dist, rank)."""
-    probes = _probe_cells_2level(
-        spark, index_dir, queries, n_probe_groups, n_probe
-    )
-    return _ivfpq_topk(
-        spark, index_dir, queries, probes, _PQ_PROBES_2L,
-        _int_centroids_2level(spark, index_dir), k,
-    )
-
-
-# --------------------------------------------------------------------------
-# Two-stage search: ADC shortlist + exact rerank — the standard
-# production composition (a PQ scan alone trades recall for IO; the
-# rerank buys exactness back for shortlist x 256 B of targeted raw
-# reads). Both layouts share the shape: probe -> integer-ADC-score the
-# probed cells' CODES -> keep the top `shortlist` per query -> fetch
-# ONLY those vectors' raw embeddings (broadcast semijoin against the
-# already-pruned raw partitions) -> exact rounded cosine -> top-k.
-# With shortlist >= the probed population the result equals the
-# IVF-Flat reader exactly (test-pinned), which is the semantics anchor.
-
-
-def ann_index_ivfpq_rerank_topk(
-    spark: SparkSession,
-    index_dir: str,
-    queries: list[Query],
-    k: int = 5,
-    shortlist: int | None = None,
-    n_probe: int = S.N_PROBE,
-) -> DataFrame:
-    """ADC-shortlist + exact-rerank over the single-level artifact:
-    scan codes for the probed cells (partition-pruned, 2 bytes/vector),
-    rank by the broadcast integer LUT, keep ``shortlist`` candidates
-    per query (ties to lower vec_id — the ivfpq contract), then exact
-    cosine ONLY on those candidates' raw rows. Output contract matches
-    ann_index_ivf_topk: (q_id, vec_id, sim, rank)."""
-    shortlist = 4 * k if shortlist is None else shortlist
-    cells, mat = _read_centroids(spark, index_dir)
-    probes = _probe_cells(queries, cells, mat, n_probe)
-    lut, residual = _search_luts(
-        spark, index_dir, queries, probes,
-        _int_centroids_1level(spark, index_dir),
-    )
-    short = _spark_adc_topk(
-        spark, index_dir, queries, probes, _PQ_PROBES, lut, residual,
-        shortlist,
-    ).select("q_id", "vec_id")
-
-    raw = spark.read.parquet(M.table_path(index_dir, "raw")).where(
-        _cell_predicate(probes)
-    )
-    reranked = (
-        raw.join(F.broadcast(short), "vec_id")
-        .join(F.broadcast(_queries_df(spark, queries)), "q_id")
-        .select(
-            "q_id",
-            "vec_id",
-            # bounded rerank (≤ queries × shortlist rows): JVM cosine +
-            # single-window top-k — no Arrow boundary, one less exchange
-            S.cosine_rounded(F.col("q_emb"), F.col("embedding")).alias("sim"),
-        )
-    )
-    return S.topk_bounded(
-        reranked, "q_id", [F.col("sim").desc(), F.col("vec_id")], k
-    )
-
-
-def ann_index_2level_ivfpq_rerank_topk(
-    spark: SparkSession,
-    index_dir: str,
-    queries: list[Query],
-    k: int = 5,
-    shortlist: int | None = None,
-    n_probe_groups: int = N_PROBE_GROUPS,
-    n_probe: int = S.N_PROBE,
-) -> DataFrame:
-    """The two-stage search over the sharded-quantizer layout — at
-    billion-vector scale this is THE search: probed-cell IO is 2-byte
-    codes (the 2-level PQ arm), plus ``shortlist`` targeted raw rows
-    per query for the exact rerank. Output contract matches
-    ann_index_2level_topk: (q_id, vec_id, sim, rank)."""
-    shortlist = 4 * k if shortlist is None else shortlist
-    probes = _probe_cells_2level(
-        spark, index_dir, queries, n_probe_groups, n_probe
-    )
-    lut, residual = _search_luts(
-        spark, index_dir, queries, probes,
-        _int_centroids_2level(spark, index_dir),
-    )
-    short = _spark_adc_topk(
-        spark, index_dir, queries, probes, _PQ_PROBES_2L, lut, residual,
-        shortlist,
-    ).select("q_id", "vec_id")
-
-    raw = spark.read.parquet(M.table_path(index_dir, "raw")).where(
-        _probe_predicate(_PQ_PROBES_2L.names[1:], probes)
-    )
-    reranked = (
-        raw.join(F.broadcast(short), "vec_id")
-        .join(F.broadcast(_queries_df(spark, queries)), "q_id")
-        .select(
-            "q_id",
-            "vec_id",
-            # bounded rerank (≤ queries × shortlist rows): JVM cosine +
-            # single-window top-k — no Arrow boundary, one less exchange
-            S.cosine_rounded(F.col("q_emb"), F.col("embedding")).alias("sim"),
-        )
-    )
-    return S.topk_bounded(
-        reranked, "q_id", [F.col("sim").desc(), F.col("vec_id")], k
-    )
-
-
-def ann_index_2level_sq8_topk(
-    spark: SparkSession,
-    index_dir: str,
-    queries: list[Query],
-    k: int = 5,
-    shortlist: int | None = None,
-    n_probe_groups: int = N_PROBE_GROUPS,
-    n_probe: int = S.N_PROBE,
-    dims: int | None = None,
-) -> DataFrame:
-    """SQ8 two-stage search over the sharded-quantizer layout: the
-    (group, cell)-pruned scan reads the int8 codes (~64 B/vector — 4x
-    under raw, 32x over the 2-byte PQ arm but at ~3.5x the delivered
-    shortlist recall on the fixture), shortlist by exact-integer
-    code-space L2 against the closure-held query-code matrix, exact
-    cosine rerank on the shortlist's raw rows. Output contract matches
-    ann_index_2level_topk: (q_id, vec_id, sim, rank). ``dims`` slices
-    the code-space stage to the leading codes exactly like the
-    single-level reader (the ladders compose on both layouts), and a
-    materialized prefix arm at width ≥ dims is scanned when present —
-    same scan-side byte cut, same bit-identity."""
-    if not M.read_meta(index_dir, _SQ8_KEY, False):
-        raise ValueError(
-            f"no SQ8 arm at {index_dir}: run add_sq8_to_ann_index first"
-        )
-    shortlist = 4 * k if shortlist is None else shortlist
-    probes = _probe_cells_2level(
-        spark, index_dir, queries, n_probe_groups, n_probe
-    )
-    vmin, scale = _read_sq_stats(spark, index_dir)
-    q_mat = np.vstack(
-        [_sq8_encode_np(vec, vmin, scale) for _, vec in queries]
-    )
-    if dims is not None:
-        q_mat = q_mat[:, :dims]
-    q_pos = {int(q): i for i, (q, _) in enumerate(queries)}
-    probes_df = spark.createDataFrame(
-        [(q, q_pos[q], g, c) for q, g, c in probes],
-        "q_id long, q_idx int, group long, cell long",
-    )
-    g_pred = F.col("group").isin(sorted({g for _, g, _ in probes}))
-    c_pred = F.col("cell").isin(sorted({c for _, _, c in probes}))
-
-    scan_table, needs_slice = _sq8_scan_table(index_dir, dims)
-    sq8 = _live(
-        spark,
-        index_dir,
-        spark.read.parquet(M.table_path(index_dir, scan_table)).where(
-            g_pred & c_pred
-        ),
-    )
-    code_col = (
-        F.slice("codes", 1, dims) if needs_slice else F.col("codes")
-    )
-    scored = (
-        sq8.withColumn("dists", _sq8_dists_udf(q_mat)(code_col))
-        .join(F.broadcast(probes_df), ["group", "cell"])
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            F.element_at("dists", F.col("q_idx") + 1).alias("sq_dist"),
-        )
-    )
-    short = S.topk_per_key(
-        scored, "q_id", [F.col("sq_dist"), F.col("vec_id")], shortlist
-    ).select("q_id", "vec_id")
-
-    raw = spark.read.parquet(M.table_path(index_dir, "raw")).where(
-        g_pred & c_pred
-    )
-    reranked = (
-        raw.join(F.broadcast(short), "vec_id")
-        .join(F.broadcast(_queries_df(spark, queries)), "q_id")
-        .select(
-            "q_id",
-            "vec_id",
-            # bounded rerank (≤ queries × shortlist rows): JVM cosine +
-            # single-window top-k — no Arrow boundary, one less exchange
-            S.cosine_rounded(F.col("q_emb"), F.col("embedding")).alias("sim"),
-        )
-    )
-    return S.topk_bounded(
-        reranked, "q_id", [F.col("sim").desc(), F.col("vec_id")], k
-    )
-
-
-def ann_index_2level_binary_topk(
-    spark: SparkSession,
-    index_dir: str,
-    queries: list[Query],
-    k: int = 5,
-    shortlist: int | None = None,
-    n_probe_groups: int = N_PROBE_GROUPS,
-    n_probe: int = S.N_PROBE,
-) -> DataFrame:
-    """Binary two-stage search over the sharded-quantizer layout: the
-    (group, cell)-pruned scan reads the packed sign bits (~dims/8 B
-    per vector), the Hamming shortlist runs entirely in whole-stage
-    codegen against the broadcast query words, and the exact cosine
-    rerank reads only the shortlist's raw rows. Output contract
-    matches ann_index_2level_topk: (q_id, vec_id, sim, rank)."""
-    if not M.read_meta(index_dir, _BINARY_KEY, False):
-        raise ValueError(
-            f"no binary arm at {index_dir}: run add_binary_to_ann_index"
-            " first"
-        )
-    shortlist = 4 * k if shortlist is None else shortlist
-    probes = _probe_cells_2level(
-        spark, index_dir, queries, n_probe_groups, n_probe
-    )
-    thresh = _read_bin_thresh(spark, index_dir)
-    q_words = {
-        int(q): _binary_encode_np(vec, thresh) for q, vec in queries
-    }
-    g_pred = F.col("group").isin(sorted({g for _, g, _ in probes}))
-    c_pred = F.col("cell").isin(sorted({c for _, _, c in probes}))
-    scored = _binary_scored(
-        spark,
-        index_dir,
-        [(q, g, c, q_words[q]) for q, g, c in probes],
-        "q_id long, group long, cell long, q_words array<long>",
-        ["group", "cell"],
-        g_pred & c_pred,
-    )
-    short = S.topk_per_key(
-        scored, "q_id", [F.col("ham"), F.col("vec_id")], shortlist
-    ).select("q_id", "vec_id")
-
-    raw = spark.read.parquet(M.table_path(index_dir, "raw")).where(
-        g_pred & c_pred
-    )
-    reranked = (
-        raw.join(F.broadcast(short), "vec_id")
-        .join(F.broadcast(_queries_df(spark, queries)), "q_id")
-        .select(
-            "q_id",
-            "vec_id",
-            # bounded rerank (≤ queries × shortlist rows): JVM cosine +
-            # single-window top-k — no Arrow boundary, one less exchange
-            S.cosine_rounded(F.col("q_emb"), F.col("embedding")).alias("sim"),
-        )
-    )
-    return S.topk_bounded(
-        reranked, "q_id", [F.col("sim").desc(), F.col("vec_id")], k
-    )
 
 
 # --------------------------------------------------------------------------
@@ -3953,10 +3467,6 @@ def build_ann_index_2level_distributed(
         auto_g, auto_c = auto_quantizer_shape(emb.count())
         n_groups = auto_g if n_groups is None else n_groups
         n_cells = auto_c if n_cells is None else n_cells
-    _COARSE.pop(index_dir, None)
-    _FINE.pop(index_dir, None)
-    _CODEBOOKS.pop(index_dir, None)
-    _SQ_STATS.pop(index_dir, None)
     _stamp_layout(index_dir)
     # the residual flag is stamped by _assign_and_land_2level_distributed
     # AFTER the assignment machinery exists (residual="auto" decides
@@ -3967,7 +3477,6 @@ def build_ann_index_2level_distributed(
     M.write_meta(index_dir, _SQ8_PREFIX_DIMS_KEY, None)
     # ... and any derived binary arm (thresholds trained on the old
     # corpus) — same fail-loudly contract
-    _BIN_THRESH.pop(index_dir, None)
     M.write_meta(index_dir, _BINARY_KEY, False)
 
     if refine_iters > 0:

@@ -316,7 +316,7 @@ def dedup_index_lookup(
 # batches list no files — their data is already in the semanticHash).
 # Any store mutation (append, delete, compaction flip) changes the key
 # and the entry self-invalidates; the maintenance verbs below also pop
-# eagerly, the _COARSE/_FINE discipline. Streaming micro-batches have
+# eagerly. Streaming micro-batches have
 # distinct plans (new source offsets), so their semanticHash never
 # collides — they simply miss. Only metadata (lists of hex prefixes /
 # bucket ints, a strategy string) is cached, never rows, and the cache

@@ -45,6 +45,7 @@ import json
 import os
 import re
 import shutil
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -108,6 +109,54 @@ def manifest_snapshot(index_dir: str) -> dict:
 def table_path_in(snapshot: dict, index_dir: str, table: str) -> str:
     """``table_path`` resolved against an already-taken snapshot."""
     return f"{index_dir}/{snapshot.get(table, table)}"
+
+
+def table_fingerprint(index_dir: str, tables: tuple[str, ...]) -> tuple:
+    """(table, directory, sorted data files) of each table, resolved
+    under ONE manifest snapshot. Every write — a build, a retrain, a
+    compaction — lands files under fresh names, so the fingerprint
+    changes whenever a table's content does, whichever process wrote
+    it; an append to another table leaves it alone."""
+    snap = manifest_snapshot(index_dir)
+    return tuple(
+        (
+            t,
+            snap.get(t, t),
+            tuple(sorted(data_files(table_path_in(snap, index_dir, t)))),
+        )
+        for t in tables
+    )
+
+
+# Metadata-sized artifact tables (the ANN quantizers: centroids,
+# codebooks, SQ8 grids, binary thresholds, fine shards) loaded once per
+# process and kept while their files stay the same: the key holds the
+# table's fingerprint, so a table rewritten in this process or any
+# other misses and reloads, and nothing needs an explicit invalidation.
+# A true LRU bounded by entry count.
+TABLE_CACHE_ENTRIES = 64
+_TABLE_CACHE: OrderedDict[tuple, object] = OrderedDict()
+
+
+def cached_table(index_dir: str, table: str, load):
+    """``load()`` of ``table``, cached under ``(index_dir, table, its
+    data files)``. The files are listed BEFORE loading, so a rewrite
+    racing the load can only leave a value newer than its key, which
+    the next lookup replaces."""
+    key = (os.path.normpath(index_dir), table_fingerprint(index_dir, (table,)))
+    if key in _TABLE_CACHE:
+        _TABLE_CACHE.move_to_end(key)
+        return _TABLE_CACHE[key]
+    value = _TABLE_CACHE[key] = load()
+    while len(_TABLE_CACHE) > TABLE_CACHE_ENTRIES:
+        _TABLE_CACHE.popitem(last=False)
+    return value
+
+
+def clear_table_cache() -> None:
+    """Drop every cached table: the next read behaves as in a fresh
+    process."""
+    _TABLE_CACHE.clear()
 
 
 def _gen_of(dirname: str, table: str) -> int:

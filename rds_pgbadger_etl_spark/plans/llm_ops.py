@@ -4893,7 +4893,7 @@ def ann_index_2level_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     relationally in _ANN_2LEVEL_SQL."""
     from rds_pgbadger_etl_spark.operators import ann_index as AI
 
-    return AI.ann_index_2level_topk(
+    return AI.ann_index_ivf_topk(
         spark,
         _ann_index_2level_shared(spark, sf_dir),
         _query_vectors(spark, sf_dir),
@@ -4987,7 +4987,7 @@ def ann_index_2level_truncated_topk(
     partitions × truncated shortlist × exact full-dim rerank)."""
     from rds_pgbadger_etl_spark.operators import ann_index as AI
 
-    return AI.ann_index_2level_truncated_topk(
+    return AI.ann_index_truncated_topk(
         spark,
         _ann_index_2level_shared(spark, sf_dir),
         _query_vectors(spark, sf_dir),
@@ -5204,7 +5204,7 @@ def ann_index_2level_upsert_topk(
 ) -> DataFrame:
     from rds_pgbadger_etl_spark.operators import ann_index as AI
 
-    return AI.ann_index_2level_topk(
+    return AI.ann_index_ivf_topk(
         spark,
         _ann_index_2level_upsert_shared(spark, sf_dir),
         _query_vectors(spark, sf_dir),
@@ -5244,7 +5244,7 @@ def ann_index_2level_delete_topk(
     relational meaning)."""
     from rds_pgbadger_etl_spark.operators import ann_index as AI
 
-    return AI.ann_index_2level_topk(
+    return AI.ann_index_ivf_topk(
         spark,
         _ann_index_2level_delete_shared(spark, sf_dir),
         _query_vectors(spark, sf_dir),
@@ -5281,7 +5281,7 @@ def ann_index_2level_dist_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax) writes the identical artifact."""
     from rds_pgbadger_etl_spark.operators import ann_index as AI
 
-    return AI.ann_index_2level_topk(
+    return AI.ann_index_ivf_topk(
         spark,
         _ann_index_2level_dist_shared(spark, sf_dir),
         _query_vectors(spark, sf_dir),
@@ -5332,7 +5332,7 @@ def ann_index_2level_refined_topk(
     exact artifact the relational math describes."""
     from rds_pgbadger_etl_spark.operators import ann_index as AI
 
-    return AI.ann_index_2level_topk(
+    return AI.ann_index_ivf_topk(
         spark,
         _ann_index_2level_refined_shared(spark, sf_dir),
         _query_vectors(spark, sf_dir),
@@ -5473,7 +5473,7 @@ def ann_index_2level_residual_topk(
     integer math, end to end."""
     from rds_pgbadger_etl_spark.operators import ann_index as AI
 
-    return AI.ann_index_2level_ivfpq_topk(
+    return AI.ann_index_ivfpq_topk(
         spark,
         _ann_index_2level_residual_shared(spark, sf_dir),
         _query_vectors(spark, sf_dir),
@@ -5624,13 +5624,13 @@ def ann_index_2level_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     arms = [
         (
             "2level_first_n",
-            arm(_ann_index_2level_shared, AI.ann_index_2level_topk),
+            arm(_ann_index_2level_shared, AI.ann_index_ivf_topk),
         ),
         (
             "2level_kmeans_refined",
             arm(
                 _ann_index_2level_refined_shared,
-                AI.ann_index_2level_topk,
+                AI.ann_index_ivf_topk,
             ),
         ),
         (
@@ -5642,7 +5642,7 @@ def ann_index_2level_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         # contract as the single-level audit's sq8 variant)
         (
             "2level_sq8",
-            lambda: AI.ann_index_2level_sq8_topk(
+            lambda: AI.ann_index_sq8_topk(
                 spark,
                 _ann_index_2level_sq8_shared(spark, sf_dir),
                 qvecs,
@@ -5675,7 +5675,7 @@ def ann_index_2level_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ANN_2LEVEL_SQL + the exact ADC math of _ANN_IVFPQ_SQL."""
     from rds_pgbadger_etl_spark.operators import ann_index as AI
 
-    return AI.ann_index_2level_ivfpq_topk(
+    return AI.ann_index_ivfpq_topk(
         spark,
         _ann_index_2level_shared(spark, sf_dir),
         _query_vectors(spark, sf_dir),
@@ -6001,7 +6001,7 @@ def ann_index_2level_ivfpq_rerank_topk(
     reranked by the exact rounded cosine."""
     from rds_pgbadger_etl_spark.operators import ann_index as AI
 
-    return AI.ann_index_2level_ivfpq_rerank_topk(
+    return AI.ann_index_ivfpq_rerank_topk(
         spark,
         _ann_index_2level_shared(spark, sf_dir),
         _query_vectors(spark, sf_dir),
@@ -6055,7 +6055,7 @@ def ann_index_2level_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-cosine rerank."""
     from rds_pgbadger_etl_spark.operators import ann_index as AI
 
-    return AI.ann_index_2level_sq8_topk(
+    return AI.ann_index_sq8_topk(
         spark,
         _ann_index_2level_sq8_shared(spark, sf_dir),
         _query_vectors(spark, sf_dir),
@@ -6127,7 +6127,7 @@ def ann_index_2level_sq8_trunc_topk(
     composition, so BOTH ladders exist composed on BOTH layouts."""
     from rds_pgbadger_etl_spark.operators import ann_index as AI
 
-    return AI.ann_index_2level_sq8_topk(
+    return AI.ann_index_sq8_topk(
         spark,
         _with_sq8_prefix(
             spark, _ann_index_2level_sq8_shared(spark, sf_dir)
@@ -6282,7 +6282,7 @@ def ann_index_2level_binary_topk(
     other rung of the ladder."""
     from rds_pgbadger_etl_spark.operators import ann_index as AI
 
-    return AI.ann_index_2level_binary_topk(
+    return AI.ann_index_binary_topk(
         spark,
         _ann_index_2level_binary_shared(spark, sf_dir),
         _query_vectors(spark, sf_dir),
@@ -6488,7 +6488,7 @@ def ann_index_2level_cascade_topk(
     the composed ladder exists on BOTH layouts like each rung."""
     from rds_pgbadger_etl_spark.operators import ann_index as AI
 
-    return AI.ann_index_2level_cascade_topk(
+    return AI.ann_index_cascade_topk(
         spark,
         _ann_index_2level_cascade_shared(spark, sf_dir),
         _query_vectors(spark, sf_dir),

@@ -59,7 +59,8 @@ _FLAG_SCHEMA = "vec_id long, neighbor_id long, cosine double, rank int"
 # store (the registered batch verbs re-evaluated; re-run analyst
 # flagging) skips its driver-side distinct+collect job — the
 # dedup_index._LOOKUP_META discipline applied to the ANN probe. The
-# key embeds the quantizer tables' data-file lists (a rebuild/retrain
+# key embeds the quantizer tables' data-file lists (M.table_fingerprint,
+# what the quantizer cache itself keys on: a rebuild/retrain
 # rewrites them → new names → the entry self-invalidates; appends
 # never touch quantizers, so entries correctly survive them) plus the
 # batch plan's semanticHash AND leaf input files (a re-read of a
@@ -70,7 +71,7 @@ _PROBE_META: dict[tuple, list] = {}
 _PROBE_META_PER_DIR = 8
 
 # Plan-capture hook for the flag verbs: they return an EAGER
-# localCheckpoint (mutation-safety — see flag_against_index), so a
+# localCheckpoint (mutation-safety — see _flag_probed), so a
 # post-hoc .explain() shows only the checkpoint stub (Scan ExistingRDD).
 # Profiling tools set this to a callable(df) and receive the REAL
 # pre-checkpoint DataFrame right before materialization — the round-13
@@ -83,14 +84,6 @@ def _batch_plan_files(df: DataFrame) -> tuple:
         return tuple(sorted(df.inputFiles()))
     except Exception:  # unlistable plan: never collide, never cache-hit
         return ("__unlistable__", object())
-
-
-def _quantizer_fingerprint(index_dir: str, tables: tuple[str, ...]) -> tuple:
-    snap = M.manifest_snapshot(index_dir)
-    return tuple(
-        (t, tuple(sorted(M.data_files(M.table_path_in(snap, index_dir, t)))))
-        for t in tables
-    )
 
 
 def _remember_probe_meta(key: tuple, value: list) -> None:
@@ -213,70 +206,60 @@ def ann_index_exists(index_dir: str) -> bool:
     return os.path.isdir(M.table_path(index_dir, "centroids"))
 
 
-def flag_against_index(
+def _flag_probed(
     spark: SparkSession,
     emb_batch: DataFrame,
     index_dir: str,
-    k: int = 3,
-    n_probe: int = S.N_PROBE,
-    threshold: float | None = None,
+    probes: DataFrame,
+    parts: list[str],
+    quantizers: tuple[str, ...],
+    widths: tuple[int, ...],
+    k: int,
+    threshold: float | None,
 ) -> DataFrame:
-    """(vec_id, neighbor_id, cosine, rank): the top-``k`` already-indexed
-    neighbors of each new vector, searched the IVF way — semantic
-    near-dup flagging at ingest (also the batch kNN-join entry point:
-    plans/llm_ops.ann_knn_join runs corpus-slice query sets through it).
-    Probing is MAP-ONLY — one matmul per Arrow batch against the cached
-    metadata-sized quantizer (the nearest_cell_udf convention), so the
-    batch never shuffles for probe selection; scoring cogroups the
-    batch with a partition-pruned,
-    tombstone-filtered scan of the probed cells only
-    (similarity.knn_join_cells). Returns an eagerly local-checkpointed
-    DataFrame:
-    lineage is truncated, so the result (and any plan derived from it)
-    is safe against subsequent index mutation — the append that follows
-    in the ingestion cycle cannot leak into the flags."""
-    cell_ids, cent_mat = AI._read_centroids(spark, index_dir)
-    q = emb_batch.select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    # map-only probe selection (one matmul per Arrow batch against the
-    # cached metadata-sized quantizer): the batch never shuffles and no
-    # window stage runs — same (sim desc, cell asc) top-n as before
-    topn = _probe_cells_udf(cell_ids, cent_mat, n_probe)
-    probes = q.select(
-        "q_id",
-        "q_emb",
-        F.explode(topn(F.col("q_emb"))).alias("cell"),
-    )
+    """The scoring tail both flag verbs share, after their layout's
+    probe kernel: ``probes`` is (q_id, q_emb, *parts) with ``cell``
+    last. The distinct probed partitions (cached in _PROBE_META) prune
+    a tombstone-filtered scan of ``raw/``; a cogrouped per-cell matmul
+    (similarity.knn_join_cells — cell ids are unique on both layouts)
+    scores the batch against it, and each vector keeps its top-``k``
+    neighbors at or above ``threshold``. Returns an eagerly
+    local-checkpointed DataFrame: lineage is truncated, so the result
+    (and any plan derived from it) is safe against subsequent index
+    mutation — the append that follows in the ingestion cycle cannot
+    leak into the flags."""
     probes = probes.persist()
     try:
         meta_key = (
             os.path.normpath(index_dir),
-            "cells",
-            _quantizer_fingerprint(index_dir, ("centroids",)),
+            tuple(parts),
+            M.table_fingerprint(index_dir, quantizers),
             emb_batch.semanticHash(),
             _batch_plan_files(emb_batch),
-            n_probe,
+            widths,
         )
-        cells = _PROBE_META.get(meta_key)
-        if cells is None:
-            # metadata-sized by construction: ≤ n_centroids distinct values
-            cells = sorted(
-                r.cell for r in probes.select("cell").distinct().collect()
+        probed = _PROBE_META.get(meta_key)
+        if probed is None:
+            # metadata-sized by construction: ≤ one row per cell
+            probed = sorted(
+                tuple(r) for r in probes.select(*parts).distinct().collect()
             )
-            _remember_probe_meta(meta_key, cells)
+            _remember_probe_meta(meta_key, probed)
         raw = AI._live(
             spark,
             index_dir,
             spark.read.parquet(M.table_path(index_dir, "raw")).where(
-                F.col("cell").isin(cells)
+                # probe-row shape (q_id, *parts) for the shared predicate
+                AI._probe_predicate(parts, [(None, *p) for p in probed])
             ),
         )
         # cogrouped per-cell matmul (knn_join_cells): each side's rows
         # move once; a row-pair join + per-pair cosine UDF would push
         # batch × probed-cell-volume rows through Arrow instead
         local = S.knn_join_cells(
-            probes, raw.select("vec_id", "embedding", "cell"), k
+            probes.select("q_id", "q_emb", "cell"),
+            raw.select("vec_id", "embedding", "cell"),
+            k,
         )
         top = S.topk_per_key(
             local.withColumnRenamed("vec_id", "neighbor_id"),
@@ -305,6 +288,35 @@ def flag_against_index(
         probes.unpersist()
 
 
+def flag_against_index(
+    spark: SparkSession,
+    emb_batch: DataFrame,
+    index_dir: str,
+    k: int = 3,
+    n_probe: int = S.N_PROBE,
+    threshold: float | None = None,
+) -> DataFrame:
+    """(vec_id, neighbor_id, cosine, rank): the top-``k`` already-indexed
+    neighbors of each new vector, searched the IVF way — semantic
+    near-dup flagging at ingest (also the batch kNN-join entry point:
+    plans/llm_ops.ann_knn_join runs corpus-slice query sets through it).
+    Probing is MAP-ONLY — one matmul per Arrow batch against the cached
+    metadata-sized quantizer (the nearest_cell_udf convention), so the
+    batch never shuffles for probe selection and no window stage runs;
+    scoring is :func:`_flag_probed` (eagerly local-checkpointed)."""
+    cell_ids, cent_mat = AI._read_centroids(spark, index_dir)
+    topn = _probe_cells_udf(cell_ids, cent_mat, n_probe)
+    probes = emb_batch.select(
+        F.col("vec_id").alias("q_id"),
+        F.col("embedding").alias("q_emb"),
+        F.explode(topn(F.col("embedding"))).alias("cell"),
+    )
+    return _flag_probed(
+        spark, emb_batch, index_dir, probes, ["cell"], ("centroids",),
+        (n_probe,), k, threshold,
+    )
+
+
 def flag_against_index_2level(
     spark: SparkSession,
     emb_batch: DataFrame,
@@ -318,86 +330,31 @@ def flag_against_index_2level(
     layout — the streaming/batch flag verb that keeps working past the
     4096-cell cap. Probe selection is MAP-ONLY, never collecting the
     batch: one Arrow kernel holds the coarse matrix plus the fine
-    shards (the same data the previous two-broadcast-stage plan
-    shipped) and emits each vector's top coarse groups -> top
-    ``n_probe`` cells directly, so the batch neither shuffles nor
-    passes a window for probing. Per-vector quantizer work is
+    shards and emits each vector's top coarse groups -> top ``n_probe``
+    cells directly, so the batch neither shuffles nor passes a window
+    for probing. Per-vector quantizer work is
     n_groups + n_probe_groups*(n_cells/n_groups) cosines — the same
-    term the driver-side reader saves. Scoring is the identical
-    cogrouped per-cell matmul over the (group, cell)-pruned,
-    tombstone-filtered raw scan; the result is eagerly
-    local-checkpointed (mutation-safe, like the single-level verb)."""
+    term the driver-side reader saves. Scoring is the same
+    :func:`_flag_probed` tail over the (group, cell)-pruned scan."""
     group_ids, g_mat = AI._read_coarse(spark, index_dir)
     fine_by_group = AI._fine_shards(spark, index_dir, group_ids)
-    q = emb_batch.select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    # map-only two-stage probe selection (cached coarse + fine shards in
-    # the kernel closure — the same data the previous plan broadcast):
-    # the batch never shuffles and no window stage runs; same
-    # (gsim desc, group asc) / (sim desc, cell asc) top-n as before
     pairs_udf = _probe_pairs_udf_2level(
         group_ids, g_mat, fine_by_group, n_probe_groups, n_probe
     )
-    probes = q.select(
-        "q_id",
-        "q_emb",
-        F.explode(pairs_udf(F.col("q_emb"))).alias("pc"),
+    probes = emb_batch.select(
+        F.col("vec_id").alias("q_id"),
+        F.col("embedding").alias("q_emb"),
+        F.explode(pairs_udf(F.col("embedding"))).alias("pc"),
     ).select(
         "q_id",
         "q_emb",
         F.col("pc.group").alias("group"),
         F.col("pc.cell").alias("cell"),
     )
-    probes = probes.persist()
-    try:
-        meta_key = (
-            os.path.normpath(index_dir),
-            "pairs",
-            _quantizer_fingerprint(index_dir, ("coarse", "fine")),
-            emb_batch.semanticHash(),
-            _batch_plan_files(emb_batch),
-            n_probe_groups,
-            n_probe,
-        )
-        pairs = _PROBE_META.get(meta_key)
-        if pairs is None:
-            pairs = sorted(
-                (r.group, r.cell)
-                for r in probes.select("group", "cell").distinct().collect()
-            )
-            _remember_probe_meta(meta_key, pairs)
-        raw = AI._live(
-            spark,
-            index_dir,
-            spark.read.parquet(M.table_path(index_dir, "raw")).where(
-                F.col("group").isin(sorted({g for g, _ in pairs}))
-                & F.col("cell").isin(sorted({c for _, c in pairs}))
-            ),
-        )
-        local = S.knn_join_cells(
-            probes.select("q_id", "q_emb", "cell"),
-            raw.select("vec_id", "embedding", "cell"),
-            k,
-        )
-        top = S.topk_per_key(
-            local.withColumnRenamed("vec_id", "neighbor_id"),
-            "q_id",
-            [F.col("cosine").desc(), F.col("neighbor_id")],
-            k,
-        ).select(
-            F.col("q_id").alias("vec_id"),
-            "neighbor_id",
-            "cosine",
-            F.col("rank").cast("int").alias("rank"),
-        )
-        if threshold is not None:
-            top = top.filter(F.col("cosine") >= threshold)
-        if PRE_CHECKPOINT_PLAN_HOOK is not None:
-            PRE_CHECKPOINT_PLAN_HOOK(top)
-        return top.localCheckpoint(eager=True)
-    finally:
-        probes.unpersist()
+    return _flag_probed(
+        spark, emb_batch, index_dir, probes, ["group", "cell"],
+        ("coarse", "fine"), (n_probe_groups, n_probe), k, threshold,
+    )
 
 
 def run_incremental_ann(

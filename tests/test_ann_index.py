@@ -25,10 +25,31 @@ from tests.conftest import SF_SMOKE
 
 QUERY_IDS = [0, 1, 2, 3, 4]
 K = 5
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _rows(df):
     return sorted(map(str, df.select(sorted(df.columns)).collect()))
+
+
+def _run_script(tmp_path, script, *args):
+    """Run ``script`` in a new Python process (a new Spark driver, with
+    none of this process's caches) from the repo root, and return the
+    JSON it prints after ``ROWS_JSON:``."""
+    spath = tmp_path / f"script_{uuid.uuid4().hex}.py"
+    spath.write_text(textwrap.dedent(script))
+    out = subprocess.run(
+        [sys.executable, str(spath), *map(str, args)],
+        capture_output=True,
+        text=True,
+        cwd=_REPO,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    line = next(
+        ln for ln in out.stdout.splitlines() if ln.startswith("ROWS_JSON:")
+    )
+    return json.loads(line[len("ROWS_JSON:"):])
 
 
 @pytest.fixture(scope="module")
@@ -68,33 +89,25 @@ def test_lsh_reader_matches_in_session(spark, index_dir):
     assert got == expected and len(got) > 0
 
 
-# The IVF-PQ search of each layout: build, append, search.
-_PQ_LAYOUTS = {
-    "1level": (
-        AI.build_ann_index,
-        AI.append_to_ann_index,
-        AI.ann_index_ivfpq_topk,
-    ),
-    "2level": (
-        AI.build_ann_index_2level,
-        AI.append_to_ann_index_2level,
-        AI.ann_index_2level_ivfpq_topk,
-    ),
+# Each layout's build and append verbs; every search arm serves both.
+_LAYOUTS = {
+    "1level": (AI.build_ann_index, AI.append_to_ann_index),
+    "2level": (AI.build_ann_index_2level, AI.append_to_ann_index_2level),
 }
 
 
-def _pq_probes(spark, d, layout, qs):
-    """The IVF-PQ search's probe rows and its partition columns."""
-    if layout == "2level":
-        return AI._probe_cells_2level(spark, d, qs), ["group", "cell"]
-    cells, mat = AI._read_centroids(spark, d)
-    return AI._probe_cells(qs, cells, mat, S.N_PROBE), ["cell"]
+def _pq_probes(spark, d, qs):
+    """The default search's probe rows and their partition columns."""
+    probes, schema, _ = AI._probes(
+        spark, d, qs, S.N_PROBE, AI.N_PROBE_GROUPS
+    )
+    return probes, schema.names[1:]
 
 
-def _probed_bytes(spark, d, layout, qs):
+def _probed_bytes(spark, d, qs):
     """The driver-path rule's input: data-file bytes of the probed
     ``vectors/`` partitions, summed over (query, partition) pairs."""
-    probes, parts = _pq_probes(spark, d, layout, qs)
+    probes, parts = _pq_probes(spark, d, qs)
     files = AI._probed_files(d, parts, probes)
     return sum(b for p in probes for _, b in files[p[1:]])
 
@@ -115,10 +128,10 @@ def _max_partition_bytes(spark, value):
             spark.conf.set(key, prev)
 
 
-def _spark_plan(spark, d, layout, qs):
+def _spark_plan(spark, d, qs):
     """Run the IVF-PQ search above the driver-path rule: one byte less
     than the probed bytes per scan split."""
-    return _max_partition_bytes(spark, _probed_bytes(spark, d, layout, qs) - 1)
+    return _max_partition_bytes(spark, _probed_bytes(spark, d, qs) - 1)
 
 
 def _plan(df):
@@ -144,7 +157,7 @@ def test_reader_plan_is_pruned_and_corpus_free(spark, index_dir):
     driver-path rule; the driver path's counterpart is
     test_driver_scoring_opens_only_probed_codes."""
     qs = _queries(spark)
-    with _spark_plan(spark, index_dir, "1level", qs):
+    with _spark_plan(spark, index_dir, qs):
         df = AI.ann_index_ivfpq_topk(spark, index_dir, qs, K)
     plan = df._jdf.queryExecution().executedPlan().toString()
     explain = df._jdf.queryExecution().toString()
@@ -245,8 +258,7 @@ def test_layout_version_guard(spark, tmp_path):
     with open(mpath, "w") as fh:
         json.dump(manifest, fh)
     AI._LAYOUT_OK.discard(d)
-    AI._CENTROIDS.pop(d, None)
-    AI._CODEBOOKS.pop(d, None)
+    M.clear_table_cache()
     with pytest.raises(ValueError, match="rebuild"):
         AI.append_to_ann_index(spark, emb.limit(1), d)
     with pytest.raises(ValueError, match="rebuild"):
@@ -288,9 +300,9 @@ def test_fresh_session_answers_from_index(spark, index_dir, tmp_path):
     expected = _rows(
         AI.ann_index_ivfpq_topk(spark, index_dir, _queries(spark), K)
     )
-    queries = _queries(spark)
-    script = textwrap.dedent(
-        """
+    qpath = tmp_path / "queries.json"
+    qpath.write_text(json.dumps(_queries(spark)))
+    script = """
         import json, sys
         sys.path.insert(0, ".")
         from rds_pgbadger_etl_spark.operators import ann_index as AI
@@ -307,23 +319,91 @@ def test_fresh_session_answers_from_index(spark, index_dir, tmp_path):
         rows = sorted(map(str, df.select(sorted(df.columns)).collect()))
         print("ROWS_JSON:" + json.dumps(rows))
         """
-    )
-    spath = tmp_path / "fresh_session_reader.py"
-    spath.write_text(script)
+    assert _run_script(tmp_path, script, index_dir, qpath) == expected
+
+
+# Another process's change to the index (argv: index_dir, corpus dir,
+# case, queries file, {arm: keyword arguments}), then its searches.
+_CHANGE_ELSEWHERE = """
+    import json, sys
+    sys.path.insert(0, ".")
+    from pyspark.sql import functions as F
+    from rds_pgbadger_etl_spark.operators import ann_index as AI
+    from rds_pgbadger_etl_spark.session import get_spark
+    from rds_pgbadger_etl_spark.sources.tables import load_table
+
+    index_dir, sf, case, qpath, arms = sys.argv[1:]
+    spark = get_spark(app_name="ann-index-other-process", cpus="2")
+    emb = load_table(spark, sf, "embeddings")
+    n = emb.count()
+    if case == "rebuild":
+        # the same ids over other vectors: new centroids and codebook
+        rev = emb.select(
+            (F.lit(n - 1) - F.col("vec_id")).alias("vec_id"), "embedding"
+        )
+        AI.build_ann_index(spark, rev, index_dir)
+    else:
+        # vectors outside the trained grid, then the SQ8 retrain
+        wide = emb.filter(F.col("vec_id") >= n // 2).select(
+            "vec_id",
+            F.transform(
+                "embedding", lambda x: (x * F.lit(3.0)).cast("float")
+            ).alias("embedding"),
+        )
+        AI.append_to_ann_index(spark, wide, index_dir)
+        AI.add_sq8_to_ann_index(spark, index_dir)
+    queries = [(int(q), vec) for q, vec in json.load(open(qpath))]
+    rows = {}
+    for arm, kw in json.loads(arms).items():
+        search = getattr(AI, f"ann_index_{arm}_topk")
+        df = search(spark, index_dir, queries, 5, **kw)
+        rows[arm] = sorted(map(str, df.select(sorted(df.columns)).collect()))
+    print("ROWS_JSON:" + json.dumps(rows))
+    """
+# case -> {arm: keyword arguments} of the searches compared; the SQ8
+# search keeps no more candidates than it returns, so the grid alone
+# decides which rows come back.
+_STALE_CASES = {
+    "rebuild": {"ivf": {}, "ivfpq": {}},
+    "sq8_retrain": {"sq8": {"shortlist": K}},
+}
+
+
+@pytest.mark.parametrize("case", sorted(_STALE_CASES))
+def test_quantizer_cache_follows_changes_made_by_another_process(
+    spark, tmp_path, case
+):
+    """This process caches an index's quantizers by searching it;
+    another process then rewrites them — a rebuild from other vectors
+    (new centroids and codebook), or an append of vectors outside the
+    SQ8 grid followed by the grid retrain. This process's next search
+    must return the rows that process returns, not rows computed from
+    the quantizers it cached."""
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    d = str(tmp_path / "idx")
+    if case == "rebuild":
+        AI.build_ann_index(spark, emb, d)
+    else:
+        half = emb.count() // 2
+        AI.build_ann_index(spark, emb.filter(F.col("vec_id") < half), d)
+        AI.add_sq8_to_ann_index(spark, d)
+    qs = _queries(spark)
+
+    def search():
+        return {
+            arm: _rows(getattr(AI, f"ann_index_{arm}_topk")(spark, d, qs, K, **kw))
+            for arm, kw in _STALE_CASES[case].items()
+        }
+
+    before = search()
     qpath = tmp_path / "queries.json"
-    qpath.write_text(json.dumps(queries))
-    out = subprocess.run(
-        [sys.executable, str(spath), index_dir, str(qpath)],
-        capture_output=True,
-        text=True,
-        cwd="/root/repo",
-        timeout=300,
+    qpath.write_text(json.dumps(qs))
+    theirs = _run_script(
+        tmp_path, _CHANGE_ELSEWHERE, d, SF_SMOKE, case, qpath,
+        json.dumps(_STALE_CASES[case]),
     )
-    assert out.returncode == 0, out.stderr[-2000:]
-    line = next(
-        ln for ln in out.stdout.splitlines() if ln.startswith("ROWS_JSON:")
-    )
-    assert json.loads(line[len("ROWS_JSON:"):]) == expected
+    assert theirs != before  # the change moves the answer
+    assert search() == theirs
 
 
 def test_compaction_preserves_search_and_reduces_files(spark, tmp_path):
@@ -544,7 +624,7 @@ def _np_2level_expected(spark, k=K):
 def test_2level_reader_matches_numpy_reference(spark, index2_dir):
     got = sorted(
         str((r.q_id, r.vec_id, float(r.sim), r.rank))
-        for r in AI.ann_index_2level_topk(
+        for r in AI.ann_index_ivf_topk(
             spark, index2_dir, _queries(spark), K
         ).collect()
     )
@@ -580,7 +660,7 @@ def test_2level_layout_total_and_consistent(spark, index2_dir):
 def test_2level_plan_is_pruned_and_corpus_free(spark, index2_dir):
     """The 2-level search must prune BOTH partition levels (group at the
     top directory level, cell below) and never touch the corpus."""
-    df = AI.ann_index_2level_topk(spark, index2_dir, _queries(spark), K)
+    df = AI.ann_index_ivf_topk(spark, index2_dir, _queries(spark), K)
     plan = df._jdf.queryExecution().executedPlan().toString()
     explain = df._jdf.queryExecution().toString()
     assert "embeddings.parquet" not in explain
@@ -594,8 +674,8 @@ def test_2level_plan_is_pruned_and_corpus_free(spark, index2_dir):
 def test_2level_fresh_process_answers_from_artifact(spark, index2_dir):
     """A reader with no in-process quantizer cache answers from the
     artifact alone (the build-once contract, 2-level edition)."""
-    AI._COARSE.pop(index2_dir, None)
-    got = _rows(AI.ann_index_2level_topk(spark, index2_dir, _queries(spark), K))
+    M.clear_table_cache()
+    got = _rows(AI.ann_index_ivf_topk(spark, index2_dir, _queries(spark), K))
     assert len(got) == len(QUERY_IDS) * K
 
 
@@ -637,9 +717,9 @@ def test_2level_upsert_equals_full_build(spark, index2_dir, tmp_path):
     AI.append_to_ann_index_2level(
         spark, emb.filter(F.col("vec_id") >= half), d
     )
-    got = _rows(AI.ann_index_2level_topk(spark, d, _queries(spark), K))
+    got = _rows(AI.ann_index_ivf_topk(spark, d, _queries(spark), K))
     expected = _rows(
-        AI.ann_index_2level_topk(spark, index2_dir, _queries(spark), K)
+        AI.ann_index_ivf_topk(spark, index2_dir, _queries(spark), K)
     )
     assert got == expected and len(got) == len(QUERY_IDS) * K
 
@@ -653,12 +733,12 @@ def test_2level_delete_tombstones_filter_results(spark, tmp_path):
     AI.build_ann_index_2level(spark, emb, d)
     before = {
         (r.q_id, r.rank): r.vec_id
-        for r in AI.ann_index_2level_topk(spark, d, _queries(spark), K).collect()
+        for r in AI.ann_index_ivf_topk(spark, d, _queries(spark), K).collect()
     }
     victims = sorted({v for v in before.values()})[:3]
     files_before = sorted(M.data_files(M.table_path(d, "raw")))
     AI.delete_from_ann_index(spark, victims, d)
-    after = AI.ann_index_2level_topk(spark, d, _queries(spark), K).collect()
+    after = AI.ann_index_ivf_topk(spark, d, _queries(spark), K).collect()
     assert sorted(M.data_files(M.table_path(d, "raw"))) == files_before
     assert not {r.vec_id for r in after} & set(victims)
     assert len(after) == len(QUERY_IDS) * K  # survivors fill the ranks
@@ -685,7 +765,7 @@ def test_2level_flag_matches_reader(spark, tmp_path):
     queries = [(int(r.vec_id), list(r.embedding)) for r in rows]
     reader = {
         (r.q_id, r.rank): (r.vec_id, r.sim)
-        for r in AI.ann_index_2level_topk(spark, d, queries, K).collect()
+        for r in AI.ann_index_ivf_topk(spark, d, queries, K).collect()
     }
     assert flags == reader and len(flags) == len(queries) * K
 
@@ -730,7 +810,7 @@ def test_2level_ivfpq_reader_matches_upsert_build(spark, index2_dir, tmp_path):
     build — the stored codebook makes incremental PQ encoding equal to
     one-shot encoding (the immutable-quantizer invariant, PQ edition)."""
     got_full = _rows(
-        AI.ann_index_2level_ivfpq_topk(spark, index2_dir, _queries(spark), K)
+        AI.ann_index_ivfpq_topk(spark, index2_dir, _queries(spark), K)
     )
     assert len(got_full) == len(QUERY_IDS) * K
 
@@ -742,7 +822,7 @@ def test_2level_ivfpq_reader_matches_upsert_build(spark, index2_dir, tmp_path):
         spark, emb.filter(F.col("vec_id") >= half), d
     )
     got_upsert = _rows(
-        AI.ann_index_2level_ivfpq_topk(spark, d, _queries(spark), K)
+        AI.ann_index_ivfpq_topk(spark, d, _queries(spark), K)
     )
     assert got_upsert == got_full
 
@@ -754,8 +834,8 @@ def test_2level_ivfpq_plan_reads_codes_not_floats(spark, index2_dir):
     ~100x probed-IO cut the two-level layout exists for). This is the
     Spark plan, above the driver-path rule."""
     qs = _queries(spark)
-    with _spark_plan(spark, index2_dir, "2level", qs):
-        df = AI.ann_index_2level_ivfpq_topk(spark, index2_dir, qs, K)
+    with _spark_plan(spark, index2_dir, qs):
+        df = AI.ann_index_ivfpq_topk(spark, index2_dir, qs, K)
     plan = df._jdf.queryExecution().executedPlan().toString()
     explain = df._jdf.queryExecution().toString()
     assert "embeddings.parquet" not in explain
@@ -786,8 +866,8 @@ def test_2level_compaction_preserves_search_and_reduces_files(spark, tmp_path):
             d,
         )
     qs = _queries(spark)
-    before_flat = _rows(AI.ann_index_2level_topk(spark, d, qs, K))
-    before_pq = _rows(AI.ann_index_2level_ivfpq_topk(spark, d, qs, K))
+    before_flat = _rows(AI.ann_index_ivf_topk(spark, d, qs, K))
+    before_pq = _rows(AI.ann_index_ivfpq_topk(spark, d, qs, K))
 
     stats = AI.compact_ann_index(spark, d)
     assert set(stats) == {"vectors", "raw", "fine"}
@@ -802,8 +882,8 @@ def test_2level_compaction_preserves_search_and_reduces_files(spark, tmp_path):
         per_part[part] = per_part.get(part, 0) + 1
     assert per_part and max(per_part.values()) == 1
 
-    assert _rows(AI.ann_index_2level_topk(spark, d, qs, K)) == before_flat
-    assert _rows(AI.ann_index_2level_ivfpq_topk(spark, d, qs, K)) == before_pq
+    assert _rows(AI.ann_index_ivf_topk(spark, d, qs, K)) == before_flat
+    assert _rows(AI.ann_index_ivfpq_topk(spark, d, qs, K)) == before_pq
 
     st = {r.table: r for r in AI.ann_index_stats(spark, d).collect()}
     assert set(st) == {"vectors", "raw", "fine"}
@@ -823,12 +903,12 @@ def test_2level_delete_then_compaction_applies_physically(spark, tmp_path):
     victims = sorted(
         {
             r.vec_id
-            for r in AI.ann_index_2level_topk(spark, d, qs, K).collect()
+            for r in AI.ann_index_ivf_topk(spark, d, qs, K).collect()
         }
     )[:3]
     AI.delete_from_ann_index(spark, victims, d)
-    logical_flat = _rows(AI.ann_index_2level_topk(spark, d, qs, K))
-    logical_pq = _rows(AI.ann_index_2level_ivfpq_topk(spark, d, qs, K))
+    logical_flat = _rows(AI.ann_index_ivf_topk(spark, d, qs, K))
+    logical_pq = _rows(AI.ann_index_ivfpq_topk(spark, d, qs, K))
 
     AI.compact_ann_index(spark, d)
     assert M.tombstones(spark, d) is None  # cleared after full compaction
@@ -839,32 +919,25 @@ def test_2level_delete_then_compaction_applies_physically(spark, tmp_path):
             .count()
         )
         assert remaining == 0, t
-    assert _rows(AI.ann_index_2level_topk(spark, d, qs, K)) == logical_flat
-    assert _rows(AI.ann_index_2level_ivfpq_topk(spark, d, qs, K)) == logical_pq
+    assert _rows(AI.ann_index_ivf_topk(spark, d, qs, K)) == logical_flat
+    assert _rows(AI.ann_index_ivfpq_topk(spark, d, qs, K)) == logical_pq
 
-def test_rerank_with_full_shortlist_equals_ivf_flat(spark, index_dir):
-    """The two-stage search's semantics anchor: with a shortlist
-    covering the whole probed population, ADC-shortlist + exact-rerank
-    must equal the IVF-Flat reader EXACTLY (same probes, same cosine,
-    same tie-breaks) — the shortlist only ever trims, never reorders."""
+def test_rerank_with_full_shortlist_equals_ivf_flat(
+    spark, index_dir, index2_dir
+):
+    """The two-stage search's semantics anchor, on both layouts: with a
+    shortlist covering the whole probed population, ADC-shortlist +
+    exact-rerank must equal the IVF-Flat reader EXACTLY (same probes,
+    same cosine, same tie-breaks) — the shortlist only ever trims,
+    never reorders."""
     qs = _queries(spark)
-    full = _rows(
-        AI.ann_index_ivfpq_rerank_topk(spark, index_dir, qs, K, 10**9)
-    )
-    flat = _rows(AI.ann_index_ivf_topk(spark, index_dir, qs, K))
-    assert full == flat and len(full) == len(QUERY_IDS) * K
-    # a tight shortlist still returns well-formed top-k
-    tight = AI.ann_index_ivfpq_rerank_topk(spark, index_dir, qs, K, K)
-    assert tight.count() == len(QUERY_IDS) * K
-
-
-def test_2level_rerank_with_full_shortlist_equals_flat(spark, index2_dir):
-    qs = _queries(spark)
-    full = _rows(
-        AI.ann_index_2level_ivfpq_rerank_topk(spark, index2_dir, qs, K, 10**9)
-    )
-    flat = _rows(AI.ann_index_2level_topk(spark, index2_dir, qs, K))
-    assert full == flat and len(full) == len(QUERY_IDS) * K
+    for d in (index_dir, index2_dir):
+        full = _rows(AI.ann_index_ivfpq_rerank_topk(spark, d, qs, K, 10**9))
+        flat = _rows(AI.ann_index_ivf_topk(spark, d, qs, K))
+        assert full == flat and len(full) == len(QUERY_IDS) * K, d
+        # a tight shortlist still returns well-formed top-k
+        tight = AI.ann_index_ivfpq_rerank_topk(spark, d, qs, K, K)
+        assert tight.count() == len(QUERY_IDS) * K, d
 
 def test_2level_distributed_build_matches_driver_build(spark, index2_dir, tmp_path):
     """build_ann_index_2level_distributed (map-side gmap, cogrouped
@@ -878,9 +951,9 @@ def test_2level_distributed_build_matches_driver_build(spark, index2_dir, tmp_pa
     AI.build_ann_index_2level_distributed(spark, emb, d)
     qs = _queries(spark)
     for reader in (
-        AI.ann_index_2level_topk,
-        AI.ann_index_2level_ivfpq_topk,
-        AI.ann_index_2level_ivfpq_rerank_topk,
+        AI.ann_index_ivf_topk,
+        AI.ann_index_ivfpq_topk,
+        AI.ann_index_ivfpq_rerank_topk,
     ):
         assert _rows(reader(spark, d, qs, K)) == _rows(
             reader(spark, index2_dir, qs, K)
@@ -899,51 +972,29 @@ def test_2level_distributed_build_matches_driver_build(spark, index2_dir, tmp_pa
 
 
 def test_truncated_reader_with_full_shortlist_equals_ivf_flat(
-    spark, index_dir
+    spark, index_dir, index2_dir
 ):
-    """ann_index_truncated_topk's exactness anchor: with shortlist ≥
-    the probed volume the truncated stage cannot drop a candidate, so
-    the full-dim rerank must reproduce IVF-Flat bit-for-bit; at the
-    default (16-dim, 25-row) operating point the result stays a valid
-    top-k contract (k rows per query, exact full-dim sims)."""
+    """ann_index_truncated_topk's exactness anchor, on both layouts:
+    with shortlist ≥ the probed volume the truncated stage cannot drop
+    a candidate, so the full-dim rerank must reproduce IVF-Flat
+    bit-for-bit; at the default (16-dim, 25-row) operating point the
+    result stays a valid top-k contract (k rows per query, exact
+    full-dim sims)."""
     qs = _queries(spark)
-    flat = _rows(AI.ann_index_ivf_topk(spark, index_dir, qs, K))
-    full = _rows(
-        AI.ann_index_truncated_topk(spark, index_dir, qs, K, shortlist=10**9)
-    )
-    assert full == flat
-    tight = AI.ann_index_truncated_topk(spark, index_dir, qs, K).collect()
-    assert len(tight) == len(QUERY_IDS) * K
-    sims = {(r.q_id, r.vec_id): r.sim for r in tight}
-    exact = {
-        (r[0], r[1]): r[2]
-        for r in flat
-    }
-    # every reranked sim that IS a true IVF neighbor carries the exact score
-    for key, sim in sims.items():
-        if key in exact:
-            assert sim == exact[key]
-
-
-def test_2level_truncated_reader_with_full_shortlist_equals_flat(
-    spark, index2_dir
-):
-    """The two-level truncated reader's exactness anchor, mirroring the
-    single-level one: a covering shortlist must reproduce the flat
-    2-level reader bit-for-bit, and the default operating point keeps
-    the top-k contract with exact full-dim sims."""
-    qs = _queries(spark)
-    flat = _rows(AI.ann_index_2level_topk(spark, index2_dir, qs, K))
-    full = _rows(
-        AI.ann_index_2level_truncated_topk(
-            spark, index2_dir, qs, K, shortlist=10**9
+    for d in (index_dir, index2_dir):
+        flat_df = AI.ann_index_ivf_topk(spark, d, qs, K)
+        full = _rows(
+            AI.ann_index_truncated_topk(spark, d, qs, K, shortlist=10**9)
         )
-    )
-    assert full == flat
-    tight = AI.ann_index_2level_truncated_topk(
-        spark, index2_dir, qs, K
-    ).collect()
-    assert len(tight) == len(QUERY_IDS) * K
+        assert full == _rows(flat_df), d
+        tight = AI.ann_index_truncated_topk(spark, d, qs, K).collect()
+        assert len(tight) == len(QUERY_IDS) * K, d
+        exact = {(r.q_id, r.vec_id): r.sim for r in flat_df.collect()}
+        # every reranked sim that IS a true IVF neighbor carries the
+        # exact score
+        for r in tight:
+            if (r.q_id, r.vec_id) in exact:
+                assert r.sim == exact[(r.q_id, r.vec_id)], d
 
 
 def test_sq8_arm_on_distributed_build_matches_driver_build(
@@ -962,8 +1013,8 @@ def test_sq8_arm_on_distributed_build_matches_driver_build(
     AI.build_ann_index_2level(spark, emb, d_ref)
     AI.add_sq8_to_ann_index(spark, d_ref)
     qs = _queries(spark)
-    assert _rows(AI.ann_index_2level_sq8_topk(spark, d, qs, K)) == _rows(
-        AI.ann_index_2level_sq8_topk(spark, d_ref, qs, K)
+    assert _rows(AI.ann_index_sq8_topk(spark, d, qs, K)) == _rows(
+        AI.ann_index_sq8_topk(spark, d_ref, qs, K)
     )
     va, sa = AI._read_sq_stats(spark, d)
     vb, sb = AI._read_sq_stats(spark, d_ref)
@@ -1095,8 +1146,8 @@ def test_residual_auto_selection_picks_the_regime(spark, tmp_path):
     # distributed auto == driver auto on the same corpus (same choice,
     # same search results)
     assert _rows(
-        AI.ann_index_2level_topk(spark, dd_c, cqs, K)
-    ) == _rows(AI.ann_index_2level_topk(spark, d2_c, cqs, K))
+        AI.ann_index_ivf_topk(spark, dd_c, cqs, K)
+    ) == _rows(AI.ann_index_ivf_topk(spark, d2_c, cqs, K))
     clustered.unpersist()
     # uniform-fixture sanity: the auto default left the standard index
     # bit-compatible with the raw-PQ oracle family
@@ -1123,8 +1174,8 @@ def test_2level_residual_builds_match_and_hold_semantics(spark, tmp_path):
     assert M.read_meta(d1, AI._RESIDUAL_KEY) is True
     qs = _queries(spark)
     for reader in (
-        AI.ann_index_2level_ivfpq_topk,
-        AI.ann_index_2level_ivfpq_rerank_topk,
+        AI.ann_index_ivfpq_topk,
+        AI.ann_index_ivfpq_rerank_topk,
     ):
         r1 = _rows(reader(spark, d1, qs, K))
         r2 = _rows(reader(spark, d2, qs, K))
@@ -1141,9 +1192,9 @@ def test_2level_residual_builds_match_and_hold_semantics(spark, tmp_path):
     assert va == vb and len(va) == n
     # rerank semantics anchor on the residual artifact
     full = _rows(
-        AI.ann_index_2level_ivfpq_rerank_topk(spark, d1, qs, K, 10**9)
+        AI.ann_index_ivfpq_rerank_topk(spark, d1, qs, K, 10**9)
     )
-    flat = _rows(AI.ann_index_2level_topk(spark, d1, qs, K))
+    flat = _rows(AI.ann_index_ivf_topk(spark, d1, qs, K))
     assert full == flat and len(full) == len(QUERY_IDS) * K
     # append == one-shot build over the union corpus
     d3 = str(tmp_path / "res2l_upsert")
@@ -1153,8 +1204,8 @@ def test_2level_residual_builds_match_and_hold_semantics(spark, tmp_path):
     AI.append_to_ann_index_2level(
         spark, emb.filter(F.col("vec_id") >= n // 2), d3
     )
-    got = _rows(AI.ann_index_2level_ivfpq_topk(spark, d3, qs, K))
-    want = _rows(AI.ann_index_2level_ivfpq_topk(spark, d1, qs, K))
+    got = _rows(AI.ann_index_ivfpq_topk(spark, d3, qs, K))
+    want = _rows(AI.ann_index_ivfpq_topk(spark, d1, qs, K))
     assert got == want and got
 
 
@@ -1214,9 +1265,9 @@ def test_2level_refined_builds_match_and_hold_invariants(spark, tmp_path):
     AI.build_ann_index_2level_distributed(spark, emb, d2, refine_iters=1)
     qs = _queries(spark)
     for reader in (
-        AI.ann_index_2level_topk,
-        AI.ann_index_2level_ivfpq_topk,
-        AI.ann_index_2level_ivfpq_rerank_topk,
+        AI.ann_index_ivf_topk,
+        AI.ann_index_ivfpq_topk,
+        AI.ann_index_ivfpq_rerank_topk,
     ):
         r1 = _rows(reader(spark, d1, qs, K))
         r2 = _rows(reader(spark, d2, qs, K))
@@ -1278,23 +1329,6 @@ def test_sq8_rerank_with_full_shortlist_equals_ivf_flat(spark, sq8_dir):
     assert tight.count() == len(QUERY_IDS) * K
 
 
-def test_sq8_truncated_dims_identity_and_covering_exactness(spark, sq8_dir):
-    """The dims knob's anchors: full-width slicing is the identity
-    (dims=DIM bit-identical to the unsliced arm — the per-dim grid is
-    independent, so the prefix of the trained grid IS the trained grid
-    of the prefix), and a covering shortlist makes the truncated
-    code-space stage unable to drop a candidate, so the exact rerank
-    equals IVF-Flat even at dims=16."""
-    qs = _queries(spark)
-    full = _rows(AI.ann_index_sq8_topk(spark, sq8_dir, qs, K))
-    ident = _rows(AI.ann_index_sq8_topk(spark, sq8_dir, qs, K, dims=S.DIM))
-    assert ident == full
-    cover = _rows(
-        AI.ann_index_sq8_topk(spark, sq8_dir, qs, K, 10**9, dims=16)
-    )
-    assert cover == _rows(AI.ann_index_ivf_topk(spark, sq8_dir, qs, K))
-
-
 @pytest.fixture(scope="module")
 def sq8_2l_dir(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("ann_index_2l_sq8"))
@@ -1304,22 +1338,22 @@ def sq8_2l_dir(spark, tmp_path_factory):
     return d
 
 
-def test_2level_sq8_truncated_dims_identity_and_covering(spark, sq8_2l_dir):
-    """The dims knob's anchors on the TWO-LEVEL layout — same contract
-    as the single-level composition: full-width slice is the identity,
-    covering shortlist equals the flat 2-level reader at dims=16."""
+def test_sq8_truncated_dims_identity_and_covering_exactness(
+    spark, sq8_dir, sq8_2l_dir
+):
+    """The dims knob's anchors, on both layouts: full-width slicing is
+    the identity (dims=DIM bit-identical to the unsliced arm — the
+    per-dim grid is independent, so the prefix of the trained grid IS
+    the trained grid of the prefix), and a covering shortlist makes the
+    truncated code-space stage unable to drop a candidate, so the exact
+    rerank equals IVF-Flat even at dims=16."""
     qs = _queries(spark)
-    full = _rows(AI.ann_index_2level_sq8_topk(spark, sq8_2l_dir, qs, K))
-    ident = _rows(
-        AI.ann_index_2level_sq8_topk(spark, sq8_2l_dir, qs, K, dims=S.DIM)
-    )
-    assert ident == full
-    cover = _rows(
-        AI.ann_index_2level_sq8_topk(
-            spark, sq8_2l_dir, qs, K, 10**9, dims=16
-        )
-    )
-    assert cover == _rows(AI.ann_index_2level_topk(spark, sq8_2l_dir, qs, K))
+    for d in (sq8_dir, sq8_2l_dir):
+        full = _rows(AI.ann_index_sq8_topk(spark, d, qs, K))
+        ident = _rows(AI.ann_index_sq8_topk(spark, d, qs, K, dims=S.DIM))
+        assert ident == full, d
+        cover = _rows(AI.ann_index_sq8_topk(spark, d, qs, K, 10**9, dims=16))
+        assert cover == _rows(AI.ann_index_ivf_topk(spark, d, qs, K)), d
 
 
 def test_sq8_codes_match_driver_encoder_and_fit_byte_grid(spark, sq8_dir):
@@ -1498,7 +1532,7 @@ def test_2level_sq8_arm_lifecycle(spark, tmp_path):
     AI.build_ann_index_2level(spark, emb.filter(F.col("vec_id") < half), d)
     qs = _queries(spark)
     with pytest.raises(ValueError, match="SQ8"):
-        AI.ann_index_2level_sq8_topk(spark, d, qs, K)
+        AI.ann_index_sq8_topk(spark, d, qs, K)
     AI.add_sq8_to_ann_index(spark, d)
     # partitioned under the layout's composed key
     part_cols = {
@@ -1506,8 +1540,8 @@ def test_2level_sq8_arm_lifecycle(spark, tmp_path):
         for p in AI._data_files(M.table_path(d, "sq8"))
     }
     assert part_cols == {("cell", "group")}
-    assert _rows(AI.ann_index_2level_sq8_topk(spark, d, qs, K, 10**9)) == (
-        _rows(AI.ann_index_2level_topk(spark, d, qs, K))
+    assert _rows(AI.ann_index_sq8_topk(spark, d, qs, K, 10**9)) == (
+        _rows(AI.ann_index_ivf_topk(spark, d, qs, K))
     )
     stats_before = _rows(spark.read.parquet(M.table_path(d, "sq_stats")))
     AI.append_to_ann_index_2level(
@@ -1517,8 +1551,8 @@ def test_2level_sq8_arm_lifecycle(spark, tmp_path):
         _rows(spark.read.parquet(M.table_path(d, "sq_stats")))
         == stats_before
     )
-    grown = _rows(AI.ann_index_2level_sq8_topk(spark, d, qs, K, 10**9))
-    assert grown == _rows(AI.ann_index_2level_topk(spark, d, qs, K))
+    grown = _rows(AI.ann_index_sq8_topk(spark, d, qs, K, 10**9))
+    assert grown == _rows(AI.ann_index_ivf_topk(spark, d, qs, K))
     res = AI.compact_ann_index(spark, d)
     assert "sq8" in res
     n_parts = (
@@ -1528,7 +1562,7 @@ def test_2level_sq8_arm_lifecycle(spark, tmp_path):
         .count()
     )
     assert res["sq8"]["files_after"] == n_parts
-    assert _rows(AI.ann_index_2level_sq8_topk(spark, d, qs, K, 10**9)) == grown
+    assert _rows(AI.ann_index_sq8_topk(spark, d, qs, K, 10**9)) == grown
 
 
 def test_sq8_plan_is_pruned_and_corpus_free(spark, sq8_dir):
@@ -1557,140 +1591,99 @@ def test_2level_rebuild_invalidates_sq8_arm(spark, tmp_path):
     AI.build_ann_index_2level(spark, emb, d)
     assert M.read_meta(d, AI._SQ8_KEY) is False
     with pytest.raises(ValueError, match="SQ8"):
-        AI.ann_index_2level_sq8_topk(spark, d, _queries(spark), K)
+        AI.ann_index_sq8_topk(spark, d, _queries(spark), K)
     AI.add_sq8_to_ann_index(spark, d)
-    got = _rows(AI.ann_index_2level_sq8_topk(spark, d, _queries(spark), K, 10**9))
-    assert got == _rows(AI.ann_index_2level_topk(spark, d, _queries(spark), K))
+    got = _rows(AI.ann_index_sq8_topk(spark, d, _queries(spark), K, 10**9))
+    assert got == _rows(AI.ann_index_ivf_topk(spark, d, _queries(spark), K))
 
 
 def test_sq8_prefix_arm_bit_identity_and_lifecycle(spark, tmp_path):
     """The materialized prefix-codes arm (sq8_prefix/) must be
-    INVISIBLE in results: a store carrying it answers every truncated
-    width at or under the materialized width bit-identically to a twin
-    store without it (per-dim grid independence), while the probed
-    scan actually switches to the prefix table (plan-pinned — the
-    scan-side IO cut is the arm's whole point). Lifecycle: appends
-    land sliced rows alongside the full codes, compaction covers the
-    table, a grid retrain re-derives it, a rebuild invalidates it."""
+    INVISIBLE in results, on both layouts: a store carrying it answers
+    every truncated width at or under the materialized width
+    bit-identically to a twin store without it (per-dim grid
+    independence), while the probed scan actually switches to the
+    prefix table (plan-pinned — the scan-side IO cut is the arm's whole
+    point). It is partitioned under the layout's own key. Lifecycle:
+    appends land sliced rows alongside the full codes, compaction
+    covers the table, a grid retrain re-derives it, a rebuild
+    invalidates it."""
     emb = load_table(spark, SF_SMOKE, "embeddings")
     half = emb.count() // 2
-    d_arm = str(tmp_path / "with_arm")
-    d_twin = str(tmp_path / "no_arm")
-    for d in (d_arm, d_twin):
-        AI.build_ann_index(spark, emb.filter(F.col("vec_id") < half), d)
-        AI.add_sq8_to_ann_index(spark, d)
-    AI.add_sq8_prefix_to_ann_index(spark, d_arm)  # default width 16
-    assert M.read_meta(d_arm, AI._SQ8_PREFIX_DIMS_KEY) == S.MRL_DIMS
     qs = _queries(spark)
+    part_cols = {"1level": {("cell",)}, "2level": {("cell", "group")}}
+    for layout, (build, append) in _LAYOUTS.items():
+        d_arm = str(tmp_path / f"with_arm_{layout}")
+        d_twin = str(tmp_path / f"no_arm_{layout}")
+        for d in (d_arm, d_twin):
+            build(spark, emb.filter(F.col("vec_id") < half), d)
+            AI.add_sq8_to_ann_index(spark, d)
+        AI.add_sq8_prefix_to_ann_index(spark, d_arm)  # default width 16
+        assert M.read_meta(d_arm, AI._SQ8_PREFIX_DIMS_KEY) == S.MRL_DIMS
+        assert {
+            tuple(sorted(c for c in ("group", "cell") if f"{c}=" in p))
+            for p in AI._data_files(M.table_path(d_arm, "sq8_prefix"))
+        } == part_cols[layout]
 
-    def trunc(d, dims):
-        return _rows(AI.ann_index_sq8_topk(spark, d, qs, K, dims=dims))
+        def trunc(d, dims):
+            return _rows(AI.ann_index_sq8_topk(spark, d, qs, K, dims=dims))
 
-    # bit-identity at the materialized width, below it, and (fallback
-    # to the full codes table) above it
-    for dims in (16, 8, 32, None):
-        assert trunc(d_arm, dims) == trunc(d_twin, dims), dims
-    # the dims<=width scan reads the prefix table, not the full codes
-    # (widen the metadata string limit: the default 100 truncates the
-    # long pytest tmp path out of the Location entry)
-    spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
-    try:
-        df = AI.ann_index_sq8_topk(spark, d_arm, qs, K, dims=16)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "/sq8_prefix" in plan  # the table dir, not the test name
-        full_plan = (
-            AI.ann_index_sq8_topk(spark, d_arm, qs, K)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
+        # bit-identity at the materialized width, below it, and
+        # (fallback to the full codes table) above it
+        for dims in (16, 8, 32, None):
+            assert trunc(d_arm, dims) == trunc(d_twin, dims), (layout, dims)
+        # the dims<=width scan reads the prefix table, not the full codes
+        # (widen the metadata string limit: the default 100 truncates the
+        # long pytest tmp path out of the Location entry)
+        spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
+        try:
+            df = AI.ann_index_sq8_topk(spark, d_arm, qs, K, dims=16)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "/sq8_prefix" in plan  # the table dir, not the test name
+            full_plan = (
+                AI.ann_index_sq8_topk(spark, d_arm, qs, K)
+                ._jdf.queryExecution()
+                .executedPlan()
+                .toString()
+            )
+            assert "/sq8_prefix" not in full_plan
+        finally:
+            spark.conf.unset("spark.sql.maxMetadataStringLength")
+        # appends maintain the arm (sliced rows land alongside)
+        for d in (d_arm, d_twin):
+            append(spark, emb.filter(F.col("vec_id") >= half), d)
+        for dims in (16, 8, None):
+            assert trunc(d_arm, dims) == trunc(d_twin, dims), (layout, dims)
+        n_sq8 = spark.read.parquet(M.table_path(d_arm, "sq8")).count()
+        pfx = spark.read.parquet(M.table_path(d_arm, "sq8_prefix"))
+        assert pfx.count() == n_sq8
+        assert pfx.select(F.max(F.size("codes"))).collect()[0][0] == S.MRL_DIMS
+        # tombstones + compaction ride the same lifecycle (prefix table
+        # is in the maintenance map, anti-joined and rewritten)
+        victims = [int(r.vec_id) for r in emb.limit(3).collect()]
+        for d in (d_arm, d_twin):
+            AI.delete_from_ann_index(spark, victims, d)
+        res_arm = AI.compact_ann_index(spark, d_arm)
+        AI.compact_ann_index(spark, d_twin)
+        assert "sq8_prefix" in res_arm
+        for dims in (16, None):
+            assert trunc(d_arm, dims) == trunc(d_twin, dims), (layout, dims)
+        assert (
+            spark.read.parquet(M.table_path(d_arm, "sq8_prefix")).count()
+            == spark.read.parquet(M.table_path(d_arm, "sq8")).count()
         )
-        assert "/sq8_prefix" not in full_plan
-    finally:
-        spark.conf.unset("spark.sql.maxMetadataStringLength")
-    # appends maintain the arm (sliced rows land alongside)
-    for d in (d_arm, d_twin):
-        AI.append_to_ann_index(
-            spark, emb.filter(F.col("vec_id") >= half), d
-        )
-    for dims in (16, 8, None):
-        assert trunc(d_arm, dims) == trunc(d_twin, dims), dims
-    n_sq8 = spark.read.parquet(M.table_path(d_arm, "sq8")).count()
-    pfx = spark.read.parquet(M.table_path(d_arm, "sq8_prefix"))
-    assert pfx.count() == n_sq8
-    assert pfx.select(F.max(F.size("codes"))).collect()[0][0] == S.MRL_DIMS
-    # tombstones + compaction ride the same lifecycle (prefix table is
-    # in the maintenance map, anti-joined and rewritten)
-    victims = [int(r.vec_id) for r in emb.limit(3).collect()]
-    for d in (d_arm, d_twin):
-        AI.delete_from_ann_index(spark, victims, d)
-    res_arm = AI.compact_ann_index(spark, d_arm)
-    AI.compact_ann_index(spark, d_twin)
-    assert "sq8_prefix" in res_arm
-    for dims in (16, None):
-        assert trunc(d_arm, dims) == trunc(d_twin, dims), dims
-    assert (
-        spark.read.parquet(M.table_path(d_arm, "sq8_prefix")).count()
-        == spark.read.parquet(M.table_path(d_arm, "sq8")).count()
-    )
-    # a grid retrain re-derives the arm from the fresh codes
-    for d in (d_arm, d_twin):
-        AI.add_sq8_to_ann_index(spark, d)
-    assert M.read_meta(d_arm, AI._SQ8_PREFIX_DIMS_KEY) == S.MRL_DIMS
-    for dims in (16, 8):
-        assert trunc(d_arm, dims) == trunc(d_twin, dims), dims
-    # a rebuild invalidates the arm with the rest of the SQ8 state
-    AI.build_ann_index(spark, emb, d_arm)
-    assert M.read_meta(d_arm, AI._SQ8_PREFIX_DIMS_KEY) is None
-    # and the verb refuses a store with no SQ8 arm
-    with pytest.raises(ValueError, match="SQ8"):
-        AI.add_sq8_prefix_to_ann_index(spark, d_arm)
-
-
-def test_2level_sq8_prefix_arm_bit_identity(spark, tmp_path):
-    """The prefix arm on the sharded-quantizer layout: (group, cell)
-    partitioning, bit-identical truncated results vs the slice-side
-    twin, appends maintained, plan scans the prefix table."""
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    half = emb.count() // 2
-    d_arm = str(tmp_path / "arm_2l")
-    d_twin = str(tmp_path / "twin_2l")
-    for d in (d_arm, d_twin):
-        AI.build_ann_index_2level(
-            spark, emb.filter(F.col("vec_id") < half), d
-        )
-        AI.add_sq8_to_ann_index(spark, d)
-    AI.add_sq8_prefix_to_ann_index(spark, d_arm)
-    part_cols = {
-        tuple(sorted(c for c in ("group", "cell") if f"{c}=" in p))
-        for p in AI._data_files(M.table_path(d_arm, "sq8_prefix"))
-    }
-    assert part_cols == {("cell", "group")}
-    qs = _queries(spark)
-
-    def trunc(d, dims):
-        return _rows(
-            AI.ann_index_2level_sq8_topk(spark, d, qs, K, dims=dims)
-        )
-
-    for dims in (16, 8, None):
-        assert trunc(d_arm, dims) == trunc(d_twin, dims), dims
-    spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
-    try:
-        plan = (
-            AI.ann_index_2level_sq8_topk(spark, d_arm, qs, K, dims=16)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "/sq8_prefix" in plan  # the table dir, not the test name
-    finally:
-        spark.conf.unset("spark.sql.maxMetadataStringLength")
-    for d in (d_arm, d_twin):
-        AI.append_to_ann_index_2level(
-            spark, emb.filter(F.col("vec_id") >= half), d
-        )
-    for dims in (16, 8, None):
-        assert trunc(d_arm, dims) == trunc(d_twin, dims), dims
+        # a grid retrain re-derives the arm from the fresh codes
+        for d in (d_arm, d_twin):
+            AI.add_sq8_to_ann_index(spark, d)
+        assert M.read_meta(d_arm, AI._SQ8_PREFIX_DIMS_KEY) == S.MRL_DIMS
+        for dims in (16, 8):
+            assert trunc(d_arm, dims) == trunc(d_twin, dims), (layout, dims)
+        # a rebuild invalidates the arm with the rest of the SQ8 state
+        build(spark, emb, d_arm)
+        assert M.read_meta(d_arm, AI._SQ8_PREFIX_DIMS_KEY) is None
+        # and the verb refuses a store with no SQ8 arm
+        with pytest.raises(ValueError, match="SQ8"):
+            AI.add_sq8_prefix_to_ann_index(spark, d_arm)
 
 
 def test_sq8_drift_counters_match_exact_scan(spark, tmp_path):
@@ -1897,43 +1890,52 @@ def test_binary_plan_is_pruned_jvm_only_shortlist(spark, binary_dir):
 def test_binary_append_uses_stored_thresholds_and_counters(
     spark, tmp_path
 ):
-    """Append encodes against the STORED midrange thresholds (immutable
-    quantizer — bin_stats bit-identical across the append), the
-    bit-balance counters accumulate to exactly the full-table recount,
-    and the covering-shortlist search still equals IVF-Flat over the
-    grown corpus."""
+    """On both layouts: a covering-shortlist binary search equals
+    IVF-Flat; append encodes against the STORED midrange thresholds
+    (immutable quantizer — bin_stats bit-identical across the append),
+    the bit-balance counters accumulate to exactly the full-table
+    recount, and the covering-shortlist search still equals IVF-Flat
+    over the grown corpus. A rebuild orphans the arm (fail-loudly)."""
     emb = load_table(spark, SF_SMOKE, "embeddings")
     half = emb.count() // 2
-    d = str(tmp_path / "binary_upsert")
-    AI.build_ann_index(spark, emb.filter(F.col("vec_id") < half), d)
-    AI.add_binary_to_ann_index(spark, d)
-    stats_before = _rows(spark.read.parquet(M.table_path(d, "bin_stats")))
-    AI.append_to_ann_index(spark, emb.filter(F.col("vec_id") >= half), d)
-    assert (
-        _rows(spark.read.parquet(M.table_path(d, "bin_stats")))
-        == stats_before
-    )
-    thresh = AI._read_bin_thresh(spark, d)
-    probe_ids = [int(half), int(half) + 1]
-    want = {
-        int(r.vec_id): AI._binary_encode_np(r.embedding, thresh)
-        for r in emb.filter(F.col("vec_id").isin(probe_ids)).collect()
-    }
-    got = {
-        int(r.vec_id): list(r.words)
-        for r in spark.read.parquet(M.table_path(d, "binary"))
-        .filter(F.col("vec_id").isin(probe_ids))
-        .collect()
-    }
-    assert got == want
-    # counter-vs-exact equality across the append transition
-    assert AI._binary_drift_numbers(spark, d) == AI._binary_drift_numbers(
-        spark, d, exact=True
-    )
     qs = _queries(spark)
-    assert _rows(AI.ann_index_binary_topk(spark, d, qs, K, 10**9)) == _rows(
-        AI.ann_index_ivf_topk(spark, d, qs, K)
-    )
+    for layout, (build, append) in _LAYOUTS.items():
+        d = str(tmp_path / f"binary_upsert_{layout}")
+        build(spark, emb.filter(F.col("vec_id") < half), d)
+        AI.add_binary_to_ann_index(spark, d)
+        assert _rows(AI.ann_index_binary_topk(spark, d, qs, K, 10**9)) == _rows(
+            AI.ann_index_ivf_topk(spark, d, qs, K)
+        ), layout
+        stats_before = _rows(spark.read.parquet(M.table_path(d, "bin_stats")))
+        append(spark, emb.filter(F.col("vec_id") >= half), d)
+        assert (
+            _rows(spark.read.parquet(M.table_path(d, "bin_stats")))
+            == stats_before
+        ), layout
+        thresh = AI._read_bin_thresh(spark, d)
+        probe_ids = [int(half), int(half) + 1]
+        want = {
+            int(r.vec_id): AI._binary_encode_np(r.embedding, thresh)
+            for r in emb.filter(F.col("vec_id").isin(probe_ids)).collect()
+        }
+        got = {
+            int(r.vec_id): list(r.words)
+            for r in spark.read.parquet(M.table_path(d, "binary"))
+            .filter(F.col("vec_id").isin(probe_ids))
+            .collect()
+        }
+        assert got == want, layout
+        # counter-vs-exact equality across the append transition
+        assert AI._binary_drift_numbers(spark, d) == AI._binary_drift_numbers(
+            spark, d, exact=True
+        ), layout
+        assert _rows(AI.ann_index_binary_topk(spark, d, qs, K, 10**9)) == _rows(
+            AI.ann_index_ivf_topk(spark, d, qs, K)
+        ), layout
+        build(spark, emb, d)
+        assert M.read_meta(d, AI._BINARY_KEY) is False
+        with pytest.raises(ValueError, match="binary"):
+            AI.ann_index_binary_topk(spark, d, qs, K)
 
 
 def test_binary_tombstones_compaction_and_growth_retrain(spark, tmp_path):
@@ -1982,32 +1984,6 @@ def test_binary_tombstones_compaction_and_growth_retrain(spark, tmp_path):
     assert "binary_retrain" not in res3
 
 
-def test_2level_binary_arm_lifecycle(spark, tmp_path):
-    """The binary arm on the sharded-quantizer layout: derive, search
-    (covering shortlist == 2-level flat), append against stored
-    thresholds, rebuild orphans the arm (fail-loudly), re-derive."""
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    half = emb.count() // 2
-    d = str(tmp_path / "binary_2l")
-    AI.build_ann_index_2level(spark, emb.filter(F.col("vec_id") < half), d)
-    AI.add_binary_to_ann_index(spark, d)
-    qs = _queries(spark)
-    assert _rows(
-        AI.ann_index_2level_binary_topk(spark, d, qs, K, 10**9)
-    ) == _rows(AI.ann_index_2level_topk(spark, d, qs, K))
-    AI.append_to_ann_index_2level(spark, emb.filter(F.col("vec_id") >= half), d)
-    assert AI._binary_drift_numbers(spark, d) == AI._binary_drift_numbers(
-        spark, d, exact=True
-    )
-    assert _rows(
-        AI.ann_index_2level_binary_topk(spark, d, qs, K, 10**9)
-    ) == _rows(AI.ann_index_2level_topk(spark, d, qs, K))
-    AI.build_ann_index_2level(spark, emb, d)
-    assert M.read_meta(d, AI._BINARY_KEY) is False
-    with pytest.raises(ValueError, match="binary"):
-        AI.ann_index_2level_binary_topk(spark, d, qs, K)
-
-
 # --------------------------------------------------------------------------
 # The cascade: binary -> SQ8 -> exact, the ladder composed.
 
@@ -2030,23 +2006,29 @@ def test_cascade_requires_both_arms(spark, sq8_dir, binary_dir):
         AI.ann_index_cascade_topk(spark, binary_dir, _queries(spark), K)
 
 
-def test_cascade_covering_anchors(spark, cascade_dir):
-    """The cascade's two collapse anchors: a covering COARSE shortlist
-    makes stage 1 unable to drop a candidate, so the cascade equals
-    the plain SQ8 two-stage search at the same shortlist; covering
-    BOTH shortlists collapses it to IVF-Flat. And the defaulted
-    cascade still returns k rows per query."""
+def test_cascade_covering_anchors(spark, cascade_dir, tmp_path):
+    """The cascade's two collapse anchors, on both layouts: a covering
+    COARSE shortlist makes stage 1 unable to drop a candidate, so the
+    cascade equals the plain SQ8 two-stage search at the same
+    shortlist; covering BOTH shortlists collapses it to IVF-Flat. And
+    the defaulted cascade still returns k rows per query."""
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    cascade2_dir = str(tmp_path / "cascade_2l")
+    AI.build_ann_index_2level(spark, emb, cascade2_dir)
+    AI.add_sq8_to_ann_index(spark, cascade2_dir)
+    AI.add_binary_to_ann_index(spark, cascade2_dir)
     qs = _queries(spark)
-    assert _rows(
-        AI.ann_index_cascade_topk(spark, cascade_dir, qs, K, 4 * K, 10**9)
-    ) == _rows(AI.ann_index_sq8_topk(spark, cascade_dir, qs, K, 4 * K))
-    assert _rows(
-        AI.ann_index_cascade_topk(spark, cascade_dir, qs, K, 10**9, 10**9)
-    ) == _rows(AI.ann_index_ivf_topk(spark, cascade_dir, qs, K))
-    assert (
-        AI.ann_index_cascade_topk(spark, cascade_dir, qs, K).count()
-        == len(QUERY_IDS) * K
-    )
+    for d in (cascade_dir, cascade2_dir):
+        assert _rows(
+            AI.ann_index_cascade_topk(spark, d, qs, K, 4 * K, 10**9)
+        ) == _rows(AI.ann_index_sq8_topk(spark, d, qs, K, 4 * K)), d
+        assert _rows(
+            AI.ann_index_cascade_topk(spark, d, qs, K, 10**9, 10**9)
+        ) == _rows(AI.ann_index_ivf_topk(spark, d, qs, K)), d
+        assert (
+            AI.ann_index_cascade_topk(spark, d, qs, K).count()
+            == len(QUERY_IDS) * K
+        ), d
 
 
 def test_cascade_first_two_stages_are_jvm_only(spark, cascade_dir):
@@ -2060,24 +2042,68 @@ def test_cascade_first_two_stages_are_jvm_only(spark, cascade_dir):
     ), plan
 
 
-def test_2level_cascade_covering_anchor(spark, tmp_path):
-    """The cascade on the sharded-quantizer layout: covering both
-    shortlists collapses to the 2-level flat reader."""
+# ---------------------------------------------------------------------------
+# One search function per arm for both layouts: a two-level index with
+# one group over the single-level centroids is the single-level index.
+
+
+@pytest.fixture(scope="module")
+def parity_dirs(spark, tmp_path_factory):
+    """residual -> (single-level dir, two-level dir with n_groups=1 over
+    the same S.N_CENTROIDS cells), each carrying the SQ8 and binary
+    arms."""
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    d = str(tmp_path / "cascade_2l")
-    AI.build_ann_index_2level(spark, emb, d)
-    AI.add_sq8_to_ann_index(spark, d)
-    AI.add_binary_to_ann_index(spark, d)
-    qs = _queries(spark)
-    assert _rows(
-        AI.ann_index_2level_cascade_topk(
-            spark, d, qs, K, 10**9, 10**9
+    dirs = {}
+    for residual in (False, True):
+        one = str(tmp_path_factory.mktemp("parity_1level"))
+        two = str(tmp_path_factory.mktemp("parity_2level"))
+        AI.build_ann_index(spark, emb, one, residual=residual)
+        AI.build_ann_index_2level(
+            spark, emb, two, n_groups=1, n_cells=S.N_CENTROIDS,
+            residual=residual,
         )
-    ) == _rows(AI.ann_index_2level_topk(spark, d, qs, K))
-    assert (
-        AI.ann_index_2level_cascade_topk(spark, d, qs, K).count()
-        == len(QUERY_IDS) * K
-    )
+        for d in (one, two):
+            AI.add_sq8_to_ann_index(spark, d)
+            AI.add_binary_to_ann_index(spark, d)
+        dirs[residual] = (one, two)
+    return dirs
+
+
+_ARMS = {
+    "ivf": lambda spark, d, qs: AI.ann_index_ivf_topk(spark, d, qs, K),
+    "truncated": lambda spark, d, qs: AI.ann_index_truncated_topk(
+        spark, d, qs, K
+    ),
+    "ivfpq": lambda spark, d, qs: AI.ann_index_ivfpq_topk(spark, d, qs, K),
+    "ivfpq_rerank": lambda spark, d, qs: AI.ann_index_ivfpq_rerank_topk(
+        spark, d, qs, K
+    ),
+    "sq8": lambda spark, d, qs: AI.ann_index_sq8_topk(spark, d, qs, K),
+    "sq8_dims16": lambda spark, d, qs: AI.ann_index_sq8_topk(
+        spark, d, qs, K, dims=16
+    ),
+    "binary": lambda spark, d, qs: AI.ann_index_binary_topk(spark, d, qs, K),
+    "cascade": lambda spark, d, qs: AI.ann_index_cascade_topk(
+        spark, d, qs, K
+    ),
+}
+
+
+@pytest.mark.parametrize("residual", [False, True], ids=["raw", "residual"])
+@pytest.mark.parametrize("arm", sorted(_ARMS))
+def test_one_group_2level_index_answers_like_single_level(
+    spark, parity_dirs, arm, residual
+):
+    """Each arm reads the layout from disk and probes it: on a two-level
+    index whose one group holds the single-level centroids, every arm
+    must return exactly the single-level index's rows, raw and residual
+    alike."""
+    one, two = parity_dirs[residual]
+    assert M.read_meta(two, AI._RESIDUAL_KEY) is residual
+    qs = _queries(spark)
+    got = _rows(_ARMS[arm](spark, two, qs))
+    assert got == _rows(_ARMS[arm](spark, one, qs))
+    assert len(got) == len(QUERY_IDS) * K
 
 
 # ---------------------------------------------------------------------------
@@ -2109,13 +2135,14 @@ def test_adc_lut_matches_per_element_loop():
 
 
 @pytest.mark.parametrize("residual", [False, True], ids=["raw", "residual"])
-@pytest.mark.parametrize("layout", sorted(_PQ_LAYOUTS))
+@pytest.mark.parametrize("layout", sorted(_LAYOUTS))
 def test_driver_scoring_matches_spark_plan(spark, tmp_path, layout, residual):
     """Driver path and Spark plan return identical rows and schema on an
     appended index with tombstones, for indexed query ids (self hits
     excluded), for k above the candidate count, and with a probed
     partition that has no data files."""
-    build, append, search = _PQ_LAYOUTS[layout]
+    build, append = _LAYOUTS[layout]
+    search = AI.ann_index_ivfpq_topk
     emb = load_table(spark, SF_SMOKE, "embeddings")
     n = emb.count()
     d = str(tmp_path / "idx")
@@ -2128,7 +2155,7 @@ def test_driver_scoring_matches_spark_plan(spark, tmp_path, layout, residual):
 
     def both(k):
         driver = search(spark, d, qs, k)
-        with _spark_plan(spark, d, layout, qs):
+        with _spark_plan(spark, d, qs):
             ref = search(spark, d, qs, k)
         assert "FileScan" not in _plan(driver)
         assert "FileScan parquet" in _plan(ref)
@@ -2146,7 +2173,7 @@ def test_driver_scoring_matches_spark_plan(spark, tmp_path, layout, residual):
         ranks = [r.rank for r in every if r.q_id == q]
         assert sorted(ranks) == list(range(1, len(ranks) + 1))
 
-    probes, parts = _pq_probes(spark, d, layout, qs)
+    probes, parts = _pq_probes(spark, d, qs)
     emptied = probes[0][1:]
     files = [path for path, _ in AI._probed_files(d, parts, probes)[emptied]]
     removed = set(pq.read_table(files, columns=["vec_id"])["vec_id"].to_pylist())
@@ -2163,7 +2190,7 @@ def test_driver_scoring_matches_spark_plan(spark, tmp_path, layout, residual):
     assert not {r.vec_id for r in after} & removed
 
 
-@pytest.mark.parametrize("layout", sorted(_PQ_LAYOUTS))
+@pytest.mark.parametrize("layout", sorted(_LAYOUTS))
 def test_small_search_starts_no_job_and_large_one_runs_spark(
     spark, index_dir, index2_dir, layout
 ):
@@ -2171,12 +2198,12 @@ def test_small_search_starts_no_job_and_large_one_runs_spark(
     search and its collect start 0 Spark jobs; one byte below it the
     Spark plan runs. The conf is restored afterwards."""
     d = index_dir if layout == "1level" else index2_dir
-    search = _PQ_LAYOUTS[layout][2]
+    search = AI.ann_index_ivfpq_topk
     qs = _queries(spark)[:1]
     search(spark, d, qs, K).collect()  # quantizer caches are warm
     key = "spark.sql.files.maxPartitionBytes"
     before = spark.conf.get(key, None)
-    probed = _probed_bytes(spark, d, layout, qs)
+    probed = _probed_bytes(spark, d, qs)
     with _max_partition_bytes(spark, probed):
         assert _jobs(spark, lambda: search(spark, d, qs, K).collect()) == 0
     with _max_partition_bytes(spark, probed - 1):
@@ -2184,7 +2211,7 @@ def test_small_search_starts_no_job_and_large_one_runs_spark(
     assert spark.conf.get(key, None) == before
 
 
-@pytest.mark.parametrize("layout", sorted(_PQ_LAYOUTS))
+@pytest.mark.parametrize("layout", sorted(_LAYOUTS))
 def test_driver_scoring_opens_only_probed_codes(
     spark, index_dir, index2_dir, layout, monkeypatch
 ):
@@ -2192,9 +2219,9 @@ def test_driver_scoring_opens_only_probed_codes(
     data files of the probed ``vectors/`` partitions, each once —
     nothing under ``raw/`` and nothing of the corpus."""
     d = index_dir if layout == "1level" else index2_dir
-    search = _PQ_LAYOUTS[layout][2]
+    search = AI.ann_index_ivfpq_topk
     qs = _queries(spark)
-    probes, parts = _pq_probes(spark, d, layout, qs)
+    probes, parts = _pq_probes(spark, d, qs)
     vectors = M.table_path(d, "vectors")
     probed_dirs = {
         os.path.join(vectors, *(f"{c}={v}" for c, v in zip(parts, p[1:])))

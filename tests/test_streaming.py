@@ -389,7 +389,7 @@ def test_incremental_ann_2level_stream_matches_batch_lifecycle(spark, tmp_path):
     assert len(got_rows) == 3 * (n - n // 3)  # top-3 per later-batch vector
 
     q = _query_vectors(spark, sf)
-    for reader in (AI.ann_index_2level_topk, AI.ann_index_2level_ivfpq_topk):
+    for reader in (AI.ann_index_ivf_topk, AI.ann_index_ivfpq_topk):
         a = sorted(map(str, reader(spark, store, q, 5).collect()))
         b = sorted(map(str, reader(spark, twin, q, 5).collect()))
         assert a == b and a, reader.__name__
@@ -749,10 +749,10 @@ def test_incremental_ann_2level_residual_stream(spark, tmp_path):
     AI.build_ann_index_2level(spark, emb, twin, residual=True)
     q = _query_vectors(spark, sf)
     got = sorted(
-        map(str, AI.ann_index_2level_ivfpq_topk(spark, store, q, 5).collect())
+        map(str, AI.ann_index_ivfpq_topk(spark, store, q, 5).collect())
     )
     want = sorted(
-        map(str, AI.ann_index_2level_ivfpq_topk(spark, twin, q, 5).collect())
+        map(str, AI.ann_index_ivfpq_topk(spark, twin, q, 5).collect())
     )
     assert got == want and got
 
@@ -761,7 +761,7 @@ def test_incremental_ann_2level_residual_stream(spark, tmp_path):
     raw = sorted(
         map(
             str,
-            AI.ann_index_2level_ivfpq_topk(spark, raw_twin, q, 5).collect(),
+            AI.ann_index_ivfpq_topk(spark, raw_twin, q, 5).collect(),
         )
     )
     assert raw != want  # the stream really stored residual codes

@@ -166,14 +166,14 @@ def main() -> None:
 
     t_search1, t_search2 = best_of_3_pair(
         lambda: AI.ann_index_ivf_topk(spark, idx1, queries, 10),
-        lambda: AI.ann_index_2level_topk(spark, idx2, queries, 10),
+        lambda: AI.ann_index_ivf_topk(spark, idx2, queries, 10),
     )
     # PQ arm vs flat arm on the SAME probed (group, cell) partitions —
     # the round-10 claim: probed IO is proportional to 2-byte codes,
     # not raw floats. Interleaved like every comparison on this box.
     t_search2_flat, t_search2_pq = best_of_3_pair(
-        lambda: AI.ann_index_2level_topk(spark, idx2, queries, 10),
-        lambda: AI.ann_index_2level_ivfpq_topk(spark, idx2, queries, 10),
+        lambda: AI.ann_index_ivf_topk(spark, idx2, queries, 10),
+        lambda: AI.ann_index_ivfpq_topk(spark, idx2, queries, 10),
     )
     # probed-IO bytes, measured from the partition directories the two
     # arms actually scan (identical probe set by construction)
@@ -220,18 +220,18 @@ def main() -> None:
     }
     r2 = {
         (r.q_id, r.rank): r.vec_id
-        for r in AI.ann_index_2level_topk(spark, idx2, queries, 10).collect()
+        for r in AI.ann_index_ivf_topk(spark, idx2, queries, 10).collect()
     }
     overlap = sum(1 for k in r1 if r2.get(k) == r1[k]) / max(len(r1), 1)
 
-    df2 = AI.ann_index_2level_topk(spark, idx2, queries, 10)
+    df2 = AI.ann_index_ivf_topk(spark, idx2, queries, 10)
     plan2 = df2._jdf.queryExecution().executedPlan().toString()
     pruned2 = "PartitionFilters" in plan2 and " IN " in plan2
 
     dist_parity = sorted(
-        map(str, AI.ann_index_2level_topk(spark, idx2d, queries, 10).collect())
+        map(str, AI.ann_index_ivf_topk(spark, idx2d, queries, 10).collect())
     ) == sorted(
-        map(str, AI.ann_index_2level_topk(spark, idx2, queries, 10).collect())
+        map(str, AI.ann_index_ivf_topk(spark, idx2, queries, 10).collect())
     )
 
     # --- mutation legs (LAST: they grow idx2) ---------------------------

@@ -209,7 +209,7 @@ def main() -> None:
                 for g, c in probe_pairs
             ]
             t0 = time.perf_counter()
-            got = AI.ann_index_2level_topk(
+            got = AI.ann_index_ivf_topk(
                 spark, idx, queries, K, n_probe=n_probe
             ).collect()
             t_search = time.perf_counter() - t0

@@ -72,24 +72,10 @@ def main() -> None:
             AI.build_ann_index(spark, emb, index, n_centroids=n_cells)
         print(json.dumps({"build_s": round(time.perf_counter() - t0, 1)}))
 
-    if layout == "2level":
-        schema, parts = AI._PQ_PROBES_2L, ["group", "cell"]
-        cents = AI._int_centroids_2level(spark, index)
-
-        def probe(qs, n_probe):
-            return AI._probe_cells_2level(spark, index, qs, N_GROUPS, n_probe)
-    else:
-        schema, parts = AI._PQ_PROBES, ["cell"]
-        cents = AI._int_centroids_1level(spark, index)
-
-        def probe(qs, n_probe):
-            cells, mat = AI._read_centroids(spark, index)
-            return AI._probe_cells(qs, cells, mat, n_probe)
-
     def run(qs, n_probe, driver):
-        probes = probe(qs, n_probe)
+        probes, schema, cents = AI._probes(spark, index, qs, n_probe, N_GROUPS)
         lut, residual = AI._search_luts(spark, index, qs, probes, cents)
-        files = AI._probed_files(index, parts, probes)
+        files = AI._probed_files(index, schema.names[1:], probes)
         args = (spark, index, qs, probes)
         c0, t0 = tree_seconds(), time.perf_counter()
         if driver:
