@@ -922,22 +922,27 @@ def test_2level_delete_then_compaction_applies_physically(spark, tmp_path):
     assert _rows(AI.ann_index_ivf_topk(spark, d, qs, K)) == logical_flat
     assert _rows(AI.ann_index_ivfpq_topk(spark, d, qs, K)) == logical_pq
 
-def test_rerank_with_full_shortlist_equals_ivf_flat(
-    spark, index_dir, index2_dir
-):
-    """The two-stage search's semantics anchor, on both layouts: with a
-    shortlist covering the whole probed population, ADC-shortlist +
-    exact-rerank must equal the IVF-Flat reader EXACTLY (same probes,
-    same cosine, same tie-breaks) — the shortlist only ever trims,
-    never reorders."""
+def _assert_rerank_full_shortlist_equals_flat(spark, d):
+    """The two-stage search's semantics anchor: with a shortlist
+    covering the whole probed population, ADC-shortlist + exact-rerank
+    must equal the IVF-Flat reader EXACTLY (same probes, same cosine,
+    same tie-breaks) — the shortlist only ever trims, never reorders."""
     qs = _queries(spark)
-    for d in (index_dir, index2_dir):
-        full = _rows(AI.ann_index_ivfpq_rerank_topk(spark, d, qs, K, 10**9))
-        flat = _rows(AI.ann_index_ivf_topk(spark, d, qs, K))
-        assert full == flat and len(full) == len(QUERY_IDS) * K, d
-        # a tight shortlist still returns well-formed top-k
-        tight = AI.ann_index_ivfpq_rerank_topk(spark, d, qs, K, K)
-        assert tight.count() == len(QUERY_IDS) * K, d
+    full = _rows(AI.ann_index_ivfpq_rerank_topk(spark, d, qs, K, 10**9))
+    flat = _rows(AI.ann_index_ivf_topk(spark, d, qs, K))
+    assert full == flat and len(full) == len(QUERY_IDS) * K
+    # a tight shortlist still returns well-formed top-k
+    tight = AI.ann_index_ivfpq_rerank_topk(spark, d, qs, K, K)
+    assert tight.count() == len(QUERY_IDS) * K
+
+
+def test_rerank_with_full_shortlist_equals_ivf_flat(spark, index_dir):
+    _assert_rerank_full_shortlist_equals_flat(spark, index_dir)
+
+
+def test_2level_rerank_with_full_shortlist_equals_flat(spark, index2_dir):
+    _assert_rerank_full_shortlist_equals_flat(spark, index2_dir)
+
 
 def test_2level_distributed_build_matches_driver_build(spark, index2_dir, tmp_path):
     """build_ann_index_2level_distributed (map-side gmap, cogrouped
@@ -971,30 +976,38 @@ def test_2level_distributed_build_matches_driver_build(spark, index2_dir, tmp_pa
     assert ra == rb and ra
 
 
-def test_truncated_reader_with_full_shortlist_equals_ivf_flat(
-    spark, index_dir, index2_dir
-):
-    """ann_index_truncated_topk's exactness anchor, on both layouts:
-    with shortlist ≥ the probed volume the truncated stage cannot drop
-    a candidate, so the full-dim rerank must reproduce IVF-Flat
-    bit-for-bit; at the default (16-dim, 25-row) operating point the
-    result stays a valid top-k contract (k rows per query, exact
-    full-dim sims)."""
+def _assert_truncated_full_shortlist_equals_flat(spark, d):
+    """ann_index_truncated_topk's exactness anchor: with shortlist ≥
+    the probed volume the truncated stage cannot drop a candidate, so
+    the full-dim rerank must reproduce IVF-Flat bit-for-bit; at the
+    default (16-dim, 25-row) operating point the result stays a valid
+    top-k contract (k rows per query, exact full-dim sims)."""
     qs = _queries(spark)
-    for d in (index_dir, index2_dir):
-        flat_df = AI.ann_index_ivf_topk(spark, d, qs, K)
-        full = _rows(
-            AI.ann_index_truncated_topk(spark, d, qs, K, shortlist=10**9)
-        )
-        assert full == _rows(flat_df), d
-        tight = AI.ann_index_truncated_topk(spark, d, qs, K).collect()
-        assert len(tight) == len(QUERY_IDS) * K, d
-        exact = {(r.q_id, r.vec_id): r.sim for r in flat_df.collect()}
-        # every reranked sim that IS a true IVF neighbor carries the
-        # exact score
-        for r in tight:
-            if (r.q_id, r.vec_id) in exact:
-                assert r.sim == exact[(r.q_id, r.vec_id)], d
+    flat_df = AI.ann_index_ivf_topk(spark, d, qs, K)
+    full = _rows(
+        AI.ann_index_truncated_topk(spark, d, qs, K, shortlist=10**9)
+    )
+    assert full == _rows(flat_df)
+    tight = AI.ann_index_truncated_topk(spark, d, qs, K).collect()
+    assert len(tight) == len(QUERY_IDS) * K
+    exact = {(r.q_id, r.vec_id): r.sim for r in flat_df.collect()}
+    # every reranked sim that IS a true IVF neighbor carries the exact
+    # score
+    for r in tight:
+        if (r.q_id, r.vec_id) in exact:
+            assert r.sim == exact[(r.q_id, r.vec_id)]
+
+
+def test_truncated_reader_with_full_shortlist_equals_ivf_flat(
+    spark, index_dir
+):
+    _assert_truncated_full_shortlist_equals_flat(spark, index_dir)
+
+
+def test_2level_truncated_reader_with_full_shortlist_equals_flat(
+    spark, index2_dir
+):
+    _assert_truncated_full_shortlist_equals_flat(spark, index2_dir)
 
 
 def test_sq8_arm_on_distributed_build_matches_driver_build(
@@ -1338,22 +1351,27 @@ def sq8_2l_dir(spark, tmp_path_factory):
     return d
 
 
-def test_sq8_truncated_dims_identity_and_covering_exactness(
-    spark, sq8_dir, sq8_2l_dir
-):
-    """The dims knob's anchors, on both layouts: full-width slicing is
-    the identity (dims=DIM bit-identical to the unsliced arm — the
-    per-dim grid is independent, so the prefix of the trained grid IS
-    the trained grid of the prefix), and a covering shortlist makes the
-    truncated code-space stage unable to drop a candidate, so the exact
-    rerank equals IVF-Flat even at dims=16."""
+def _assert_sq8_dims_identity_and_covering(spark, d):
+    """The dims knob's anchors: full-width slicing is the identity
+    (dims=DIM bit-identical to the unsliced arm — the per-dim grid is
+    independent, so the prefix of the trained grid IS the trained grid
+    of the prefix), and a covering shortlist makes the truncated
+    code-space stage unable to drop a candidate, so the exact rerank
+    equals IVF-Flat even at dims=16."""
     qs = _queries(spark)
-    for d in (sq8_dir, sq8_2l_dir):
-        full = _rows(AI.ann_index_sq8_topk(spark, d, qs, K))
-        ident = _rows(AI.ann_index_sq8_topk(spark, d, qs, K, dims=S.DIM))
-        assert ident == full, d
-        cover = _rows(AI.ann_index_sq8_topk(spark, d, qs, K, 10**9, dims=16))
-        assert cover == _rows(AI.ann_index_ivf_topk(spark, d, qs, K)), d
+    full = _rows(AI.ann_index_sq8_topk(spark, d, qs, K))
+    ident = _rows(AI.ann_index_sq8_topk(spark, d, qs, K, dims=S.DIM))
+    assert ident == full
+    cover = _rows(AI.ann_index_sq8_topk(spark, d, qs, K, 10**9, dims=16))
+    assert cover == _rows(AI.ann_index_ivf_topk(spark, d, qs, K))
+
+
+def test_sq8_truncated_dims_identity_and_covering_exactness(spark, sq8_dir):
+    _assert_sq8_dims_identity_and_covering(spark, sq8_dir)
+
+
+def test_2level_sq8_truncated_dims_identity_and_covering(spark, sq8_2l_dir):
+    _assert_sq8_dims_identity_and_covering(spark, sq8_2l_dir)
 
 
 def test_sq8_codes_match_driver_encoder_and_fit_byte_grid(spark, sq8_dir):
@@ -1597,9 +1615,9 @@ def test_2level_rebuild_invalidates_sq8_arm(spark, tmp_path):
     assert got == _rows(AI.ann_index_ivf_topk(spark, d, _queries(spark), K))
 
 
-def test_sq8_prefix_arm_bit_identity_and_lifecycle(spark, tmp_path):
+def _check_sq8_prefix_arm(spark, tmp_path, layout):
     """The materialized prefix-codes arm (sq8_prefix/) must be
-    INVISIBLE in results, on both layouts: a store carrying it answers
+    INVISIBLE in results, on ``layout``: a store carrying it answers
     every truncated width at or under the materialized width
     bit-identically to a twin store without it (per-dim grid
     independence), while the probed scan actually switches to the
@@ -1612,78 +1630,86 @@ def test_sq8_prefix_arm_bit_identity_and_lifecycle(spark, tmp_path):
     half = emb.count() // 2
     qs = _queries(spark)
     part_cols = {"1level": {("cell",)}, "2level": {("cell", "group")}}
-    for layout, (build, append) in _LAYOUTS.items():
-        d_arm = str(tmp_path / f"with_arm_{layout}")
-        d_twin = str(tmp_path / f"no_arm_{layout}")
-        for d in (d_arm, d_twin):
-            build(spark, emb.filter(F.col("vec_id") < half), d)
-            AI.add_sq8_to_ann_index(spark, d)
-        AI.add_sq8_prefix_to_ann_index(spark, d_arm)  # default width 16
-        assert M.read_meta(d_arm, AI._SQ8_PREFIX_DIMS_KEY) == S.MRL_DIMS
-        assert {
-            tuple(sorted(c for c in ("group", "cell") if f"{c}=" in p))
-            for p in AI._data_files(M.table_path(d_arm, "sq8_prefix"))
-        } == part_cols[layout]
+    build, append = _LAYOUTS[layout]
+    d_arm = str(tmp_path / f"with_arm_{layout}")
+    d_twin = str(tmp_path / f"no_arm_{layout}")
+    for d in (d_arm, d_twin):
+        build(spark, emb.filter(F.col("vec_id") < half), d)
+        AI.add_sq8_to_ann_index(spark, d)
+    AI.add_sq8_prefix_to_ann_index(spark, d_arm)  # default width 16
+    assert M.read_meta(d_arm, AI._SQ8_PREFIX_DIMS_KEY) == S.MRL_DIMS
+    assert {
+        tuple(sorted(c for c in ("group", "cell") if f"{c}=" in p))
+        for p in AI._data_files(M.table_path(d_arm, "sq8_prefix"))
+    } == part_cols[layout]
 
-        def trunc(d, dims):
-            return _rows(AI.ann_index_sq8_topk(spark, d, qs, K, dims=dims))
+    def trunc(d, dims):
+        return _rows(AI.ann_index_sq8_topk(spark, d, qs, K, dims=dims))
 
-        # bit-identity at the materialized width, below it, and
-        # (fallback to the full codes table) above it
-        for dims in (16, 8, 32, None):
-            assert trunc(d_arm, dims) == trunc(d_twin, dims), (layout, dims)
-        # the dims<=width scan reads the prefix table, not the full codes
-        # (widen the metadata string limit: the default 100 truncates the
-        # long pytest tmp path out of the Location entry)
-        spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
-        try:
-            df = AI.ann_index_sq8_topk(spark, d_arm, qs, K, dims=16)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            assert "/sq8_prefix" in plan  # the table dir, not the test name
-            full_plan = (
-                AI.ann_index_sq8_topk(spark, d_arm, qs, K)
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
-            assert "/sq8_prefix" not in full_plan
-        finally:
-            spark.conf.unset("spark.sql.maxMetadataStringLength")
-        # appends maintain the arm (sliced rows land alongside)
-        for d in (d_arm, d_twin):
-            append(spark, emb.filter(F.col("vec_id") >= half), d)
-        for dims in (16, 8, None):
-            assert trunc(d_arm, dims) == trunc(d_twin, dims), (layout, dims)
-        n_sq8 = spark.read.parquet(M.table_path(d_arm, "sq8")).count()
-        pfx = spark.read.parquet(M.table_path(d_arm, "sq8_prefix"))
-        assert pfx.count() == n_sq8
-        assert pfx.select(F.max(F.size("codes"))).collect()[0][0] == S.MRL_DIMS
-        # tombstones + compaction ride the same lifecycle (prefix table
-        # is in the maintenance map, anti-joined and rewritten)
-        victims = [int(r.vec_id) for r in emb.limit(3).collect()]
-        for d in (d_arm, d_twin):
-            AI.delete_from_ann_index(spark, victims, d)
-        res_arm = AI.compact_ann_index(spark, d_arm)
-        AI.compact_ann_index(spark, d_twin)
-        assert "sq8_prefix" in res_arm
-        for dims in (16, None):
-            assert trunc(d_arm, dims) == trunc(d_twin, dims), (layout, dims)
-        assert (
-            spark.read.parquet(M.table_path(d_arm, "sq8_prefix")).count()
-            == spark.read.parquet(M.table_path(d_arm, "sq8")).count()
+    # bit-identity at the materialized width, below it, and
+    # (fallback to the full codes table) above it
+    for dims in (16, 8, 32, None):
+        assert trunc(d_arm, dims) == trunc(d_twin, dims), (layout, dims)
+    # the dims<=width scan reads the prefix table, not the full codes
+    # (widen the metadata string limit: the default 100 truncates the
+    # long pytest tmp path out of the Location entry)
+    spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
+    try:
+        df = AI.ann_index_sq8_topk(spark, d_arm, qs, K, dims=16)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "/sq8_prefix" in plan  # the table dir, not the test name
+        full_plan = (
+            AI.ann_index_sq8_topk(spark, d_arm, qs, K)
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
         )
-        # a grid retrain re-derives the arm from the fresh codes
-        for d in (d_arm, d_twin):
-            AI.add_sq8_to_ann_index(spark, d)
-        assert M.read_meta(d_arm, AI._SQ8_PREFIX_DIMS_KEY) == S.MRL_DIMS
-        for dims in (16, 8):
-            assert trunc(d_arm, dims) == trunc(d_twin, dims), (layout, dims)
-        # a rebuild invalidates the arm with the rest of the SQ8 state
-        build(spark, emb, d_arm)
-        assert M.read_meta(d_arm, AI._SQ8_PREFIX_DIMS_KEY) is None
-        # and the verb refuses a store with no SQ8 arm
-        with pytest.raises(ValueError, match="SQ8"):
-            AI.add_sq8_prefix_to_ann_index(spark, d_arm)
+        assert "/sq8_prefix" not in full_plan
+    finally:
+        spark.conf.unset("spark.sql.maxMetadataStringLength")
+    # appends maintain the arm (sliced rows land alongside)
+    for d in (d_arm, d_twin):
+        append(spark, emb.filter(F.col("vec_id") >= half), d)
+    for dims in (16, 8, None):
+        assert trunc(d_arm, dims) == trunc(d_twin, dims), (layout, dims)
+    n_sq8 = spark.read.parquet(M.table_path(d_arm, "sq8")).count()
+    pfx = spark.read.parquet(M.table_path(d_arm, "sq8_prefix"))
+    assert pfx.count() == n_sq8
+    assert pfx.select(F.max(F.size("codes"))).collect()[0][0] == S.MRL_DIMS
+    # tombstones + compaction ride the same lifecycle (prefix table
+    # is in the maintenance map, anti-joined and rewritten)
+    victims = [int(r.vec_id) for r in emb.limit(3).collect()]
+    for d in (d_arm, d_twin):
+        AI.delete_from_ann_index(spark, victims, d)
+    res_arm = AI.compact_ann_index(spark, d_arm)
+    AI.compact_ann_index(spark, d_twin)
+    assert "sq8_prefix" in res_arm
+    for dims in (16, None):
+        assert trunc(d_arm, dims) == trunc(d_twin, dims), (layout, dims)
+    assert (
+        spark.read.parquet(M.table_path(d_arm, "sq8_prefix")).count()
+        == spark.read.parquet(M.table_path(d_arm, "sq8")).count()
+    )
+    # a grid retrain re-derives the arm from the fresh codes
+    for d in (d_arm, d_twin):
+        AI.add_sq8_to_ann_index(spark, d)
+    assert M.read_meta(d_arm, AI._SQ8_PREFIX_DIMS_KEY) == S.MRL_DIMS
+    for dims in (16, 8):
+        assert trunc(d_arm, dims) == trunc(d_twin, dims), (layout, dims)
+    # a rebuild invalidates the arm with the rest of the SQ8 state
+    build(spark, emb, d_arm)
+    assert M.read_meta(d_arm, AI._SQ8_PREFIX_DIMS_KEY) is None
+    # and the verb refuses a store with no SQ8 arm
+    with pytest.raises(ValueError, match="SQ8"):
+        AI.add_sq8_prefix_to_ann_index(spark, d_arm)
+
+
+def test_sq8_prefix_arm_bit_identity_and_lifecycle(spark, tmp_path):
+    _check_sq8_prefix_arm(spark, tmp_path, "1level")
+
+
+def test_2level_sq8_prefix_arm_bit_identity(spark, tmp_path):
+    _check_sq8_prefix_arm(spark, tmp_path, "2level")
 
 
 def test_sq8_drift_counters_match_exact_scan(spark, tmp_path):
@@ -1887,10 +1913,8 @@ def test_binary_plan_is_pruned_jvm_only_shortlist(spark, binary_dir):
     assert n_python == 0, plan
 
 
-def test_binary_append_uses_stored_thresholds_and_counters(
-    spark, tmp_path
-):
-    """On both layouts: a covering-shortlist binary search equals
+def _check_binary_arm_lifecycle(spark, tmp_path, layout):
+    """On ``layout``: a covering-shortlist binary search equals
     IVF-Flat; append encodes against the STORED midrange thresholds
     (immutable quantizer — bin_stats bit-identical across the append),
     the bit-balance counters accumulate to exactly the full-table
@@ -1899,43 +1923,53 @@ def test_binary_append_uses_stored_thresholds_and_counters(
     emb = load_table(spark, SF_SMOKE, "embeddings")
     half = emb.count() // 2
     qs = _queries(spark)
-    for layout, (build, append) in _LAYOUTS.items():
-        d = str(tmp_path / f"binary_upsert_{layout}")
-        build(spark, emb.filter(F.col("vec_id") < half), d)
-        AI.add_binary_to_ann_index(spark, d)
-        assert _rows(AI.ann_index_binary_topk(spark, d, qs, K, 10**9)) == _rows(
-            AI.ann_index_ivf_topk(spark, d, qs, K)
-        ), layout
-        stats_before = _rows(spark.read.parquet(M.table_path(d, "bin_stats")))
-        append(spark, emb.filter(F.col("vec_id") >= half), d)
-        assert (
-            _rows(spark.read.parquet(M.table_path(d, "bin_stats")))
-            == stats_before
-        ), layout
-        thresh = AI._read_bin_thresh(spark, d)
-        probe_ids = [int(half), int(half) + 1]
-        want = {
-            int(r.vec_id): AI._binary_encode_np(r.embedding, thresh)
-            for r in emb.filter(F.col("vec_id").isin(probe_ids)).collect()
-        }
-        got = {
-            int(r.vec_id): list(r.words)
-            for r in spark.read.parquet(M.table_path(d, "binary"))
-            .filter(F.col("vec_id").isin(probe_ids))
-            .collect()
-        }
-        assert got == want, layout
-        # counter-vs-exact equality across the append transition
-        assert AI._binary_drift_numbers(spark, d) == AI._binary_drift_numbers(
-            spark, d, exact=True
-        ), layout
-        assert _rows(AI.ann_index_binary_topk(spark, d, qs, K, 10**9)) == _rows(
-            AI.ann_index_ivf_topk(spark, d, qs, K)
-        ), layout
-        build(spark, emb, d)
-        assert M.read_meta(d, AI._BINARY_KEY) is False
-        with pytest.raises(ValueError, match="binary"):
-            AI.ann_index_binary_topk(spark, d, qs, K)
+    build, append = _LAYOUTS[layout]
+    d = str(tmp_path / f"binary_upsert_{layout}")
+    build(spark, emb.filter(F.col("vec_id") < half), d)
+    AI.add_binary_to_ann_index(spark, d)
+    assert _rows(AI.ann_index_binary_topk(spark, d, qs, K, 10**9)) == _rows(
+        AI.ann_index_ivf_topk(spark, d, qs, K)
+    ), layout
+    stats_before = _rows(spark.read.parquet(M.table_path(d, "bin_stats")))
+    append(spark, emb.filter(F.col("vec_id") >= half), d)
+    assert (
+        _rows(spark.read.parquet(M.table_path(d, "bin_stats")))
+        == stats_before
+    ), layout
+    thresh = AI._read_bin_thresh(spark, d)
+    probe_ids = [int(half), int(half) + 1]
+    want = {
+        int(r.vec_id): AI._binary_encode_np(r.embedding, thresh)
+        for r in emb.filter(F.col("vec_id").isin(probe_ids)).collect()
+    }
+    got = {
+        int(r.vec_id): list(r.words)
+        for r in spark.read.parquet(M.table_path(d, "binary"))
+        .filter(F.col("vec_id").isin(probe_ids))
+        .collect()
+    }
+    assert got == want, layout
+    # counter-vs-exact equality across the append transition
+    assert AI._binary_drift_numbers(spark, d) == AI._binary_drift_numbers(
+        spark, d, exact=True
+    ), layout
+    assert _rows(AI.ann_index_binary_topk(spark, d, qs, K, 10**9)) == _rows(
+        AI.ann_index_ivf_topk(spark, d, qs, K)
+    ), layout
+    build(spark, emb, d)
+    assert M.read_meta(d, AI._BINARY_KEY) is False
+    with pytest.raises(ValueError, match="binary"):
+        AI.ann_index_binary_topk(spark, d, qs, K)
+
+
+def test_binary_append_uses_stored_thresholds_and_counters(
+    spark, tmp_path
+):
+    _check_binary_arm_lifecycle(spark, tmp_path, "1level")
+
+
+def test_2level_binary_arm_lifecycle(spark, tmp_path):
+    _check_binary_arm_lifecycle(spark, tmp_path, "2level")
 
 
 def test_binary_tombstones_compaction_and_growth_retrain(spark, tmp_path):
@@ -2006,29 +2040,36 @@ def test_cascade_requires_both_arms(spark, sq8_dir, binary_dir):
         AI.ann_index_cascade_topk(spark, binary_dir, _queries(spark), K)
 
 
-def test_cascade_covering_anchors(spark, cascade_dir, tmp_path):
-    """The cascade's two collapse anchors, on both layouts: a covering
-    COARSE shortlist makes stage 1 unable to drop a candidate, so the
-    cascade equals the plain SQ8 two-stage search at the same
-    shortlist; covering BOTH shortlists collapses it to IVF-Flat. And
-    the defaulted cascade still returns k rows per query."""
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    cascade2_dir = str(tmp_path / "cascade_2l")
-    AI.build_ann_index_2level(spark, emb, cascade2_dir)
-    AI.add_sq8_to_ann_index(spark, cascade2_dir)
-    AI.add_binary_to_ann_index(spark, cascade2_dir)
+def _assert_cascade_covering_anchors(spark, d):
+    """The cascade's two collapse anchors: a covering COARSE shortlist
+    makes stage 1 unable to drop a candidate, so the cascade equals the
+    plain SQ8 two-stage search at the same shortlist; covering BOTH
+    shortlists collapses it to IVF-Flat. And the defaulted cascade
+    still returns k rows per query."""
     qs = _queries(spark)
-    for d in (cascade_dir, cascade2_dir):
-        assert _rows(
-            AI.ann_index_cascade_topk(spark, d, qs, K, 4 * K, 10**9)
-        ) == _rows(AI.ann_index_sq8_topk(spark, d, qs, K, 4 * K)), d
-        assert _rows(
-            AI.ann_index_cascade_topk(spark, d, qs, K, 10**9, 10**9)
-        ) == _rows(AI.ann_index_ivf_topk(spark, d, qs, K)), d
-        assert (
-            AI.ann_index_cascade_topk(spark, d, qs, K).count()
-            == len(QUERY_IDS) * K
-        ), d
+    assert _rows(
+        AI.ann_index_cascade_topk(spark, d, qs, K, 4 * K, 10**9)
+    ) == _rows(AI.ann_index_sq8_topk(spark, d, qs, K, 4 * K))
+    assert _rows(
+        AI.ann_index_cascade_topk(spark, d, qs, K, 10**9, 10**9)
+    ) == _rows(AI.ann_index_ivf_topk(spark, d, qs, K))
+    assert (
+        AI.ann_index_cascade_topk(spark, d, qs, K).count()
+        == len(QUERY_IDS) * K
+    )
+
+
+def test_cascade_covering_anchors(spark, cascade_dir):
+    _assert_cascade_covering_anchors(spark, cascade_dir)
+
+
+def test_2level_cascade_covering_anchor(spark, tmp_path):
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    d = str(tmp_path / "cascade_2l")
+    AI.build_ann_index_2level(spark, emb, d)
+    AI.add_sq8_to_ann_index(spark, d)
+    AI.add_binary_to_ann_index(spark, d)
+    _assert_cascade_covering_anchors(spark, d)
 
 
 def test_cascade_first_two_stages_are_jvm_only(spark, cascade_dir):
