@@ -153,7 +153,9 @@ def _build_session(cpus: str):
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(
+        len(os.sched_getaffinity(0))
+    )
     spot_mode = "--spot" in sys.argv[1:]
 
     spark = _build_session(cpus)

@@ -9,24 +9,43 @@ readers answer top-k from the artifact alone — a fresh SparkSession
 never touches the raw corpus again (pinned by
 tests/test_ann_index.py::test_fresh_session_answers_from_index).
 
-Layout (all under ``index_dir``):
+Layout (all under ``index_dir``). Two layouts share the corpus tables
+and differ in the coarse quantizer and in the corpus tables' partition
+columns (:func:`_parts`): ``cell`` on the single-level layout,
+``(group, cell)`` on the two-level one.
 
-- ``centroids/``   (cell, c_emb) — the IVF coarse quantizer, tiny.
+- ``centroids/``   (cell, c_emb) — single-level only: the IVF coarse
+  quantizer, tiny.
+- ``coarse/``      (group, g_emb) — two-level only: the coarse groups,
+  tiny. Its presence marks the layout (:func:`_is_2level`).
+- ``fine/``        (cell, c_emb) **partitioned by group** — two-level
+  only: the fine centroids, sharded by their nearest coarse group, so a
+  reader fetches only the probed groups' shards.
 - ``codebook/``    (subspace, dim, cell, ic) — PQ centroid components in
   the exact-integer domain (PQ_INT_SCALE), m×k×sub rows, tiny.
-- ``vectors/``     (vec_id, codes array<int>) **partitioned by cell** —
-  the PQ-encoded corpus, ONE row per vector with the PQ_M codes packed
-  into an array (the long form repeated the 8-byte vec_id per subspace
-  — 4x the rows and bytes for 4x 4-bit payloads). Probing n_probe of
-  n_centroids cells is a partition-pruned scan reading
-  ~n_probe/n_centroids of log2(PQ_K)·PQ_M bits per vector: both IVF-PQ
-  pruning axes fall out of the layout, and ADC scoring is a MAP-SIDE
-  array expression over the broadcast flattened LUT (no per-subspace
-  join, no (q_id, vec_id) re-aggregation shuffle).
-- ``raw/``         (vec_id, embedding) **partitioned by cell** — the
-  IVF-Flat rerank arm: exact cosine inside probed cells only.
-- ``lsh_buckets/`` (vec_id, bucket) **partitioned by table_id** — the
-  random-hyperplane bands for candidate generation.
+- ``vectors/``     (vec_id, codes array<int>) **partitioned by the
+  layout's columns** — the PQ-encoded corpus, ONE row per vector with
+  the PQ_M codes packed into an array (the long form repeated the
+  8-byte vec_id per subspace — 4x the rows and bytes for 4x 4-bit
+  payloads). Probing n_probe of n_centroids cells is a partition-pruned
+  scan reading ~n_probe/n_centroids of log2(PQ_K)·PQ_M bits per vector:
+  both IVF-PQ pruning axes fall out of the layout, and ADC scoring is a
+  MAP-SIDE array expression over the broadcast flattened LUT (no
+  per-subspace join, no (q_id, vec_id) re-aggregation shuffle).
+- ``raw/``         (vec_id, embedding) **partitioned by the layout's
+  columns** — the IVF-Flat rerank arm: exact cosine inside probed cells
+  only.
+- ``lsh_buckets/`` (vec_id, bucket) **partitioned by table_id** —
+  single-level only: the random-hyperplane bands for candidate
+  generation.
+- Derived arms, present once added and listed in the manifest:
+  ``sq8/`` (vec_id, codes array<int>) and ``sq8_prefix/`` (its leading
+  codes) with their grid ``sq_stats/`` (dim, vmin, vmax); ``binary/``
+  (vec_id, words array<long>) with its thresholds ``bin_stats/`` (dim,
+  thresh). The code tables are partitioned by the layout's columns;
+  the grids are tiny.
+- ``tombstones/``  (vec_id) — logically deleted ids, applied at
+  compaction.
 
 Query-side terms (probe selection, the per-query ADC lookup table, the
 query's LSH bucket signatures) are computed on the DRIVER from the tiny
@@ -41,6 +60,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
@@ -208,8 +228,11 @@ RESIDUAL_AUTO_RATIO = 0.5
 
 # diagnostic sample: 1-in-16 deterministic hash sample, plus the low-id
 # prefix so tiny fixtures never sample empty
-_VAR_SAMPLE_MOD = 16
-_VAR_SAMPLE_PREFIX = 1024
+def _variance_sample(df: DataFrame) -> DataFrame:
+    return df.filter(
+        (F.pmod(F.abs(F.hash("vec_id")), F.lit(16)) == 0)
+        | (F.col("vec_id") < 1024)
+    )
 
 
 def _assignment_variance_ratio(
@@ -224,10 +247,7 @@ def _assignment_variance_ratio(
     decomposition, so no second pass for the mean). ``cents`` is the
     FLOAT centroid matrix aligned with sorted ``cell_ids`` (non-
     contiguous fine-cell ids from a refined 2-level train are fine)."""
-    sample = cells.filter(
-        (F.pmod(F.abs(F.hash("vec_id")), F.lit(_VAR_SAMPLE_MOD)) == 0)
-        | (F.col("vec_id") < _VAR_SAMPLE_PREFIX)
-    ).select("embedding", "cell")
+    sample = _variance_sample(cells).select("embedding", "cell")
     ids = np.asarray(cell_ids, dtype="int64")
     cmat = np.asarray(cents, dtype=np.float64)
 
@@ -284,41 +304,26 @@ def _ratio_from_partials(rows) -> float:
 
 
 def _resolve_residual_auto(
-    index_dir: str,
-    residual: bool | str,
-    cells: DataFrame,
-    cell_ids: np.ndarray | None,
-    cents: np.ndarray | None,
+    index_dir: str, residual: bool | str, ratio: Callable[[], float]
 ) -> bool:
     """Resolve the residual knob AFTER the assignment exists: explicit
-    bools pass through; ``"auto"`` measures the variance ratio and
+    bools pass through; ``"auto"`` measures the variance ratio
+    (``ratio()`` — the driver builds' :func:`_assignment_variance_ratio`
+    or the distributed build's :func:`_distributed_variance_ratio`) and
     chooses. Either way the choice and how it was made are stamped in
-    the manifest (readers and appends dispatch off _RESIDUAL_KEY as
-    before; _RESIDUAL_MODE_KEY is the audit trail)."""
+    the manifest (readers and appends dispatch off _RESIDUAL_KEY;
+    _RESIDUAL_MODE_KEY is the audit trail)."""
     if residual == "auto":
-        ratio = _assignment_variance_ratio(cells, cell_ids, cents)
-        chosen = ratio < RESIDUAL_AUTO_RATIO
-        M.write_meta(
-            index_dir,
-            _RESIDUAL_MODE_KEY,
-            {
-                "mode": "auto",
-                "variance_ratio": round(float(ratio), 4),
-                "chosen_residual": bool(chosen),
-            },
-        )
+        value = ratio()
+        chosen = bool(value < RESIDUAL_AUTO_RATIO)
+        mode = {"mode": "auto", "variance_ratio": round(float(value), 4)}
     else:
         chosen = bool(residual)
-        M.write_meta(
-            index_dir,
-            _RESIDUAL_MODE_KEY,
-            {
-                "mode": "explicit",
-                "variance_ratio": None,
-                "chosen_residual": chosen,
-            },
-        )
-    M.write_meta(index_dir, _RESIDUAL_KEY, bool(chosen))
+        mode = {"mode": "explicit", "variance_ratio": None}
+    M.write_meta(
+        index_dir, _RESIDUAL_MODE_KEY, {**mode, "chosen_residual": chosen}
+    )
+    M.write_meta(index_dir, _RESIDUAL_KEY, chosen)
     return chosen
 
 
@@ -329,25 +334,25 @@ def _int_centroids(mat: np.ndarray) -> np.ndarray:
     return S._half_up(np.asarray(mat, dtype=np.float64) * S.PQ_INT_SCALE)
 
 
-def _pq_encode_residual_udf(rcb: np.ndarray, icent: np.ndarray):
-    """Vectorized residual-PQ encoder: per row, quantize the embedding
-    (HALF_UP), subtract the row's OWN cell centroid's integer
-    components, then argmin exact integer squared distances per
-    subspace against the residual codebook (first-minimum = lower cell,
-    the pq_codes tie-break). Takes (embedding, cell) columns."""
-    m, _k, sub = rcb.shape
+def _pq_encode_residual_cells_udf(
+    rcb: np.ndarray, cell_ids: np.ndarray, icents: np.ndarray
+):
+    """Residual-PQ encoder over (embedding, cell) columns: per row,
+    quantize the embedding (HALF_UP), subtract its OWN cell centroid's
+    integer components — looked up by cell id (``cell_ids`` sorted
+    ascending, ``icents`` the matching integer rows; a single-level
+    index passes ``arange(n_cells)``) — then :func:`similarity.pq_argmin`
+    against the residual codebook."""
+    ids = np.asarray(cell_ids, dtype="int64")
+    assert list(ids) == sorted(ids)
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def encode(emb: pd.Series, cell: pd.Series) -> pd.Series:
         if len(emb) == 0:
             return pd.Series([], dtype=object)
         x = np.vstack(emb.to_numpy()).astype(np.float64)
-        ir = S._half_up(x * S.PQ_INT_SCALE) - icent[cell.to_numpy()]
-        out = np.empty((len(x), m), dtype=np.int32)
-        for s in range(m):
-            qs = ir[:, s * sub : (s + 1) * sub]
-            d = ((qs[:, None, :] - rcb[s][None, :, :]) ** 2).sum(axis=2)
-            out[:, s] = np.argmin(d, axis=1)
+        pos = np.searchsorted(ids, cell.to_numpy().astype("int64"))
+        out = S.pq_argmin(S._half_up(x * S.PQ_INT_SCALE) - icents[pos], rcb)
         return pd.Series([row.tolist() for row in out])
 
     return encode
@@ -395,14 +400,7 @@ def build_ann_index(
     (:func:`_resolve_residual_auto` — clustered corpora get residual,
     uniform ones raw; the choice and ratio are stamped in the manifest).
     """
-    _stamp_layout(index_dir)
-    # a rebuild orphans any derived SQ8 arm (its grid was trained on the
-    # old corpus); drop the flag so readers fail loudly until it's re-added
-    M.write_meta(index_dir, _SQ8_KEY, False)
-    M.write_meta(index_dir, _SQ8_PREFIX_DIMS_KEY, None)
-    # ... and any derived binary arm (thresholds trained on the old
-    # corpus) — same fail-loudly contract
-    M.write_meta(index_dir, _BINARY_KEY, False)
+    _start_build(index_dir)
     if n_centroids is None:  # auto: sqrt-of-corpus rule (one count job)
         n_centroids = auto_n_centroids(emb.count())
     if refine_iters > 0:
@@ -411,15 +409,7 @@ def build_ann_index(
         # full-corpus assignment round is corpus x k rows through a
         # per-vector window, the same wall the 2-level refinement's
         # train_fraction documents
-        train = emb
-        if train_fraction is not None:
-            train = emb.filter(
-                (
-                    F.pmod(F.abs(F.hash("vec_id")), F.lit(10_000))
-                    < F.lit(int(train_fraction * 10_000))
-                )
-                | (F.col("vec_id") < n_centroids)
-            )
+        train = _train_sample(emb, train_fraction, n_centroids)
         from pyspark.sql import Window
 
         # kmeans drops cells that lose every member (clustered corpora
@@ -445,104 +435,231 @@ def build_ann_index(
             F.col("embedding").alias("c_emb"),
         )
     cents.coalesce(1).write.mode("overwrite").parquet(M.table_path(index_dir, "centroids"))
-
     # map-only assignment against the JUST-WRITTEN centroid table (the
     # same kernel and semantics as similarity.ivf_cells; for
     # refine_iters=0 the matrix is identical, so so are the cells)
+    cells, centroids = _assign_stored(spark, index_dir, emb)
+    _build_corpus(
+        spark, index_dir, cells, residual, centroids, n_tables, n_planes
+    )
+
+
+def _train_sample(
+    emb: DataFrame, train_fraction: float | None, init_prefix: int
+) -> DataFrame:
+    """The k-means training rows: a deterministic hash sample of
+    ``train_fraction`` of the corpus plus the vec_id < ``init_prefix``
+    rows the initial centroids come from; the whole corpus for None."""
+    if train_fraction is None:
+        return emb
+    return emb.filter(
+        (
+            F.pmod(F.abs(F.hash("vec_id")), F.lit(10_000))
+            < F.lit(int(train_fraction * 10_000))
+        )
+        | (F.col("vec_id") < init_prefix)
+    )
+
+
+def _start_build(index_dir: str) -> None:
+    """What every build does first: stamp the layout version, and orphan
+    the derived SQ8, prefix and binary arms — their grids and thresholds
+    were trained on the old corpus, so readers fail loudly until the
+    arms are re-added."""
+    _stamp_layout(index_dir)
+    M.write_meta(index_dir, _SQ8_KEY, False)
+    M.write_meta(index_dir, _SQ8_PREFIX_DIMS_KEY, None)
+    M.write_meta(index_dir, _BINARY_KEY, False)
+
+
+@contextmanager
+def _persisted(df: DataFrame):
+    df = df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()
+
+
+def _build_corpus(
+    spark: SparkSession,
+    index_dir: str,
+    assigned: DataFrame,
+    residual: bool | str,
+    centroids: tuple[np.ndarray, np.ndarray],
+    n_tables: int = S.N_TABLES,
+    n_planes: int = S.N_PLANES,
+) -> None:
+    """The driver builds' tail: persist the assignment, resolve
+    ``residual`` on it (``"auto"`` measures the intra-cell / global
+    variance ratio against ``centroids`` = (sorted cell ids, their FLOAT
+    rows)), then land the corpus."""
+    with _persisted(assigned) as assigned:
+        residual = _resolve_residual_auto(
+            index_dir,
+            residual,
+            lambda: _assignment_variance_ratio(assigned, *centroids),
+        )
+        _land_corpus(
+            spark,
+            index_dir,
+            assigned,
+            "overwrite",
+            centroids if residual else None,
+            n_tables,
+            n_planes,
+        )
+
+
+def _assign_stored(
+    spark: SparkSession, index_dir: str, emb: DataFrame
+) -> tuple[DataFrame, tuple[np.ndarray, np.ndarray]]:
+    """``emb`` assigned against the STORED quantizer of the layout at
+    ``index_dir``: rows (vec_id, embedding, *:func:`_parts`), plus the
+    fine cells as (sorted cell ids, their FLOAT centroid rows) — the
+    residual encoder's input. Single-level: the map-only nearest-cell
+    kernel of similarity.ivf_cells. Two-level: the composed assignment
+    (:func:`_assign_2level`) against ``coarse/`` and ``fine/``."""
+    if _is_2level(index_dir):
+        groups, g_mat = _read_coarse(spark, index_dir)
+        fine = spark.read.parquet(M.table_path(index_dir, "fine")).collect()
+        fine.sort(key=lambda r: r.cell)
+        return _assign_2level(
+            spark,
+            emb,
+            groups,
+            g_mat,
+            np.array([int(r.cell) for r in fine], dtype="int64"),
+            np.array([int(r.group) for r in fine], dtype="int64"),
+            np.array([r.c_emb for r in fine], dtype=np.float64),
+        )
     cell_ids, cent_matrix = _read_centroids(spark, index_dir)
     assert cell_ids == list(range(len(cell_ids))), "non-contiguous cells"
     nearest = S.nearest_cell_udf(cent_matrix)
-    cells = emb.select(
+    assigned = emb.select(
         "vec_id",
         "embedding",
         nearest(F.col("embedding")).cast("int").alias("cell"),
     )
-    # one assignment pass feeds both partitioned layouts
-    cells = cells.persist()
-    try:
-        residual = _resolve_residual_auto(
-            index_dir,
-            residual,
-            cells,
-            np.arange(len(cent_matrix), dtype="int64"),
-            cent_matrix,
-        )
-        if residual:
-            # residual codebook: the first PQ_K vectors' residuals
-            # against THEIR OWN centroids (metadata-sized collect —
-            # PQ_K rows), written in the standard codebook schema
-            icent = _int_centroids(cent_matrix)
-            head = cells.filter(F.col("vec_id") < S.PQ_K).collect()
-            head.sort(key=lambda r: r.vec_id)
-            rows = []
-            for k, r in enumerate(head):
-                ir = (
-                    S._half_up(
-                        np.asarray(r.embedding, dtype=np.float64)
-                        * S.PQ_INT_SCALE
-                    )
-                    - icent[int(r.cell)]
-                )
-                rows.extend(
-                    (s, d, k, int(ir[s * S.PQ_SUB + d]))
-                    for s in range(S.PQ_M)
-                    for d in range(S.PQ_SUB)
-                )
-            spark.createDataFrame(
-                rows, "subspace int, dim int, cell int, ic long"
-            ).coalesce(1).write.mode("overwrite").parquet(
-                M.table_path(index_dir, "codebook")
-            )
-            encode = _pq_encode_residual_udf(
-                _load_codebook(spark, index_dir), icent
-            )(F.col("embedding"), F.col("cell"))
-        else:
-            codebook = (
-                S.pq_long_form(emb)
-                .filter(F.col("vec_id") < S.PQ_K)
-                .select(
-                    "subspace",
-                    "dim",
-                    F.col("vec_id").cast("int").alias("cell"),
-                    F.col("iv").alias("ic"),
-                )
-            )
-            codebook.coalesce(1).write.mode("overwrite").parquet(
-                M.table_path(index_dir, "codebook")
-            )
-            encode = S.pq_encode_udf(_load_codebook(spark, index_dir))(
-                F.col("embedding")
-            )
-        # vectorized encoder (map-only) FUSED onto the assigned rows —
-        # bit-identical codes to the long-form reference S.pq_codes
-        # (pinned by test); at 100 TB the encode pass must not fan out
-        # corpus x dims x k rows through aggregates, and a codes-by-id
-        # join back to the assignment would shuffle corpus-sized tables
-        # (measured ~200 MB spill per 8M-row build before the fuse)
-        (
-            cells.select("vec_id", "cell", encode.alias("codes"))
-            .repartition("cell")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(M.table_path(index_dir, "vectors"))
-        )
-        (
-            cells.repartition("cell")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(M.table_path(index_dir, "raw"))
-        )
-    finally:
-        cells.unpersist()
+    return assigned, (np.arange(len(cell_ids), dtype="int64"), cent_matrix)
 
-    (
-        S.lsh_buckets_long(emb, n_tables=n_tables, n_planes=n_planes)
-        .select("vec_id", "bucket", "table_id")
-        .repartition("table_id")
-        .write.mode("overwrite")
-        .partitionBy("table_id")
-        .parquet(M.table_path(index_dir, "lsh_buckets"))
+
+def _land_corpus(
+    spark: SparkSession,
+    index_dir: str,
+    assigned: DataFrame,
+    mode: str,
+    centroids: tuple[np.ndarray, np.ndarray] | None,
+    n_tables: int = S.N_TABLES,
+    n_planes: int = S.N_PLANES,
+) -> None:
+    """Write the assigned rows (vec_id, embedding, *:func:`_parts`) —
+    persisted by the caller: every table reads them — into each corpus
+    table :func:`_table_map` lists for the layout at ``index_dir``.
+    ``mode="overwrite"`` is a build: the PQ ``codebook/`` lands first,
+    from the rows with vec_id < PQ_K (the deterministic-sample
+    convention); ``mode="append"`` encodes against the STORED codebook
+    and grids (immutable quantizers keep old and new codes comparable
+    under one LUT), and nothing existing is rewritten.
+
+    - ``vectors/``: packed PQ codes, encoded map-only on the assigned
+      rows (a codes-by-id join would shuffle corpus-sized tables; fused,
+      the only exchange is the partitionBy write). With ``centroids`` =
+      (sorted cell ids, FLOAT rows), each row's RESIDUAL against its own
+      cell's centroid is encoded instead (the FAISS IndexIVFPQ
+      composition), against a codebook of residuals.
+    - ``raw/``: the embeddings.
+    - ``sq8/`` (and ``sq8_prefix/``), ``binary/``: when the arm is
+      present, encoded against its stored grid or thresholds, with the
+      drift counters accumulated by one O(new) aggregate. A build finds
+      none: :func:`_start_build` orphaned them.
+    - ``lsh_buckets/``: the single-level layout's hyperplane bands."""
+    tables = _table_map(index_dir)
+    parts = tables["raw"]
+
+    def write(df: DataFrame, table: str) -> None:
+        (
+            df.repartition(*tables[table])
+            .write.mode(mode)
+            .partitionBy(*tables[table])
+            .parquet(M.table_path(index_dir, table))
+        )
+
+    if mode == "overwrite":
+        _write_codebook(spark, index_dir, assigned, centroids)
+    ic = _load_codebook(spark, index_dir)
+    if centroids is None:
+        codes = S.pq_encode_udf(ic)(F.col("embedding"))
+    else:
+        codes = _pq_encode_residual_cells_udf(
+            ic, centroids[0], _int_centroids(centroids[1])
+        )(F.col("embedding"), F.col("cell"))
+    write(assigned.select("vec_id", *parts, codes.alias("codes")), "vectors")
+    write(assigned.select("vec_id", "embedding", *parts), "raw")
+    if "sq8" in tables:
+        vmin, scale = _read_sq_stats(spark, index_dir)
+        sq8_new = assigned.select(
+            "vec_id",
+            *parts,
+            _sq8_encode_udf(vmin, scale)(F.col("embedding")).alias("codes"),
+        )
+        write(sq8_new, "sq8")
+        _accumulate_sq8_counters(index_dir, sq8_new)
+        if "sq8_prefix" in tables:
+            pdims = int(M.read_meta(index_dir, _SQ8_PREFIX_DIMS_KEY))
+            write(
+                sq8_new.select(
+                    "vec_id", *parts, F.slice("codes", 1, pdims).alias("codes")
+                ),
+                "sq8_prefix",
+            )
+    if "binary" in tables:
+        thresh = _read_bin_thresh(spark, index_dir)
+        bin_new = assigned.select(
+            "vec_id",
+            *parts,
+            _binary_encode_udf(thresh)(F.col("embedding")).alias("words"),
+        )
+        write(bin_new, "binary")
+        _accumulate_binary_counters(index_dir, bin_new)
+    if "lsh_buckets" in tables:
+        write(
+            S.lsh_buckets_long(
+                assigned.select("vec_id", "embedding"), n_tables, n_planes
+            ).select("vec_id", "bucket", "table_id"),
+            "lsh_buckets",
+        )
+
+
+def _write_codebook(
+    spark: SparkSession,
+    index_dir: str,
+    assigned: DataFrame,
+    centroids: tuple[np.ndarray, np.ndarray] | None,
+) -> None:
+    """Land the PQ codebook from the assigned rows with vec_id < PQ_K:
+    their integer components, or — given ``centroids`` — their residuals
+    against their own cells' integer centroids, in the same schema."""
+    head = assigned.filter(F.col("vec_id") < S.PQ_K)
+    if centroids is None:
+        (
+            S.pq_long_form(head)
+            .select(
+                "subspace",
+                "dim",
+                F.col("vec_id").cast("int").alias("cell"),
+                F.col("iv").alias("ic"),
+            )
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(M.table_path(index_dir, "codebook"))
+        )
+        return
+    icents = _int_centroids(centroids[1])
+    rcb = _residual_codebook_from_rows(
+        head.collect(), dict(zip(centroids[0].tolist(), icents))
     )
+    _write_residual_codebook(spark, index_dir, rcb)
 
 
 def append_to_ann_index(
@@ -553,120 +670,31 @@ def append_to_ann_index(
     n_planes: int = S.N_PLANES,
 ) -> None:
     """Incremental index maintenance — the corpus grows, the index never
-    rebuilds. New vectors are encoded against the STORED quantizers
-    (centroids + PQ codebook are immutable once built: the IVF-PQ
-    invariant that makes append O(new), and what keeps old and new codes
-    comparable under one ADC LUT), then their rows APPEND into the
-    cell-partitioned tables — existing partitions' files are never
-    rewritten. Equivalence with a from-scratch build over the union
-    corpus is pinned by tests/test_ann_index.py (same quantizers ⇒
-    identical assignments, codes, bands, and search results)."""
+    rebuilds, on either layout (read from disk, like every search). New
+    vectors are assigned and encoded against the STORED quantizers
+    (centroids or coarse/fine tables, PQ codebook, derived-arm grids are
+    immutable once built: the IVF-PQ invariant that makes append O(new),
+    and what keeps old and new codes comparable under one ADC LUT), then
+    their rows APPEND into the partitioned tables — existing partitions'
+    files are never rewritten. A residual index (the manifest flag)
+    encodes residuals against the stored cells. Equivalence with a
+    from-scratch build over the union corpus is pinned by
+    tests/test_ann_index.py (same quantizers ⇒ identical assignments,
+    codes, bands, and search results). ``n_tables``/``n_planes`` shape
+    the single-level layout's LSH bands."""
     _check_layout(index_dir)
-    # map-only assignment against the STORED quantizer (same vectorized
-    # kernel and tie-break as similarity.ivf_cells — no join, no shuffle)
-    cell_ids, cent_matrix = _read_centroids(spark, index_dir)
-    assert cell_ids == list(range(len(cell_ids))), "non-contiguous cells"
-    nearest = S.nearest_cell_udf(cent_matrix)
-    cells = (
-        emb_new.select(
-            "vec_id",
-            "embedding",
-            nearest(F.col("embedding")).cast("int").alias("cell"),
+    assigned, centroids = _assign_stored(spark, index_dir, emb_new)
+    residual = M.read_meta(index_dir, _RESIDUAL_KEY, False)
+    with _persisted(assigned) as assigned:
+        _land_corpus(
+            spark,
+            index_dir,
+            assigned,
+            "append",
+            centroids if residual else None,
+            n_tables,
+            n_planes,
         )
-        .persist()
-    )
-    try:
-        # PQ-encode against the STORED codebook with the vectorized
-        # kernel, fused onto the assigned rows (map-only; same integer
-        # argmin + tie-break as the long-form reference path). Residual
-        # indexes dispatch the residual encoder — same immutable
-        # codebook, same comparability invariant, subtracting the
-        # stored centroid first.
-        if M.read_meta(index_dir, _RESIDUAL_KEY, False):
-            enc = _pq_encode_residual_udf(
-                _load_codebook(spark, index_dir),
-                _int_centroids(cent_matrix),
-            )(F.col("embedding"), F.col("cell"))
-        else:
-            enc = S.pq_encode_udf(_load_codebook(spark, index_dir))(
-                F.col("embedding")
-            )
-        (
-            cells.select("vec_id", "cell", enc.alias("codes"))
-            .repartition("cell")
-            .write.mode("append")
-            .partitionBy("cell")
-            .parquet(M.table_path(index_dir, "vectors"))
-        )
-        (
-            cells.repartition("cell")
-            .write.mode("append")
-            .partitionBy("cell")
-            .parquet(M.table_path(index_dir, "raw"))
-        )
-        if M.read_meta(index_dir, _SQ8_KEY, False):
-            # SQ8 arm present: encode against the STORED grid (immutable
-            # quantizer, same invariant as the PQ codebook — unclipped
-            # codes keep out-of-range components exact) and append
-            vmin, scale = _read_sq_stats(spark, index_dir)
-            sq8_new = cells.select(
-                "vec_id",
-                "cell",
-                _sq8_encode_udf(vmin, scale)(F.col("embedding")).alias(
-                    "codes"
-                ),
-            )
-            (
-                sq8_new.repartition("cell")
-                .write.mode("append")
-                .partitionBy("cell")
-                .parquet(M.table_path(index_dir, "sq8"))
-            )
-            # incremental drift accounting: one O(new) aggregate (the
-            # encode kernel re-runs over the persisted batch — cheaper
-            # than the O(corpus) stats rescan it replaces)
-            _accumulate_sq8_counters(index_dir, sq8_new)
-            pdims = M.read_meta(index_dir, _SQ8_PREFIX_DIMS_KEY, None)
-            if pdims is not None:
-                # prefix arm present: land the sliced rows alongside
-                (
-                    sq8_new.select(
-                        "vec_id",
-                        "cell",
-                        F.slice("codes", 1, int(pdims)).alias("codes"),
-                    )
-                    .repartition("cell")
-                    .write.mode("append")
-                    .partitionBy("cell")
-                    .parquet(M.table_path(index_dir, "sq8_prefix"))
-                )
-        if M.read_meta(index_dir, _BINARY_KEY, False):
-            # binary arm present: encode against the STORED thresholds
-            # (immutable, so old and new words stay comparable) + append
-            bin_new = cells.select(
-                "vec_id",
-                "cell",
-                _binary_encode_udf(_read_bin_thresh(spark, index_dir))(
-                    F.col("embedding")
-                ).alias("words"),
-            )
-            (
-                bin_new.repartition("cell")
-                .write.mode("append")
-                .partitionBy("cell")
-                .parquet(M.table_path(index_dir, "binary"))
-            )
-            _accumulate_binary_counters(index_dir, bin_new)
-    finally:
-        cells.unpersist()
-    (
-        S.lsh_buckets_long(emb_new, n_tables=n_tables, n_planes=n_planes)
-        .select("vec_id", "bucket", "table_id")
-        .repartition("table_id")
-        .write.mode("append")
-        .partitionBy("table_id")
-        .parquet(M.table_path(index_dir, "lsh_buckets"))
-    )
 
 
 def delete_from_ann_index(spark: SparkSession, vec_ids, index_dir: str) -> None:
@@ -1568,7 +1596,7 @@ def add_sq8_to_ann_index(spark: SparkSession, index_dir: str) -> None:
     grid AND re-encodes every stored vector from ``raw/``, so the arm
     comes back clean in one idempotent pass."""
     _check_layout(index_dir)
-    pcols = ["group", "cell"] if _is_2level(index_dir) else ["cell"]
+    pcols = _parts(index_dir)
     raw = _live(
         spark, index_dir, spark.read.parquet(M.table_path(index_dir, "raw"))
     )
@@ -1638,7 +1666,7 @@ def add_sq8_prefix_to_ann_index(
     re-derives it automatically (:func:`add_sq8_to_ann_index`)."""
     _check_layout(index_dir)
     _require_sq8(index_dir)
-    pcols = ["group", "cell"] if _is_2level(index_dir) else ["cell"]
+    pcols = _parts(index_dir)
     sq8 = spark.read.parquet(M.table_path(index_dir, "sq8"))
     (
         sq8.select(
@@ -1912,7 +1940,7 @@ def add_binary_to_ann_index(spark: SparkSession, index_dir: str) -> None:
     re-runs this verb automatically (same no-knob contract as the SQ8
     drift retrain)."""
     _check_layout(index_dir)
-    pcols = ["group", "cell"] if _is_2level(index_dir) else ["cell"]
+    pcols = _parts(index_dir)
     raw = _live(
         spark, index_dir, spark.read.parquet(M.table_path(index_dir, "raw"))
     )
@@ -2089,44 +2117,30 @@ def ann_index_cascade_topk(
 # --------------------------------------------------------------------------
 # Index maintenance: compaction + layout audit.
 
-# The three partitioned artifact tables and their partition columns.
-_PARTITIONED_TABLES = {
-    "vectors": "cell",
-    "raw": "cell",
-    "lsh_buckets": "table_id",
-}
-
-# The two-level (sharded-quantizer) layout's partitioned tables: corpus
-# tables keyed by the composed (group, cell); the fine quantizer shard
-# table by group. No lsh_buckets arm in this layout.
-_PARTITIONED_TABLES_2L = {
-    "vectors": ("group", "cell"),
-    "raw": ("group", "cell"),
-    "fine": ("group",),
-}
+def _parts(index_dir: str) -> tuple[str, ...]:
+    """Partition columns of the corpus tables (``raw/``, ``vectors/``
+    and the derived arms) of the layout at ``index_dir``."""
+    return ("group", "cell") if _is_2level(index_dir) else ("cell",)
 
 
 def _table_map(index_dir: str) -> dict:
-    """The partitioned-table map for whichever layout (and optional
-    derived arms) live at ``index_dir`` — what compaction and the
-    layout audit iterate. The SQ8 arm joins the single-level map when
-    its manifest flag is set."""
-    if _is_2level(index_dir):
-        tables = dict(_PARTITIONED_TABLES_2L)
-        if M.read_meta(index_dir, _SQ8_KEY, False):
-            tables["sq8"] = ("group", "cell")
-            if M.read_meta(index_dir, _SQ8_PREFIX_DIMS_KEY, None) is not None:
-                tables["sq8_prefix"] = ("group", "cell")
-        if M.read_meta(index_dir, _BINARY_KEY, False):
-            tables["binary"] = ("group", "cell")
-        return tables
-    tables = dict(_PARTITIONED_TABLES)
+    """The partitioned tables of whichever layout (and optional derived
+    arms) live at ``index_dir``, with their partition columns — what
+    appends, compaction and the layout audit iterate. The quantizer
+    shard table ``fine/`` is the two-level layout's, ``lsh_buckets/`` the
+    single-level one's."""
+    parts = _parts(index_dir)
+    tables = {"vectors": parts, "raw": parts}
+    if "group" in parts:
+        tables["fine"] = ("group",)
+    else:
+        tables["lsh_buckets"] = ("table_id",)
     if M.read_meta(index_dir, _SQ8_KEY, False):
-        tables["sq8"] = "cell"
+        tables["sq8"] = parts
         if M.read_meta(index_dir, _SQ8_PREFIX_DIMS_KEY, None) is not None:
-            tables["sq8_prefix"] = "cell"
+            tables["sq8_prefix"] = parts
     if M.read_meta(index_dir, _BINARY_KEY, False):
-        tables["binary"] = "cell"
+        tables["binary"] = parts
     return tables
 
 
@@ -2460,31 +2474,16 @@ def sq8_drift_stats(
 # Two-level IVF (IMI-style quantizer shard) — the layout past the
 # AUTO_MAX_CELLS wall that auto_n_centroids' docstring defers to.
 #
-# Layout (all under ``index_dir``; disjoint from the single-level tables,
-# so the two schemes can't be confused for one another):
+# Its tables are listed in the module docstring: ``coarse/`` and
+# ``fine/`` replace ``centroids/``, and the corpus tables are
+# partitioned by the COMPOSED assignment (nearest group, then nearest
+# fine cell within it), so search prunes on group at the top directory
+# level and cell below it. The layout exists for corpora past ~270M
+# vectors, where a probed-cell scan of raw floats (256 B/vector at
+# DIM=64 float32) costs ~100x the IO of 2-byte PQ codes.
 #
-# - ``coarse/``  (group, g_emb) — the LIVE coarse groups (groups that own
-#   at least one fine cell), tiny.
-# - ``fine/``    (cell, c_emb) **partitioned by group** — the fine
-#   centroids, sharded by their nearest coarse group. A reader fetches
-#   only the probed groups' shards: probe-side cost is
-#   n_groups + n_probe_groups * (n_cells / n_groups) centroid cosines,
-#   never n_cells.
-# - ``raw/``     (vec_id, embedding) **partitioned by (group, cell)** —
-#   the corpus under the COMPOSED assignment (nearest live group, then
-#   nearest fine cell within it). Search prunes on group at the top
-#   directory level and cell below it.
-# - ``codebook/`` (subspace, dim, cell, ic) — the PQ codebook, same
-#   layout and convention as the single-level table (corpus rows with
-#   vec_id < PQ_K, integer domain), so ``_load_codebook`` and the
-#   flattened ADC LUT serve both families unchanged.
-# - ``vectors/`` (vec_id, codes array<int>) **partitioned by (group,
-#   cell)** — the PQ-encoded corpus, packed: the billion-vector arm. The layout
-#   exists precisely for corpora past ~270M vectors, where a probed-cell
-#   scan of raw floats (256 B/vector at DIM=64 float32) costs ~100x the
-#   IO of 2-byte PQ codes; ``ann_index_ivfpq_topk`` on this layout reads
-#   ONLY this table plus the metadata-sized quantizers.
-#
+# The write verbs are shared with the single-level layout past the
+# assignment (:func:`_land_corpus`, :func:`append_to_ann_index`).
 # The search arms are the single-level ones: each reads the layout from
 # disk (:func:`_probes`) and scans its tables over (group, cell) probe
 # rows. Assignment, probe selection, and scoring all use the same
@@ -2500,10 +2499,9 @@ def _group_of_cells(c_mat: np.ndarray, g_mat: np.ndarray) -> np.ndarray:
     matrices (33 MB of centroids at the 65k-cell shape) — feasible to
     ~1M cells, which is exactly where auto_quantizer_shape clamps
     (AUTO_MAX_CELLS_2L); past that this pass must distribute."""
-    c_norm = np.sqrt(np.einsum("ij,ij->i", c_mat, c_mat))
-    g_norm = np.sqrt(np.einsum("ij,ij->i", g_mat, g_mat))
-    sims = np.round((c_mat @ g_mat.T) / (c_norm[:, None] * g_norm[None, :]), 6)
-    return np.argmax(sims, axis=1).astype("int64")
+    return S.nearest_rounded(
+        c_mat, S.row_norms(c_mat), g_mat, S.row_norms(g_mat)
+    ).astype("int64")
 
 
 def nearest_cell_2level_udf(
@@ -2520,9 +2518,9 @@ def nearest_cell_2level_udf(
     corpus x (G + C/G) cosines, not corpus x C). Same rounded-6 /
     first-maximum conventions as nearest_cell_udf."""
     g = g_mat.astype(np.float64)
-    g_norm = np.sqrt(np.einsum("ij,ij->i", g, g))
+    g_norm = S.row_norms(g)
     groups = [
-        (int(gid), ids, m.astype(np.float64), np.sqrt(np.einsum("ij,ij->i", m, m)))
+        (int(gid), ids, m.astype(np.float64), S.row_norms(m))
         for gid, (ids, m) in sorted(fine_by_group.items())
     ]
     assert [gid for gid, *_ in groups] == [int(x) for x in g_ids]
@@ -2532,19 +2530,17 @@ def nearest_cell_2level_udf(
         if len(col) == 0:
             return pd.Series([], dtype="int64")
         x = np.vstack(col.to_numpy()).astype(np.float64)
-        x_norm = np.sqrt(np.einsum("ij,ij->i", x, x))
-        gsims = np.round((x @ g.T) / (x_norm[:, None] * g_norm[None, :]), 6)
-        gsel = np.argmax(gsims, axis=1)  # index into the LIVE group list
+        x_norm = S.row_norms(x)
+        # index into the LIVE group list
+        gsel = S.nearest_rounded(x, x_norm, g, g_norm)
         out_c = np.empty(len(x), dtype="int64")
         for pos, (_gid, cell_ids, m, m_norm) in enumerate(groups):
             mask = gsel == pos
             if not mask.any():
                 continue
-            xs = x[mask]
-            sims = np.round(
-                (xs @ m.T) / (x_norm[mask][:, None] * m_norm[None, :]), 6
-            )
-            out_c[mask] = cell_ids[np.argmax(sims, axis=1)]
+            out_c[mask] = cell_ids[
+                S.nearest_rounded(x[mask], x_norm[mask], m, m_norm)
+            ]
         return pd.Series(out_c)
 
     return nearest
@@ -2666,15 +2662,7 @@ def _refined_quantizers_2level(
     checkpointed so callers can consume it after members unpersist."""
     from pyspark.sql import Window
 
-    train = emb
-    if train_fraction is not None:
-        train = emb.filter(
-            (
-                F.pmod(F.abs(F.hash("vec_id")), F.lit(10_000))
-                < F.lit(int(train_fraction * 10_000))
-            )
-            | (F.col("vec_id") < n_groups)  # the coarse init prefix
-        )
+    train = _train_sample(emb, train_fraction, n_groups)
     g_rows = S.kmeans_centroids(train, n_groups, refine_iters + 1).collect()
     g_rows.sort(key=lambda r: r.cell)
     live = [int(r.cell) for r in g_rows]
@@ -2730,35 +2718,6 @@ def _refined_quantizers_2level(
     return live, g_mat, fine_df
 
 
-def _pq_encode_residual_cells_udf(
-    rcb: np.ndarray, cell_ids: np.ndarray, icents: np.ndarray
-):
-    """Residual-PQ encoder for the TWO-LEVEL layout: the residual is
-    taken against the row's FINE centroid, looked up by cell id
-    (``cell_ids`` sorted ascending, ``icents`` the matching integer
-    component rows). Same HALF_UP / first-minimum conventions as every
-    other encoder."""
-    m, _k, sub = rcb.shape
-    ids = np.asarray(cell_ids, dtype="int64")
-    assert list(ids) == sorted(ids)
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def encode(emb: pd.Series, cell: pd.Series) -> pd.Series:
-        if len(emb) == 0:
-            return pd.Series([], dtype=object)
-        x = np.vstack(emb.to_numpy()).astype(np.float64)
-        pos = np.searchsorted(ids, cell.to_numpy().astype("int64"))
-        ir = S._half_up(x * S.PQ_INT_SCALE) - icents[pos]
-        out = np.empty((len(x), m), dtype=np.int32)
-        for s in range(m):
-            qs = ir[:, s * sub : (s + 1) * sub]
-            d = ((qs[:, None, :] - rcb[s][None, :, :]) ** 2).sum(axis=2)
-            out[:, s] = np.argmin(d, axis=1)
-        return pd.Series([row.tolist() for row in out])
-
-    return encode
-
-
 def _write_residual_codebook(
     spark: SparkSession, index_dir: str, rcb: np.ndarray
 ) -> None:
@@ -2799,22 +2758,35 @@ def _residual_codebook_from_rows(
     return rcb
 
 
-def _write_coarse_refined(
-    spark: SparkSession, index_dir: str, live: list[int], g_mat: np.ndarray
+def _write_quantizers_2level(
+    spark: SparkSession,
+    index_dir: str,
+    groups: list[int],
+    g_rows: np.ndarray,
+    fine_df: DataFrame,
+    elem: T.DataType,
 ) -> None:
-    """Land the refined coarse table (group, g_emb array<double> — see
-    _refined_quantizers_2level on why doubles)."""
-    coarse_df = spark.createDataFrame(
-        [(g, [float(x) for x in g_mat[i]]) for i, g in enumerate(live)],
+    """Land ``coarse/`` (group, g_emb array<elem>) from ``groups`` and
+    their rows, and ``fine/`` (cell, c_emb) partitioned by group from
+    ``fine_df`` (cell, group, c_emb). Refined quantizers are DOUBLES
+    (see _refined_quantizers_2level), prefix ones floats."""
+    spark.createDataFrame(
+        [(g, [float(x) for x in row]) for g, row in zip(groups, g_rows)],
         T.StructType(
             [
                 T.StructField("group", T.LongType()),
-                T.StructField("g_emb", T.ArrayType(T.DoubleType())),
+                T.StructField("g_emb", T.ArrayType(elem)),
             ]
         ),
-    )
-    coarse_df.coalesce(1).write.mode("overwrite").parquet(
+    ).coalesce(1).write.mode("overwrite").parquet(
         M.table_path(index_dir, "coarse")
+    )
+    (
+        fine_df.select("cell", "group", "c_emb")
+        .repartition("group")
+        .write.mode("overwrite")
+        .partitionBy("group")
+        .parquet(M.table_path(index_dir, "fine"))
     )
 
 
@@ -2851,374 +2823,100 @@ def build_ann_index_2level(
         auto_g, auto_c = auto_quantizer_shape(emb.count())
         n_groups = auto_g if n_groups is None else n_groups
         n_cells = auto_c if n_cells is None else n_cells
-    _stamp_layout(index_dir)
-    # the residual flag is stamped by _land_2level_corpus AFTER the
-    # assignment exists (residual="auto" decides from it)
-    # a rebuild orphans any derived SQ8 arm (grid trained on the old
-    # corpus) — drop the flag so readers fail loudly until re-added
-    M.write_meta(index_dir, _SQ8_KEY, False)
-    M.write_meta(index_dir, _SQ8_PREFIX_DIMS_KEY, None)
-    # ... and any derived binary arm (thresholds trained on the old
-    # corpus) — same fail-loudly contract
-    M.write_meta(index_dir, _BINARY_KEY, False)
-
+    _start_build(index_dir)
     if refine_iters > 0:
-        trained, g_mat, fine_df = _refined_quantizers_2level(
+        groups, g_mat, fine_df = _refined_quantizers_2level(
             spark, emb, n_groups, n_cells, refine_iters, train_fraction
         )
         # coarse stores ALL trained groups: query probes rank over the
         # full trained set (the twin's g1), including a group that won
         # no cosine members (it then simply has no fine shard to scan).
-        _write_coarse_refined(spark, index_dir, trained, g_mat)
-        (
-            fine_df.repartition("group")
-            .write.mode("overwrite")
-            .partitionBy("group")
-            .parquet(M.table_path(index_dir, "fine"))
+        _write_quantizers_2level(
+            spark, index_dir, groups, g_mat, fine_df, T.DoubleType()
         )
         # driver build contract: the fine quantizer is collectible
         # (<= n_cells rows — the same feasibility clamp as the prefix
         # path's pool collect)
         fine_rows = fine_df.collect()
         fine_rows.sort(key=lambda r: r.cell)
-        # corpus assignment ranks over the CELL-OWNING groups only — a
-        # memberless group never wins a corpus argmax by definition, so
-        # dropping it changes no winner and keeps the UDF's shard map
-        # total
-        owning = sorted({int(r.group) for r in fine_rows})
-        fine_by_group: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-        for g in owning:
-            rows = [r for r in fine_rows if int(r.group) == g]
-            fine_by_group[g] = (
-                np.array([int(r.cell) for r in rows], dtype="int64"),
-                np.array([r.c_emb for r in rows], dtype=np.float64),
-            )
-        nearest = nearest_cell_2level_udf(
-            np.array(owning, dtype="int64"),
-            g_mat[np.array([trained.index(g) for g in owning])],
-            fine_by_group,
+        cells = np.array([int(r.cell) for r in fine_rows], dtype="int64")
+        cell_groups = np.array([int(r.group) for r in fine_rows], dtype="int64")
+        c_mat = np.array([r.c_emb for r in fine_rows], dtype=np.float64)
+    else:
+        cent_rows = (
+            emb.filter(F.col("vec_id") < max(n_groups, n_cells))
+            .select("vec_id", "embedding")
+            .collect()
         )
-        gmap_df = spark.createDataFrame(
-            [(int(r.cell), int(r.group)) for r in fine_rows],
-            "cell long, group long",
-        )
-        assigned = (
-            emb.select(
-                "vec_id",
-                "embedding",
-                nearest(F.col("embedding")).alias("cell"),
-            )
-            .join(F.broadcast(gmap_df), "cell")
-            .select("vec_id", "embedding", "group", "cell")
-        )
-        _land_2level_corpus(
-            spark,
-            index_dir,
-            emb,
-            assigned,
-            fine_cells=(
-                np.array([int(r.cell) for r in fine_rows], dtype="int64"),
-                np.array([r.c_emb for r in fine_rows], dtype=np.float64),
+        cent_rows.sort(key=lambda r: r.vec_id)
+        mat = np.array([r.embedding for r in cent_rows], dtype=np.float64)
+        # corpora whose low ids are sparse (a half-built fixture, a
+        # slice) may yield fewer quantizer rows than requested — clamp,
+        # as the single-level filter(vec_id < n) implicitly does
+        n_groups = min(n_groups, len(mat))
+        n_cells = min(n_cells, len(mat))
+        g_mat = mat[:n_groups]
+        c_mat = mat[:n_cells]
+        groups = list(range(n_groups))
+        cells = np.arange(n_cells, dtype="int64")
+        cell_groups = _group_of_cells(c_mat, g_mat)
+        live = sorted({int(g) for g in cell_groups})
+        fine_df = spark.createDataFrame(
+            [
+                (int(c), int(cell_groups[c]), [float(x) for x in c_mat[c]])
+                for c in range(n_cells)
+            ],
+            T.StructType(
+                [
+                    T.StructField("cell", T.LongType()),
+                    T.StructField("group", T.LongType()),
+                    T.StructField("c_emb", T.ArrayType(T.FloatType())),
+                ]
             ),
-            residual=residual,
         )
-        return
+        _write_quantizers_2level(
+            spark, index_dir, live, g_mat[live], fine_df, T.FloatType()
+        )
+    # one composed-assignment pass feeds every partitioned table
+    assigned, centroids = _assign_2level(
+        spark, emb, groups, g_mat, cells, cell_groups, c_mat
+    )
+    _build_corpus(spark, index_dir, assigned, residual, centroids)
 
-    cent_rows = (
-        emb.filter(F.col("vec_id") < max(n_groups, n_cells))
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    cent_rows.sort(key=lambda r: r.vec_id)
-    mat = np.array([r.embedding for r in cent_rows], dtype=np.float64)
-    # corpora whose low ids are sparse (a half-built fixture, a slice)
-    # may yield fewer quantizer rows than requested — clamp, as the
-    # single-level filter(vec_id < n) implicitly does
-    n_groups = min(n_groups, len(mat))
-    n_cells = min(n_cells, len(mat))
-    g_mat_all = mat[:n_groups]
-    c_mat = mat[:n_cells]
-    gmap = _group_of_cells(c_mat, g_mat_all)
-    live = sorted({int(g) for g in gmap})
 
-    coarse_df = spark.createDataFrame(
-        [(g, [float(x) for x in g_mat_all[g]]) for g in live],
-        T.StructType(
-            [
-                T.StructField("group", T.LongType()),
-                T.StructField("g_emb", T.ArrayType(T.FloatType())),
-            ]
-        ),
-    )
-    coarse_df.coalesce(1).write.mode("overwrite").parquet(
-        M.table_path(index_dir, "coarse")
-    )
-    fine_df = spark.createDataFrame(
-        [
-            (int(c), int(gmap[c]), [float(x) for x in c_mat[c]])
-            for c in range(n_cells)
-        ],
-        T.StructType(
-            [
-                T.StructField("cell", T.LongType()),
-                T.StructField("group", T.LongType()),
-                T.StructField("c_emb", T.ArrayType(T.FloatType())),
-            ]
-        ),
-    )
-    (
-        fine_df.repartition("group")
-        .write.mode("overwrite")
-        .partitionBy("group")
-        .parquet(M.table_path(index_dir, "fine"))
-    )
-
-    fine_by_group: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-    for g in live:
-        ids = np.nonzero(gmap == g)[0].astype("int64")
-        fine_by_group[g] = (ids, c_mat[ids])
-    g_live_mat = g_mat_all[np.array(live)]
+def _assign_2level(
+    spark: SparkSession,
+    emb: DataFrame,
+    groups: list[int],
+    g_mat: np.ndarray,
+    cells: np.ndarray,
+    cell_groups: np.ndarray,
+    c_mat: np.ndarray,
+) -> tuple[DataFrame, tuple[np.ndarray, np.ndarray]]:
+    """The composed two-level assignment of ``emb`` — map-only
+    (:func:`nearest_cell_2level_udf`, then the cell's group by a
+    broadcast join) — against the coarse rows ``groups``/``g_mat`` and
+    the fine cells sorted by id (``cells``, their ``cell_groups``, FLOAT
+    rows ``c_mat``). It ranks over the cell-owning groups only: a group
+    with no fine shard can hold no vector. Returns (vec_id, embedding,
+    group, cell) rows and the fine cells as (ids, rows)."""
+    owning = sorted({int(g) for g in cell_groups})
     nearest = nearest_cell_2level_udf(
-        np.array(live, dtype="int64"), g_live_mat, fine_by_group
+        np.array(owning, dtype="int64"),
+        g_mat[np.array([groups.index(g) for g in owning])],
+        {g: (cells[cell_groups == g], c_mat[cell_groups == g]) for g in owning},
     )
     gmap_df = spark.createDataFrame(
-        [(int(c), int(gmap[c])) for c in range(n_cells)], "cell long, group long"
+        list(zip(cells.tolist(), cell_groups.tolist())), "cell long, group long"
     )
-
-    # one composed-assignment pass feeds both partitioned layouts
     assigned = (
-        emb.select("vec_id", "embedding", nearest(F.col("embedding")).alias("cell"))
-        .join(F.broadcast(gmap_df), "cell")
-        .select("vec_id", "embedding", "group", "cell")
-    )
-    _land_2level_corpus(
-        spark,
-        index_dir,
-        emb,
-        assigned,
-        fine_cells=(np.arange(n_cells, dtype="int64"), c_mat),
-        residual=residual,
-    )
-
-
-def _land_2level_corpus(
-    spark: SparkSession,
-    index_dir: str,
-    emb: DataFrame,
-    assigned: DataFrame,
-    fine_cells: tuple[np.ndarray, np.ndarray] | None = None,
-    residual: bool | str = False,
-    stamp_residual: bool = True,
-) -> None:
-    """Land the corpus-scale tables shared by the driver-side and
-    distributed 2-level builds: the PQ ``codebook/`` (single-level
-    convention verbatim — corpus rows with vec_id < PQ_K, integer
-    domain, so ``_load_codebook`` and the flattened ADC LUT work on a
-    2-level dir with zero changes), then ``raw/`` and packed
-    ``vectors/`` from ONE persisted pass over ``assigned``
-    (vec_id, embedding, group, cell).
-
-    ``residual`` resolves here, against the persisted assignment
-    (:func:`_resolve_residual_auto` — "auto" measures the intra-cell /
-    global variance ratio, explicit bools pass through; either way the
-    manifest gets the flag + audit record). When residual wins,
-    ``fine_cells`` = (sorted fine cell ids, their FLOAT centroid rows)
-    supplies the per-cell centroids: the PQ arm encodes each row's
-    RESIDUAL against its fine centroid (the 2-level FAISS IndexIVFPQ
-    composition), the codebook becomes the first PQ_K vectors'
-    residuals, and the encoder looks its centroid up by cell. Requires
-    the fine quantizer collectible — the driver builds' contract; the
-    distributed build encodes inside its cogroup instead (and passes
-    ``stamp_residual=False`` with its already-resolved-and-stamped
-    choice, so nothing here re-writes the manifest record)."""
-    assigned = assigned.persist()
-    try:
-        if stamp_residual:
-            use_residual = _resolve_residual_auto(
-                index_dir,
-                residual,
-                assigned,
-                fine_cells[0] if fine_cells is not None else None,
-                fine_cells[1] if fine_cells is not None else None,
-            )
-        else:
-            assert residual in (True, False), "pass a resolved bool"
-            use_residual = bool(residual)
-        if use_residual:
-            assert fine_cells is not None, "residual needs fine_cells"
-            cell_ids = np.asarray(fine_cells[0], dtype="int64")
-            icents = _int_centroids(
-                np.asarray(fine_cells[1], dtype=np.float64)
-            )
-            icent_by_cell = {
-                int(c): icents[i] for i, c in enumerate(cell_ids)
-            }
-            head = assigned.filter(F.col("vec_id") < S.PQ_K).collect()
-            rcb = _residual_codebook_from_rows(head, icent_by_cell)
-            _write_residual_codebook(spark, index_dir, rcb)
-            encode = _pq_encode_residual_cells_udf(
-                _load_codebook(spark, index_dir), cell_ids, icents
-            )(F.col("embedding"), F.col("cell"))
-        else:
-            codebook = (
-                S.pq_long_form(emb)
-                .filter(F.col("vec_id") < S.PQ_K)
-                .select(
-                    "subspace",
-                    "dim",
-                    F.col("vec_id").cast("int").alias("cell"),
-                    F.col("iv").alias("ic"),
-                )
-            )
-            codebook.coalesce(1).write.mode("overwrite").parquet(
-                M.table_path(index_dir, "codebook")
-            )
-            encode = S.pq_encode_udf(_load_codebook(spark, index_dir))(
-                F.col("embedding")
-            )
-        (
-            assigned.repartition("group", "cell")
-            .write.mode("overwrite")
-            .partitionBy("group", "cell")
-            .parquet(M.table_path(index_dir, "raw"))
-        )
-        # encode DIRECTLY on the assigned rows (map-only, same kernel as
-        # pq_codes_fast, packed: one codes-array row per vector) — a
-        # codes-by-id join here would shuffle corpus-sized tables
-        # against the assignment; fused, the only exchange is the
-        # partitionBy write itself
-        (
-            assigned.select("vec_id", "group", "cell", encode.alias("codes"))
-            .repartition("group", "cell")
-            .write.mode("overwrite")
-            .partitionBy("group", "cell")
-            .parquet(M.table_path(index_dir, "vectors"))
-        )
-    finally:
-        assigned.unpersist()
-
-
-def append_to_ann_index_2level(
-    spark: SparkSession, emb_new: DataFrame, index_dir: str
-) -> None:
-    """Incremental append for the sharded-quantizer layout — the same
-    immutable-quantizer invariant as :func:`append_to_ann_index`: new
-    vectors take the composed assignment against the STORED coarse/fine
-    tables (both metadata-sized) and their rows append into the
-    (group, cell) partitions; nothing existing is rewritten, so append
-    is O(new). Equivalence with a from-scratch build over the union
-    corpus is pinned by tests (same quantizers => identical
-    assignments and search results). Deletes need no 2-level twin:
-    :func:`delete_from_ann_index` writes the layout-agnostic tombstone
-    side table and every reader anti-joins it on either layout."""
-    _check_layout(index_dir)
-    groups, g_mat = _read_coarse(spark, index_dir)
-    fine = spark.read.parquet(M.table_path(index_dir, "fine")).collect()
-    fine.sort(key=lambda r: r.cell)
-    gmap_pairs = [(int(r.cell), int(r.group)) for r in fine]
-    fine_by_group: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-    for g in groups:
-        rows = [r for r in fine if int(r.group) == g]
-        fine_by_group[g] = (
-            np.array([int(r.cell) for r in rows], dtype="int64"),
-            np.array([r.c_emb for r in rows], dtype=np.float64),
-        )
-    nearest = nearest_cell_2level_udf(
-        np.array(groups, dtype="int64"), g_mat, fine_by_group
-    )
-    gmap_df = spark.createDataFrame(gmap_pairs, "cell long, group long")
-    assigned = (
-        emb_new.select(
+        emb.select(
             "vec_id", "embedding", nearest(F.col("embedding")).alias("cell")
         )
         .join(F.broadcast(gmap_df), "cell")
         .select("vec_id", "embedding", "group", "cell")
-        .persist()
     )
-    try:
-        (
-            assigned.repartition("group", "cell")
-            .write.mode("append")
-            .partitionBy("group", "cell")
-            .parquet(M.table_path(index_dir, "raw"))
-        )
-        # PQ-encode against the STORED codebook (immutable-quantizer
-        # invariant: old and new codes stay comparable under one LUT),
-        # fused onto the assigned rows — map-only, packed, no join.
-        # Residual indexes dispatch the fine-centroid residual encoder
-        # from the same collected fine table the assignment used.
-        if M.read_meta(index_dir, _RESIDUAL_KEY, False):
-            enc = _pq_encode_residual_cells_udf(
-                _load_codebook(spark, index_dir),
-                np.array([int(r.cell) for r in fine], dtype="int64"),
-                _int_centroids(
-                    np.array([r.c_emb for r in fine], dtype=np.float64)
-                ),
-            )(F.col("embedding"), F.col("cell"))
-        else:
-            enc = S.pq_encode_udf(_load_codebook(spark, index_dir))(
-                F.col("embedding")
-            )
-        (
-            assigned.select("vec_id", "group", "cell", enc.alias("codes"))
-            .repartition("group", "cell")
-            .write.mode("append")
-            .partitionBy("group", "cell")
-            .parquet(M.table_path(index_dir, "vectors"))
-        )
-        if M.read_meta(index_dir, _SQ8_KEY, False):
-            # SQ8 arm present: stored-grid encode + append, same
-            # immutable-quantizer invariant as the single-level path
-            vmin, scale = _read_sq_stats(spark, index_dir)
-            sq8_new = assigned.select(
-                "vec_id",
-                "group",
-                "cell",
-                _sq8_encode_udf(vmin, scale)(F.col("embedding")).alias(
-                    "codes"
-                ),
-            )
-            (
-                sq8_new.repartition("group", "cell")
-                .write.mode("append")
-                .partitionBy("group", "cell")
-                .parquet(M.table_path(index_dir, "sq8"))
-            )
-            _accumulate_sq8_counters(index_dir, sq8_new)
-            pdims = M.read_meta(index_dir, _SQ8_PREFIX_DIMS_KEY, None)
-            if pdims is not None:
-                (
-                    sq8_new.select(
-                        "vec_id",
-                        "group",
-                        "cell",
-                        F.slice("codes", 1, int(pdims)).alias("codes"),
-                    )
-                    .repartition("group", "cell")
-                    .write.mode("append")
-                    .partitionBy("group", "cell")
-                    .parquet(M.table_path(index_dir, "sq8_prefix"))
-                )
-        if M.read_meta(index_dir, _BINARY_KEY, False):
-            # binary arm present: stored-threshold encode + append,
-            # same immutable-quantizer invariant as the single-level
-            bin_new = assigned.select(
-                "vec_id",
-                "group",
-                "cell",
-                _binary_encode_udf(_read_bin_thresh(spark, index_dir))(
-                    F.col("embedding")
-                ).alias("words"),
-            )
-            (
-                bin_new.repartition("group", "cell")
-                .write.mode("append")
-                .partitionBy("group", "cell")
-                .parquet(M.table_path(index_dir, "binary"))
-            )
-            _accumulate_binary_counters(index_dir, bin_new)
-    finally:
-        assigned.unpersist()
+    return assigned, (cells, c_mat)
 
 
 # Per-group fine-centroid shards, loaded lazily: a reader fetches only
@@ -3336,16 +3034,14 @@ def _nearest_group_udf(g_ids: np.ndarray, g_mat: np.ndarray):
     ids = np.asarray(g_ids, dtype="int64")
     assert list(ids) == sorted(ids)
     g = g_mat.astype(np.float64)
-    g_norm = np.sqrt(np.einsum("ij,ij->i", g, g))
+    g_norm = S.row_norms(g)
 
     @F.pandas_udf(T.LongType())
     def nearest(col: pd.Series) -> pd.Series:
         if len(col) == 0:
             return pd.Series([], dtype="int64")
         x = np.vstack(col.to_numpy()).astype(np.float64)
-        x_norm = np.sqrt(np.einsum("ij,ij->i", x, x))
-        sims = np.round((x @ g.T) / (x_norm[:, None] * g_norm[None, :]), 6)
-        return pd.Series(ids[np.argmax(sims, axis=1)])
+        return pd.Series(ids[S.nearest_rounded(x, S.row_norms(x), g, g_norm)])
 
     return nearest
 
@@ -3356,14 +3052,25 @@ _ASSIGNED_CODES_SCHEMA = (
 )
 
 
+def _nearest_in_shard(left: pd.DataFrame, right: pd.DataFrame):
+    """One group's corpus rows (``left``) x that group's fine shard
+    (``right``): the shard's cells sorted ascending, their FLOAT rows,
+    the corpus rows, and each row's nearest-cell position — ONE
+    rounded-cosine matmul, first maximum (the nearest_cell_2level_udf
+    tie-break)."""
+    order = np.argsort(right["cell"].to_numpy(), kind="stable")
+    cells = right["cell"].to_numpy()[order]
+    c = np.vstack(right["c_emb"].to_numpy()[order]).astype(np.float64)
+    x = np.vstack(left["embedding"].to_numpy()).astype(np.float64)
+    return cells, c, x, S.nearest_rounded(x, S.row_norms(x), c, S.row_norms(c))
+
+
 def _assign_encode_in_group(rcb: np.ndarray):
-    """Cogroup kernel factory for the distributed RESIDUAL build: one
-    group's corpus rows x its fine shard — the same rounded-cosine
-    argmax as _assign_cells_in_group, PLUS the residual-PQ encode
-    against the selected cell's centroid (whose components the shard
-    carries — the fine quantizer never leaves the executors). Returns
-    (vec_id, group, cell, codes)."""
-    m, _k, sub = rcb.shape
+    """Cogroup kernel factory for the distributed RESIDUAL build:
+    :func:`_assign_cells_in_group`'s assignment PLUS the residual-PQ
+    encode against the selected cell's centroid (whose components the
+    shard carries — the fine quantizer never leaves the executors).
+    Returns (vec_id, group, cell, codes)."""
 
     def kern(key, left: pd.DataFrame, right: pd.DataFrame):
         if left.empty or right.empty:
@@ -3375,27 +3082,14 @@ def _assign_encode_in_group(rcb: np.ndarray):
                     "codes": pd.Series(dtype=object),
                 }
             )
-        order = np.argsort(right["cell"].to_numpy(), kind="stable")
-        cells = right["cell"].to_numpy()[order]
-        c = np.vstack(right["c_emb"].to_numpy()[order]).astype(np.float64)
-        x = np.vstack(left["embedding"].to_numpy()).astype(np.float64)
-        xn = np.sqrt(np.einsum("ij,ij->i", x, x))
-        cn = np.sqrt(np.einsum("ij,ij->i", c, c))
-        sims = np.round((x @ c.T) / (xn[:, None] * cn[None, :]), 6)
-        sel = np.argmax(sims, axis=1)
-        icent = S._half_up(c * S.PQ_INT_SCALE)
-        ir = S._half_up(x * S.PQ_INT_SCALE) - icent[sel]
-        codes = np.empty((len(x), m), dtype=np.int32)
-        for s in range(m):
-            qs = ir[:, s * sub : (s + 1) * sub]
-            d = ((qs[:, None, :] - rcb[s][None, :, :]) ** 2).sum(axis=2)
-            codes[:, s] = np.argmin(d, axis=1)
+        cells, c, x, sel = _nearest_in_shard(left, right)
+        ir = S._half_up(x * S.PQ_INT_SCALE) - _int_centroids(c)[sel]
         return pd.DataFrame(
             {
                 "vec_id": left["vec_id"].to_numpy(),
                 "group": np.full(len(left), int(key[0]), dtype="int64"),
                 "cell": cells[sel],
-                "codes": [row.tolist() for row in codes],
+                "codes": [row.tolist() for row in S.pq_argmin(ir, rcb)],
             }
         )
 
@@ -3404,13 +3098,12 @@ def _assign_encode_in_group(rcb: np.ndarray):
 
 def _assign_cells_in_group(key, left: pd.DataFrame, right: pd.DataFrame):
     """Cogroup kernel: one group's corpus rows x that group's fine
-    shard — ONE rounded-cosine matmul, first-maximum over cells sorted
-    ascending (the nearest_cell_2level_udf tie-break). Returns IDS ONLY
-    (vec_id, group, cell): carrying the embedding back out of the
-    cogroup doubled the Arrow payload (full float arrays serialized
-    both ways), measured as the dominant cost of the distributed build
-    at 8M — the caller re-attaches embeddings from the corpus with one
-    JVM-side join keyed by vec_id instead."""
+    shard (:func:`_nearest_in_shard`). Returns IDS ONLY (vec_id, group,
+    cell): carrying the embedding back out of the cogroup doubled the
+    Arrow payload (full float arrays serialized both ways), measured as
+    the dominant cost of the distributed build at 8M — the caller
+    re-attaches embeddings from the corpus with one JVM-side join keyed
+    by vec_id instead."""
     if left.empty or right.empty:
         return pd.DataFrame(
             {
@@ -3419,14 +3112,7 @@ def _assign_cells_in_group(key, left: pd.DataFrame, right: pd.DataFrame):
                 "cell": pd.Series(dtype="int64"),
             }
         )
-    order = np.argsort(right["cell"].to_numpy(), kind="stable")
-    cells = right["cell"].to_numpy()[order]
-    c = np.vstack(right["c_emb"].to_numpy()[order]).astype(np.float64)
-    x = np.vstack(left["embedding"].to_numpy()).astype(np.float64)
-    xn = np.sqrt(np.einsum("ij,ij->i", x, x))
-    cn = np.sqrt(np.einsum("ij,ij->i", c, c))
-    sims = np.round((x @ c.T) / (xn[:, None] * cn[None, :]), 6)
-    sel = np.argmax(sims, axis=1)
+    cells, _c, _x, sel = _nearest_in_shard(left, right)
     return pd.DataFrame(
         {
             "vec_id": left["vec_id"].to_numpy(),
@@ -3467,17 +3153,7 @@ def build_ann_index_2level_distributed(
         auto_g, auto_c = auto_quantizer_shape(emb.count())
         n_groups = auto_g if n_groups is None else n_groups
         n_cells = auto_c if n_cells is None else n_cells
-    _stamp_layout(index_dir)
-    # the residual flag is stamped by _assign_and_land_2level_distributed
-    # AFTER the assignment machinery exists (residual="auto" decides
-    # from a sampled assignment)
-    # a rebuild orphans any derived SQ8 arm (grid trained on the old
-    # corpus) — drop the flag so readers fail loudly until re-added
-    M.write_meta(index_dir, _SQ8_KEY, False)
-    M.write_meta(index_dir, _SQ8_PREFIX_DIMS_KEY, None)
-    # ... and any derived binary arm (thresholds trained on the old
-    # corpus) — same fail-loudly contract
-    M.write_meta(index_dir, _BINARY_KEY, False)
+    _start_build(index_dir)
 
     if refine_iters > 0:
         trained, g_mat, fine_df = _refined_quantizers_2level(
@@ -3487,12 +3163,8 @@ def build_ann_index_2level_distributed(
         # assignment ranks over the cell-owning subset — a memberless
         # group never wins a corpus argmax, so winners are unchanged
         # (same reasoning as the driver build's refined branch)
-        _write_coarse_refined(spark, index_dir, trained, g_mat)
-        (
-            fine_df.repartition("group")
-            .write.mode("overwrite")
-            .partitionBy("group")
-            .parquet(M.table_path(index_dir, "fine"))
+        _write_quantizers_2level(
+            spark, index_dir, trained, g_mat, fine_df, T.DoubleType()
         )
         owning = sorted(
             int(r.group)
@@ -3543,24 +3215,8 @@ def build_ann_index_2level_distributed(
         live = sorted(
             int(r.group) for r in fine.select("group").distinct().collect()
         )
-        coarse_df = spark.createDataFrame(
-            [(g, [float(x) for x in g_mat_all[g]]) for g in live],
-            T.StructType(
-                [
-                    T.StructField("group", T.LongType()),
-                    T.StructField("g_emb", T.ArrayType(T.FloatType())),
-                ]
-            ),
-        )
-        coarse_df.coalesce(1).write.mode("overwrite").parquet(
-            M.table_path(index_dir, "coarse")
-        )
-        (
-            fine.select("cell", "group", "c_emb")
-            .repartition("group")
-            .write.mode("overwrite")
-            .partitionBy("group")
-            .parquet(M.table_path(index_dir, "fine"))
+        _write_quantizers_2level(
+            spark, index_dir, live, g_mat_all[live], fine, T.FloatType()
         )
         fine.unpersist()
         _assign_and_land_2level_distributed(
@@ -3581,10 +3237,7 @@ def _distributed_variance_ratio(
     its embedding and its fine centroid JVM-side (sample-sized joins;
     the centroid join key is the metadata-sized fine table), and emits
     one metadata-sized partial per partition."""
-    sample = with_group.filter(
-        (F.pmod(F.abs(F.hash("vec_id")), F.lit(_VAR_SAMPLE_MOD)) == 0)
-        | (F.col("vec_id") < _VAR_SAMPLE_PREFIX)
-    )
+    sample = _variance_sample(with_group)
     s_ids = (
         sample.groupBy("group")
         .cogroup(fine_shards.groupBy("group"))
@@ -3648,30 +3301,11 @@ def _assign_and_land_2level_distributed(
         F.col("cell").cast("long").alias("cell"),
         "c_emb",
     )
-    if residual == "auto":
-        ratio = _distributed_variance_ratio(spark, with_group, fine_shards)
-        residual = ratio < RESIDUAL_AUTO_RATIO
-        M.write_meta(
-            index_dir,
-            _RESIDUAL_MODE_KEY,
-            {
-                "mode": "auto",
-                "variance_ratio": round(float(ratio), 4),
-                "chosen_residual": bool(residual),
-            },
-        )
-    else:
-        residual = bool(residual)
-        M.write_meta(
-            index_dir,
-            _RESIDUAL_MODE_KEY,
-            {
-                "mode": "explicit",
-                "variance_ratio": None,
-                "chosen_residual": residual,
-            },
-        )
-    M.write_meta(index_dir, _RESIDUAL_KEY, bool(residual))
+    residual = _resolve_residual_auto(
+        index_dir,
+        residual,
+        lambda: _distributed_variance_ratio(spark, with_group, fine_shards),
+    )
     if residual:
         # the residual arm, fully distributed: the codebook derives
         # from the PQ_K prefix pushed through the SAME two-stage
@@ -3717,9 +3351,8 @@ def _assign_and_land_2level_distributed(
             .applyInPandas(
                 _assign_encode_in_group(rcb), _ASSIGNED_CODES_SCHEMA
             )
-            .persist()
         )
-        try:
+        with _persisted(assigned_codes) as assigned_codes:
             (
                 assigned_codes.repartition("group", "cell")
                 .write.mode("overwrite")
@@ -3735,8 +3368,6 @@ def _assign_and_land_2level_distributed(
                 .partitionBy("group", "cell")
                 .parquet(M.table_path(index_dir, "raw"))
             )
-        finally:
-            assigned_codes.unpersist()
         return
 
     assigned_ids = (
@@ -3747,9 +3378,5 @@ def _assign_and_land_2level_distributed(
     assigned = assigned_ids.join(
         emb.select("vec_id", "embedding"), "vec_id"
     ).select("vec_id", "embedding", "group", "cell")
-    # choice already resolved and stamped above — the landing must not
-    # re-write the manifest record (a failure mid-landing would
-    # otherwise leave a wrong mode="explicit" stamp)
-    _land_2level_corpus(
-        spark, index_dir, emb, assigned, residual=False, stamp_residual=False
-    )
+    with _persisted(assigned) as assigned:
+        _land_corpus(spark, index_dir, assigned, "overwrite", None)

@@ -239,7 +239,6 @@ def build_dedup_index(
         _write(prof, bands, index_dir, id_col, "overwrite")
     finally:
         prof.unpersist()
-    _invalidate_lookup_meta(index_dir)
 
 
 def append_to_dedup_index(
@@ -260,7 +259,6 @@ def append_to_dedup_index(
         _write(prof, bands, index_dir, id_col, "append")
     finally:
         prof.unpersist()
-    _invalidate_lookup_meta(index_dir)
 
 
 def dedup_index_exists(index_dir: str) -> bool:
@@ -303,61 +301,22 @@ def dedup_index_lookup(
 
 # Plan-construction metadata of a lookup — the batch's pfx set, the
 # resolved verify strategy, and the candidates' bucket set — is a pure
-# function of (store files, tombstones, batch): cached per that
-# fingerprint so a repeated lookup of the same batch against an
-# unchanged store (re-run analyst flagging, repeated evaluations)
-# skips its three driver-side collect jobs. The key embeds the
-# manifest snapshot, the bands data-file list, the tombstone file
-# list, AND the batch plan's own leaf input files — semanticHash()
-# hashes the LOGICAL plan, so a batch re-read from an external path
-# whose contents were replaced (same root path) would otherwise
-# collide with the stale entry and silently prune to the old pfx/
-# bucket sets; the leaf-file list separates them (LocalRelation
-# batches list no files — their data is already in the semanticHash).
-# Any store mutation (append, delete, compaction flip) changes the key
-# and the entry self-invalidates; the maintenance verbs below also pop
-# eagerly. Streaming micro-batches have
-# distinct plans (new source offsets), so their semanticHash never
-# collides — they simply miss. Only metadata (lists of hex prefixes /
-# bucket ints, a strategy string) is cached, never rows, and the cache
-# is bounded per store (insertion-ordered LRU, _LOOKUP_META_PER_DIR)
-# so a long-running driver cycling distinct batches against a stable
-# store cannot accumulate dead entries forever.
-_LOOKUP_META: dict[tuple, tuple[list, str, list]] = {}
-_LOOKUP_META_PER_DIR = 8
-
-
-def _lookup_meta_dir(index_dir: str) -> str:
-    """Canonical per-store cache identity — normalized so mutation verbs
-    and lookups spelling the path differently still hit/invalidate the
-    same entries."""
-    import os
-
-    return os.path.normpath(index_dir)
-
-
-def _batch_plan_files(df: DataFrame) -> tuple:
-    """The batch plan's leaf input files, the part of the batch identity
-    semanticHash() does not cover. A plan whose files cannot be listed
-    gets a never-matching sentinel: caching is skipped rather than
-    risked."""
-    try:
-        return tuple(sorted(df.inputFiles()))
-    except Exception:
-        return ("__unlistable__", object())
-
-
-def _remember_lookup_meta(key: tuple, value: tuple) -> None:
-    _LOOKUP_META[key] = value
-    stale = [k for k in _LOOKUP_META if k[0] == key[0]]
-    for k in stale[: -_LOOKUP_META_PER_DIR]:
-        _LOOKUP_META.pop(k, None)
-
-
-def _invalidate_lookup_meta(index_dir: str) -> None:
-    d = _lookup_meta_dir(index_dir)
-    for k in [k for k in _LOOKUP_META if k[0] == d]:
-        _LOOKUP_META.pop(k, None)
+# function of (store files, tombstones, batch): cached in M.cached_meta
+# per that fingerprint so a repeated lookup of the same batch against an
+# unchanged store (re-run analyst flagging, repeated evaluations) skips
+# its three driver-side collect jobs. The key embeds the manifest
+# snapshot, the bands data-file list, the tombstone file list, AND the
+# batch plan's own leaf input files — semanticHash() hashes the LOGICAL
+# plan, so a batch re-read from an external path whose contents were
+# replaced (same root path) would otherwise collide with the stale entry
+# and silently prune to the old pfx/bucket sets; the leaf-file list
+# separates them (LocalRelation batches list no files — their data is
+# already in the semanticHash). Any store mutation (build, append,
+# delete, compaction flip) changes the key, so an entry can never be
+# served stale. Streaming micro-batches have distinct plans (new source
+# offsets), so their semanticHash never collides — they simply miss.
+# Only metadata (lists of hex prefixes / bucket ints, a strategy string)
+# is cached, never rows.
 
 
 def _lookup_encoded(
@@ -397,7 +356,6 @@ def _lookup_encoded(
     # lookups)
     snap = M.manifest_snapshot(index_dir)
     meta_key = (
-        _lookup_meta_dir(index_dir),
         tuple(sorted(snap.items())),
         tuple(
             sorted(
@@ -406,22 +364,21 @@ def _lookup_encoded(
         ),
         tuple(M._tombstone_files(index_dir)),
         bands_new.semanticHash(),
-        _batch_plan_files(bands_new),
+        M.batch_plan_files(bands_new),
         id_col,
         str(max_band_freq),
         verify_strategy,
     )
-    meta = _LOOKUP_META.get(meta_key)
     bands_new = bands_new.withColumn(
         "pfx", F.substring("band", 1, int(snap.get(_PFX_KEY, PFX_LEN)))
     ).persist()
     pinned.append(bands_new)
-    pfxs = (
-        meta[0]
-        if meta is not None
-        else sorted(
+    pfxs = M.cached_meta(
+        index_dir,
+        (*meta_key, "pfxs"),
+        lambda: sorted(
             r.pfx for r in bands_new.select("pfx").distinct().collect()
-        )
+        ),
     )
     stored_bands = M.live(
         spark,
@@ -462,21 +419,23 @@ def _lookup_encoded(
         .distinct()
         .persist()
     )
-    if meta is not None:
-        strategy, buckets = meta[1], meta[2]
-    else:
-        strategy = resolve_verify_strategy(verify_strategy, cands)
-        buckets = sorted(
-            r.b
-            for r in cands.select(
-                F.pmod(F.abs(F.hash("old_id")), F.lit(N_BUCKETS)).alias(
-                    "b"
+    strategy, buckets = M.cached_meta(
+        index_dir,
+        (*meta_key, "verify"),
+        lambda: (
+            resolve_verify_strategy(verify_strategy, cands),
+            sorted(
+                r.b
+                for r in cands.select(
+                    F.pmod(F.abs(F.hash("old_id")), F.lit(N_BUCKETS)).alias(
+                        "b"
+                    )
                 )
-            )
-            .distinct()
-            .collect()
-        )
-        _remember_lookup_meta(meta_key, (pfxs, strategy, buckets))
+                .distinct()
+                .collect()
+            ),
+        ),
+    )
     prof_old = (
         spark.read.parquet(M.table_path(index_dir, "profiles"))
         .where(F.col("bucket").isin(buckets))
@@ -514,7 +473,6 @@ def delete_from_dedup_index(
     must match the store's doc_id dtype (string-id corpora pass
     ``"string"``); mismatches raise instead of tombstoning NULLs."""
     M.write_tombstones(spark, doc_ids, index_dir, "doc_id", key_type)
-    _invalidate_lookup_meta(index_dir)
 
 
 def compact_dedup_index(
@@ -552,7 +510,7 @@ def compact_dedup_index(
                 )
             }
             updates = {_PFX_KEY: PFX_LEN}
-    out = M.compact_index(
+    return M.compact_index(
         spark,
         index_dir,
         _PARTITIONED_TABLES,
@@ -563,8 +521,6 @@ def compact_dedup_index(
         manifest_updates=updates,
         manifest_updates_after="bands",
     )
-    _invalidate_lookup_meta(index_dir)
-    return out
 
 
 def dedup_index_stats(spark: SparkSession, index_dir: str) -> DataFrame:

@@ -128,14 +128,31 @@ def table_fingerprint(index_dir: str, tables: tuple[str, ...]) -> tuple:
     )
 
 
-# Metadata-sized artifact tables (the ANN quantizers: centroids,
-# codebooks, SQ8 grids, binary thresholds, fine shards) loaded once per
-# process and kept while their files stay the same: the key holds the
-# table's fingerprint, so a table rewritten in this process or any
-# other misses and reloads, and nothing needs an explicit invalidation.
-# A true LRU bounded by entry count.
+# Two process-level caches, each a true LRU bounded by entry count,
+# whose keys hold the files their values were derived from — so a table
+# rewritten in this process or any other misses and reloads, and
+# nothing needs an explicit invalidation:
+#
+# - metadata-sized artifact tables (the ANN quantizers: centroids,
+#   codebooks, SQ8 grids, binary thresholds, fine shards), keyed on the
+#   table's fingerprint (:func:`cached_table`);
+# - plan metadata of the batch verbs (an ANN flag's probed cells, a
+#   dedup lookup's pruning sets), keyed by the caller on the store files
+#   and the batch plan (:func:`cached_meta`, :func:`batch_plan_files`).
 TABLE_CACHE_ENTRIES = 64
+META_CACHE_ENTRIES = 64
 _TABLE_CACHE: OrderedDict[tuple, object] = OrderedDict()
+_META_CACHE: OrderedDict[tuple, object] = OrderedDict()
+
+
+def _lru(cache: OrderedDict, bound: int, key: tuple, load):
+    if key in cache:
+        cache.move_to_end(key)
+        return cache[key]
+    value = cache[key] = load()
+    while len(cache) > bound:
+        cache.popitem(last=False)
+    return value
 
 
 def cached_table(index_dir: str, table: str, load):
@@ -144,19 +161,39 @@ def cached_table(index_dir: str, table: str, load):
     racing the load can only leave a value newer than its key, which
     the next lookup replaces."""
     key = (os.path.normpath(index_dir), table_fingerprint(index_dir, (table,)))
-    if key in _TABLE_CACHE:
-        _TABLE_CACHE.move_to_end(key)
-        return _TABLE_CACHE[key]
-    value = _TABLE_CACHE[key] = load()
-    while len(_TABLE_CACHE) > TABLE_CACHE_ENTRIES:
-        _TABLE_CACHE.popitem(last=False)
-    return value
+    return _lru(_TABLE_CACHE, TABLE_CACHE_ENTRIES, key, load)
+
+
+def cached_meta(index_dir: str, key: tuple, compute):
+    """``compute()``, cached under ``(index_dir, *key)``; ``key`` must
+    hold everything the value is a function of — the store files it was
+    derived from and the batch (its ``semanticHash()`` plus
+    :func:`batch_plan_files`)."""
+    return _lru(
+        _META_CACHE,
+        META_CACHE_ENTRIES,
+        (os.path.normpath(index_dir), *key),
+        compute,
+    )
+
+
+def batch_plan_files(df: DataFrame) -> tuple:
+    """A batch plan's leaf input files, the part of the batch identity
+    ``semanticHash()`` does not cover (it hashes the LOGICAL plan, so a
+    path re-read after its files were replaced would collide). A plan
+    whose files cannot be listed gets a never-matching sentinel: caching
+    is skipped rather than risked."""
+    try:
+        return tuple(sorted(df.inputFiles()))
+    except Exception:
+        return ("__unlistable__", object())
 
 
 def clear_table_cache() -> None:
-    """Drop every cached table: the next read behaves as in a fresh
-    process."""
+    """Drop every cached table and metadata entry: the next read
+    behaves as in a fresh process."""
     _TABLE_CACHE.clear()
+    _META_CACHE.clear()
 
 
 def _gen_of(dirname: str, table: str) -> int:

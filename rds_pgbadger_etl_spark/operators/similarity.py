@@ -480,18 +480,35 @@ def nearest_cell_udf(cent_matrix: np.ndarray):
     closed-over quantizer matrix: the documented dense-numeric-kernel
     exception to the no-Python-UDF policy (see lsh_buckets_long)."""
     c = cent_matrix.astype(np.float64)
-    c_norm = np.sqrt(np.einsum("ij,ij->i", c, c))
+    c_norm = row_norms(c)
 
     @F.pandas_udf(T.LongType())
     def nearest(col: pd.Series) -> pd.Series:
         if len(col) == 0:
             return pd.Series([], dtype="int64")
         x = np.vstack(col.to_numpy()).astype(np.float64)
-        x_norm = np.sqrt(np.einsum("ij,ij->i", x, x))
-        sims = np.round((x @ c.T) / (x_norm[:, None] * c_norm[None, :]), 6)
-        return pd.Series(np.argmax(sims, axis=1).astype("int64"))
+        return pd.Series(
+            nearest_rounded(x, row_norms(x), c, c_norm).astype("int64")
+        )
 
     return nearest
+
+
+def row_norms(m: np.ndarray) -> np.ndarray:
+    """L2 norm of each row of ``m``."""
+    return np.sqrt(np.einsum("ij,ij->i", m, m))
+
+
+def nearest_rounded(
+    x: np.ndarray, x_norm: np.ndarray, c: np.ndarray, c_norm: np.ndarray
+) -> np.ndarray:
+    """Position of each row of ``x``'s nearest row of ``c`` by cosine
+    rounded to 6 decimals, ties to the lower position (np.argmax's first
+    maximum) — the (sim desc, id asc) top-1 convention every IVF
+    assignment shares, given ``c`` sorted by id. Norms come from
+    :func:`row_norms`."""
+    sims = np.round((x @ c.T) / (x_norm[:, None] * c_norm[None, :]), 6)
+    return np.argmax(sims, axis=1)
 
 
 def ivf_cells(emb: DataFrame, n_centroids: int = N_CENTROIDS) -> DataFrame:
@@ -838,23 +855,30 @@ def pq_encode_udf(ic: np.ndarray):
     subspace (ties to the lower cell — np.argmin returns the first
     minimum, matching pq_codes' packed-integer min). Returns the m
     codes as one array column."""
-    m, _k, sub = ic.shape
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def encode(col: pd.Series) -> pd.Series:
         if len(col) == 0:
             return pd.Series([], dtype=object)
         x = np.vstack(col.to_numpy()).astype(np.float64)
-        iq = _half_up(x * PQ_INT_SCALE)
-        out = np.empty((len(x), m), dtype=np.int32)
-        for s in range(m):
-            qs = iq[:, s * sub : (s + 1) * sub]
-            # (n, k): exact integer distances, no float anywhere
-            d = ((qs[:, None, :] - ic[s][None, :, :]) ** 2).sum(axis=2)
-            out[:, s] = np.argmin(d, axis=1)
+        out = pq_argmin(_half_up(x * PQ_INT_SCALE), ic)
         return pd.Series([row.tolist() for row in out])
 
     return encode
+
+
+def pq_argmin(iq: np.ndarray, ic: np.ndarray) -> np.ndarray:
+    """(n, m) int32 PQ codes of the integer rows ``iq`` against the
+    integer codebook ``ic[m][k][sub]``: per subspace, the exact integer
+    squared distance to every centroid (no float anywhere) and its first
+    minimum (ties to the lower cell)."""
+    m, _k, sub = ic.shape
+    out = np.empty((len(iq), m), dtype=np.int32)
+    for s in range(m):
+        qs = iq[:, s * sub : (s + 1) * sub]
+        d = ((qs[:, None, :] - ic[s][None, :, :]) ** 2).sum(axis=2)
+        out[:, s] = np.argmin(d, axis=1)
+    return out
 
 
 def pq_codes_fast(emb: DataFrame, ic: np.ndarray | None = None) -> DataFrame:

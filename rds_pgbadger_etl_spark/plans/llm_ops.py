@@ -5179,7 +5179,7 @@ def _ann_index_2level_upsert_shared(spark: SparkSession, sf_dir: str) -> str:
     prefixes (G=4, C=16 << half), so the oracle is the SAME SQL as the
     one-shot build: hash equality proves append O(new) loses nothing."""
     from rds_pgbadger_etl_spark.operators.ann_index import (
-        append_to_ann_index_2level,
+        append_to_ann_index,
         build_ann_index_2level,
     )
 
@@ -5192,9 +5192,7 @@ def _ann_index_2level_upsert_shared(spark: SparkSession, sf_dir: str) -> str:
         emb = rebalance(load_table(spark, sf_dir, "embeddings"))
         half = emb.count() // 2
         build_ann_index_2level(spark, emb.filter(F.col("vec_id") < half), d)
-        append_to_ann_index_2level(
-            spark, emb.filter(F.col("vec_id") >= half), d
-        )
+        append_to_ann_index(spark, emb.filter(F.col("vec_id") >= half), d)
         _ANN_INDEX_DIRS[key] = d
     return d
 
@@ -5441,8 +5439,8 @@ def _ann_index_2level_residual_shared(
 ) -> str:
     """Two-level index whose PQ arm is RESIDUAL-encoded against each
     vector's FINE centroid — the billion-vector arm with the FAISS
-    IndexIVFPQ encoding (operators/ann_index._land_2level_corpus
-    residual_cells)."""
+    IndexIVFPQ encoding (operators/ann_index._land_corpus with the fine
+    cells as centroids)."""
     from rds_pgbadger_etl_spark.operators.ann_index import (
         build_ann_index_2level,
     )

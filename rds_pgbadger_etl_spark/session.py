@@ -97,6 +97,30 @@ def max_partition_bytes(spark: SparkSession) -> int:
     return int(spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
 
 
+# Heap ceiling of the default driver: local mode is driver == all
+# executors, and a full bench/test session holds the persisted shared
+# intermediates (parsed logs, shingle profiles) plus streaming state for
+# 70+ queries — an 8g heap spends measurable time in GC by the back half
+# of the run.
+MAX_DRIVER_MEMORY_MB = 16 * 1024
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """The default driver heap: half the machine's physical memory
+    (``MemTotal``), at most MAX_DRIVER_MEMORY_MB. The other half holds
+    the JVM's off-heap memory, the Python workers and the OS; a heap at
+    or past physical memory lets a large session swap or be killed. A
+    machine whose ``meminfo`` cannot be read gets the ceiling."""
+    try:
+        with open(meminfo) as fh:
+            kb = next(
+                int(line.split()[1]) for line in fh if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError, IndexError):
+        return f"{MAX_DRIVER_MEMORY_MB}m"
+    return f"{max(512, min(MAX_DRIVER_MEMORY_MB, kb // 2048))}m"
+
+
 def get_spark(
     app_name: str = "rds-pgbadger-etl-spark",
     cpus: str | int | None = None,
@@ -107,14 +131,13 @@ def get_spark(
     """Build (or reuse) the engine's SparkSession.
 
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or ``*``; memory to
-    ``$SPARK_GRAFT_DRIVER_MEM`` or ``8g`` (local mode: driver == executor).
+    ``$SPARK_GRAFT_DRIVER_MEM`` or :func:`default_driver_memory` (local
+    mode: driver == executor).
     """
     cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*")
-    # 16g: local mode is driver == all executors, and a full bench/test
-    # session holds the persisted shared intermediates (parsed logs,
-    # shingle profiles) plus streaming state for 70+ queries — an 8g
-    # heap spends measurable time in GC by the back half of the run.
-    driver_memory = driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    driver_memory = driver_memory or os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM", default_driver_memory()
+    )
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus.isdigit() else (os.cpu_count() or 8)
 

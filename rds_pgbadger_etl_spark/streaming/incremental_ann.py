@@ -54,21 +54,15 @@ _FLAG_SCHEMA = "vec_id long, neighbor_id long, cosine double, rank int"
 
 # Probe-selection metadata of a flag verb — the distinct probed cell
 # set (single-level) / (group, cell) pair set (two-level) — is a pure
-# function of (quantizer tables, batch, probe widths): cached per that
-# fingerprint so a repeated flag of the same batch against an unchanged
-# store (the registered batch verbs re-evaluated; re-run analyst
-# flagging) skips its driver-side distinct+collect job — the
-# dedup_index._LOOKUP_META discipline applied to the ANN probe. The
-# key embeds the quantizer tables' data-file lists (M.table_fingerprint,
-# what the quantizer cache itself keys on: a rebuild/retrain
-# rewrites them → new names → the entry self-invalidates; appends
+# function of (quantizer tables, batch, probe widths): cached in
+# M.cached_meta under that fingerprint, so a repeated flag of the same
+# batch against an unchanged store (the registered batch verbs
+# re-evaluated; re-run analyst flagging) skips its driver-side
+# distinct+collect job. The key embeds the quantizer tables' data-file
+# lists (M.table_fingerprint: a rebuild/retrain rewrites them; appends
 # never touch quantizers, so entries correctly survive them) plus the
-# batch plan's semanticHash AND leaf input files (a re-read of a
-# mutated external path must miss — semanticHash covers only the
-# logical plan). Only metadata lists are cached, never rows; bounded
-# per store like _LOOKUP_META.
-_PROBE_META: dict[tuple, list] = {}
-_PROBE_META_PER_DIR = 8
+# batch plan's semanticHash AND leaf input files (a re-read of a mutated
+# external path must miss). Only metadata lists are cached, never rows.
 
 # Plan-capture hook for the flag verbs: they return an EAGER
 # localCheckpoint (mutation-safety — see _flag_probed), so a
@@ -77,20 +71,6 @@ _PROBE_META_PER_DIR = 8
 # pre-checkpoint DataFrame right before materialization — the round-13
 # flag-verb plan dumps were stubs for exactly this reason.
 PRE_CHECKPOINT_PLAN_HOOK = None
-
-
-def _batch_plan_files(df: DataFrame) -> tuple:
-    try:
-        return tuple(sorted(df.inputFiles()))
-    except Exception:  # unlistable plan: never collide, never cache-hit
-        return ("__unlistable__", object())
-
-
-def _remember_probe_meta(key: tuple, value: list) -> None:
-    _PROBE_META[key] = value
-    stale = [k for k in _PROBE_META if k[0] == key[0]]
-    for k in stale[: -_PROBE_META_PER_DIR]:
-        _PROBE_META.pop(k, None)
 
 
 def _probe_cells_udf(cell_ids: list[int], cent_mat: np.ndarray, n_probe: int):
@@ -219,7 +199,7 @@ def _flag_probed(
 ) -> DataFrame:
     """The scoring tail both flag verbs share, after their layout's
     probe kernel: ``probes`` is (q_id, q_emb, *parts) with ``cell``
-    last. The distinct probed partitions (cached in _PROBE_META) prune
+    last. The distinct probed partitions (cached in M.cached_meta) prune
     a tombstone-filtered scan of ``raw/``; a cogrouped per-cell matmul
     (similarity.knn_join_cells — cell ids are unique on both layouts)
     scores the batch against it, and each vector keeps its top-``k``
@@ -230,21 +210,20 @@ def _flag_probed(
     leak into the flags."""
     probes = probes.persist()
     try:
-        meta_key = (
-            os.path.normpath(index_dir),
-            tuple(parts),
-            M.table_fingerprint(index_dir, quantizers),
-            emb_batch.semanticHash(),
-            _batch_plan_files(emb_batch),
-            widths,
-        )
-        probed = _PROBE_META.get(meta_key)
-        if probed is None:
-            # metadata-sized by construction: ≤ one row per cell
-            probed = sorted(
+        # metadata-sized by construction: ≤ one row per cell
+        probed = M.cached_meta(
+            index_dir,
+            (
+                tuple(parts),
+                M.table_fingerprint(index_dir, quantizers),
+                emb_batch.semanticHash(),
+                M.batch_plan_files(emb_batch),
+                widths,
+            ),
+            lambda: sorted(
                 tuple(r) for r in probes.select(*parts).distinct().collect()
-            )
-            _remember_probe_meta(meta_key, probed)
+            ),
+        )
         raw = AI._live(
             spark,
             index_dir,
@@ -495,7 +474,7 @@ def run_incremental_ann_2level(
     before it (:func:`flag_against_index_2level` — distributed two-stage
     broadcast probe, cogrouped per-cell matmul, eagerly checkpointed so
     the append below can't leak into the flags), write the flags, then
-    admit the batch (``append_to_ann_index_2level`` — composed
+    admit the batch (``append_to_ann_index`` — on this layout, composed
     assignment + PQ encode against the STORED quantizers, appended into
     the (group, cell) partitions, nothing rewritten). First batch
     bootstraps with ``build_ann_index_2level`` and emits no flags;
@@ -541,7 +520,7 @@ def run_incremental_ann_2level(
             flags.withColumn("batch_id", F.lit(batch_id)).write.mode(
                 "append"
             ).parquet(flags_out_dir)
-            AI.append_to_ann_index_2level(spark, batch, index_dir)
+            AI.append_to_ann_index(spark, batch, index_dir)
             # same resume contract as the single-level driver: a
             # requested-but-absent arm is derived, never dropped
             _ensure_arms(spark)

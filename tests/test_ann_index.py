@@ -89,10 +89,10 @@ def test_lsh_reader_matches_in_session(spark, index_dir):
     assert got == expected and len(got) > 0
 
 
-# Each layout's build and append verbs; every search arm serves both.
+# Each layout's build verb; append and every search arm serve both.
 _LAYOUTS = {
     "1level": (AI.build_ann_index, AI.append_to_ann_index),
-    "2level": (AI.build_ann_index_2level, AI.append_to_ann_index_2level),
+    "2level": (AI.build_ann_index_2level, AI.append_to_ann_index),
 }
 
 
@@ -707,14 +707,14 @@ def test_auto_quantizer_shape_rule():
 
 
 def test_2level_upsert_equals_full_build(spark, index2_dir, tmp_path):
-    """build(first half) + append_to_ann_index_2level(rest) must be
+    """build(first half) + append_to_ann_index(rest) must be
     search-equivalent to the one-shot build: stored quantizers make the
     composed assignment identical for old and new rows."""
     emb = load_table(spark, SF_SMOKE, "embeddings")
     half = emb.count() // 2
     d = str(tmp_path / "idx2l_upsert")
     AI.build_ann_index_2level(spark, emb.filter(F.col("vec_id") < half), d)
-    AI.append_to_ann_index_2level(
+    AI.append_to_ann_index(
         spark, emb.filter(F.col("vec_id") >= half), d
     )
     got = _rows(AI.ann_index_ivf_topk(spark, d, _queries(spark), K))
@@ -785,11 +785,13 @@ def test_flag_probe_meta_cache_hits_and_invalidates(
     AI.build_ann_index(spark, emb.filter(F.col("vec_id") < 30), d)
     batch = emb.filter(F.col("vec_id") >= 35)
     remembers = []
-    real = IA._remember_probe_meta
+    real = M.cached_meta
     monkeypatch.setattr(
-        IA,
-        "_remember_probe_meta",
-        lambda k, v: (remembers.append(k), real(k, v))[1],
+        M,
+        "cached_meta",
+        lambda d, k, compute: real(
+            d, k, lambda: (remembers.append(k), compute())[1]
+        ),
     )
     first = sorted(map(str, IA.flag_against_index(spark, batch, d, k=K).collect()))
     assert len(remembers) == 1
@@ -799,7 +801,7 @@ def test_flag_probe_meta_cache_hits_and_invalidates(
     AI.build_ann_index(spark, emb.filter(F.col("vec_id") < 35), d)
     third = sorted(map(str, IA.flag_against_index(spark, batch, d, k=K).collect()))
     assert len(remembers) == 2
-    IA._PROBE_META.clear()
+    M.clear_table_cache()
     fresh = sorted(map(str, IA.flag_against_index(spark, batch, d, k=K).collect()))
     assert third == fresh
 
@@ -818,7 +820,7 @@ def test_2level_ivfpq_reader_matches_upsert_build(spark, index2_dir, tmp_path):
     half = emb.count() // 2
     d = str(tmp_path / "idx2l_pq_upsert")
     AI.build_ann_index_2level(spark, emb.filter(F.col("vec_id") < half), d)
-    AI.append_to_ann_index_2level(
+    AI.append_to_ann_index(
         spark, emb.filter(F.col("vec_id") >= half), d
     )
     got_upsert = _rows(
@@ -857,7 +859,7 @@ def test_2level_compaction_preserves_search_and_reduces_files(spark, tmp_path):
     d = str(tmp_path / "idx2l_compact")
     AI.build_ann_index_2level(spark, emb.filter(F.col("vec_id") < n // 4), d)
     for b in range(1, 4):
-        AI.append_to_ann_index_2level(
+        AI.append_to_ann_index(
             spark,
             emb.filter(
                 (F.col("vec_id") >= b * n // 4)
@@ -1214,7 +1216,7 @@ def test_2level_residual_builds_match_and_hold_semantics(spark, tmp_path):
     AI.build_ann_index_2level(
         spark, emb.filter(F.col("vec_id") < n // 2), d3, residual=True
     )
-    AI.append_to_ann_index_2level(
+    AI.append_to_ann_index(
         spark, emb.filter(F.col("vec_id") >= n // 2), d3
     )
     got = _rows(AI.ann_index_ivfpq_topk(spark, d3, qs, K))
@@ -1562,7 +1564,7 @@ def test_2level_sq8_arm_lifecycle(spark, tmp_path):
         _rows(AI.ann_index_ivf_topk(spark, d, qs, K))
     )
     stats_before = _rows(spark.read.parquet(M.table_path(d, "sq_stats")))
-    AI.append_to_ann_index_2level(
+    AI.append_to_ann_index(
         spark, emb.filter(F.col("vec_id") >= half), d
     )
     assert (
@@ -2088,24 +2090,34 @@ def test_cascade_first_two_stages_are_jvm_only(spark, cascade_dir):
 # one group over the single-level centroids is the single-level index.
 
 
+# The parity indexes are built on the corpus prefix below (it covers
+# the N_CENTROIDS and PQ_K quantizer prefixes); the rest is appended.
+_PARITY_BUILT = 250
+
+
 @pytest.fixture(scope="module")
 def parity_dirs(spark, tmp_path_factory):
     """residual -> (single-level dir, two-level dir with n_groups=1 over
-    the same S.N_CENTROIDS cells), each carrying the SQ8 and binary
-    arms."""
+    the same S.N_CENTROIDS cells): each built on the first
+    _PARITY_BUILT vectors, given the SQ8, SQ8-prefix and binary arms,
+    then grown by one append_to_ann_index of the rest."""
     emb = load_table(spark, SF_SMOKE, "embeddings")
+    head = emb.filter(F.col("vec_id") < _PARITY_BUILT)
+    rest = emb.filter(F.col("vec_id") >= _PARITY_BUILT)
     dirs = {}
     for residual in (False, True):
         one = str(tmp_path_factory.mktemp("parity_1level"))
         two = str(tmp_path_factory.mktemp("parity_2level"))
-        AI.build_ann_index(spark, emb, one, residual=residual)
+        AI.build_ann_index(spark, head, one, residual=residual)
         AI.build_ann_index_2level(
-            spark, emb, two, n_groups=1, n_cells=S.N_CENTROIDS,
+            spark, head, two, n_groups=1, n_cells=S.N_CENTROIDS,
             residual=residual,
         )
         for d in (one, two):
             AI.add_sq8_to_ann_index(spark, d)
+            AI.add_sq8_prefix_to_ann_index(spark, d)
             AI.add_binary_to_ann_index(spark, d)
+            AI.append_to_ann_index(spark, rest, d)
         dirs[residual] = (one, two)
     return dirs
 
@@ -2145,6 +2157,45 @@ def test_one_group_2level_index_answers_like_single_level(
     got = _rows(_ARMS[arm](spark, two, qs))
     assert got == _rows(_ARMS[arm](spark, one, qs))
     assert len(got) == len(QUERY_IDS) * K
+
+
+_PARITY_TABLES = {
+    "raw": "embedding",
+    "vectors": "codes",
+    "sq8": "codes",
+    "sq8_prefix": "codes",
+    "binary": "words",
+}
+
+
+@pytest.mark.parametrize("residual", [False, True], ids=["raw", "residual"])
+def test_one_group_2level_index_writes_like_single_level(
+    spark, parity_dirs, residual
+):
+    """The write verbs are one code path past the assignment: after the
+    same build, arm derivations and append, the one-group two-level
+    index holds the single-level index's rows in every corpus table,
+    per (vec_id, cell), and the same SQ8 and binary drift counters."""
+    one, two = parity_dirs[residual]
+    for table, payload in _PARITY_TABLES.items():
+        got = {}
+        for d in (one, two):
+            got[d] = _rows(
+                spark.read.parquet(M.table_path(d, table)).select(
+                    "vec_id", F.col("cell").cast("long").alias("cell"), payload
+                )
+            )
+        assert got[two] == got[one], table
+        assert len(got[one]) == 500, table
+    counters = [
+        AI._SQ8_OOB_KEY, AI._SQ8_COMP_KEY, AI._SQ8_ROWS_KEY,
+        AI._SQ8_TRAINED_ROWS_KEY, AI._BINARY_ONES_KEY, AI._BINARY_ROWS_KEY,
+        AI._BINARY_TRAINED_ROWS_KEY, AI._BINARY_TRAINED_ONES_KEY,
+    ]
+    meta = [{key: M.read_meta(d, key) for key in counters} for d in (one, two)]
+    assert meta[0] == meta[1]
+    assert meta[0][AI._SQ8_ROWS_KEY] == meta[0][AI._BINARY_ROWS_KEY] == 500
+    assert meta[0][AI._SQ8_TRAINED_ROWS_KEY] == _PARITY_BUILT
 
 
 # ---------------------------------------------------------------------------

@@ -5,6 +5,8 @@ batch dedups against the corpus without the corpus being re-read)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -166,16 +168,16 @@ def test_lookup_meta_cache_hits_and_invalidates(
 
 
 def test_lookup_meta_keyed_on_batch_files_not_plan_hash(
-    spark, docs, tmp_path
+    spark, docs, tmp_path, monkeypatch
 ):
     """semanticHash() hashes the LOGICAL plan, not the data: a batch
     re-READ from an external path whose files were replaced (same root
     path, same schema ⇒ same plan hash) must NOT reuse the previous
     batch's cached pfx/bucket pruning metadata — that returned silently
     wrong/empty dup pairs before the leaf-file list joined the cache
-    key (the r13 ADVICE high item). Also pins the per-store LRU bound:
-    cycling many distinct batches never grows the cache past
-    _LOOKUP_META_PER_DIR entries for the store."""
+    key (the r13 ADVICE high item). Also pins the LRU bound: cycling
+    many distinct batches never grows the cache past
+    M.META_CACHE_ENTRIES entries for the store."""
     d = str(tmp_path / "store")
     DI.build_dedup_index(spark, docs.filter(F.col("doc_id") % 10 < 8), d)
     bdir = str(tmp_path / "batch")
@@ -198,7 +200,7 @@ def test_lookup_meta_keyed_on_batch_files_not_plan_hash(
             spark, spark.read.parquet(bdir), d, threshold=THRESHOLD
         )
     )
-    DI._LOOKUP_META.clear()
+    M.clear_table_cache()
     want2 = _rows(
         DI.dedup_index_lookup(
             spark, spark.read.parquet(bdir), d, threshold=THRESHOLD
@@ -206,7 +208,8 @@ def test_lookup_meta_keyed_on_batch_files_not_plan_hash(
     )
     assert got2 == want2 and any("old_id=11)" in r for r in got2), got2
     # LRU bound: distinct batches cycle, entries for the store stay capped
-    for i in range(DI._LOOKUP_META_PER_DIR + 3):
+    monkeypatch.setattr(M, "META_CACHE_ENTRIES", 8)
+    for i in range(M.META_CACHE_ENTRIES + 3):
         # each literal makes a distinct plan hash => a distinct key
         DI.dedup_index_lookup(
             spark,
@@ -216,10 +219,10 @@ def test_lookup_meta_keyed_on_batch_files_not_plan_hash(
             d,
             threshold=THRESHOLD,
         )
-    key_dir = DI._lookup_meta_dir(d)
+    key_dir = os.path.normpath(d)
     assert (
-        len([k for k in DI._LOOKUP_META if k[0] == key_dir])
-        <= DI._LOOKUP_META_PER_DIR
+        len([k for k in M._META_CACHE if k[0] == key_dir])
+        <= M.META_CACHE_ENTRIES
     )
 
 

@@ -141,3 +141,29 @@ def test_tombstone_keys_must_cast_cleanly(spark, tmp_path):
     M.write_tombstones(spark, ["doc-a", "doc-b"], d, "doc_id", "string")
     got = sorted(r.doc_id for r in M.tombstones(spark, d).collect())
     assert got == ["doc-a", "doc-b"]
+
+
+def test_metadata_cache_is_a_true_lru(monkeypatch):
+    """The batch verbs' metadata cache evicts the LEAST RECENTLY USED
+    entry at its bound, not the oldest inserted: an entry read just
+    before the insert that fills the cache past its bound survives, and
+    the entry nobody read since is the one recomputed."""
+    monkeypatch.setattr(M, "_META_CACHE", type(M._META_CACHE)())
+    monkeypatch.setattr(M, "META_CACHE_ENTRIES", 3)
+    computed = []
+
+    def get(name):
+        return M.cached_meta(
+            "/store", (name,), lambda: (computed.append(name), name)[1]
+        )
+
+    for name in ("a", "b", "c"):
+        get(name)
+    assert get("a") == "a" and computed == ["a", "b", "c"]  # a hit
+    get("d")  # past the bound: evicts b, the least recently used
+    assert len(M._META_CACHE) == 3
+    get("a")
+    get("c")
+    assert computed == ["a", "b", "c", "d"]  # a and c survived
+    get("b")
+    assert computed == ["a", "b", "c", "d", "b"]  # b was the one evicted

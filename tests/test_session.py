@@ -6,6 +6,7 @@ past the measured zero-spill point without any per-run knob)."""
 from __future__ import annotations
 
 import math
+import os
 
 from rds_pgbadger_etl_spark import session as SES
 
@@ -87,3 +88,24 @@ def test_max_partition_bytes_reads_every_spark_byte_string(spark):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, before)
+
+
+def test_default_driver_heap_is_below_physical_memory(spark, tmp_path):
+    """get_spark's default heap is half the machine's MemTotal, capped
+    at MAX_DRIVER_MEMORY_MB: below physical memory on this machine, and
+    on a small and a large one described by a meminfo file."""
+    with open("/proc/meminfo") as fh:
+        total_kb = next(
+            int(line.split()[1]) for line in fh if line.startswith("MemTotal:")
+        )
+    heap = SES.default_driver_memory()
+    assert heap.endswith("m") and int(heap[:-1]) * 1024 < total_kb
+    small = tmp_path / "small"
+    small.write_text("MemTotal:       15728640 kB\nMemFree:  1 kB\n")
+    assert SES.default_driver_memory(str(small)) == "7680m"
+    large = tmp_path / "large"
+    large.write_text("MemTotal:       268435456 kB\n")
+    assert SES.default_driver_memory(str(large)) == f"{SES.MAX_DRIVER_MEMORY_MB}m"
+    if "SPARK_GRAFT_DRIVER_MEM" not in os.environ:
+        # the session built with no heap argument carries the default
+        assert spark.sparkContext.getConf().get("spark.driver.memory") == heap

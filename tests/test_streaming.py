@@ -373,7 +373,7 @@ def test_incremental_ann_2level_stream_matches_batch_lifecycle(spark, tmp_path):
     for s in slices[1:]:
         f = flag_against_index_2level(spark, s, twin, k=3)
         want.append(f)
-        AI.append_to_ann_index_2level(spark, s, twin)
+        AI.append_to_ann_index(spark, s, twin)
     cols = ["vec_id", "neighbor_id", "cosine", "rank"]
     want_rows = sorted(
         str(r) for df in want for r in df.select(*cols).collect()

@@ -239,7 +239,7 @@ def main() -> None:
     # seconds-scale — composed assignment + PQ encode are map-only over
     # the new rows; nothing existing is rewritten.
     t0 = time.perf_counter()
-    AI.append_to_ann_index_2level(spark, flag_batch, idx2)
+    AI.append_to_ann_index(spark, flag_batch, idx2)
     t_append2 = round(time.perf_counter() - t0, 3)
 
     # streaming two-batch leg (run_incremental_ann_2level over the SAME
