@@ -47,6 +47,21 @@ columns (:func:`_parts`): ``cell`` on the single-level layout,
 - ``tombstones/``  (vec_id) — logically deleted ids, applied at
   compaction.
 
+Who writes each table. A build or append whose input Spark estimates at
+most one scan split (``spark.sql.files.maxPartitionBytes``, the bound
+the driver-side search uses; :func:`_collect_small`) is collected in
+one job and landed on the DRIVER: ``vectors/``, ``raw/``,
+``lsh_buckets/``, ``sq8/``, ``sq8_prefix/`` and ``binary/`` are encoded
+by the numpy kernels the UDFs wrap and written with pyarrow, one file
+per partition value, as Spark's partitionBy lays them out
+(:func:`_land_local`). A larger input runs the SPARK plan: map-only UDF
+passes and partitionBy writes (:func:`_land_corpus`). On both sides the
+metadata-sized quantizer tables (``centroids/``, ``codebook/``,
+``coarse/``, ``fine/``) are written and read with pyarrow, except that
+the distributed two-level build writes ``fine/`` with Spark. The
+derived-arm verbs (``add_sq8_to_ann_index`` and friends) and compaction
+always run on Spark, so a table can hold files of both writers.
+
 Query-side terms (probe selection, the per-query ADC lookup table, the
 query's LSH bucket signatures) are computed on the DRIVER from the tiny
 centroid/codebook tables: queries × n_centroids cosines and
@@ -58,14 +73,20 @@ hash-match the in-session ann_*_topk oracles exactly.
 
 from __future__ import annotations
 
+import ctypes
+import functools
 import os
+import shutil
+import uuid
 from collections.abc import Callable
 from contextlib import contextmanager
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -228,11 +249,14 @@ RESIDUAL_AUTO_RATIO = 0.5
 
 # diagnostic sample: 1-in-16 deterministic hash sample, plus the low-id
 # prefix so tiny fixtures never sample empty
-def _variance_sample(df: DataFrame) -> DataFrame:
-    return df.filter(
-        (F.pmod(F.abs(F.hash("vec_id")), F.lit(16)) == 0)
-        | (F.col("vec_id") < 1024)
+def _sampled():
+    return (F.pmod(F.abs(F.hash("vec_id")), F.lit(16)) == 0) | (
+        F.col("vec_id") < 1024
     )
+
+
+def _variance_sample(df: DataFrame) -> DataFrame:
+    return df.filter(_sampled())
 
 
 def _assignment_variance_ratio(
@@ -263,25 +287,40 @@ def _assignment_variance_ratio(
 _VAR_PARTIAL_SCHEMA = "n bigint, ss double, rss double, sv array<double>"
 
 
+class _Partial(NamedTuple):
+    """Metadata-sized variance partial of one batch of (vector,
+    assigned-centroid) rows."""
+
+    n: int
+    ss: float
+    rss: float
+    sv: list
+
+
+def _partial(x: np.ndarray, c: np.ndarray) -> _Partial:
+    r = x - c
+    return _Partial(
+        len(x), float((x * x).sum()), float((r * r).sum()), x.sum(axis=0).tolist()
+    )
+
+
 def _variance_partials(df: DataFrame, xc_of) -> list:
-    """Metadata-sized (n, ss, rss, sv) variance partials, one row per
-    Arrow batch of ``df``; ``xc_of(pdf)`` returns the batch's (vector,
-    assigned-centroid) float64 matrices — the ONLY piece that differs
-    between the driver and distributed diagnostics, so the statistics
-    themselves cannot diverge."""
+    """One :func:`_partial` per Arrow batch of ``df``; ``xc_of(pdf)``
+    returns the batch's (vector, assigned-centroid) float64 matrices —
+    the ONLY piece that differs between the diagnostics, so the
+    statistics themselves cannot diverge."""
 
     def partials(it):
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            x, c = xc_of(pdf)
-            r = x - c
+            p = _partial(*xc_of(pdf))
             yield pd.DataFrame(
                 {
-                    "n": pd.Series([len(x)], dtype="int64"),
-                    "ss": [float((x * x).sum())],
-                    "rss": [float((r * r).sum())],
-                    "sv": [x.sum(axis=0).tolist()],
+                    "n": pd.Series([p.n], dtype="int64"),
+                    "ss": [p.ss],
+                    "rss": [p.rss],
+                    "sv": [p.sv],
                 }
             )
 
@@ -334,25 +373,44 @@ def _int_centroids(mat: np.ndarray) -> np.ndarray:
     return S._half_up(np.asarray(mat, dtype=np.float64) * S.PQ_INT_SCALE)
 
 
-def _pq_encode_residual_cells_udf(
-    rcb: np.ndarray, cell_ids: np.ndarray, icents: np.ndarray
-):
-    """Residual-PQ encoder over (embedding, cell) columns: per row,
-    quantize the embedding (HALF_UP), subtract its OWN cell centroid's
-    integer components — looked up by cell id (``cell_ids`` sorted
-    ascending, ``icents`` the matching integer rows; a single-level
-    index passes ``arange(n_cells)``) — then :func:`similarity.pq_argmin`
-    against the residual codebook."""
-    ids = np.asarray(cell_ids, dtype="int64")
-    assert list(ids) == sorted(ids)
+def _residual_rows(
+    centroids: tuple[np.ndarray, np.ndarray] | None,
+) -> tuple[np.ndarray, np.ndarray] | None:
+    """(sorted cell ids, integer centroid rows) of ``centroids`` = (cell
+    ids, FLOAT rows): the residual encoder's input; None for raw PQ."""
+    if centroids is None:
+        return None
+    ids = np.asarray(centroids[0], dtype="int64")
+    assert (np.diff(ids) > 0).all(), "cell ids must be sorted"
+    return ids, _int_centroids(centroids[1])
+
+
+def _pq_encode(
+    x: np.ndarray,
+    ic: np.ndarray,
+    res: tuple[np.ndarray, np.ndarray] | None,
+    cells: np.ndarray,
+) -> np.ndarray:
+    """PQ codes of the float64 rows ``x`` against the integer codebook
+    ``ic``: quantize (HALF_UP), then :func:`similarity.pq_argmin`. With
+    ``res`` = (sorted cell ids, their integer centroid rows), each row's
+    RESIDUAL against its own cell (``cells``) is encoded instead; a
+    single-level index passes ids ``arange(n_cells)``."""
+    iv = S._half_up(x * S.PQ_INT_SCALE)
+    if res is not None:
+        iv = iv - res[1][np.searchsorted(res[0], cells)]
+    return S.pq_argmin(iv, ic)
+
+
+def _pq_encode_udf(ic: np.ndarray, res: tuple[np.ndarray, np.ndarray] | None):
+    """:func:`_pq_encode` over the (embedding, cell) columns."""
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def encode(emb: pd.Series, cell: pd.Series) -> pd.Series:
         if len(emb) == 0:
             return pd.Series([], dtype=object)
         x = np.vstack(emb.to_numpy()).astype(np.float64)
-        pos = np.searchsorted(ids, cell.to_numpy().astype("int64"))
-        out = S.pq_argmin(S._half_up(x * S.PQ_INT_SCALE) - icents[pos], rcb)
+        out = _pq_encode(x, ic, res, cell.to_numpy().astype("int64"))
         return pd.Series([row.tolist() for row in out])
 
     return encode
@@ -372,15 +430,18 @@ def build_ann_index(
     """Encode the corpus once and land every staging table on disk.
 
     One IVF assignment pass + one PQ encode pass + one LSH banding pass
-    over ``emb`` (all map-only vectorized kernels over the
-    metadata-sized quantizers — zero shuffle; the only exchanges are the
-    partitionBy writes); everything else written here is metadata-sized.
-    Re-runs overwrite atomically per Spark's committer (O13 semantics).
+    over ``emb``, all with the vectorized numpy kernels over the
+    metadata-sized quantizers. An input whose plan estimate fits one
+    scan split (:func:`_collect_small`) is collected once and landed on
+    the driver with pyarrow writes; a larger one runs as map-only Spark
+    UDF passes whose only exchanges are the partitionBy writes. Either
+    way a re-run overwrites every table it writes.
 
-    ``n_centroids=None`` sizes the coarse quantizer with the
-    FLOP-balanced sqrt-of-corpus rule (auto_n_centroids) at the cost of
-    one count job; the explicit default S.N_CENTROIDS keeps fixture
-    corpora and registered-query artifacts deterministic.
+    ``n_centroids=None`` sizes the coarse quantizer with
+    :func:`auto_n_centroids` (cells of about AUTO_CELL_ROWS vectors;
+    the count is one job above the bound, free below it); the explicit
+    default S.N_CENTROIDS keeps fixture corpora and registered-query
+    artifacts deterministic.
 
     ``refine_iters > 0`` trains the coarse quantizer with Lloyd's
     k-means (similarity.kmeans_centroids — the production refinement the
@@ -401,8 +462,11 @@ def build_ann_index(
     uniform ones raw; the choice and ratio are stamped in the manifest).
     """
     _start_build(index_dir)
-    if n_centroids is None:  # auto: sqrt-of-corpus rule (one count job)
-        n_centroids = auto_n_centroids(emb.count())
+    local = _collect_small(spark, emb)
+    if n_centroids is None:  # auto: constant cell volume
+        n_centroids = auto_n_centroids(
+            emb.count() if local is None else local.num_rows
+        )
     if refine_iters > 0:
         # mini-batch k-means past fixture scale: train the quantizer on
         # a deterministic hash sample (plus the init prefix) — the
@@ -428,19 +492,20 @@ def build_ann_index(
             .select(
                 "cell", F.col("c_emb").cast("array<float>").alias("c_emb")
             )
+            .toArrow()
         )
     else:
-        cents = emb.filter(F.col("vec_id") < n_centroids).select(
-            F.col("vec_id").cast("int").alias("cell"),
-            F.col("embedding").alias("c_emb"),
+        head = _prefix(emb, local, n_centroids)
+        cents = pa.table(
+            {"cell": head["vec_id"].cast(pa.int32()), "c_emb": head["embedding"]}
         )
-    cents.coalesce(1).write.mode("overwrite").parquet(M.table_path(index_dir, "centroids"))
-    # map-only assignment against the JUST-WRITTEN centroid table (the
-    # same kernel and semantics as similarity.ivf_cells; for
-    # refine_iters=0 the matrix is identical, so so are the cells)
-    cells, centroids = _assign_stored(spark, index_dir, emb)
-    _build_corpus(
-        spark, index_dir, cells, residual, centroids, n_tables, n_planes
+    _write_pa(index_dir, "centroids", cents, overwrite=True)
+    # assignment against the JUST-WRITTEN centroid table (the same
+    # kernel and semantics as similarity.ivf_cells; for refine_iters=0
+    # the matrix is identical, so so are the cells)
+    _land(
+        spark, index_dir, emb, local, _stored_assigner(spark, index_dir),
+        residual, "overwrite", n_tables, n_planes,
     )
 
 
@@ -481,67 +546,329 @@ def _persisted(df: DataFrame):
         df.unpersist()
 
 
-def _build_corpus(
-    spark: SparkSession,
+# --------------------------------------------------------------------------
+# Where a build or append runs: the driver landing below the bound, the
+# Spark plan above it (module docstring, "Who writes each table").
+
+
+def _plan_bytes(df: DataFrame) -> int:
+    """Spark's size estimate of ``df``'s optimized plan, in bytes —
+    computed without a job; for a parquet scan, its files' bytes (a
+    filter does not lower it)."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def _collect_small(spark: SparkSession, df: DataFrame) -> pa.Table | None:
+    """``df``'s (vec_id, embedding, sampled) rows, collected in one
+    ``toArrow()`` job when :func:`_plan_bytes` is at most
+    ``max_partition_bytes``; None above that bound. ``sampled`` is the
+    residual="auto" diagnostic's sample predicate (:func:`_sampled`), so
+    the driver measures the ratio on exactly the rows Spark samples."""
+    if _plan_bytes(df) > max_partition_bytes(spark):
+        return None
+    return df.select("vec_id", "embedding", _sampled().alias("sampled")).toArrow()
+
+
+def _prefix(emb: DataFrame, local: pa.Table | None, n: int) -> pa.Table:
+    """(vec_id, embedding) of the rows with vec_id < ``n``, sorted by
+    vec_id: from the collected input, or one small Spark collect."""
+    if local is None:
+        head = emb.filter(F.col("vec_id") < n).select("vec_id", "embedding")
+        head = head.toArrow()
+    else:
+        head = local.filter(pc.less(local["vec_id"], n))
+    return head.select(["vec_id", "embedding"]).sort_by("vec_id")
+
+
+def _batches(spark: SparkSession, t: pa.Table):
+    """(offset, slice, float64 embedding matrix) of ``t`` in slices of
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows — one UDF
+    batch, so the driver landing holds no more float64 rows at a time
+    than a UDF does."""
+    step = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    step = step if step > 0 else max(1, t.num_rows)
+    for off in range(0, t.num_rows, step):
+        sl = t.slice(off, step)
+        yield off, sl, _matrix(sl["embedding"])
+
+
+@functools.cache
+def _openblas_threads():
+    """(get, set) of the thread count of the OpenBLAS numpy loaded, or
+    None where this process maps no OpenBLAS (another BLAS, or no
+    ``/proc``)."""
+    try:
+        with open("/proc/self/maps") as fh:
+            libs = sorted({ln.split()[-1] for ln in fh if "openblas" in ln})
+    except OSError:
+        return None
+    for path in libs:
+        lib = ctypes.CDLL(path)
+        for suffix in ("64_", ""):
+            get = getattr(lib, f"openblas_get_num_threads{suffix}", None)
+            put = getattr(lib, f"openblas_set_num_threads{suffix}", None)
+            if get is not None and put is not None:
+                put.argtypes = [ctypes.c_int]
+                return get, put
+    return None
+
+
+@contextmanager
+def _one_blas_thread():
+    """Run numpy's BLAS on one thread for the block, as PySpark runs it
+    in UDF workers (OMP_NUM_THREADS = spark.task.cpus). Threaded
+    OpenBLAS keeps its pool spinning after each call; on the driver that
+    spin was charged to whatever ran next (about 0.1 CPU-s on the first
+    search after a 1k-vector append, 4 vCPUs). The thread count does not
+    change a product here: OpenBLAS splits the rows and columns over
+    threads, never one dot product."""
+    blas = _openblas_threads()
+    if blas is None:
+        yield
+        return
+    get, put = blas
+    before = get()
+    put(1)
+    try:
+        yield
+    finally:
+        put(before)
+
+
+def _matrix(col) -> np.ndarray:
+    """A list column of equal-length vectors as a float64 matrix."""
+    flat = pc.list_flatten(col).to_numpy().astype(np.float64)
+    return flat.reshape(len(col), -1) if len(col) else flat.reshape(0, S.DIM)
+
+
+def _list_array(mat: np.ndarray, dtype: pa.DataType | None = None) -> pa.Array:
+    """The rows of ``mat`` as an Arrow list column (Spark's array)."""
+    n, width = mat.shape
+    offsets = pa.array(np.arange(0, (n + 1) * width, width, dtype=np.int32))
+    return pa.ListArray.from_arrays(offsets, pa.array(mat.ravel(), type=dtype))
+
+
+def _write_pa(
     index_dir: str,
-    assigned: DataFrame,
-    residual: bool | str,
-    centroids: tuple[np.ndarray, np.ndarray],
-    n_tables: int = S.N_TABLES,
-    n_planes: int = S.N_PLANES,
+    table: str,
+    t: pa.Table,
+    parts: tuple[str, ...] = (),
+    overwrite: bool = False,
 ) -> None:
-    """The driver builds' tail: persist the assignment, resolve
-    ``residual`` on it (``"auto"`` measures the intra-cell / global
-    variance ratio against ``centroids`` = (sorted cell ids, their FLOAT
-    rows)), then land the corpus."""
-    with _persisted(assigned) as assigned:
-        residual = _resolve_residual_auto(
-            index_dir,
-            residual,
-            lambda: _assignment_variance_ratio(assigned, *centroids),
+    """Land ``t`` as ``table`` with pyarrow, laid out as Spark's
+    ``partitionBy`` writes it: one file per value of ``parts`` under
+    ``col=value`` directories, the partition columns dropped from the
+    files. Each file gets a fresh ``part-<uuid>.parquet`` name (the
+    quantizer caches key on file names), is written hidden and then
+    renamed into place; ``_SUCCESS`` comes last. ``overwrite`` first
+    clears the table, as Spark's overwrite does."""
+    root = M.table_path(index_dir, table)
+    if overwrite:
+        shutil.rmtree(root, ignore_errors=True)
+    os.makedirs(root, exist_ok=True)
+    if not parts:
+        _write_file(root, t)
+    elif t.num_rows:
+        t = t.take(pc.sort_indices(t, [(p, "ascending") for p in parts]))
+        keys = np.stack([t[p].to_numpy() for p in parts], axis=1)
+        starts = np.flatnonzero(
+            np.r_[True, (keys[1:] != keys[:-1]).any(axis=1)]
         )
-        _land_corpus(
-            spark,
-            index_dir,
-            assigned,
-            "overwrite",
-            centroids if residual else None,
-            n_tables,
-            n_planes,
-        )
+        data = t.drop_columns(list(parts))
+        for s, e in zip(starts, np.r_[starts[1:], len(keys)]):
+            sub = os.path.join(
+                root, *(f"{p}={v}" for p, v in zip(parts, keys[s]))
+            )
+            _write_file(sub, data.slice(s, e - s))
+    open(os.path.join(root, "_SUCCESS"), "w").close()
 
 
-def _assign_stored(
-    spark: SparkSession, index_dir: str, emb: DataFrame
-) -> tuple[DataFrame, tuple[np.ndarray, np.ndarray]]:
-    """``emb`` assigned against the STORED quantizer of the layout at
-    ``index_dir``: rows (vec_id, embedding, *:func:`_parts`), plus the
-    fine cells as (sorted cell ids, their FLOAT centroid rows) — the
-    residual encoder's input. Single-level: the map-only nearest-cell
-    kernel of similarity.ivf_cells. Two-level: the composed assignment
-    (:func:`_assign_2level`) against ``coarse/`` and ``fine/``."""
+def _write_file(directory: str, t: pa.Table) -> None:
+    os.makedirs(directory, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(directory, f".{name}.tmp")
+    pq.write_table(t, tmp)
+    os.replace(tmp, os.path.join(directory, name))
+
+
+def _read_pa(index_dir: str, table: str, where=None) -> pa.Table:
+    """A metadata-sized table read with pyarrow, with no Spark job:
+    ``col=value`` directories become columns, files Spark skips (names
+    starting with ``.`` or ``_``) are skipped."""
+    return pads.dataset(
+        M.table_path(index_dir, table), format="parquet", partitioning="hive"
+    ).to_table(filter=where)
+
+
+class _Assigner(NamedTuple):
+    """A coarse quantizer as the numpy kernel both landings run:
+    ``nearest`` maps float64 rows to their fine cell ids; ``cells``
+    (sorted) and ``c_mat`` (their FLOAT rows) feed the residual encoder
+    and the variance diagnostic; ``cell_groups`` is each cell's group on
+    the two-level layout, None on the single-level one."""
+
+    nearest: Callable[[np.ndarray], np.ndarray]
+    cells: np.ndarray
+    c_mat: np.ndarray
+    cell_groups: np.ndarray | None = None
+
+    @property
+    def centroids(self) -> tuple[np.ndarray, np.ndarray]:
+        return self.cells, self.c_mat
+
+    @property
+    def names(self) -> tuple[str, ...]:
+        return ("cell",) if self.cell_groups is None else ("group", "cell")
+
+    def parts(self, x: np.ndarray) -> dict[str, np.ndarray]:
+        """The partition columns of the rows ``x``."""
+        cell = self.nearest(x).astype("int64")
+        if self.cell_groups is None:
+            return {"cell": cell}
+        group = self.cell_groups[np.searchsorted(self.cells, cell)]
+        return {"group": group, "cell": cell}
+
+
+def _assigner_1level(c_mat: np.ndarray) -> _Assigner:
+    """Nearest cell by rounded cosine, ties to the lower id — the kernel
+    of similarity.nearest_cell_udf over cells ``0..n-1``."""
+    c_norm = S.row_norms(c_mat)
+    return _Assigner(
+        lambda x: S.nearest_rounded(x, S.row_norms(x), c_mat, c_norm),
+        np.arange(len(c_mat), dtype="int64"),
+        c_mat,
+    )
+
+
+def _stored_assigner(spark: SparkSession, index_dir: str) -> _Assigner:
+    """The STORED quantizer of the layout at ``index_dir``: single-level
+    ``centroids/``, or the composed two-level assignment
+    (:func:`_assigner_2level`) against ``coarse/`` and ``fine/``."""
     if _is_2level(index_dir):
         groups, g_mat = _read_coarse(spark, index_dir)
-        fine = spark.read.parquet(M.table_path(index_dir, "fine")).collect()
-        fine.sort(key=lambda r: r.cell)
-        return _assign_2level(
-            spark,
-            emb,
+        fine = _read_pa(index_dir, "fine").sort_by("cell")
+        return _assigner_2level(
             groups,
             g_mat,
-            np.array([int(r.cell) for r in fine], dtype="int64"),
-            np.array([int(r.group) for r in fine], dtype="int64"),
-            np.array([r.c_emb for r in fine], dtype=np.float64),
+            fine["cell"].to_numpy().astype("int64"),
+            fine["group"].to_numpy().astype("int64"),
+            _matrix(fine["c_emb"]),
         )
     cell_ids, cent_matrix = _read_centroids(spark, index_dir)
     assert cell_ids == list(range(len(cell_ids))), "non-contiguous cells"
-    nearest = S.nearest_cell_udf(cent_matrix)
-    assigned = emb.select(
-        "vec_id",
-        "embedding",
-        nearest(F.col("embedding")).cast("int").alias("cell"),
+    return _assigner_1level(cent_matrix)
+
+
+def _cells_udf(nearest: Callable[[np.ndarray], np.ndarray]):
+    """``nearest`` over the ``embedding`` column, one Arrow batch at a
+    time."""
+
+    @F.pandas_udf(T.LongType())
+    def cells(col: pd.Series) -> pd.Series:
+        if len(col) == 0:
+            return pd.Series([], dtype="int64")
+        return pd.Series(
+            nearest(np.vstack(col.to_numpy()).astype(np.float64)).astype("int64")
+        )
+
+    return cells
+
+
+def _assigned_df(spark: SparkSession, emb: DataFrame, a: _Assigner) -> DataFrame:
+    """``emb`` assigned by ``a`` as a map-only Spark pass: rows
+    (vec_id, embedding, *partition columns); on the two-level layout the
+    cell's group joins back from the metadata-sized cell map."""
+    cell = _cells_udf(a.nearest)(F.col("embedding"))
+    if a.cell_groups is None:
+        return emb.select("vec_id", "embedding", cell.cast("int").alias("cell"))
+    gmap = _local_df(
+        spark,
+        list(zip(a.cells.tolist(), a.cell_groups.tolist())),
+        T.StructType(
+            [
+                T.StructField("cell", T.LongType()),
+                T.StructField("group", T.LongType()),
+            ]
+        ),
     )
-    return assigned, (np.arange(len(cell_ids), dtype="int64"), cent_matrix)
+    return (
+        emb.select("vec_id", "embedding", cell.alias("cell"))
+        .join(F.broadcast(gmap), "cell")
+        .select("vec_id", "embedding", "group", "cell")
+    )
+
+
+def _assign_local(
+    spark: SparkSession, t: pa.Table, a: _Assigner
+) -> dict[str, np.ndarray]:
+    """The collected rows ``t`` assigned by ``a``: each partition column
+    as one array aligned with ``t``."""
+    chunks = [a.parts(x) for _, _, x in _batches(spark, t)]
+    return {
+        c: np.concatenate([ch[c] for ch in chunks] or [np.empty(0, "int64")])
+        for c in a.names
+    }
+
+
+def _local_variance_ratio(
+    spark: SparkSession, t: pa.Table, cells: np.ndarray, a: _Assigner
+) -> float:
+    """:func:`_assignment_variance_ratio` on the driver: the same
+    partials, over the rows the ``sampled`` column marks, one UDF batch
+    at a time."""
+    partials = []
+    for off, sl, x in _batches(spark, t):
+        m = sl["sampled"].to_numpy()
+        if m.any():
+            pos = np.searchsorted(a.cells, cells[off : off + len(x)][m])
+            partials.append(_partial(x[m], a.c_mat[pos]))
+    return _ratio_from_partials(partials)
+
+
+def _land(
+    spark: SparkSession,
+    index_dir: str,
+    emb: DataFrame,
+    local: pa.Table | None,
+    a: _Assigner,
+    residual: bool | str,
+    mode: str,
+    n_tables: int = S.N_TABLES,
+    n_planes: int = S.N_PLANES,
+) -> None:
+    """Assign ``emb`` by ``a`` and land every corpus table: on the driver
+    when ``local`` holds the collected input (:func:`_land_local`), else
+    the Spark plan over the persisted assignment (:func:`_land_corpus`).
+    A build (``mode="overwrite"``) first resolves ``residual`` on the
+    assignment (``"auto"`` measures the intra-cell / global variance
+    ratio); an append passes the stored flag."""
+    if local is not None:
+        with _one_blas_thread():
+            parts = _assign_local(spark, local, a)
+            if mode == "overwrite":
+                residual = _resolve_residual_auto(
+                    index_dir,
+                    residual,
+                    lambda: _local_variance_ratio(
+                        spark, local, parts["cell"], a
+                    ),
+                )
+            _land_local(
+                spark, index_dir, local, parts, mode,
+                a.centroids if residual else None, n_tables, n_planes,
+            )
+        return
+    with _persisted(_assigned_df(spark, emb, a)) as assigned:
+        if mode == "overwrite":
+            residual = _resolve_residual_auto(
+                index_dir,
+                residual,
+                lambda: _assignment_variance_ratio(assigned, *a.centroids),
+            )
+        _land_corpus(
+            spark, index_dir, assigned, mode,
+            a.centroids if residual else None, n_tables, n_planes,
+        )
 
 
 def _land_corpus(
@@ -586,14 +913,21 @@ def _land_corpus(
         )
 
     if mode == "overwrite":
-        _write_codebook(spark, index_dir, assigned, centroids)
-    ic = _load_codebook(spark, index_dir)
-    if centroids is None:
-        codes = S.pq_encode_udf(ic)(F.col("embedding"))
-    else:
-        codes = _pq_encode_residual_cells_udf(
-            ic, centroids[0], _int_centroids(centroids[1])
-        )(F.col("embedding"), F.col("cell"))
+        head = (
+            assigned.filter(F.col("vec_id") < S.PQ_K)
+            .select("vec_id", "embedding", "cell")
+            .toArrow()
+        )
+        _write_codebook(
+            index_dir,
+            head["vec_id"].to_numpy(),
+            _matrix(head["embedding"]),
+            head["cell"].to_numpy(),
+            centroids,
+        )
+    codes = _pq_encode_udf(
+        _load_codebook(spark, index_dir), _residual_rows(centroids)
+    )(F.col("embedding"), F.col("cell"))
     write(assigned.select("vec_id", *parts, codes.alias("codes")), "vectors")
     write(assigned.select("vec_id", "embedding", *parts), "raw")
     if "sq8" in tables:
@@ -604,7 +938,7 @@ def _land_corpus(
             _sq8_encode_udf(vmin, scale)(F.col("embedding")).alias("codes"),
         )
         write(sq8_new, "sq8")
-        _accumulate_sq8_counters(index_dir, sq8_new)
+        _accumulate_sq8_counters(index_dir, lambda: _sq8_code_aggregate(sq8_new))
         if "sq8_prefix" in tables:
             pdims = int(M.read_meta(index_dir, _SQ8_PREFIX_DIMS_KEY))
             write(
@@ -621,7 +955,9 @@ def _land_corpus(
             _binary_encode_udf(thresh)(F.col("embedding")).alias("words"),
         )
         write(bin_new, "binary")
-        _accumulate_binary_counters(index_dir, bin_new)
+        _accumulate_binary_counters(
+            index_dir, lambda: _binary_ones_aggregate(bin_new)
+        )
     if "lsh_buckets" in tables:
         write(
             S.lsh_buckets_long(
@@ -631,35 +967,128 @@ def _land_corpus(
         )
 
 
-def _write_codebook(
+def _land_local(
     spark: SparkSession,
     index_dir: str,
-    assigned: DataFrame,
+    t: pa.Table,
+    parts: dict[str, np.ndarray],
+    mode: str,
+    centroids: tuple[np.ndarray, np.ndarray] | None,
+    n_tables: int = S.N_TABLES,
+    n_planes: int = S.N_PLANES,
+) -> None:
+    """:func:`_land_corpus` on the driver, for the collected rows ``t``
+    assigned to ``parts``: the same tables from the same numpy kernels,
+    encoded one UDF batch at a time and written with :func:`_write_pa`
+    (a build clears each table first); the drift counters are counted on
+    the same codes."""
+    tables = _table_map(index_dir)
+    ids = t["vec_id"].to_numpy()
+    if mode == "overwrite":
+        head = np.flatnonzero(ids < S.PQ_K)
+        _write_codebook(
+            index_dir,
+            ids[head],
+            _matrix(t["embedding"].take(head)),
+            parts["cell"][head],
+            centroids,
+        )
+    ic = _load_codebook(spark, index_dir)
+    res = _residual_rows(centroids)
+    if "sq8" in tables:
+        vmin, scale = _read_sq_stats(spark, index_dir)
+        pdims = M.read_meta(index_dir, _SQ8_PREFIX_DIMS_KEY, None)
+    if "binary" in tables:
+        thresh = _read_bin_thresh(spark, index_dir)
+    out = {name: [] for name in _CORPUS_TABLES if name in tables}
+    sq8_counts, ones = np.zeros(3, dtype=np.int64), 0
+    for off, sl, x in _batches(spark, t):
+        p = {c: v[off : off + len(x)] for c, v in parts.items()}
+
+        def rows(**cols) -> pa.Table:
+            return pa.table({"vec_id": sl["vec_id"], **cols, **p})
+
+        codes = _pq_encode(x, ic, res, p["cell"])
+        out["vectors"].append(rows(codes=_list_array(codes)))
+        out["raw"].append(rows(embedding=sl["embedding"]))
+        if "sq8" in out:
+            c8 = _sq8_encode_np(x, vmin, scale).astype(np.int32)
+            out["sq8"].append(rows(codes=_list_array(c8)))
+            sq8_counts += (((c8 < 0) | (c8 > 255)).sum(), c8.size, len(c8))
+            if "sq8_prefix" in out:
+                out["sq8_prefix"].append(
+                    rows(codes=_list_array(c8[:, : int(pdims)]))
+                )
+        if "binary" in out:
+            words = _pack_bits(x > thresh[None, :])
+            out["binary"].append(rows(words=_list_array(words)))
+            ones += int(np.unpackbits(words.view(np.uint8)).sum())
+        if "lsh_buckets" in out:
+            b = S.lsh_bucket_strings(x, n_tables, n_planes)
+            out["lsh_buckets"].append(
+                pa.table(
+                    {
+                        "vec_id": np.repeat(ids[off : off + len(x)], n_tables),
+                        "bucket": pa.array(b.ravel(), pa.string()),
+                        "table_id": np.tile(
+                            np.arange(n_tables, dtype=np.int32), len(x)
+                        ),
+                    }
+                )
+            )
+    for table, chunks in out.items():
+        if chunks:
+            _write_pa(
+                index_dir, table, pa.concat_tables(chunks), tables[table],
+                overwrite=mode == "overwrite",
+            )
+    if "sq8" in out:
+        _accumulate_sq8_counters(index_dir, lambda: tuple(sq8_counts))
+    if "binary" in out:
+        _accumulate_binary_counters(index_dir, lambda: (ones, len(ids)))
+
+
+# The corpus tables a landing writes, where :func:`_table_map` lists them.
+_CORPUS_TABLES = ("vectors", "raw", "sq8", "sq8_prefix", "binary", "lsh_buckets")
+
+
+def _write_codebook(
+    index_dir: str,
+    ids: np.ndarray,
+    x: np.ndarray,
+    cells: np.ndarray,
     centroids: tuple[np.ndarray, np.ndarray] | None,
 ) -> None:
-    """Land the PQ codebook from the assigned rows with vec_id < PQ_K:
-    their integer components, or — given ``centroids`` — their residuals
-    against their own cells' integer centroids, in the same schema."""
-    head = assigned.filter(F.col("vec_id") < S.PQ_K)
-    if centroids is None:
-        (
-            S.pq_long_form(head)
-            .select(
-                "subspace",
-                "dim",
-                F.col("vec_id").cast("int").alias("cell"),
-                F.col("iv").alias("ic"),
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(M.table_path(index_dir, "codebook"))
-        )
-        return
-    icents = _int_centroids(centroids[1])
-    rcb = _residual_codebook_from_rows(
-        head.collect(), dict(zip(centroids[0].tolist(), icents))
+    """Land the PQ codebook (subspace, dim, cell, ic) from the rows with
+    vec_id < PQ_K (``ids``, their float64 rows ``x`` and ``cells``):
+    their integer components at cell = vec_id; or — given ``centroids``
+    = (sorted cell ids, FLOAT rows) — their residuals against their own
+    cells' integer centroids, at positional cells 0..k-1 in vec_id order
+    (which coincides with the vec_ids on a dense prefix, as the SQL
+    twins assume)."""
+    order = np.argsort(ids, kind="stable")
+    iv = S._half_up(x[order] * S.PQ_INT_SCALE)
+    cell = ids[order]
+    if centroids is not None:
+        width = S.PQ_M * S.PQ_SUB
+        pos = np.searchsorted(centroids[0], cells[order])
+        iv = iv[:, :width] - _int_centroids(centroids[1])[pos, :width]
+        cell = np.arange(len(iv))
+    n, width = iv.shape
+    comp = np.arange(width)
+    _write_pa(
+        index_dir,
+        "codebook",
+        pa.table(
+            {
+                "subspace": pa.array(np.tile(comp // S.PQ_SUB, n), pa.int32()),
+                "dim": pa.array(np.tile(comp % S.PQ_SUB, n), pa.int32()),
+                "cell": pa.array(np.repeat(cell, width), pa.int32()),
+                "ic": pa.array(iv.ravel(), pa.int64()),
+            }
+        ),
+        overwrite=True,
     )
-    _write_residual_codebook(spark, index_dir, rcb)
 
 
 def append_to_ann_index(
@@ -676,25 +1105,21 @@ def append_to_ann_index(
     immutable once built: the IVF-PQ invariant that makes append O(new),
     and what keeps old and new codes comparable under one ADC LUT), then
     their rows APPEND into the partitioned tables — existing partitions'
-    files are never rewritten. A residual index (the manifest flag)
-    encodes residuals against the stored cells. Equivalence with a
-    from-scratch build over the union corpus is pinned by
-    tests/test_ann_index.py (same quantizers ⇒ identical assignments,
-    codes, bands, and search results). ``n_tables``/``n_planes`` shape
-    the single-level layout's LSH bands."""
+    files are never rewritten. New vectors that fit one scan split land
+    on the driver (:func:`_collect_small`), larger batches through Spark.
+    A residual index (the manifest flag) encodes residuals against the
+    stored cells. Equivalence with a from-scratch build over the union
+    corpus is pinned by tests/test_ann_index.py (same quantizers ⇒
+    identical assignments, codes, bands, and search results).
+    ``n_tables``/``n_planes`` shape the single-level layout's LSH
+    bands."""
     _check_layout(index_dir)
-    assigned, centroids = _assign_stored(spark, index_dir, emb_new)
-    residual = M.read_meta(index_dir, _RESIDUAL_KEY, False)
-    with _persisted(assigned) as assigned:
-        _land_corpus(
-            spark,
-            index_dir,
-            assigned,
-            "append",
-            centroids if residual else None,
-            n_tables,
-            n_planes,
-        )
+    a = _stored_assigner(spark, index_dir)
+    _land(
+        spark, index_dir, emb_new, _collect_small(spark, emb_new), a,
+        M.read_meta(index_dir, _RESIDUAL_KEY, False), "append",
+        n_tables, n_planes,
+    )
 
 
 def delete_from_ann_index(spark: SparkSession, vec_ids, index_dir: str) -> None:
@@ -743,10 +1168,8 @@ def _rounded_cosines(q: np.ndarray, mat: np.ndarray) -> np.ndarray:
 def _read_centroids(spark: SparkSession, index_dir: str):
     def load():
         _check_layout(index_dir)  # every single-level reader passes here
-        rows = spark.read.parquet(M.table_path(index_dir, "centroids")).collect()
-        rows.sort(key=lambda r: r.cell)
-        cells = [int(r.cell) for r in rows]
-        return cells, np.array([r.c_emb for r in rows], dtype=np.float64)
+        t = _read_pa(index_dir, "centroids").sort_by("cell")
+        return t["cell"].to_pylist(), _matrix(t["c_emb"])
 
     return M.cached_table(index_dir, "centroids", load)
 
@@ -755,13 +1178,10 @@ def _load_codebook(spark: SparkSession, index_dir: str) -> np.ndarray:
     """Stored integer codebook as ``ic[subspace][cell][dim]``."""
 
     def load():
-        cb = spark.read.parquet(M.table_path(index_dir, "codebook")).collect()
-        n_sub = max(r.subspace for r in cb) + 1
-        n_cells = max(r.cell for r in cb) + 1
-        sub_dim = max(r.dim for r in cb) + 1
-        ic = np.zeros((n_sub, n_cells, sub_dim), dtype=np.int64)
-        for r in cb:
-            ic[r.subspace, r.cell, r.dim] = r.ic
+        cb = _read_pa(index_dir, "codebook")
+        sub, cell, dim = (cb[c].to_numpy() for c in ("subspace", "cell", "dim"))
+        ic = np.zeros((sub.max() + 1, cell.max() + 1, dim.max() + 1), np.int64)
+        ic[sub, cell, dim] = cb["ic"].to_numpy()
         return ic
 
     return M.cached_table(index_dir, "codebook", load)
@@ -917,9 +1337,7 @@ def _local_df(
     }
     fields = list(schema.fields)
     if lut is not None:
-        width = lut.shape[1]
-        offsets = np.arange(0, (len(lut) + 1) * width, width, dtype=np.int32)
-        cols["d_flat"] = pa.ListArray.from_arrays(offsets, pa.array(lut.ravel()))
+        cols["d_flat"] = _list_array(lut)
         fields.append(T.StructField("d_flat", T.ArrayType(T.LongType())))
     return spark.createDataFrame(pa.table(cols), T.StructType(fields))
 
@@ -1333,20 +1751,15 @@ def _query_buckets(
     queries: list[Query], n_tables: int, n_planes: int
 ) -> list[tuple[int, int, str]]:
     """(q_id, table_id, bucket) — the query's band signatures, computed
-    locally with the exact lsh_buckets_long convention (one matmul,
-    round 6, sign)."""
-    signs_t = S._signs_matrix(n_tables, n_planes, S.DIM).T
-    out = []
-    for q_id, vec in queries:
-        bits = (
-            np.round(np.asarray(vec, dtype=np.float64) @ signs_t, 6) > 0
-        )
-        for t in range(n_tables):
-            bucket = "".join(
-                "1" if bits[t * n_planes + j] else "0" for j in range(n_planes)
-            )
-            out.append((q_id, t, bucket))
-    return out
+    locally with the lsh_buckets_long kernel
+    (:func:`similarity.lsh_bucket_strings`)."""
+    x = np.array([v for _, v in queries], dtype=np.float64)
+    b = S.lsh_bucket_strings(x.reshape(len(queries), S.DIM), n_tables, n_planes)
+    return [
+        (q_id, t, b[i, t])
+        for i, (q_id, _) in enumerate(queries)
+        for t in range(n_tables)
+    ]
 
 
 def ann_index_lsh_topk(
@@ -1457,10 +1870,9 @@ def _read_sq_stats(spark: SparkSession, index_dir: str):
     metadata-sized, cached like the centroid/codebook quantizers."""
 
     def load():
-        rows = spark.read.parquet(M.table_path(index_dir, "sq_stats")).collect()
-        rows.sort(key=lambda r: r.dim)
-        vmin = np.array([r.vmin for r in rows], dtype=np.float64)
-        vmax = np.array([r.vmax for r in rows], dtype=np.float64)
+        t = _read_pa(index_dir, "sq_stats").sort_by("dim")
+        vmin = t["vmin"].to_numpy().astype(np.float64)
+        vmax = t["vmax"].to_numpy().astype(np.float64)
         return vmin, (vmax - vmin) / 255.0
 
     return M.cached_table(index_dir, "sq_stats", load)
@@ -1480,22 +1892,18 @@ def _sq8_encode_udf(vmin: np.ndarray, scale: np.ndarray):
     HALF_UP rounding (S._half_up ≡ Spark/DuckDB ``round``); a
     degenerate dimension (vmax == vmin ⇒ scale 0) encodes to 0 by
     convention."""
-    safe = np.where(scale == 0.0, 1.0, scale)
-    dead = scale == 0.0
 
     @F.pandas_udf("array<int>")
     def encode(emb: pd.Series) -> pd.Series:
         x = np.array(emb.tolist(), dtype=np.float64)
-        codes = np.where(
-            dead[None, :], 0, S._half_up((x - vmin[None, :]) / safe[None, :])
-        ).astype(np.int32)
-        return pd.Series(list(codes))
+        return pd.Series(list(_sq8_encode_np(x, vmin, scale).astype(np.int32)))
 
     return encode
 
 
 def _sq8_encode_np(vec, vmin: np.ndarray, scale: np.ndarray) -> np.ndarray:
-    """Driver-side twin of :func:`_sq8_encode_udf` for query vectors —
+    """SQ8 codes of a vector or of the rows of a matrix — the kernel of
+    :func:`_sq8_encode_udf`, the driver landing and the query side:
     same grid, same HALF_UP rounding (S._half_up ≡ Spark round)."""
     x = np.asarray(vec, dtype=np.float64)
     safe = np.where(scale == 0.0, 1.0, scale)
@@ -1558,15 +1966,18 @@ def _stamp_sq8_counters(index_dir: str, oob: int, comp: int, n: int) -> None:
     M.write_meta(index_dir, _SQ8_ROWS_KEY, int(n))
 
 
-def _accumulate_sq8_counters(index_dir: str, codes_df: DataFrame) -> None:
+def _accumulate_sq8_counters(
+    index_dir: str, counts: Callable[[], tuple[int, int, int]]
+) -> None:
     """Append-time half of the incremental drift accounting: fold the
-    new batch's (oob, components, rows) into the manifest counters —
-    one O(new) aggregate per append instead of an O(corpus) rescan per
-    stats call. No-op when the counters were never stamped (a store
-    from before this accounting): the exact-scan fallback covers it."""
+    new batch's (oob, components, rows) — ``counts()``, one O(new)
+    aggregate or the driver landing's tally — into the manifest counters
+    instead of an O(corpus) rescan per stats call. No-op when the
+    counters were never stamped (a store from before this accounting):
+    the exact-scan fallback covers it."""
     if M.read_meta(index_dir, _SQ8_ROWS_KEY, None) is None:
         return
-    oob, comp, n = _sq8_code_aggregate(codes_df)
+    oob, comp, n = counts()
     _stamp_sq8_counters(
         index_dir,
         M.read_meta(index_dir, _SQ8_OOB_KEY, 0) + oob,
@@ -1814,9 +2225,8 @@ def _read_bin_thresh(spark: SparkSession, index_dir: str) -> np.ndarray:
     quantizers."""
 
     def load():
-        rows = spark.read.parquet(M.table_path(index_dir, "bin_stats")).collect()
-        rows.sort(key=lambda r: r.dim)
-        return np.array([r.thresh for r in rows], dtype=np.float64)
+        t = _read_pa(index_dir, "bin_stats").sort_by("dim")
+        return t["thresh"].to_numpy().astype(np.float64)
 
     return M.cached_table(index_dir, "bin_stats", load)
 
@@ -1902,14 +2312,14 @@ def _stamp_binary_counters(index_dir: str, ones: int, n: int) -> None:
 
 
 def _accumulate_binary_counters(
-    index_dir: str, words_df: DataFrame
+    index_dir: str, counts: Callable[[], tuple[int, int]]
 ) -> None:
     """Append-time half of the bit-balance accounting: fold the new
-    batch's (ones, rows) into the manifest counters — one O(new)
-    aggregate per append, so the balance audit stays O(metadata)."""
+    batch's (ones, rows) — ``counts()`` — into the manifest counters,
+    so the balance audit stays O(metadata)."""
     if M.read_meta(index_dir, _BINARY_ROWS_KEY, None) is None:
         return
-    ones, n = _binary_ones_aggregate(words_df)
+    ones, n = counts()
     _stamp_binary_counters(
         index_dir,
         M.read_meta(index_dir, _BINARY_ONES_KEY, 0) + ones,
@@ -2504,19 +2914,17 @@ def _group_of_cells(c_mat: np.ndarray, g_mat: np.ndarray) -> np.ndarray:
     ).astype("int64")
 
 
-def nearest_cell_2level_udf(
+def _nearest_2level(
     g_ids: np.ndarray,
     g_mat: np.ndarray,
     fine_by_group: dict[int, tuple[np.ndarray, np.ndarray]],
-):
-    """Pandas UDF for the composed two-level assignment: nearest LIVE
-    coarse group, then nearest fine cell within that group — returns the
-    fine ``cell`` id (the group is a function of the cell via the gmap;
-    the build re-attaches it with a broadcast join against the
-    metadata-sized fine table). Each vector's fine argmax touches only
-    its group's ~n_cells/n_groups centroids (the two-level build win:
-    corpus x (G + C/G) cosines, not corpus x C). Same rounded-6 /
-    first-maximum conventions as nearest_cell_udf."""
+) -> Callable[[np.ndarray], np.ndarray]:
+    """The composed two-level assignment kernel: nearest LIVE coarse
+    group, then nearest fine cell within that group; returns fine cell
+    ids. Each vector's fine argmax touches only its group's
+    ~n_cells/n_groups centroids (the two-level build win: corpus x
+    (G + C/G) cosines, not corpus x C). Same rounded-6 / first-maximum
+    conventions as nearest_cell_udf."""
     g = g_mat.astype(np.float64)
     g_norm = S.row_norms(g)
     groups = [
@@ -2525,11 +2933,7 @@ def nearest_cell_2level_udf(
     ]
     assert [gid for gid, *_ in groups] == [int(x) for x in g_ids]
 
-    @F.pandas_udf(T.LongType())
-    def nearest(col: pd.Series) -> pd.Series:
-        if len(col) == 0:
-            return pd.Series([], dtype="int64")
-        x = np.vstack(col.to_numpy()).astype(np.float64)
+    def nearest(x: np.ndarray) -> np.ndarray:
         x_norm = S.row_norms(x)
         # index into the LIVE group list
         gsel = S.nearest_rounded(x, x_norm, g, g_norm)
@@ -2541,7 +2945,7 @@ def nearest_cell_2level_udf(
             out_c[mask] = cell_ids[
                 S.nearest_rounded(x[mask], x_norm[mask], m, m_norm)
             ]
-        return pd.Series(out_c)
+        return out_c
 
     return nearest
 
@@ -2718,75 +3122,47 @@ def _refined_quantizers_2level(
     return live, g_mat, fine_df
 
 
-def _write_residual_codebook(
-    spark: SparkSession, index_dir: str, rcb: np.ndarray
-) -> None:
-    """Land a residual codebook in the standard codebook schema
-    (positional cells 0..k-1 — coincides with the init vec_ids on a
-    dense prefix, which is what the SQL twins assume)."""
-    m, k, sub = rcb.shape
-    rows = [
-        (s, d, c, int(rcb[s, c, d]))
-        for s in range(m)
-        for c in range(k)
-        for d in range(sub)
-    ]
-    spark.createDataFrame(
-        rows, "subspace int, dim int, cell int, ic long"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        M.table_path(index_dir, "codebook")
-    )
-
-
-def _residual_codebook_from_rows(
-    head_rows, icent_by_cell: dict[int, np.ndarray]
-) -> np.ndarray:
-    """rcb[m][k][sub] from the first-PQ_K assigned rows (vec_id,
-    embedding, cell) and a cell -> integer-centroid map — the
-    deterministic-sample convention on RESIDUALS."""
-    head = sorted(head_rows, key=lambda r: r.vec_id)
-    rcb = np.zeros((S.PQ_M, len(head), S.PQ_SUB), dtype=np.int64)
-    for k, r in enumerate(head):
-        ir = (
-            S._half_up(
-                np.asarray(r.embedding, dtype=np.float64) * S.PQ_INT_SCALE
-            )
-            - icent_by_cell[int(r.cell)]
-        )
-        for s in range(S.PQ_M):
-            rcb[s, k] = ir[s * S.PQ_SUB : (s + 1) * S.PQ_SUB]
-    return rcb
-
-
-def _write_quantizers_2level(
-    spark: SparkSession,
-    index_dir: str,
-    groups: list[int],
-    g_rows: np.ndarray,
-    fine_df: DataFrame,
-    elem: T.DataType,
+def _write_coarse(
+    index_dir: str, groups: list[int], g_rows: np.ndarray, elem: pa.DataType
 ) -> None:
     """Land ``coarse/`` (group, g_emb array<elem>) from ``groups`` and
-    their rows, and ``fine/`` (cell, c_emb) partitioned by group from
-    ``fine_df`` (cell, group, c_emb). Refined quantizers are DOUBLES
-    (see _refined_quantizers_2level), prefix ones floats."""
-    spark.createDataFrame(
-        [(g, [float(x) for x in row]) for g, row in zip(groups, g_rows)],
-        T.StructType(
-            [
-                T.StructField("group", T.LongType()),
-                T.StructField("g_emb", T.ArrayType(elem)),
-            ]
+    their rows. Refined quantizers are DOUBLES (see
+    _refined_quantizers_2level), prefix ones floats."""
+    _write_pa(
+        index_dir,
+        "coarse",
+        pa.table(
+            {
+                "group": pa.array(groups, pa.int64()),
+                "g_emb": _list_array(
+                    np.asarray(g_rows).astype(elem.to_pandas_dtype())
+                ),
+            }
         ),
-    ).coalesce(1).write.mode("overwrite").parquet(
-        M.table_path(index_dir, "coarse")
+        overwrite=True,
     )
-    (
-        fine_df.select("cell", "group", "c_emb")
-        .repartition("group")
-        .write.mode("overwrite")
-        .partitionBy("group")
-        .parquet(M.table_path(index_dir, "fine"))
+
+
+def _write_fine(
+    index_dir: str,
+    cells: np.ndarray,
+    cell_groups: np.ndarray,
+    c_mat: np.ndarray,
+    elem: pa.DataType,
+) -> None:
+    """Land ``fine/`` (cell, c_emb array<elem>) partitioned by group."""
+    _write_pa(
+        index_dir,
+        "fine",
+        pa.table(
+            {
+                "cell": pa.array(cells, pa.int64()),
+                "c_emb": _list_array(c_mat.astype(elem.to_pandas_dtype())),
+                "group": pa.array(cell_groups, pa.int64()),
+            }
+        ),
+        ("group",),
+        overwrite=True,
     )
 
 
@@ -2813,14 +3189,17 @@ def build_ann_index_2level(
     with :func:`auto_quantizer_shape` (one count job); shapes the rule
     maps to single-level still build fine here (n_groups=1 is just one
     coarse shard). Corpus assignment is ONE map-only pass
-    (nearest_cell_2level_udf — no join, no shuffle; the only exchange is
+    (:func:`_nearest_2level` — no join, no shuffle; the only exchange is
     the partitionBy write), feeding BOTH partitioned layouts: ``raw/``
     (the exact-rerank arm) and ``vectors/`` (PQ codes — the arm a
     billion-vector probe actually scans; codebook convention identical
     to :func:`build_ann_index`, so quantizer immutability and code
     comparability carry over verbatim)."""
+    local = _collect_small(spark, emb)
     if n_groups is None or n_cells is None:
-        auto_g, auto_c = auto_quantizer_shape(emb.count())
+        auto_g, auto_c = auto_quantizer_shape(
+            emb.count() if local is None else local.num_rows
+        )
         n_groups = auto_g if n_groups is None else n_groups
         n_cells = auto_c if n_cells is None else n_cells
     _start_build(index_dir)
@@ -2828,28 +3207,20 @@ def build_ann_index_2level(
         groups, g_mat, fine_df = _refined_quantizers_2level(
             spark, emb, n_groups, n_cells, refine_iters, train_fraction
         )
-        # coarse stores ALL trained groups: query probes rank over the
-        # full trained set (the twin's g1), including a group that won
-        # no cosine members (it then simply has no fine shard to scan).
-        _write_quantizers_2level(
-            spark, index_dir, groups, g_mat, fine_df, T.DoubleType()
-        )
         # driver build contract: the fine quantizer is collectible
         # (<= n_cells rows — the same feasibility clamp as the prefix
         # path's pool collect)
-        fine_rows = fine_df.collect()
-        fine_rows.sort(key=lambda r: r.cell)
-        cells = np.array([int(r.cell) for r in fine_rows], dtype="int64")
-        cell_groups = np.array([int(r.group) for r in fine_rows], dtype="int64")
-        c_mat = np.array([r.c_emb for r in fine_rows], dtype=np.float64)
+        fine = fine_df.toArrow().sort_by("cell")
+        cells = fine["cell"].to_numpy().astype("int64")
+        cell_groups = fine["group"].to_numpy().astype("int64")
+        c_mat = _matrix(fine["c_emb"])
+        # coarse stores ALL trained groups: query probes rank over the
+        # full trained set (the twin's g1), including a group that won
+        # no cosine members (it then simply has no fine shard to scan).
+        _write_coarse(index_dir, groups, g_mat, pa.float64())
+        _write_fine(index_dir, cells, cell_groups, c_mat, pa.float64())
     else:
-        cent_rows = (
-            emb.filter(F.col("vec_id") < max(n_groups, n_cells))
-            .select("vec_id", "embedding")
-            .collect()
-        )
-        cent_rows.sort(key=lambda r: r.vec_id)
-        mat = np.array([r.embedding for r in cent_rows], dtype=np.float64)
+        mat = _matrix(_prefix(emb, local, max(n_groups, n_cells))["embedding"])
         # corpora whose low ids are sparse (a half-built fixture, a
         # slice) may yield fewer quantizer rows than requested — clamp,
         # as the single-level filter(vec_id < n) implicitly does
@@ -2861,62 +3232,35 @@ def build_ann_index_2level(
         cells = np.arange(n_cells, dtype="int64")
         cell_groups = _group_of_cells(c_mat, g_mat)
         live = sorted({int(g) for g in cell_groups})
-        fine_df = spark.createDataFrame(
-            [
-                (int(c), int(cell_groups[c]), [float(x) for x in c_mat[c]])
-                for c in range(n_cells)
-            ],
-            T.StructType(
-                [
-                    T.StructField("cell", T.LongType()),
-                    T.StructField("group", T.LongType()),
-                    T.StructField("c_emb", T.ArrayType(T.FloatType())),
-                ]
-            ),
-        )
-        _write_quantizers_2level(
-            spark, index_dir, live, g_mat[live], fine_df, T.FloatType()
-        )
+        _write_coarse(index_dir, live, g_mat[live], pa.float32())
+        _write_fine(index_dir, cells, cell_groups, c_mat, pa.float32())
     # one composed-assignment pass feeds every partitioned table
-    assigned, centroids = _assign_2level(
-        spark, emb, groups, g_mat, cells, cell_groups, c_mat
+    _land(
+        spark, index_dir, emb, local,
+        _assigner_2level(groups, g_mat, cells, cell_groups, c_mat),
+        residual, "overwrite",
     )
-    _build_corpus(spark, index_dir, assigned, residual, centroids)
 
 
-def _assign_2level(
-    spark: SparkSession,
-    emb: DataFrame,
+def _assigner_2level(
     groups: list[int],
     g_mat: np.ndarray,
     cells: np.ndarray,
     cell_groups: np.ndarray,
     c_mat: np.ndarray,
-) -> tuple[DataFrame, tuple[np.ndarray, np.ndarray]]:
-    """The composed two-level assignment of ``emb`` — map-only
-    (:func:`nearest_cell_2level_udf`, then the cell's group by a
-    broadcast join) — against the coarse rows ``groups``/``g_mat`` and
-    the fine cells sorted by id (``cells``, their ``cell_groups``, FLOAT
-    rows ``c_mat``). It ranks over the cell-owning groups only: a group
-    with no fine shard can hold no vector. Returns (vec_id, embedding,
-    group, cell) rows and the fine cells as (ids, rows)."""
+) -> _Assigner:
+    """The composed two-level assignment (:func:`_nearest_2level`)
+    against the coarse rows ``groups``/``g_mat`` and the fine cells
+    sorted by id (``cells``, their ``cell_groups``, FLOAT rows
+    ``c_mat``). It ranks over the cell-owning groups only: a group with
+    no fine shard can hold no vector."""
     owning = sorted({int(g) for g in cell_groups})
-    nearest = nearest_cell_2level_udf(
+    nearest = _nearest_2level(
         np.array(owning, dtype="int64"),
         g_mat[np.array([groups.index(g) for g in owning])],
         {g: (cells[cell_groups == g], c_mat[cell_groups == g]) for g in owning},
     )
-    gmap_df = spark.createDataFrame(
-        list(zip(cells.tolist(), cell_groups.tolist())), "cell long, group long"
-    )
-    assigned = (
-        emb.select(
-            "vec_id", "embedding", nearest(F.col("embedding")).alias("cell")
-        )
-        .join(F.broadcast(gmap_df), "cell")
-        .select("vec_id", "embedding", "group", "cell")
-    )
-    return assigned, (cells, c_mat)
+    return _Assigner(nearest, cells, c_mat, cell_groups)
 
 
 # Per-group fine-centroid shards, loaded lazily: a reader fetches only
@@ -2931,29 +3275,22 @@ def _fine_shards(
     cache = M.cached_table(index_dir, "fine", dict)
     missing = sorted(g for g in groups if g not in cache)
     if missing:
-        rows = (
-            spark.read.parquet(M.table_path(index_dir, "fine"))
-            .where(F.col("group").isin(missing))
-            .collect()
-        )
+        t = _read_pa(
+            index_dir, "fine", pads.field("group").isin(missing)
+        ).sort_by("cell")
+        mat = _matrix(t["c_emb"])
         for g in missing:
             cache[g] = []
-        for r in rows:
-            cache[int(r.group)].append(
-                (int(r.cell), np.asarray(r.c_emb, dtype=np.float64))
-            )
-        for g in missing:
-            cache[g].sort(key=lambda ce: ce[0])
+        for g, c, row in zip(t["group"].to_pylist(), t["cell"].to_pylist(), mat):
+            cache[int(g)].append((int(c), row))
     return {g: cache.get(g, []) for g in groups}
 
 
 def _read_coarse(spark: SparkSession, index_dir: str):
     def load():
         _check_layout(index_dir)  # every two-level reader passes here
-        rows = spark.read.parquet(M.table_path(index_dir, "coarse")).collect()
-        rows.sort(key=lambda r: r.group)
-        groups = [int(r.group) for r in rows]
-        return groups, np.array([r.g_emb for r in rows], dtype=np.float64)
+        t = _read_pa(index_dir, "coarse").sort_by("group")
+        return t["group"].to_pylist(), _matrix(t["g_emb"])
 
     return M.cached_table(index_dir, "coarse", load)
 
@@ -3035,15 +3372,9 @@ def _nearest_group_udf(g_ids: np.ndarray, g_mat: np.ndarray):
     assert list(ids) == sorted(ids)
     g = g_mat.astype(np.float64)
     g_norm = S.row_norms(g)
-
-    @F.pandas_udf(T.LongType())
-    def nearest(col: pd.Series) -> pd.Series:
-        if len(col) == 0:
-            return pd.Series([], dtype="int64")
-        x = np.vstack(col.to_numpy()).astype(np.float64)
-        return pd.Series(ids[S.nearest_rounded(x, S.row_norms(x), g, g_norm)])
-
-    return nearest
+    return _cells_udf(
+        lambda x: ids[S.nearest_rounded(x, S.row_norms(x), g, g_norm)]
+    )
 
 
 _ASSIGNED_SCHEMA = "vec_id long, group long, cell long"
@@ -3056,7 +3387,7 @@ def _nearest_in_shard(left: pd.DataFrame, right: pd.DataFrame):
     """One group's corpus rows (``left``) x that group's fine shard
     (``right``): the shard's cells sorted ascending, their FLOAT rows,
     the corpus rows, and each row's nearest-cell position — ONE
-    rounded-cosine matmul, first maximum (the nearest_cell_2level_udf
+    rounded-cosine matmul, first maximum (the _nearest_2level
     tie-break)."""
     order = np.argsort(right["cell"].to_numpy(), kind="stable")
     cells = right["cell"].to_numpy()[order]
@@ -3163,9 +3494,8 @@ def build_ann_index_2level_distributed(
         # assignment ranks over the cell-owning subset — a memberless
         # group never wins a corpus argmax, so winners are unchanged
         # (same reasoning as the driver build's refined branch)
-        _write_quantizers_2level(
-            spark, index_dir, trained, g_mat, fine_df, T.DoubleType()
-        )
+        _write_coarse(index_dir, trained, g_mat, pa.float64())
+        _write_fine_df(index_dir, fine_df)
         owning = sorted(
             int(r.group)
             for r in fine_df.select("group").distinct().collect()
@@ -3215,15 +3545,26 @@ def build_ann_index_2level_distributed(
         live = sorted(
             int(r.group) for r in fine.select("group").distinct().collect()
         )
-        _write_quantizers_2level(
-            spark, index_dir, live, g_mat_all[live], fine, T.FloatType()
-        )
+        _write_coarse(index_dir, live, g_mat_all[live], pa.float32())
+        _write_fine_df(index_dir, fine)
         fine.unpersist()
         _assign_and_land_2level_distributed(
             spark, emb, index_dir, live, g_mat_all[np.array(live)], residual
         )
     finally:
         pool.unpersist()
+
+
+def _write_fine_df(index_dir: str, fine: DataFrame) -> None:
+    """``fine/`` from a Spark frame (cell, group, c_emb): the distributed
+    builds never collect the fine quantizer."""
+    (
+        fine.select("cell", "group", "c_emb")
+        .repartition("group")
+        .write.mode("overwrite")
+        .partitionBy("group")
+        .parquet(M.table_path(index_dir, "fine"))
+    )
 
 
 def _distributed_variance_ratio(
@@ -3313,8 +3654,6 @@ def _assign_and_land_2level_distributed(
         # assigns AND residual-encodes every row — each group's fine
         # shard supplies the centroid components in-kernel, so the
         # quantizer still never leaves the executors.
-        from collections import namedtuple
-
         prefix = emb.filter(F.col("vec_id") < S.PQ_K)
         pref_group = prefix.select(
             "vec_id",
@@ -3332,19 +3671,18 @@ def _assign_and_land_2level_distributed(
         }
         probed = sorted({int(r.group) for r in pref_ids})
         frows = fine_shards.where(F.col("group").isin(probed)).collect()
-        icent_by_cell = {
-            int(r.cell): _int_centroids(
-                np.asarray(r.c_emb, dtype=np.float64)[None, :]
-            )[0]
-            for r in frows
-        }
-        Head = namedtuple("Head", "vec_id embedding cell")
-        head = [
-            Head(int(r.vec_id), pref_emb[int(r.vec_id)], int(r.cell))
-            for r in pref_ids
-        ]
-        rcb = _residual_codebook_from_rows(head, icent_by_cell)
-        _write_residual_codebook(spark, index_dir, rcb)
+        frows.sort(key=lambda r: r.cell)
+        _write_codebook(
+            index_dir,
+            np.array([int(r.vec_id) for r in pref_ids], dtype="int64"),
+            np.array([pref_emb[int(r.vec_id)] for r in pref_ids], np.float64),
+            np.array([int(r.cell) for r in pref_ids], dtype="int64"),
+            (
+                np.array([int(r.cell) for r in frows], dtype="int64"),
+                np.array([r.c_emb for r in frows], dtype=np.float64),
+            ),
+        )
+        rcb = _load_codebook(spark, index_dir)
         assigned_codes = (
             with_group.groupBy("group")
             .cogroup(fine_shards.groupBy("group"))

@@ -23,6 +23,7 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
+import functools
 import hashlib
 
 import numpy as np
@@ -110,6 +111,7 @@ def lsh_bucket(
 NEAR_DUP_PLANES = 6  # near-dup pairing prunes harder: 2^6 buckets/table
 
 
+@functools.lru_cache(maxsize=16)
 def _signs_matrix(n_tables: int, n_planes: int, dim: int):
     return np.array(
         [
@@ -120,40 +122,45 @@ def _signs_matrix(n_tables: int, n_planes: int, dim: int):
     )
 
 
+def lsh_bucket_strings(
+    x: np.ndarray, n_tables: int = N_TABLES, n_planes: int = N_PLANES
+) -> np.ndarray:
+    """(n, n_tables) array of the '0'/'1' band signatures of the float64
+    rows of ``x``: all (tables × planes) projections in one matmul, each
+    rounded to 6 decimals before its sign test, and each table's bits
+    used as an index into the 2^n_planes precomputed strings. The same
+    buckets as the expression path :func:`lsh_bucket` the DuckDB oracle
+    uses (pinned by test); fold-order float noise (~1e-15) cannot flip a
+    bit rounded at 1e-6."""
+    signs_t = _signs_matrix(n_tables, n_planes, DIM).T  # dim × (tables·planes)
+    bits = np.round(x @ signs_t, 6) > 0
+    weights = 1 << np.arange(n_planes - 1, -1, -1)  # first plane leads
+    names = np.array(
+        [format(i, f"0{n_planes}b") for i in range(2**n_planes)], dtype=object
+    )
+    return names[bits.reshape(len(x), n_tables, n_planes) @ weights]
+
+
 def lsh_buckets_long(
     emb: DataFrame, n_tables: int = N_TABLES, n_planes: int = N_PLANES
 ) -> DataFrame:
     """(vec_id, embedding, table_id, bucket) — one row per hash table.
 
-    All (tables × planes) projections happen in ONE numpy matmul per
+    The signatures come from :func:`lsh_bucket_strings`, one matmul per
     Arrow batch — the documented exception to the no-Python-UDF policy:
     a dense numeric kernel where interpreted per-element higher-order
-    functions are 10-100× slower than BLAS. Bucket semantics (sign of
-    the 6-decimal-rounded projection) are identical to the expression
-    path the DuckDB oracle uses; fold-order float noise (~1e-15) cannot
-    flip a bit rounded at 1e-6.
+    functions are 10-100× slower than BLAS.
     """
     from rds_pgbadger_etl_spark.sources.tables import rebalance
 
     emb = rebalance(emb)
-    signs_t = _signs_matrix(n_tables, n_planes, DIM).T  # dim × (tables·planes)
 
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def buckets_of(col: pd.Series) -> pd.Series:
         if len(col) == 0:
             return pd.Series([], dtype=object)
         x = np.vstack(col.to_numpy()).astype(np.float64)  # n × dim
-        bits = np.round(x @ signs_t, 6) > 0  # n × (tables·planes)
-        out = []
-        for row in bits:
-            out.append(
-                [
-                    "".join("1" if row[t * n_planes + j] else "0"
-                            for j in range(n_planes))
-                    for t in range(n_tables)
-                ]
-            )
-        return pd.Series(out)
+        return pd.Series(lsh_bucket_strings(x, n_tables, n_planes).tolist())
 
     return emb.select(
         "vec_id",

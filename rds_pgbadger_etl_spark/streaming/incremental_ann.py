@@ -392,49 +392,78 @@ def run_incremental_ann(
     drifting stream shows up in the bit-balance audit, never as an
     inexact search), appends maintain the words table off the manifest
     flag, and a resume over a store lacking the arm derives it once."""
+    _run_ingest(
+        emb_stream, index_dir, checkpoint_dir, flags_out_dir,
+        exists=ann_index_exists,
+        flag=lambda spark, batch: flag_against_index(
+            spark, batch, index_dir, k, n_probe, threshold
+        ),
+        bootstrap=lambda spark, batch: AI.build_ann_index(
+            spark, batch, index_dir, n_centroids=n_centroids,
+            residual=residual,
+        ),
+        sq8=sq8, sq8_prefix_dims=sq8_prefix_dims, binary=binary,
+    )
+
+
+def _ensure_arms(
+    spark: SparkSession,
+    index_dir: str,
+    sq8: bool,
+    sq8_prefix_dims: int | None,
+    binary: bool,
+) -> None:
+    """Derive any requested-but-absent derived arm (bootstrap and resume
+    share the contract: a request is never silently dropped; both verbs
+    are idempotent)."""
+    if sq8 and not M.read_meta(index_dir, AI._SQ8_KEY, False):
+        AI.add_sq8_to_ann_index(spark, index_dir)
+    if (
+        sq8_prefix_dims is not None
+        and M.read_meta(index_dir, AI._SQ8_PREFIX_DIMS_KEY, None) is None
+    ):
+        AI.add_sq8_prefix_to_ann_index(spark, index_dir, sq8_prefix_dims)
+    if binary and not M.read_meta(index_dir, AI._BINARY_KEY, False):
+        AI.add_binary_to_ann_index(spark, index_dir)
+
+
+def _run_ingest(
+    emb_stream: DataFrame,
+    index_dir: str,
+    checkpoint_dir: str,
+    flags_out_dir: str,
+    exists,
+    flag,
+    bootstrap,
+    sq8: bool,
+    sq8_prefix_dims: int | None,
+    binary: bool,
+) -> None:
+    """The foreachBatch driver both layouts share: while ``exists(
+    index_dir)`` is false, a batch writes no flags and ``bootstrap``
+    builds the index from it; afterwards each batch's ``flag`` rows
+    (checkpointed, so the append below cannot leak into them) are
+    written, then the batch is appended. Either way the requested
+    derived arms are ensured (:func:`_ensure_arms`). Runs with
+    availableNow; exactly-once per batch via the streaming
+    checkpoint."""
     if sq8_prefix_dims is not None and not sq8:
         raise ValueError("sq8_prefix_dims requires sq8=True")
 
-    def _ensure_arms(spark) -> None:
-        """Derive any requested-but-absent derived arm (bootstrap and
-        resume share the contract: a request is never silently
-        dropped; both verbs are idempotent)."""
-        if sq8 and not M.read_meta(index_dir, AI._SQ8_KEY, False):
-            AI.add_sq8_to_ann_index(spark, index_dir)
-        if (
-            sq8_prefix_dims is not None
-            and M.read_meta(index_dir, AI._SQ8_PREFIX_DIMS_KEY, None)
-            is None
-        ):
-            AI.add_sq8_prefix_to_ann_index(
-                spark, index_dir, sq8_prefix_dims
-            )
-        if binary and not M.read_meta(index_dir, AI._BINARY_KEY, False):
-            AI.add_binary_to_ann_index(spark, index_dir)
-
     def process(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        if ann_index_exists(index_dir):
-            flags = flag_against_index(
-                spark, batch, index_dir, k, n_probe, threshold
-            )  # checkpointed — safe across the append below
+        if exists(index_dir):
+            flags = flag(spark, batch)
             flags.withColumn("batch_id", F.lit(batch_id)).write.mode(
                 "append"
             ).parquet(flags_out_dir)
             AI.append_to_ann_index(spark, batch, index_dir)
-            _ensure_arms(spark)
         else:
             spark.createDataFrame([], _FLAG_SCHEMA).withColumn(
                 "batch_id", F.lit(batch_id)
             ).write.mode("append").parquet(flags_out_dir)
-            AI.build_ann_index(
-                spark,
-                batch,
-                index_dir,
-                n_centroids=n_centroids,
-                residual=residual,
-            )
-            _ensure_arms(spark)
+            bootstrap(spark, batch)
+        _ensure_arms(spark, index_dir, sq8, sq8_prefix_dims, binary)
 
     q = (
         emb_stream.writeStream.foreachBatch(process)
@@ -494,54 +523,15 @@ def run_incremental_ann_2level(
     contract as the single-level driver: derived at bootstrap,
     maintained per batch off the manifest keys, derived-once on a
     resume that requests an absent arm; ``binary`` likewise."""
-    if sq8_prefix_dims is not None and not sq8:
-        raise ValueError("sq8_prefix_dims requires sq8=True")
-
-    def _ensure_arms(spark) -> None:
-        if sq8 and not M.read_meta(index_dir, AI._SQ8_KEY, False):
-            AI.add_sq8_to_ann_index(spark, index_dir)
-        if (
-            sq8_prefix_dims is not None
-            and M.read_meta(index_dir, AI._SQ8_PREFIX_DIMS_KEY, None)
-            is None
-        ):
-            AI.add_sq8_prefix_to_ann_index(
-                spark, index_dir, sq8_prefix_dims
-            )
-        if binary and not M.read_meta(index_dir, AI._BINARY_KEY, False):
-            AI.add_binary_to_ann_index(spark, index_dir)
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        if ann_index_2level_exists(index_dir):
-            flags = flag_against_index_2level(
-                spark, batch, index_dir, k, n_probe_groups, n_probe, threshold
-            )  # checkpointed — safe across the append below
-            flags.withColumn("batch_id", F.lit(batch_id)).write.mode(
-                "append"
-            ).parquet(flags_out_dir)
-            AI.append_to_ann_index(spark, batch, index_dir)
-            # same resume contract as the single-level driver: a
-            # requested-but-absent arm is derived, never dropped
-            _ensure_arms(spark)
-        else:
-            spark.createDataFrame([], _FLAG_SCHEMA).withColumn(
-                "batch_id", F.lit(batch_id)
-            ).write.mode("append").parquet(flags_out_dir)
-            AI.build_ann_index_2level(
-                spark,
-                batch,
-                index_dir,
-                n_groups=n_groups,
-                n_cells=n_cells,
-                residual=residual,
-            )
-            _ensure_arms(spark)
-
-    q = (
-        emb_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_ingest(
+        emb_stream, index_dir, checkpoint_dir, flags_out_dir,
+        exists=ann_index_2level_exists,
+        flag=lambda spark, batch: flag_against_index_2level(
+            spark, batch, index_dir, k, n_probe_groups, n_probe, threshold
+        ),
+        bootstrap=lambda spark, batch: AI.build_ann_index_2level(
+            spark, batch, index_dir, n_groups=n_groups, n_cells=n_cells,
+            residual=residual,
+        ),
+        sq8=sq8, sq8_prefix_dims=sq8_prefix_dims, binary=binary,
     )
-    q.awaitTermination()

@@ -2333,3 +2333,169 @@ def test_driver_scoring_opens_only_probed_codes(
     assert opened and len(opened) == len(set(opened))
     assert {os.path.dirname(p) for p in opened} <= probed_dirs
     assert not any("/raw" in p or "embeddings" in p for p in opened)
+
+
+# ---------------------------------------------------------------------------
+# Driver landing: a build or append whose input plan fits one scan split
+# (spark.sql.files.maxPartitionBytes) is collected once and landed with
+# numpy kernels and pyarrow writes; the Spark plan above the bound is its
+# reference.
+
+
+def test_lsh_bucket_strings_match_expression_path(spark):
+    """The LSH signature kernel gives the expression path's buckets
+    (similarity.lsh_bucket, the DuckDB twins' formula) on every fixture
+    vector and table, and on a vector whose projections are all zero."""
+    emb = load_table(spark, SF_SMOKE, "embeddings").select("vec_id", "embedding")
+    zero = spark.createDataFrame(
+        [(-1, [0.0] * S.DIM)], "vec_id long, embedding array<float>"
+    )
+    both = emb.unionByName(zero)
+    for n_planes in (S.N_PLANES, S.NEAR_DUP_PLANES):
+        want = both.select(
+            "vec_id",
+            *[
+                S.lsh_bucket(F.col("embedding"), t, n_planes).alias(f"b{t}")
+                for t in range(S.N_TABLES)
+            ],
+        ).toArrow().sort_by("vec_id")
+        got = S.lsh_bucket_strings(
+            AI._matrix(both.toArrow().sort_by("vec_id")["embedding"]),
+            S.N_TABLES,
+            n_planes,
+        )
+        for t in range(S.N_TABLES):
+            assert want[f"b{t}"].to_pylist() == got[:, t].tolist(), (n_planes, t)
+
+
+def _index_state(d):
+    """Every table's rows (partition columns included) and the whole
+    generation manifest of the index at ``d``, read with pyarrow."""
+    import pyarrow.dataset as pads
+
+    state = {"manifest": M.manifest_snapshot(d)}
+    quantizers = ("coarse", "fine") if AI._is_2level(d) else ("centroids",)
+    for t in (*quantizers, "codebook", "sq_stats", "bin_stats",
+              *AI._CORPUS_TABLES):
+        if t == "fine" or t in AI._table_map(d) or t not in AI._CORPUS_TABLES:
+            tbl = pads.dataset(
+                M.table_path(d, t), format="parquet", partitioning="hive"
+            ).to_table()
+            state[t] = sorted(map(repr, tbl.select(sorted(tbl.column_names))
+                                  .to_pylist()))
+    return state
+
+
+def _clustered_corpus(spark, path):
+    """_clustered_emb written to parquet (ids past 1024, so the auto
+    diagnostic's hash sample is not the whole corpus)."""
+    _clustered_emb(spark, n=1600).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+@pytest.mark.parametrize("residual", [False, True, "auto"],
+                         ids=["raw", "residual", "auto"])
+@pytest.mark.parametrize("layout", sorted(_LAYOUTS))
+def test_driver_landing_matches_spark_landing(spark, tmp_path, layout, residual):
+    """A build, the SQ8, prefix and binary arms, an append on each side
+    of the bound (so each corpus table holds files of both writers), a
+    delete and a compaction leave the same rows in every table and the
+    same manifest as the same lifecycle run wholly through Spark; the
+    searches agree along the way."""
+    build, append = _LAYOUTS[layout]
+    if residual == "auto":
+        emb = _clustered_corpus(spark, str(tmp_path / "corpus.parquet"))
+        cut1, cut2 = 1100, 1400
+    else:
+        emb = load_table(spark, SF_SMOKE, "embeddings")
+        cut1, cut2 = 300, 400
+    qs = [(int(r.vec_id), list(r.embedding))
+          for r in emb.filter(F.col("vec_id") < 5).collect()]
+    est = AI._plan_bytes(emb)
+    assert est < AI.max_partition_bytes(spark)
+
+    def lifecycle(d, driver):
+        def side(on_driver):
+            return _max_partition_bytes(spark, est if on_driver else est - 1)
+
+        with side(driver):
+            build(spark, emb.filter(F.col("vec_id") < cut1), d,
+                  residual=residual)
+        AI.add_sq8_to_ann_index(spark, d)
+        AI.add_sq8_prefix_to_ann_index(spark, d)
+        AI.add_binary_to_ann_index(spark, d)
+        with side(False):
+            append(spark, emb.filter(
+                (F.col("vec_id") >= cut1) & (F.col("vec_id") < cut2)), d)
+        with side(driver):
+            append(spark, emb.filter(F.col("vec_id") >= cut2), d)
+        # delete each query's current nearest hit: the searches below
+        # must drop them from tables holding files of both writers
+        dead = {r.vec_id for r in _ARMS["ivfpq"](spark, d, qs).collect()
+                if r.rank == 1}
+        AI.delete_from_ann_index(spark, sorted(dead), d)
+        mixed = _index_state(d)
+        hits = {}
+        for arm in ("ivfpq", "ivf", "sq8", "binary"):
+            df = _ARMS[arm](spark, d, qs)
+            assert dead.isdisjoint(r.vec_id for r in df.collect()), arm
+            hits[arm] = _rows(df)
+        AI.compact_ann_index(spark, d)
+        return mixed, hits, _index_state(d)
+
+    drv = lifecycle(str(tmp_path / "driver"), True)
+    ref = lifecycle(str(tmp_path / "spark"), False)
+    assert drv[0]["manifest"][AI._RESIDUAL_MODE_KEY]["mode"] == (
+        "auto" if residual == "auto" else "explicit")
+    for got, want in zip(drv, ref):
+        assert got.keys() == want.keys()
+        for key in want:
+            assert got[key] == want[key], key
+    assert all(drv[1].values())
+
+
+@pytest.mark.parametrize("layout", sorted(_LAYOUTS))
+def test_small_build_and_append_start_one_job(spark, tmp_path, layout):
+    """At the bound a build and an append each start exactly one Spark
+    job (the collect); one byte below it they run the Spark plan."""
+    build, append = _LAYOUTS[layout]
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    est = AI._plan_bytes(emb)
+    first = emb.filter(F.col("vec_id") < 400)
+    rest = emb.filter(F.col("vec_id") >= 400)
+    d = str(tmp_path / "idx")
+    with _max_partition_bytes(spark, est):
+        assert _jobs(spark, lambda: build(spark, first, d)) == 1
+        assert _jobs(spark, lambda: append(spark, rest, d)) == 1
+    with _max_partition_bytes(spark, est - 1):
+        assert _jobs(spark, lambda: build(spark, first, d)) > 1
+        assert _jobs(spark, lambda: append(spark, rest, d)) > 1
+
+
+def test_driver_rebuild_is_seen_by_the_next_search(spark, tmp_path):
+    """A driver-side rebuild writes fresh file names, so the quantizer
+    caches of this process miss and the next search answers from the
+    new index exactly as a fresh index over the same build does."""
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    qs = _queries(spark)
+    d, fresh = str(tmp_path / "idx"), str(tmp_path / "fresh")
+    AI.build_ann_index(spark, emb, d)
+    before = _rows(AI.ann_index_ivfpq_topk(spark, d, qs, K))
+    AI.build_ann_index(spark, emb, d, n_centroids=4, residual=True)
+    AI.build_ann_index(spark, emb, fresh, n_centroids=4, residual=True)
+    after = _rows(AI.ann_index_ivfpq_topk(spark, d, qs, K))
+    assert after == _rows(AI.ann_index_ivfpq_topk(spark, fresh, qs, K))
+    assert after != before
+
+
+def test_driver_landing_blas_runs_on_one_thread():
+    """The driver landing runs numpy's BLAS on one thread, as UDF workers
+    do, and gives the previous thread count back."""
+    blas = AI._openblas_threads()
+    if blas is None:
+        pytest.skip("numpy's BLAS is not an OpenBLAS this process maps")
+    get, _ = blas
+    before = get()
+    with AI._one_blas_thread():
+        assert get() == 1
+    assert get() == before
