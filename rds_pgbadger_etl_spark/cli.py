@@ -302,16 +302,21 @@ def run_pipeline(
     html_path: str | None = None,
     strategy: str = "auto",
 ) -> dict:
-    """Select → parse → report → sink; returns row counts per stage and,
-    under ``report_rows``, the row count of each report section."""
+    """Select → parse → report → sink; returns row counts per stage,
+    under ``report_rows`` the row count of each report section, and
+    under ``codegen_compiles`` the generated classes the process
+    compiled during the call."""
     from rds_pgbadger_etl_spark.plans.reports import full_report
+    from rds_pgbadger_etl_spark.session import codegen_compiles
     from rds_pgbadger_etl_spark.sinks.report_sink import (
+        read_events_hours,
         render_html,
         write_events_partitioned,
         write_report,
     )
     from rds_pgbadger_etl_spark.sources.logcatalog import select_names
 
+    compiles = codegen_compiles(spark)
     selected = select_names(_list_names(log_dir), reference_dt, max_records)
     if not selected:
         raise SystemExit(f"no closed-hour log files in {log_dir} before {reference_dt}")
@@ -320,7 +325,8 @@ def run_pipeline(
 
     paths = [os.path.join(log_dir, n) for n in selected]
     events = _parser(spark, strategy, paths)(spark, paths)
-    quality = write_events_partitioned(events, os.path.join(out_dir, "events"))
+    events_dir = os.path.join(out_dir, "events")
+    quality = write_events_partitioned(events, events_dir)
     # targeted: clearCache() would also evict the shared staging tables
     # other queries in this session still hold handles to (plans/_shared)
     release_parse_caches()
@@ -329,14 +335,13 @@ def run_pipeline(
     # report's one action would otherwise re-parse the logs inside each
     # of its 11 section branches. Re-reading also gives every section
     # column pruning at the scan.
-    # Filter to THIS run's (log_date, log_hour) partitions: with dynamic
+    # Read only THIS run's (log_date, log_hour) partitions: with dynamic
     # partition overwrite, hours written by earlier runs into the same
     # out_dir survive the write and must not leak into this run's report
     # (the reference reports exactly the files it processed,
-    # rds_pgbadger.py:44-45). Literal equality on partition columns ⇒
-    # partition-pruned scan.
-    stored = spark.read.parquet(os.path.join(out_dir, "events")).filter(
-        _hours_predicate(selected)
+    # rds_pgbadger.py:44-45).
+    stored = read_events_hours(
+        spark, events_dir, [_parse_hour(n) for n in selected], events.schema
     )
     tables = write_report(full_report(stored), os.path.join(out_dir, "report"))
     if html_path:
@@ -347,6 +352,7 @@ def run_pipeline(
         "files": len(selected),
         **quality,
         "report_rows": {n: t.num_rows for n, t in tables.items()},
+        "codegen_compiles": codegen_compiles(spark) - compiles,
     }
 
 
@@ -390,13 +396,13 @@ def _hours_predicate(file_names: list[str]):
 
 
 def _write_hourly_reports(
-    spark, out_dir: str, file_names: list[str]
+    spark, out_dir: str, file_names: list[str], schema
 ) -> dict[str, int]:
     """One report per newly processed hour — the reference's per-file
     artifact semantics (one pgBadger HTML per input log,
     rds_pgbadger.py:44-45,124-129) in the cron mode. Each hour's
-    sections read ONLY that hour's partition of the stored events
-    (partition-pruned scan) in one Spark action, and land under
+    sections read ONLY that hour's directory of the stored events
+    (``schema`` is the parse plan's) in one Spark action, and land under
     report/log_date=…/log_hour=…/<section>, so a re-processed hour
     replaces exactly its own report. The per-hour loop is cron-scale by
     construction: the reference caps files per run (max_records,
@@ -404,20 +410,18 @@ def _write_hourly_reports(
     report instead. Returns each section's row count, summed over the
     hours.
     """
-    from pyspark.sql import functions as F
-
     from rds_pgbadger_etl_spark.plans.reports import full_report
-    from rds_pgbadger_etl_spark.sinks.report_sink import write_report
+    from rds_pgbadger_etl_spark.sinks.report_sink import (
+        read_events_hours,
+        write_report,
+    )
 
-    stored = spark.read.parquet(os.path.join(out_dir, "events"))
+    events_dir = os.path.join(out_dir, "events")
     rows: dict[str, int] = {}
     for name in file_names:
         d, h = _parse_hour(name)
-        ev_h = stored.filter(
-            (F.col("log_date") == d) & (F.col("log_hour") == h)
-        )
         tables = write_report(
-            full_report(ev_h),
+            full_report(read_events_hours(spark, events_dir, [(d, h)], schema)),
             os.path.join(out_dir, "report", f"log_date={d}", f"log_hour={h}"),
         )
         for n, t in tables.items():
@@ -445,12 +449,16 @@ def run_incremental(
     overwrite, so a re-processed hour replaces exactly itself.
 
     Returns files processed and skipped; when files were processed, also
-    the write's parse-quality counters and ``report_rows`` (each
-    section's row count, summed over the processed hours).
+    the write's parse-quality counters, ``report_rows`` (each section's
+    row count, summed over the processed hours) and ``codegen_compiles``
+    (generated classes the process compiled during the call: 0 when a
+    warm process repeats a tick of a plan shape it has run before).
     """
+    from rds_pgbadger_etl_spark.session import codegen_compiles
     from rds_pgbadger_etl_spark.sinks.report_sink import write_events_partitioned
     from rds_pgbadger_etl_spark.sources.logcatalog import select_names
 
+    compiles = codegen_compiles(spark)
     os.makedirs(out_dir, exist_ok=True)
     manifest = os.path.join(out_dir, "_processed_files.txt")
     done: set[str] = set()
@@ -472,12 +480,15 @@ def run_incremental(
             events, os.path.join(out_dir, "events")
         )
         release_parse_caches()  # splitwise segment cache, if any
-        quality["report_rows"] = _write_hourly_reports(spark, out_dir, todo)
+        quality["report_rows"] = _write_hourly_reports(
+            spark, out_dir, todo, events.schema
+        )
         # atomic manifest update (temp + rename), mirroring O13
         tmp = manifest + ".tmp"
         with open(tmp, "w") as f:
             f.write("\n".join(sorted(done | set(todo))) + "\n")
         os.replace(tmp, manifest)
+        quality["codegen_compiles"] = codegen_compiles(spark) - compiles
     return {"files": len(todo), "skipped": len(closed) - len(todo), **quality}
 
 
@@ -544,6 +555,7 @@ def main(argv: list[str] | None = None) -> None:
         print(f"processed {stats['files']} new files ({stats['skipped']} already done)")
         if "report_rows" in stats:
             print(f"report rows: {json.dumps(stats['report_rows'])}")
+            print(f"codegen compiles: {stats['codegen_compiles']}")
         return
     stats = run_pipeline(
         spark,

@@ -10,6 +10,20 @@ One place to pin the engine-wide execution settings:
 - Arrow on for the few Pandas-UDF paths.
 - Shuffle partitions sized to the local core count for tests; on a real
   cluster AQE's coalescing makes the initial number mostly a ceiling.
+- Generated classes compiled once per process: Spark keys its JVM-wide
+  cache of compiled classes on the generated source, holds
+  CODEGEN_CACHE_ENTRIES of them (``spark.sql.codegen.cache.maxEntries``,
+  a static setting; Spark's default is 100), and leaves the stage id out
+  of the class name (``spark.sql.codegen.useIdInClassName=false``), so
+  two identical stages are one source whatever order AQE planned them
+  in. Measured on 4 vCPUs with ``tools/codegen_rehearsal.py 4`` (four
+  3,410-line ticks, then the 20,460-line backfill): the process needs
+  158 distinct classes. With Spark's defaults every warm tick compiled
+  ~155 of them again with Janino (788 compiles in all), loaded
+  ~330 classes that are never unloaded (metaspace +2.3–4.0 MB per
+  tick) and had the JIT compile them anew; with both settings the
+  first tick compiles 158, every later tick and the backfill none, and
+  metaspace grows 1.1–2.3 MB per tick.
 """
 
 from __future__ import annotations
@@ -38,6 +52,23 @@ def auto_shuffle_partitions(input_bytes: int, cores: int | None = None) -> int:
     smaller, so the number is a spill ceiling, not a latency tax."""
     cores = cores or os.cpu_count() or 8
     return int(max(cores, math.ceil(input_bytes / SHUFFLE_INPUT_BYTES_PER_PARTITION)))
+
+
+# Entries of Spark's JVM-wide cache of compiled generated classes. An
+# LRU smaller than a repeating cycle of plans misses on every entry: a
+# cron process cycles through 158 distinct classes and Spark's default
+# holds 100. 1,000 leaves room for the ANN and registry plans beside it
+# at about 20 KB of metaspace per class.
+CODEGEN_CACHE_ENTRIES = 1000
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes this JVM has compiled so far (Spark's codegen
+    compile-time histogram counts one per cache miss), read over py4j
+    with no job. The difference across a call is that call's compile
+    work; a warm process repeating a plan shape should add none."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def path_bytes(spark: SparkSession, *paths: str) -> int:
@@ -162,6 +193,9 @@ def get_spark(
         # row group. MICROS restores footer/row-group pruning (and is
         # what the testdata itself uses).
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        # compile each generated class once per process (module docstring)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -30,7 +30,14 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DataType, StructField, StructType
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    DateType,
+    IntegerType,
+    StructField,
+    StructType,
+)
 
 from rds_pgbadger_etl_spark.functions.scalar import extract_date_from_name
 
@@ -72,6 +79,43 @@ def write_events_partitioned(events: DataFrame, out_dir: str) -> dict:
     )
     m = obs.get
     return {k: (v or 0) for k, v in m.items()}
+
+
+def read_events_hours(
+    spark, events_dir: str, hours: list[tuple[str, int]], data_schema: StructType
+) -> DataFrame:
+    """The stored events of the (log_date, log_hour) ``hours`` of the
+    table :func:`write_events_partitioned` wrote at ``events_dir``.
+
+    Only those hours' directories are listed (``basePath`` keeps their
+    partition columns): a read of the table's root lists every partition
+    of every earlier run, and past
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32)
+    directories Spark does that listing as a Spark job. The schema is
+    ``data_schema`` (the parse plan's) plus the partition columns, so no
+    footer is read to infer it and an hour whose file held no events —
+    which writes no directory — reads as empty instead of failing; with
+    no directory at all the frame is empty with the same schema. Rows,
+    columns and types equal those of the root read filtered to
+    ``hours``."""
+    # the partition columns as a root read infers them from the names
+    schema = StructType(
+        list(data_schema.fields)
+        + [
+            StructField("log_date", DateType()),
+            StructField("log_hour", IntegerType()),
+        ]
+    )
+    dirs = [
+        os.path.join(events_dir, f"log_date={d}", f"log_hour={h:02d}")
+        for d, h in sorted(set(hours))
+    ]
+    dirs = [p for p in dirs if os.path.isdir(p)]
+    if not dirs:
+        return spark.createDataFrame([], schema)
+    return (
+        spark.read.schema(schema).option("basePath", events_dir).parquet(*dirs)
+    )
 
 
 def _nullable(dt: DataType) -> DataType:

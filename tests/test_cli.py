@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 import shutil
-from datetime import datetime
+from datetime import datetime, timedelta
 
 from tests.test_logparse import FIXTURES
 
@@ -154,10 +154,147 @@ def test_cli_incremental_prints_report_rows(capsys, spark, tmp_path):
     assert lines[1].startswith("report rows: ")
     rows = json.loads(lines[1][len("report rows: "):])
     assert set(rows) == set(REPORT_SECTIONS) and rows["top_queries"] == 3
+    assert lines[2].startswith("codegen compiles: ")
+    assert int(lines[2][len("codegen compiles: "):]) >= 0
     main(argv)
     assert capsys.readouterr().out.splitlines() == [
         "processed 0 new files (1 already done)"
     ]
+
+
+def test_repeated_ticks_compile_no_class(spark, tmp_path):
+    """A warm process that repeats a plan shape compiles no generated
+    class: the third of three ticks of identical hours, and a repeated
+    backfill over the same hours, find every class in Spark's codegen
+    cache (with Spark's 100-entry default and stage ids in the class
+    names, each tick compiled ~155 again)."""
+    from rds_pgbadger_etl_spark.cli import run_incremental
+    from rds_pgbadger_etl_spark.session import codegen_compiles
+
+    log_dir = _stage(
+        tmp_path, ["2024-01-15-09", "2024-01-15-10", "2024-01-15-11"]
+    )
+    out_dir = str(tmp_path / "out_ticks")
+    ticks = []
+    for hour in (10, 11, 12):  # each tick closes exactly one new hour
+        before = codegen_compiles(spark)
+        stats = run_incremental(spark, log_dir, out_dir,
+                                datetime(2024, 1, 15, hour, 0))
+        assert stats["files"] == 1 and stats["report_rows"]["top_queries"] == 3
+        ticks.append((stats["codegen_compiles"], codegen_compiles(spark) - before))
+    assert ticks[-1] == (0, 0), ticks
+
+    out_batch = str(tmp_path / "out_batch")
+    ref = datetime(2024, 1, 15, 12, 0)
+    first = run_pipeline(spark, log_dir, out_batch, ref, max_records=3)
+    before = codegen_compiles(spark)
+    again = run_pipeline(spark, log_dir, out_batch, ref, max_records=3)
+    assert (again["codegen_compiles"], codegen_compiles(spark) - before) == (0, 0)
+    assert again["report_rows"] == first["report_rows"]
+
+
+def test_empty_first_hour(spark, tmp_path):
+    """An empty closed-hour file as the first hour of a fresh out-dir
+    writes no events directory; the tick still writes every report
+    section, empty, and lists the file in the manifest — and a backfill
+    whose every file is empty reports the same way."""
+    from rds_pgbadger_etl_spark.cli import run_incremental
+
+    log_dir = tmp_path / "logs"
+    log_dir.mkdir()
+    (log_dir / "postgresql.log.2024-01-15-09").write_text("")
+    out_dir = tmp_path / "out_empty"
+    stats = run_incremental(spark, str(log_dir), str(out_dir),
+                            datetime(2024, 1, 15, 10, 0))
+    assert (stats["files"], stats["events"]) == (1, 0)
+    assert stats["report_rows"] == {n: 0 for n in REPORT_SECTIONS}
+    assert (out_dir / "_processed_files.txt").read_text().split() == [
+        "postgresql.log.2024-01-15-09"
+    ]
+    report = out_dir / "report" / "log_date=2024-01-15" / "log_hour=9"
+    for section in REPORT_SECTIONS:
+        assert (report / section / "_SUCCESS").exists(), section
+
+    batch = run_pipeline(spark, str(log_dir), str(tmp_path / "out_batch"),
+                         datetime(2024, 1, 15, 10, 0))
+    assert (batch["files"], batch["events"]) == (1, 0)
+    assert batch["report_rows"] == {n: 0 for n in REPORT_SECTIONS}
+
+
+def _job_descriptions(spark, fn) -> list[str]:
+    """Descriptions of the Spark jobs ``fn()`` starts."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    store = sc._jsc.sc().statusStore()
+    out = []
+    for jid in sc.statusTracker().getJobIdsForGroup(group):
+        desc = store.job(jid).description()
+        out.append(desc.get() if desc.isDefined() else "")
+    return out
+
+
+def test_tick_reads_only_its_hour(spark, tmp_path):
+    """A tick over an events table of more than 32 date directories
+    (where Spark lists a table's partitions with a Spark job) starts no
+    listing job, and its hour's stored events and report equal those of
+    a read of the table's root filtered to the hour."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from rds_pgbadger_etl_spark.cli import run_incremental
+    from rds_pgbadger_etl_spark.operators.logparse import parse_logs
+    from rds_pgbadger_etl_spark.plans.reports import full_report
+    from rds_pgbadger_etl_spark.sinks.report_sink import (
+        collect_report,
+        read_events_hours,
+    )
+
+    log_dir = _stage(tmp_path, ["2024-01-15-09"])
+    out_dir = tmp_path / "out_many"
+    run_incremental(spark, log_dir, str(out_dir), datetime(2024, 1, 15, 10, 0))
+    events_dir = out_dir / "events"
+    for i in range(40):  # 41 date directories in all
+        day = datetime(2023, 11, 1) + timedelta(days=i)
+        shutil.copytree(events_dir / "log_date=2024-01-15",
+                        events_dir / f"log_date={day:%Y-%m-%d}")
+    shutil.copy(os.path.join(FIXTURES, "errors.log"),
+                os.path.join(log_dir, "postgresql.log.2024-01-16-07"))
+
+    stats = {}
+
+    def tick():
+        stats.update(run_incremental(spark, log_dir, str(out_dir),
+                                     datetime(2024, 1, 17, 0, 0)))
+
+    descriptions = _job_descriptions(spark, tick)
+    assert stats["files"] == 1 and stats["events"] == 9
+    assert descriptions and not [
+        d for d in descriptions if d.startswith("Listing leaf files")
+    ], descriptions
+
+    path = os.path.join(log_dir, "postgresql.log.2024-01-16-07")
+    schema = parse_logs(spark, [path]).schema
+    hour = read_events_hours(spark, str(events_dir), [("2024-01-16", 7)], schema)
+    root = spark.read.parquet(str(events_dir)).filter(
+        (F.col("log_date") == "2024-01-16") & (F.col("log_hour") == 7)
+    )
+    assert hour.schema == root.schema
+    assert sorted(map(str, hour.collect())) == sorted(map(str, root.collect()))
+
+    written = out_dir / "report" / "log_date=2024-01-16" / "log_hour=7"
+    for section, table in collect_report(full_report(root)).items():
+        got = pq.read_table(str(written / section / "part-00000.parquet"))
+        assert sorted(map(repr, got.to_pylist())) == sorted(
+            map(repr, table.to_pylist())
+        ), section
 
 
 def test_cli_query_registry_access(capsys, spark):
