@@ -14,7 +14,11 @@ job:
   files (stage from RDS with sources/rds_ingest.py, which adds the
   retries/status checks the reference lacks — rds_download_log.py:119-125).
 - Selection = sources/logcatalog.select_names (O2–O8 over the listing).
-- Parsing = operators/logparse.parse_logs (P1–P4).
+  A file's hour is the trailing YYYY-MM-DD-HH of its name, read only
+  through logcatalog, for selection, the events' partition and the
+  per-hour report alike.
+- Parsing = operators/logparse.parse_logs (P1–P4), which picks its
+  reassembly plan from the selected files' sizes.
 - Events are written hour-partitioned (P12) with dynamic partition
   overwrite for idempotent re-runs (O15).
 - Report = plans/reports.full_report (P5–P11), collected in one Spark
@@ -31,6 +35,8 @@ import argparse
 import os
 from datetime import datetime, timezone
 
+from rds_pgbadger_etl_spark.sources.logcatalog import hour_partition as _parse_hour
+
 
 def _parse_reference(value: str | None) -> datetime:
     """``YYYY-MM-DD-HH`` (the reference's file-name granularity,
@@ -43,21 +49,6 @@ def _parse_reference(value: str | None) -> datetime:
         except ValueError:
             continue
     raise SystemExit(f"unparseable --reference-datetime {value!r}")
-
-
-_STRATEGIES = ("auto", "windowed", "splitwise")
-
-
-def _env_strategy() -> str:
-    """argparse does not validate ``choices`` against a default, so a
-    typo'd SPARK_GRAFT_PARSE_STRATEGY would silently fall through to the
-    non-matching branch of _parser — reject it explicitly instead."""
-    val = os.environ.get("SPARK_GRAFT_PARSE_STRATEGY", "auto")
-    if val not in _STRATEGIES:
-        raise SystemExit(
-            f"SPARK_GRAFT_PARSE_STRATEGY={val!r} is not one of {_STRATEGIES}"
-        )
-    return val
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -80,15 +71,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--incremental", action="store_true",
                    help="cron mode: process every closed-hour file not yet "
                         "in the out-dir manifest (idempotent re-runs)")
-    p.add_argument("--strategy", choices=_STRATEGIES,
-                   default=_env_strategy(),
-                   help="reassembly plan: 'auto' (the default: windowed "
-                        "unless a selected file exceeds ~2x "
-                        "maxPartitionBytes, then splitwise), 'windowed' "
-                        "(all-JVM, one bounded shuffle per run) or "
-                        "'splitwise' (shuffle-free split-parallel "
-                        "mapInArrow — the multi-TB backfill plan; see "
-                        "BENCH_NOTES.md)")
     p.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "*"))
     p.add_argument("--list-queries", action="store_true",
                    help="list every registered analytics query and exit")
@@ -274,16 +256,22 @@ def run_index_stats(args) -> None:
         print(json.dumps(row.asDict(), default=str))
 
 
-def _parser(spark, strategy: str, paths: list[str]):
+def _parse_and_write(spark, log_dir: str, names: list[str], events_dir: str):
+    """Parse the ``names`` files of ``log_dir`` and write their events
+    hour-partitioned under ``events_dir``; returns the parse plan's
+    schema and the write's parse-quality counters."""
     from rds_pgbadger_etl_spark.operators.logparse import (
-        choose_parse_strategy,
         parse_logs,
-        parse_logs_splitwise,
+        release_parse_caches,
     )
+    from rds_pgbadger_etl_spark.sinks.report_sink import write_events_partitioned
 
-    if strategy == "auto":
-        strategy = choose_parse_strategy(spark, paths)
-    return parse_logs_splitwise if strategy == "splitwise" else parse_logs
+    events = parse_logs(spark, [os.path.join(log_dir, n) for n in names])
+    quality = write_events_partitioned(events, events_dir)
+    # targeted: clearCache() would also evict the shared staging tables
+    # other queries in this session still hold handles to (plans/_shared)
+    release_parse_caches()
+    return events.schema, quality
 
 
 def _list_names(log_dir: str) -> list[str]:
@@ -300,7 +288,6 @@ def run_pipeline(
     reference_dt: datetime,
     max_records: int = 5,
     html_path: str | None = None,
-    strategy: str = "auto",
 ) -> dict:
     """Select → parse → report → sink; returns row counts per stage,
     under ``report_rows`` the row count of each report section, and
@@ -311,7 +298,6 @@ def run_pipeline(
     from rds_pgbadger_etl_spark.sinks.report_sink import (
         read_events_hours,
         render_html,
-        write_events_partitioned,
         write_report,
     )
     from rds_pgbadger_etl_spark.sources.logcatalog import select_names
@@ -321,15 +307,8 @@ def run_pipeline(
     if not selected:
         raise SystemExit(f"no closed-hour log files in {log_dir} before {reference_dt}")
 
-    from rds_pgbadger_etl_spark.operators.logparse import release_parse_caches
-
-    paths = [os.path.join(log_dir, n) for n in selected]
-    events = _parser(spark, strategy, paths)(spark, paths)
     events_dir = os.path.join(out_dir, "events")
-    quality = write_events_partitioned(events, events_dir)
-    # targeted: clearCache() would also evict the shared staging tables
-    # other queries in this session still hold handles to (plans/_shared)
-    release_parse_caches()
+    schema, quality = _parse_and_write(spark, log_dir, selected, events_dir)
 
     # Report from the just-written parquet, NOT the parse plan: the
     # report's one action would otherwise re-parse the logs inside each
@@ -341,7 +320,7 @@ def run_pipeline(
     # (the reference reports exactly the files it processed,
     # rds_pgbadger.py:44-45).
     stored = read_events_hours(
-        spark, events_dir, [_parse_hour(n) for n in selected], events.schema
+        spark, events_dir, [_parse_hour(n) for n in selected], schema
     )
     tables = write_report(full_report(stored), os.path.join(out_dir, "report"))
     if html_path:
@@ -356,32 +335,16 @@ def run_pipeline(
     }
 
 
-def _parse_hour(name: str) -> tuple[str, int]:
-    """(log_date, log_hour) from a log file name ending in YYYY-MM-DD-HH
-    (reference rds_pgbadger.py:120). Anchored regex, loud failure: a
-    non-conforming name (e.g. a ``.gz`` suffix) would otherwise build a
-    wrong predicate and silently drop that hour from the report."""
-    import re
-
-    m = re.search(r"(\d{4}-\d{2}-\d{2})-(\d{2})$", name)
-    if m is None:
-        raise ValueError(
-            f"log file name {name!r} does not end in YYYY-MM-DD-HH;"
-            " cannot derive its (log_date, log_hour) partition"
-        )
-    return m.group(1), int(m.group(2))
-
-
 def _hours_predicate(file_names: list[str]):
     """Partition predicate for the (log_date, log_hour) hours named by
     ``file_names`` (…YYYY-MM-DD-HH): an OR of literal equalities, which
     the parquet scan turns into partition pruning.
 
-    The hour is parsed with an anchored regex, not fixed suffix slices:
-    a selected name that does not end exactly in YYYY-MM-DD-HH (say a
-    compressed ``…-2024-01-02-07.gz``) must fail loudly here rather
-    than silently building a wrong predicate that drops that hour from
-    the run's report."""
+    The hour is the catalog's (``logcatalog.hour_partition``): a
+    selected name that does not end exactly in YYYY-MM-DD-HH (say a
+    compressed ``…-2024-01-02-07.gz``) fails loudly here rather than
+    silently building a wrong predicate that drops that hour from the
+    run's report."""
     from functools import reduce
 
     from pyspark.sql import functions as F
@@ -434,7 +397,6 @@ def run_incremental(
     log_dir: str,
     out_dir: str,
     reference_dt: datetime,
-    strategy: str = "auto",
 ) -> dict:
     """The reference's cron mode (Dockerfile:15: run hourly, process
     what's new, skip what's done) for a staged local/object-store dir.
@@ -455,7 +417,6 @@ def run_incremental(
     warm process repeats a tick of a plan shape it has run before).
     """
     from rds_pgbadger_etl_spark.session import codegen_compiles
-    from rds_pgbadger_etl_spark.sinks.report_sink import write_events_partitioned
     from rds_pgbadger_etl_spark.sources.logcatalog import select_names
 
     compiles = codegen_compiles(spark)
@@ -470,18 +431,11 @@ def run_incremental(
     todo = [n for n in closed if n not in done]
     quality: dict = {}
     if todo:
-        from rds_pgbadger_etl_spark.operators.logparse import (
-            release_parse_caches,
+        schema, quality = _parse_and_write(
+            spark, log_dir, todo, os.path.join(out_dir, "events")
         )
-
-        paths = [os.path.join(log_dir, n) for n in todo]
-        events = _parser(spark, strategy, paths)(spark, paths)
-        quality = write_events_partitioned(
-            events, os.path.join(out_dir, "events")
-        )
-        release_parse_caches()  # splitwise segment cache, if any
         quality["report_rows"] = _write_hourly_reports(
-            spark, out_dir, todo, events.schema
+            spark, out_dir, todo, schema
         )
         # atomic manifest update (temp + rename), mirroring O13
         tmp = manifest + ".tmp"
@@ -550,7 +504,6 @@ def main(argv: list[str] | None = None) -> None:
             args.log_dir,
             args.out_dir,
             _parse_reference(args.reference_datetime),
-            strategy=args.strategy,
         )
         print(f"processed {stats['files']} new files ({stats['skipped']} already done)")
         if "report_rows" in stats:
@@ -564,7 +517,6 @@ def main(argv: list[str] | None = None) -> None:
         _parse_reference(args.reference_datetime),
         args.max_records,
         args.html,
-        strategy=args.strategy,
     )
     print(f"processed {stats['files']} files -> {stats['events']} events")
 

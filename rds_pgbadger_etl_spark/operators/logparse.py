@@ -1,5 +1,13 @@
 """PostgreSQL stderr-log parsing: tokenize, reassemble, enrich.
 
+:func:`parse_logs` is the entry point. It reassembles with one of two
+plans, chosen from the sizes of the files it reads
+(:func:`choose_parse_strategy`, no Spark job): the windowed plan
+(:func:`parse_logs_windowed`, all-JVM, one bounded shuffle) while every
+file fits a couple of scan splits, as an hourly cron file does; the
+splitwise plan (:func:`parse_logs_splitwise`, shuffle-free,
+split-parallel) past that. Both give the same rows.
+
 Implements SURVEY.md §2.2 P1 (prefix tokenization), P2 (multi-line
 statement reassembly — the one order-sensitive step in the engine) and
 P3/P4 enrichment, natively in Spark. The line format is pinned by the
@@ -23,8 +31,9 @@ Scale design:
   (Hadoop line-reader semantics), so it carries the earlier block start.
   (The reference gets intra-file parallelism from pgbadger ``--jobs 8``,
   rds_pgbadger.py:54-55; Spark gets it from splits.)
-- Reassembly shuffles once on ``source_file`` (hour-granular files →
-  naturally bounded partitions); everything downstream is order-free.
+- The windowed plan shuffles once on ``source_file`` (hour-granular
+  files → naturally bounded partitions); the splitwise plan moves only
+  split-boundary fragments. Everything downstream is order-free.
 - All parsing is regexp built-ins inside codegen — no Python UDFs.
 """
 
@@ -89,9 +98,10 @@ SPLITWISE_SIZE_FACTOR = 2
 
 
 def choose_parse_strategy(spark: SparkSession, paths: list[str]) -> str:
-    """Pick the reassembly plan from the catalog listing already in hand:
-    ``windowed`` (one bounded shuffle, all-JVM) while every file fits a
-    handful of scan splits, ``splitwise`` once any file exceeds
+    """Pick the reassembly plan from the sizes of the files in ``paths``
+    (``os.stat``, no Spark job): ``windowed`` (one bounded shuffle,
+    all-JVM) while every file fits a couple of scan splits,
+    ``splitwise`` once any file exceeds
     ``SPLITWISE_SIZE_FACTOR x spark.sql.files.maxPartitionBytes`` — at
     that point the windowed plan's one-sort-task-per-file becomes the
     straggler a 5 GB busy-hour log would hit."""
@@ -102,10 +112,41 @@ def choose_parse_strategy(spark: SparkSession, paths: list[str]) -> str:
     return "splitwise" if max_bytes > threshold else "windowed"
 
 
+def _scan_files(path: str | list[str]) -> list[str]:
+    """The files a scan of ``path`` reads, by the forms
+    :func:`_read_raw_lines` accepts: a list of files, one file, a
+    directory (its files at any depth but those whose names start with
+    ``_`` or ``.``, which Spark skips), or a directory with a trailing
+    glob on the file names."""
+    import fnmatch
+    import os
+
+    if not isinstance(path, str):
+        return list(path)
+    pattern = "*"
+    if any(ch in os.path.basename(path) for ch in "*?["):
+        path, pattern = os.path.split(path)
+    if not os.path.isdir(path):
+        return [path]
+    return [
+        os.path.join(root, f)
+        for root, _dirs, files in os.walk(path)
+        for f in fnmatch.filter(files, pattern)
+        if not f.startswith(("_", "."))
+    ]
+
+
 def _read_raw_lines(spark: SparkSession, path: str | list[str]) -> DataFrame:
-    """Raw log text as ``(source_file, block_start, mid, value)`` —
-    the pre-window form shared by :func:`read_log_lines` and the fused
-    parse path."""
+    """Raw log text as ``(source_file, block_start, mid, value)``, the
+    input of both reassembly plans.
+
+    The catalog-scan + pruning the reference does against the RDS API
+    (rds_pgbadger.py:86-93) is Spark's file listing here: pass a file, a
+    directory, a glob (``…/logs/*.log``), or an explicit list of selected
+    paths (the O7 top-K output). A trailing glob is translated to
+    ``pathGlobFilter`` (this Spark build rejects inline globs on the
+    local filesystem).
+    """
     import os
 
     reader = spark.read
@@ -122,31 +163,14 @@ def _read_raw_lines(spark: SparkSession, path: str | list[str]) -> DataFrame:
     )
 
 
-def read_log_lines(spark: SparkSession, path: str | list[str]) -> DataFrame:
-    """Read raw log text as ``(source_file, line_no, value)``.
-
-    The catalog-scan + pruning the reference does against the RDS API
-    (rds_pgbadger.py:86-93) is Spark's file listing here: pass a file, a
-    directory, a glob (``…/logs/*.log``), or an explicit list of selected
-    paths (the O7 top-K output). A trailing glob is translated to
-    ``pathGlobFilter`` (this Spark build rejects inline globs on the
-    local filesystem).
-    """
-    w = Window.partitionBy("source_file").orderBy("block_start", "mid")
-    return (
-        _read_raw_lines(spark, path)
-        .withColumn("line_no", F.row_number().over(w))
-        .drop("mid", "block_start")
-    )
-
-
 def _null_if_empty(c: Column) -> Column:
     return F.when(c == "", None).otherwise(c)
 
 
 def tokenize(lines: DataFrame) -> DataFrame:
     """P1: split each line into prefix fields; non-matching lines keep
-    nulls (continuation or malformed — resolved by :func:`reassemble`)."""
+    nulls (continuation or malformed). Line-level only: the reassembly
+    plans extract the prefix once per event instead (:func:`_group`)."""
     v = F.col("value")
     ext = [F.regexp_extract(v, PREFIX_RE, i) for i in range(1, 10)]
     return lines.select(
@@ -168,47 +192,6 @@ def tokenize(lines: DataFrame) -> DataFrame:
         F.when(_null_if_empty(ext[7]).isNull(), None).otherwise(ext[8]).alias("payload"),
         (ext[0] != "").alias("is_header"),
     )
-
-
-def reassemble(tokens: DataFrame) -> DataFrame:
-    """P2: glue continuation lines onto their header line.
-
-    PostgreSQL stderr format indents the continuation lines of a
-    multi-line statement with whitespace; those join the preceding header
-    event. Non-indented lines that match no prefix are malformed —
-    consecutive runs are quarantined as one MALFORMED event each
-    (SURVEY.md P1: route, don't drop).
-    """
-    w0 = Window.partitionBy("source_file").orderBy("line_no")
-    w = w0.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    garbage = ~F.col("is_header") & ~F.col("value").rlike(r"^[\t ]")
-    boundary = F.col("is_header") | (garbage & ~F.lag(garbage, 1, False).over(w0))
-    numbered = tokens.withColumn("event_seq", F.sum(boundary.cast("int")).over(w))
-
-    line_struct = F.struct(
-        F.col("line_no"),
-        F.when(F.col("is_header"), F.col("payload")).otherwise(F.col("value")).alias("txt"),
-    )
-    grouped = (
-        numbered.groupBy("source_file", "event_seq")
-        .agg(
-            F.min_by("event_ts", "line_no").alias("event_ts"),
-            F.min_by("remote_host", "line_no").alias("remote_host"),
-            F.min_by("remote_port", "line_no").alias("remote_port"),
-            F.min_by("log_user", "line_no").alias("log_user"),
-            F.min_by("database", "line_no").alias("database"),
-            F.min_by("pid", "line_no").alias("pid"),
-            F.min_by("level", "line_no").alias("level"),
-            F.min("line_no").alias("line_no"),
-            F.count(F.lit(1)).alias("n_lines"),
-            F.concat_ws(
-                "\n",
-                F.transform(F.array_sort(F.collect_list(line_struct)), lambda s: s.txt),
-            ).alias("message"),
-        )
-        .withColumn("level", F.coalesce("level", F.lit("MALFORMED")))
-    )
-    return grouped
 
 
 # Delimiter for the single-pass group extraction in the fused path.
@@ -240,24 +223,21 @@ def _group(i: int) -> Column:
 
 
 def _reassemble_fused(raw: DataFrame) -> DataFrame:
-    """P1+P2 in one narrow pass — same result as
-    ``reassemble(tokenize(read_log_lines(...)))`` (equivalence pinned by
-    ``test_logparse.py::test_fused_parse_matches_staged``), restructured
-    for scale:
+    """P1+P2 of the windowed plan in one narrow pass:
 
     - line_no / boundary / event_seq are computed over the NARROW raw
       rows with both window passes sharing one sort on
-      ``(source_file, block_start, mid)`` — the staged path re-sorts the
-      9-column tokenized rows a second time.
-    - The aggregate is a single ``collect_list(struct(line_no, value))``
-      instead of seven ``min_by`` + ``collect_list`` buffers; first-line
-      fields are taken from element 0 of the sorted array.
+      ``(source_file, block_start, mid)``.
+    - The aggregate is a single ``collect_list(struct(line_no, value))``;
+      first-line fields are taken from element 0 of the sorted array.
     - Prefix extraction runs once per EVENT on the header line (via
       :func:`_group` over a materialized single-pass split) instead of
       nine ``regexp_extract`` per LINE.
 
-    Before/after numbers on the 3.28 GB / 24-hour-file rehearsal corpus
-    are in BENCH_NOTES.md ("fused parse"); output is identical.
+    Numbers on the 3.28 GB / 24-hour-file rehearsal corpus are in
+    BENCH_NOTES.md ("fused parse"). Non-indented lines that match no
+    prefix are malformed: each consecutive run is quarantined as one
+    MALFORMED event (SURVEY.md P1: route, don't drop).
     """
     v = F.col("value")
     w0 = Window.partitionBy("source_file").orderBy("block_start", "mid")
@@ -355,7 +335,7 @@ def _finalize_events(pre: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 # Split-parallel, shuffle-free reassembly (the 100 TB path).
 #
-# The windowed paths above shuffle every raw line once on source_file
+# The windowed plan above shuffles every raw line once on source_file
 # (0.39x the input in shuffle bytes — ~39 TB of shuffle at 100 TB) and
 # sort each file's lines inside one task. But a file SPLIT's lines
 # already arrive in offset order from the scan, and every multi-line
@@ -493,8 +473,8 @@ def _segment_batches(batches):
 
 def parse_logs_splitwise(spark: SparkSession, path: str | list[str]) -> DataFrame:
     """P1->P4 with split-parallel reassembly — same output as
-    :func:`parse_logs` (equivalence pinned by
-    ``test_logparse.py::test_splitwise_matches_fused``), but the raw
+    :func:`parse_logs_windowed` (pinned by ``test_logparse.py``'s
+    truth and parity tests), but the raw
     lines are never shuffled, sorted, or window-buffered: each file
     split segments independently, only boundary fragments (a few rows
     per split) and per-split scalars move between tasks.
@@ -548,8 +528,8 @@ def parse_logs_splitwise(spark: SparkSession, path: str | list[str]) -> DataFram
         .select(
             "source_file",
             # seg_id 0 = lines before the file's first boundary (a file
-            # starting with continuation lines): the windowed paths
-            # number that group event_seq=0, all boundary events 1..B
+            # starting with continuation lines): the windowed plan
+            # numbers that group event_seq=0, all boundary events 1..B
             (F.col("seg_id") == 0).alias("is_junk"),
             F.col("first")["block_start"].alias("block_start"),
             F.col("first")["local_line"].alias("local_line"),
@@ -679,11 +659,20 @@ def enrich(events: DataFrame) -> DataFrame:
     )
 
 
-def parse_logs(spark: SparkSession, path: str) -> DataFrame:
+def parse_logs_windowed(spark: SparkSession, path: str | list[str]) -> DataFrame:
+    """P1->P4 with the windowed reassembly (:func:`_reassemble_fused`):
+    all-JVM, one shuffle on ``source_file``, one sort task per file."""
+    return enrich(_reassemble_fused(_read_raw_lines(spark, path)))
+
+
+def parse_logs(spark: SparkSession, path: str | list[str]) -> DataFrame:
     """Full P1→P2→P3/P4 pipeline: raw text path → parsed event table.
 
-    Uses the fused P1+P2 plan (:func:`_reassemble_fused`); the staged
-    ``reassemble(tokenize(...))`` composition is kept as the readable
-    reference implementation and equivalence oracle.
+    ``path`` takes every form :func:`_read_raw_lines` does. The
+    reassembly plan is chosen from the sizes of the files the scan will
+    read (:func:`choose_parse_strategy`); after materializing a
+    splitwise result, :func:`release_parse_caches` frees its caches.
     """
-    return enrich(_reassemble_fused(_read_raw_lines(spark, path)))
+    if choose_parse_strategy(spark, _scan_files(path)) == "splitwise":
+        return parse_logs_splitwise(spark, path)
+    return parse_logs_windowed(spark, path)

@@ -39,15 +39,17 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from rds_pgbadger_etl_spark.functions.scalar import extract_date_from_name
+from rds_pgbadger_etl_spark.sources.logcatalog import NAME_HOUR_RE
 
 
 def write_events_partitioned(events: DataFrame, out_dir: str) -> dict:
     """Write parsed events hour-partitioned (P12 layout); return
     parse-quality counters observed on the write itself.
 
-    log_date/log_hour derive from the source file name
-    (…/postgresql.log.YYYY-MM-DD-HH — reference rds_pgbadger.py:120).
+    log_date/log_hour are the trailing YYYY-MM-DD-HH of the source file
+    name (…/postgresql.log.YYYY-MM-DD-HH — reference rds_pgbadger.py:120),
+    by the catalog's one hour rule (``logcatalog.NAME_HOUR_RE``); a name
+    without one gets Spark's null partition.
     Dynamic partition overwrite makes re-runs idempotent per partition.
 
     The counters (total events, MALFORMED-quarantined events, events
@@ -60,10 +62,11 @@ def write_events_partitioned(events: DataFrame, out_dir: str) -> dict:
     from pyspark.sql import Observation
 
     obs = Observation("parse_quality")
-    hour = F.substring(F.col("source_file"), -2, 2)
     (
-        events.withColumn("log_date", extract_date_from_name("source_file"))
-        .withColumn("log_hour", hour)
+        events.withColumn(
+            "log_date", F.regexp_extract("source_file", NAME_HOUR_RE, 1)
+        )
+        .withColumn("log_hour", F.regexp_extract("source_file", NAME_HOUR_RE, 2))
         .observe(
             obs,
             F.count(F.lit(1)).alias("events"),

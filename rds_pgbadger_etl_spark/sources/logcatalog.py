@@ -27,21 +27,39 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame
 
-# trailing-13-char timestamp, e.g. 2019-04-01-10
-_NAME_TS = re.compile(r"(\d{4}-\d{2}-\d{2}-\d{2})$", re.ASCII)
+# A log file's hour: the trailing YYYY-MM-DD-HH of its name, e.g.
+# …postgresql.log.2019-04-01-10 (groups: date, hour). The one rule for
+# selection, the per-hour report and the events' partition columns; the
+# Spark side applies the same pattern in ``regexp_extract``.
+NAME_HOUR_RE = r"(\d{4}-\d{2}-\d{2})-(\d{2})$"
+_NAME_HOUR = re.compile(NAME_HOUR_RE, re.ASCII)
 
 
-def _name_ts(name: str) -> datetime | None:
+def name_hour(name: str) -> datetime | None:
     """The trailing YYYY-MM-DD-HH of ``name`` as a datetime; None when the
     name does not end in a valid timestamp (``garbage``, a month 13, a
     ``.gz`` suffix): quarantine, don't drop — O17."""
-    m = _NAME_TS.search(name)
+    m = _NAME_HOUR.search(name)
     if m is None:
         return None
     try:
-        return datetime.strptime(m.group(1), "%Y-%m-%d-%H")
+        return datetime.strptime(m.group(0), "%Y-%m-%d-%H")
     except ValueError:
         return None
+
+
+def hour_partition(name: str) -> tuple[str, int]:
+    """(log_date, log_hour) of a selected log file, by :func:`name_hour`.
+    Loud on a name without a valid trailing hour: a caller building a
+    partition path or predicate from it would otherwise silently miss
+    that hour."""
+    ts = name_hour(name)
+    if ts is None:
+        raise ValueError(
+            f"log file name {name!r} does not end in YYYY-MM-DD-HH;"
+            " cannot derive its (log_date, log_hour) partition"
+        )
+    return f"{ts:%Y-%m-%d}", ts.hour
 
 
 def select_names(
@@ -60,7 +78,7 @@ def select_names(
     means every closed hour.
     """
     ref_hour = reference_dt.replace(minute=0, second=0, microsecond=0)
-    dated = [(ts, n) for n in names if (ts := _name_ts(n)) is not None]
+    dated = [(ts, n) for n in names if (ts := name_hour(n)) is not None]
     picked = sorted((d for d in dated if d[0] < ref_hour), reverse=True)
     return [n for _ts, n in picked[:max_records]]
 
@@ -78,7 +96,7 @@ def select_log_files(
     names = [r[0] for r in files.select(name_col).collect() if r[0] is not None]
     return files.sparkSession.createDataFrame(
         [
-            (n, _name_ts(n).replace(tzinfo=timezone.utc))
+            (n, name_hour(n).replace(tzinfo=timezone.utc))
             for n in select_names(names, reference_dt, max_records)
         ],
         f"`{name_col}` string, file_ts timestamp",

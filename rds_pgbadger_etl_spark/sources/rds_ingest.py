@@ -101,16 +101,15 @@ def download_log_file(
 
 
 def staging_path(dest_dir: str, file_name: str) -> str:
-    """Hour-partitioned staging layout from the trailing-13-char
-    timestamp (…YYYY-MM-DD-HH, rds_pgbadger.py:120); undated names land
-    in the 'unknown' partition (utils.py:14-21 semantics)."""
-    base = os.path.basename(file_name)
-    suffix = base[-13:]
-    date, _, hour = suffix.rpartition("-")
-    import re
+    """Hour-partitioned staging layout from the name's trailing
+    YYYY-MM-DD-HH (``logcatalog.name_hour``, rds_pgbadger.py:120);
+    undated names land in the 'unknown' partition (utils.py:14-21
+    semantics)."""
+    from rds_pgbadger_etl_spark.sources.logcatalog import name_hour
 
-    if not re.fullmatch(r"\d{4}-\d{2}-\d{2}", date) or not re.fullmatch(r"\d{2}", hour):
-        date, hour = "unknown", "00"
+    base = os.path.basename(file_name)
+    ts = name_hour(base)
+    date, hour = (f"{ts:%Y-%m-%d}", f"{ts:%H}") if ts else ("unknown", "00")
     return os.path.join(dest_dir, f"log_date={date}", f"log_hour={hour}", base)
 
 

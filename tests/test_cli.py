@@ -379,25 +379,9 @@ def test_cli_compact_cluster_verb(capsys, spark, tmp_path):
     assert n_parts <= len(files) <= 2 * n_parts
 
 
-def test_env_strategy_validation(monkeypatch):
-    """A typo'd SPARK_GRAFT_PARSE_STRATEGY must error, not silently fall
-    back to the windowed plan (argparse never validates defaults)."""
-    import pytest
-
-    from rds_pgbadger_etl_spark import cli
-
-    monkeypatch.setenv("SPARK_GRAFT_PARSE_STRATEGY", "splitwize")
-    with pytest.raises(SystemExit):
-        cli.build_parser()
-    monkeypatch.setenv("SPARK_GRAFT_PARSE_STRATEGY", "splitwise")
-    assert cli.build_parser().parse_args([]).strategy == "splitwise"
-    monkeypatch.delenv("SPARK_GRAFT_PARSE_STRATEGY")
-    assert cli.build_parser().parse_args([]).strategy == "auto"
-
-
 def test_auto_strategy_selection(spark, tmp_path):
-    """'auto' picks windowed for hour-files within a couple of scan
-    splits and splitwise once any file exceeds 2x maxPartitionBytes
+    """The size rule picks windowed for hour-files within a couple of
+    scan splits and splitwise once any file exceeds 2x maxPartitionBytes
     (the 5 GB busy-hour straggler case)."""
     from rds_pgbadger_etl_spark.operators.logparse import (
         choose_parse_strategy,
@@ -446,22 +430,119 @@ def test_run_pipeline_report_scope(spark, tmp_path):
     assert total == one_hour  # ... but the report covers run 2 only
 
 
-def test_run_pipeline_splitwise_strategy(spark, tmp_path):
-    """--strategy splitwise must produce the same event table as the
-    default windowed plan through the full pipeline."""
+def _spy_plans(monkeypatch) -> list[str]:
+    """Record which reassembly plan each ``parse_logs`` call takes."""
+    from rds_pgbadger_etl_spark.operators import logparse
+
+    taken: list[str] = []
+    for plan in ("parse_logs_windowed", "parse_logs_splitwise"):
+        real = getattr(logparse, plan)
+
+        def spy(*args, _real=real, _plan=plan):
+            taken.append(_plan)
+            return _real(*args)
+
+        monkeypatch.setattr(logparse, plan, spy)
+    return taken
+
+
+def test_run_pipeline_splitwise_strategy(spark, tmp_path, monkeypatch):
+    """With maxPartitionBytes lowered until the size rule picks the
+    splitwise plan for the selected files, run_pipeline writes the same
+    event table as the default run, which takes the windowed plan."""
     log_dir = _stage(tmp_path, ["2024-01-15-09", "2024-01-15-10"])
     out_w = str(tmp_path / "out_w")
     out_s = str(tmp_path / "out_s")
     ref = datetime(2024, 1, 15, 12, 0)
+    taken = _spy_plans(monkeypatch)
     run_pipeline(spark, log_dir, out_w, ref, max_records=2)
-    run_pipeline(spark, log_dir, out_s, ref, max_records=2,
-                 strategy="splitwise")
+    assert taken == ["parse_logs_windowed"]
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        size = os.path.getsize(os.path.join(FIXTURES, "basic.log"))
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(size // 3))
+        run_pipeline(spark, log_dir, out_s, ref, max_records=2)
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+    assert taken == ["parse_logs_windowed", "parse_logs_splitwise"]
     w = spark.read.parquet(f"{out_w}/events")
     s = spark.read.parquet(f"{out_s}/events")
     cols = sorted(w.columns)
     w_rows = sorted(map(str, w.select(cols).collect()))
     s_rows = sorted(map(str, s.select(cols).collect()))
     assert w_rows == s_rows and len(w_rows) > 0
+
+
+def test_parse_logs_sizes_directory_and_glob(spark, tmp_path, monkeypatch):
+    """parse_logs sizes the files its scan reads in every path form: a
+    directory or a trailing glob that takes in one file past the bound
+    parses splitwise; a glob that leaves that file out parses windowed.
+    Both plans give the same rows."""
+    from rds_pgbadger_etl_spark.operators.logparse import (
+        parse_logs,
+        release_parse_caches,
+    )
+
+    log_dir = tmp_path / "mixed"
+    log_dir.mkdir()
+    shutil.copy(os.path.join(FIXTURES, "basic.log"), log_dir / "a.log")
+    shutil.copy(os.path.join(FIXTURES, "prepared.log"), log_dir / "big.log")
+    shutil.copy(os.path.join(FIXTURES, "errors.log"), log_dir / "c.txt")
+    bound = os.path.getsize(os.path.join(FIXTURES, "prepared.log")) // 2 - 1
+    assert 2 * bound > max(
+        os.path.getsize(log_dir / n) for n in ("a.log", "c.txt")
+    )
+    taken = _spy_plans(monkeypatch)
+
+    def rows(path):
+        df = parse_logs(spark, path)
+        out = sorted(map(str, df.drop("source_file").collect()))
+        release_parse_caches()
+        return out
+
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(bound))
+        by_dir = rows(str(log_dir))
+        by_glob = rows(str(log_dir / "*.log"))
+        small = rows(str(log_dir / "[ac].*"))
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+    assert taken == [
+        "parse_logs_splitwise", "parse_logs_splitwise", "parse_logs_windowed"
+    ]
+    assert by_dir == rows(str(log_dir)) and by_glob == rows(str(log_dir / "*.log"))
+    assert taken[3:] == ["parse_logs_windowed", "parse_logs_windowed"]
+    assert set(by_glob) | set(small) == set(by_dir)
+    assert set(by_glob) != set(by_dir) and set(small) != set(by_dir)
+
+
+def test_hour_from_file_name_not_directory(spark, tmp_path):
+    """A log's hour is the trailing YYYY-MM-DD-HH of its file name, for
+    the events' partition as for selection and the hour's report: a file
+    staged under a directory whose name holds another date lands in its
+    own hour, and that hour's report holds its rows."""
+    from rds_pgbadger_etl_spark.cli import run_incremental
+
+    log_dir = tmp_path / "staged-2023-12-31"
+    log_dir.mkdir()
+    shutil.copy(os.path.join(FIXTURES, "basic.log"),
+                log_dir / "postgresql.log.2024-01-15-09")
+    out_dir = tmp_path / "out_dated"
+    stats = run_incremental(spark, str(log_dir), str(out_dir),
+                            datetime(2024, 1, 15, 10, 0))
+    assert stats["files"] == 1 and stats["events"] == 4
+    assert stats["report_rows"]["top_queries"] == 3
+    def listed(d):
+        return sorted(n for n in os.listdir(d) if not n.startswith((".", "_")))
+
+    events = out_dir / "events"
+    assert listed(events) == ["log_date=2024-01-15"]
+    assert listed(events / "log_date=2024-01-15") == ["log_hour=09"]
+    top = spark.read.parquet(
+        str(out_dir / "report" / "log_date=2024-01-15" / "log_hour=9" / "top_queries")
+    )
+    assert top.count() == 3
 
 
 def test_parse_hour_anchored_and_loud():

@@ -14,7 +14,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from rds_pgbadger_etl_spark.functions.normalize import normalize_query
-from rds_pgbadger_etl_spark.operators.logparse import parse_logs
+from rds_pgbadger_etl_spark.operators.logparse import (
+    parse_logs,
+    parse_logs_splitwise,
+    parse_logs_windowed,
+    release_parse_caches,
+)
 from rds_pgbadger_etl_spark.plans import reports
 
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures", "logs")
@@ -343,10 +348,10 @@ def _event_checksum(ev):
 
 
 def test_reassembly_under_forced_file_splits(spark, tmp_path):
-    """P2 under REAL file splits (VERDICT r4 item 1): a 64 MB log hour
-    read with maxPartitionBytes forced to 4 MB (>=16 splits) must parse
-    identically to the unsplit read — including the multi-line
-    statements that straddle split boundaries. line_no is keyed on
+    """P2 under REAL file splits (VERDICT r4 item 1): with the windowed
+    plan, a 64 MB log hour read with maxPartitionBytes forced to 4 MB
+    (>=16 splits) must parse identically to the unsplit read —
+    including the multi-line statements that straddle split boundaries. line_no is keyed on
     (_metadata.file_block_start, monotonic id), which is contractual
     regardless of Spark's split-to-partition bin-packing order."""
     p = str(tmp_path / "big_hour.log")
@@ -358,12 +363,12 @@ def test_reassembly_under_forced_file_splits(spark, tmp_path):
         spark.conf.set("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
         # partition count of the raw scan (pre-window shuffle): must split
         assert spark.read.text(p).rdd.getNumPartitions() >= 8, "fixture did not split"
-        split_sum = _event_checksum(parse_logs(spark, p))
+        split_sum = _event_checksum(parse_logs_windowed(spark, p))
 
         spark.conf.set("spark.sql.files.maxPartitionBytes", str(1 << 31))
         spark.conf.set("spark.sql.files.minPartitionNum", "1")
         assert spark.read.text(p).rdd.getNumPartitions() == 1
-        unsplit_sum = _event_checksum(parse_logs(spark, p))
+        unsplit_sum = _event_checksum(parse_logs_windowed(spark, p))
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
         spark.conf.unset("spark.sql.files.minPartitionNum")
@@ -378,7 +383,7 @@ def test_reassembly_under_forced_file_splits(spark, tmp_path):
     try:
         spark.conf.set("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
         ml = (
-            parse_logs(spark, p)
+            parse_logs_windowed(spark, p)
             .filter(F.col("n_lines") > 1)
             .select(
                 F.count(F.lit(1)).alias("n"),
@@ -396,55 +401,170 @@ def test_reassembly_under_forced_file_splits(spark, tmp_path):
     assert ml.complete == ml.n == (n_events + 3) // 7
 
 
-def test_fused_parse_matches_staged(spark, tmp_path):
-    """The fused P1+P2 plan (_reassemble_fused, what parse_logs ships)
-    must be row-identical to the staged reference composition
-    reassemble(tokenize(read_log_lines(...))) — on every golden fixture
-    plus an adversarial file exercising the single-pass extraction's
-    edge cases (delimiter byte in the payload and in a prefix field,
-    empty payload, [local] host, missing port/tz, garbage runs followed
-    by indented lines)."""
-    from rds_pgbadger_etl_spark.operators.logparse import (
-        _read_raw_lines,
-        _reassemble_fused,
-        enrich,
-        read_log_lines,
-        reassemble,
-        tokenize,
-    )
+def _straddling_events(path: str, split_bytes: int) -> int:
+    """Multi-line events of ``path`` whose lines start in more than one
+    ``split_bytes`` scan split."""
+    with open(path, "rb") as f:
+        lines = f.readlines()
+    n, off, first, last = 0, 0, 0, None
+    for line in lines + [b"end"]:
+        if line[:1] in (b"\t", b" "):
+            last = off
+        else:
+            if last is not None and first // split_bytes != last // split_bytes:
+                n += 1
+            first, last = off, None
+        off += len(line)
+    return n
 
-    adversarial = tmp_path / "adversarial.log"
-    adversarial.write_text(
-        "2019-04-01 10:00:00 UTC:10.0.0.1(50314):app@proddb:[42]:LOG:  duration: 1.5 ms  statement: SELECT \x01 FROM t\n"
-        "\tWHERE x = '\x01\x01'\n"
-        "2019-04-01 10:00:01 UTC:we\x01ird(1):ap\x01p@prod:[43]:LOG:  x\n"
-        "2019-04-01 10:00:02 UTC:[local]:app@proddb:[44]:LOG:\n"
-        "2019-04-01 10:00:03:10.0.0.2:app@proddb:[45]:ERROR:  boom\n"
-        "not a header at all\n"
-        "still not one\n"
-        "\tbut indented joins the garbage run\n"
-        "2019-04-01 10:00:04 UTC:10.0.0.3(1):b@c:[46]:STATEMENT:  INSERT INTO t VALUES (1)\n"
-    )
 
-    paths = [fixture(n) for n in sorted(os.listdir(FIXTURES))] + [str(adversarial)]
-    for p in paths:
-        fused = enrich(_reassemble_fused(_read_raw_lines(spark, p)))
-        staged = enrich(reassemble(tokenize(read_log_lines(spark, p))))
-        assert fused.columns == staged.columns, p
-        assert fused.schema == staged.schema, p
-        f_rows = [r.asDict() for r in fused.orderBy("line_no").collect()]
-        s_rows = [r.asDict() for r in staged.orderBy("line_no").collect()]
-        assert f_rows == s_rows, p
+def _per_file_figures(ev) -> dict:
+    """Per source-file name: the figures ``loggen`` records as truth,
+    from the parsed events (error keys as ``error_report`` groups
+    them)."""
+    from rds_pgbadger_etl_spark.functions.normalize import duration_bucket
+
+    name = F.element_at(F.split("source_file", "/"), -1).alias("name")
+    out: dict = {}
+    for r in ev.groupBy(name).agg(
+        F.sum("n_lines").alias("lines"),
+        F.count(F.lit(1)).alias("events"),
+        F.count("duration_ms").alias("n_durations"),
+        F.sum("duration_ms").alias("total_ms"),
+    ).collect():
+        out[r.name] = {**r.asDict(), "levels": {}, "buckets": {}, "errors": {}}
+    for r in ev.groupBy(name, "level").count().collect():
+        out[r.name]["levels"][r.level] = r["count"]
+    for r in (
+        ev.filter(F.col("duration_ms").isNotNull())
+        .groupBy(name, duration_bucket("duration_ms", 0).alias("b"))
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("duration_ms").alias("ms"))
+        .collect()
+    ):
+        out[r.name]["buckets"][r.b] = (r.n, r.ms)
+    for n in out:
+        one = ev.filter(F.element_at(F.split("source_file", "/"), -1) == n)
+        for r in reports.error_report(one, n=1000).collect():
+            out[n]["errors"][(r.level, r.normalized_message)] = r.n
+    return out
+
+
+def test_parse_plans_match_loggen_truth(spark, tmp_path):
+    """Both reassembly plans reproduce perfbench/loggen's ground truth on
+    five seeded hours (statements, multi-line statements, prepare/bind/
+    execute, errors with DETAIL and STATEMENT, connections, temp files,
+    checkpoints, autovacuum), read with scan splits small enough that
+    every file has at least 8 and multi-line statements cross split
+    boundaries: raw lines, events, events per level, durations (count,
+    sum, per pgBadger bucket) and error counts per (level, normalized
+    message)."""
+    from perfbench import loggen
+
+    logs = tmp_path / "logs"
+    logs.mkdir()
+    truth = {}
+    for hour, seed in enumerate((3, 17, 42, 301, 9001)):
+        name = loggen.hour_name(hour)
+        truth[name] = loggen.write_hour(str(logs / name), hour, 400, seed)
+    paths = sorted(str(p) for p in logs.iterdir())
+    split_bytes = min(os.path.getsize(p) for p in paths) // 9
+    assert sum(_straddling_events(p, split_bytes) for p in paths) > 0
+
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(split_bytes))
+        for p in paths:
+            assert spark.read.text(p).rdd.getNumPartitions() >= 8, p
+        for parser in (parse_logs_windowed, parse_logs_splitwise):
+            ev = parser(spark, str(logs)).cache()
+            try:
+                got = _per_file_figures(ev)
+            finally:
+                ev.unpersist()
+            assert set(got) == set(truth), parser.__name__
+            for name, want in truth.items():
+                g = got[name]
+                where = (parser.__name__, name)
+                assert g["lines"] == want["lines"], where
+                assert g["events"] == want["events"], where
+                assert g["levels"] == want["levels"], where
+                assert g["n_durations"] == want["n_durations"], where
+                assert g["total_ms"] == pytest.approx(want["total_ms"], rel=1e-9), where
+                assert sorted(g["buckets"]) == sorted(want["buckets"]), where
+                for b, (n, ms) in want["buckets"].items():
+                    assert g["buckets"][b][0] == n, where
+                    assert g["buckets"][b][1] == pytest.approx(ms, rel=1e-9), where
+                assert g["errors"] == want["errors"], where
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+        release_parse_caches()
+
+
+ADVERSARIAL = (
+    "2019-04-01 10:00:00 UTC:10.0.0.1(50314):app@proddb:[42]:LOG:  duration: 1.5 ms  statement: SELECT \x01 FROM t\n"
+    "\tWHERE x = '\x01\x01'\n"
+    "2019-04-01 10:00:01 UTC:we\x01ird(1):ap\x01p@prod:[43]:LOG:  x\n"
+    "2019-04-01 10:00:02 UTC:[local]:app@proddb:[44]:LOG:\n"
+    "2019-04-01 10:00:03:10.0.0.2:app@proddb:[45]:ERROR:  boom\n"
+    "not a header at all\n"
+    "still not one\n"
+    "\tbut indented joins the garbage run\n"
+    "2019-04-01 10:00:04 UTC:10.0.0.3(1):b@c:[46]:STATEMENT:  INSERT INTO t VALUES (1)\n"
+)
+
+ADVERSARIAL_COLUMNS = (
+    "event_seq", "event_ts", "remote_host", "remote_port", "log_user",
+    "database", "pid", "level", "line_no", "n_lines", "message",
+    "duration_ms", "phase", "query", "normalized_query",
+)
+
+
+def _ts(sec: int) -> datetime.datetime:
+    return datetime.datetime(2019, 4, 1, 10, 0, sec)
+
+
+ADVERSARIAL_ROWS = [
+    (1, _ts(0), "10.0.0.1", 50314, "app", "proddb", 42, "LOG", 1, 2,
+     " duration: 1.5 ms  statement: SELECT \x01 FROM t\n\tWHERE x = '\x01\x01'",
+     1.5, "statement", "SELECT \x01 FROM t\n\tWHERE x = '\x01\x01'",
+     "select \x01 from t where x = ?"),
+    (2, _ts(1), "we\x01ird", 1, "ap\x01p", "prod", 43, "LOG", 3, 1, " x",
+     None, None, None, None),
+    (3, _ts(2), "[local]", None, "app", "proddb", 44, "LOG", 4, 1, "",
+     None, None, None, None),
+    (4, _ts(3), "10.0.0.2", None, "app", "proddb", 45, "ERROR", 5, 1, " boom",
+     None, None, None, None),
+    (5, None, None, None, None, None, None, "MALFORMED", 6, 3,
+     "not a header at all\nstill not one\n\tbut indented joins the garbage run",
+     None, None, None, None),
+    (6, _ts(4), "10.0.0.3", 1, "b", "c", 46, "STATEMENT", 9, 1,
+     " INSERT INTO t VALUES (1)", None, None, " INSERT INTO t VALUES (1)",
+     "insert into t values (?)"),
+]
+
+
+def test_adversarial_rows_on_both_plans(spark, tmp_path):
+    """The prefix extraction's edge cases, as literal rows through both
+    reassembly plans: the delimiter byte \\x01 in the payload, in a
+    continuation line and in a prefix field; an empty payload; a
+    ``[local]`` host; a missing time zone and port; a run of garbage
+    lines followed by an indented line (one MALFORMED event)."""
+    p = tmp_path / "adversarial.log"
+    p.write_text(ADVERSARIAL)
+    for parser in (parse_logs_windowed, parse_logs_splitwise):
+        ev = parser(spark, str(p)).drop("source_file")
+        assert tuple(ev.columns) == ADVERSARIAL_COLUMNS, parser.__name__
+        got = [tuple(r) for r in ev.orderBy("line_no").collect()]
+        assert got == ADVERSARIAL_ROWS, parser.__name__
+    release_parse_caches()
 
 
 def test_splitwise_matches_fused(spark, tmp_path):
     """parse_logs_splitwise (shuffle-free split-parallel reassembly)
-    must be row-identical to parse_logs on every golden fixture plus
-    edge files its fragment-stitching must get right: a file starting
+    must be row-identical to parse_logs_windowed on every golden fixture
+    plus edge files its fragment-stitching must get right: a file starting
     with continuation lines (the event_seq=0 junk group), a file
     starting with garbage, and a single-event file."""
-    from rds_pgbadger_etl_spark.operators.logparse import parse_logs_splitwise
-
     edge1 = tmp_path / "leading_continuation.log"
     edge1.write_text(
         "\tWHERE orphan = 1\n"
@@ -466,7 +586,7 @@ def test_splitwise_matches_fused(spark, tmp_path):
         str(edge1), str(edge2), str(edge3)
     ]
     for p in paths:
-        fused = parse_logs(spark, p)
+        fused = parse_logs_windowed(spark, p)
         split = parse_logs_splitwise(spark, p)
         assert [(f.name, f.dataType) for f in fused.schema] == [
             (f.name, f.dataType) for f in split.schema
@@ -478,7 +598,7 @@ def test_splitwise_matches_fused(spark, tmp_path):
     # whole-directory read (multi-file) must also agree
     d_f = [
         r.asDict()
-        for r in parse_logs(spark, str(tmp_path))
+        for r in parse_logs_windowed(spark, str(tmp_path))
         .orderBy("source_file", "line_no")
         .collect()
     ]
@@ -496,8 +616,6 @@ def test_splitwise_under_forced_file_splits(spark, tmp_path):
     file read as ~16 x 4 MB splits) it must reassemble straddling
     multi-line statements via fragment stitching and agree with the
     unsplit windowed parse — while never shuffling the raw lines."""
-    from rds_pgbadger_etl_spark.operators.logparse import parse_logs_splitwise
-
     p = str(tmp_path / "big_hour.log")
     n_events, n_lines = _write_big_log(p, 64 * 1024 * 1024)
 
@@ -509,7 +627,7 @@ def test_splitwise_under_forced_file_splits(spark, tmp_path):
 
         spark.conf.set("spark.sql.files.maxPartitionBytes", str(1 << 31))
         spark.conf.set("spark.sql.files.minPartitionNum", "1")
-        unsplit_sum = _event_checksum(parse_logs(spark, p))
+        unsplit_sum = _event_checksum(parse_logs_windowed(spark, p))
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
         spark.conf.unset("spark.sql.files.minPartitionNum")
@@ -523,8 +641,6 @@ def test_splitwise_event_spanning_whole_splits(spark, tmp_path):
     """An event whose continuation spans ENTIRE splits: middle splits
     contain no header at all, so their lines are pure head-fragments
     and the stitch must chain them through to the opening header."""
-    from rds_pgbadger_etl_spark.operators.logparse import parse_logs_splitwise
-
     p = tmp_path / "monster.log"
     hdr = "2019-04-01 10:00:00 UTC:h(1):u@d:[9]:LOG:  duration: 9.9 ms  statement: SELECT giant"
     cont = ["\tline %06d of the monster statement" % i for i in range(120_000)]
@@ -554,15 +670,13 @@ def test_corrupt_timestamp_yields_null_not_job_failure(spark, tmp_path):
     passes the \\d{2} regex) must parse with event_ts NULL — under
     Spark's ANSI mode a plain to_timestamp would throw
     CANNOT_PARSE_TIMESTAMP and kill the entire job on one corrupt line.
-    All three reassembly strategies must agree."""
-    from rds_pgbadger_etl_spark.operators.logparse import parse_logs_splitwise
-
+    Both reassembly plans must agree."""
     p = tmp_path / "corrupt_ts.log"
     p.write_text(
         "2019-04-01 33:00:00 UTC:h(1):u@d:[1]:LOG:  bad clock\n"
         "2019-04-01 10:00:01 UTC:h(1):u@d:[2]:LOG:  fine\n"
     )
-    for parser in (parse_logs, parse_logs_splitwise):
+    for parser in (parse_logs_windowed, parse_logs_splitwise):
         rows = parser(spark, str(p)).orderBy("line_no").collect()
         assert [r.event_ts for r in rows] == [
             None,

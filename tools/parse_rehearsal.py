@@ -3,11 +3,17 @@
 Exercises the reference's unit of work (rds_pgbadger.py:80,120 — one
 hour-granular log file per RDS download, a directory of them per run)
 at multi-GB scale: generate N hour files of ~SIZE_MB each, then run the
-full production path — parse_logs → write_events_partitioned →
-full_report → write_report — and measure wall time, rows/s, shuffle
-read/write bytes per stage (from the Spark event log), and the
-reassembly partition sizes (per-source-file line counts, since P2
-shuffles once on source_file).
+full production path — parse → write_events_partitioned → full_report →
+write_report — and measure wall time, CPU seconds (this process, its JVM
+and the JVM's Python workers), rows/s, shuffle read/write bytes per
+stage (from the Spark event log), and the reassembly partition sizes
+(per-source-file line counts, since the windowed plan shuffles once on
+source_file).
+
+The parse runs one reassembly plan by its function name, whatever
+``parse_logs`` would pick for these sizes: REHEARSAL_STRATEGY=windowed
+(the default, ``parse_logs_windowed``) or splitwise
+(``parse_logs_splitwise``).
 
 Usage:  python tools/parse_rehearsal.py [hours] [mb_per_hour]
 Writes a JSON summary to stdout; intermediate data under
@@ -208,9 +214,11 @@ def main() -> None:
         os.path.getsize(f"{logdir}/{f}") for f in os.listdir(logdir)
     )
 
+    from perfbench.cpu import tree_seconds
+
     from rds_pgbadger_etl_spark.operators.logparse import (
-        parse_logs,
         parse_logs_splitwise,
+        parse_logs_windowed,
     )
     from rds_pgbadger_etl_spark.plans.reports import full_report
     from rds_pgbadger_etl_spark.session import get_spark
@@ -230,12 +238,15 @@ def main() -> None:
     )
 
     strategy = os.environ.get("REHEARSAL_STRATEGY", "windowed")
+    plans = {"windowed": parse_logs_windowed, "splitwise": parse_logs_splitwise}
+    if strategy not in plans:
+        raise SystemExit(f"REHEARSAL_STRATEGY={strategy!r} is not one of {sorted(plans)}")
     shutil.rmtree(outdir, ignore_errors=True)
-    t0 = time.perf_counter()
-    parser = parse_logs_splitwise if strategy == "splitwise" else parse_logs
-    parsed = parser(spark, logdir)
+    c0, t0 = tree_seconds(), time.perf_counter()
+    parsed = plans[strategy](spark, logdir)
     write_events_partitioned(parsed, outdir)
     t_parse = time.perf_counter() - t0
+    cpu_parse = tree_seconds() - c0
 
     from rds_pgbadger_etl_spark.operators.logparse import release_parse_caches
     release_parse_caches()  # drop the splitwise segment cache, if any
@@ -281,6 +292,7 @@ def main() -> None:
         "input_gb": round(input_bytes / 1e9, 2),
         "gen_sec": round(t_gen, 1),
         "parse_write_sec": round(t_parse, 1),
+        "parse_write_cpu_sec": round(cpu_parse, 1),
         "report_sec": round(t_report, 1),
         "n_events": n_events,
         "n_lines": int(n_lines),
