@@ -225,17 +225,15 @@ def run_index_stats(args) -> None:
     """The observability half of the store-maintenance surface: the
     layout audit (and, for ANN stores, the SQ8 drift audit — read from
     the O(metadata) manifest counters) as JSON lines a cron wrapper can
-    alert on. Store kind is detected from the on-disk quantizer tables
-    — the two artifacts' table sets are disjoint markers."""
+    alert on. Store kind is detected from the on-disk tables — an ANN
+    index has ``coarse/``, a dedup store ``profiles/``."""
     import json
 
     from rds_pgbadger_etl_spark.session import get_spark
 
     spark = get_spark(app_name="rds-pgbadger-etl-spark", cpus=args.cpus)
     d = args.index_stats
-    if os.path.isdir(os.path.join(d, "centroids")) or os.path.isdir(
-        os.path.join(d, "coarse")
-    ):
+    if os.path.isdir(os.path.join(d, "coarse")):
         from rds_pgbadger_etl_spark.operators.ann_index import (
             ann_index_stats,
         )
@@ -249,7 +247,7 @@ def run_index_stats(args) -> None:
         df = dedup_index_stats(spark, d)
     else:
         raise SystemExit(
-            f"{d!r} holds neither an ANN index (centroids/ or coarse/) "
+            f"{d!r} holds neither an ANN index (coarse/) "
             "nor a dedup store (profiles/)"
         )
     for row in df.collect():

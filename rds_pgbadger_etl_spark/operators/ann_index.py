@@ -9,41 +9,39 @@ readers answer top-k from the artifact alone — a fresh SparkSession
 never touches the raw corpus again (pinned by
 tests/test_ann_index.py::test_fresh_session_answers_from_index).
 
-Layout (all under ``index_dir``). Two layouts share the corpus tables
-and differ in the coarse quantizer and in the corpus tables' partition
-columns (:func:`_parts`): ``cell`` on the single-level layout,
-``(group, cell)`` on the two-level one.
+Layout (all under ``index_dir``): one layout, a two-level quantizer
+(coarse groups over fine cells, the IMI of Babenko & Lempitsky, CVPR
+2012). :func:`build_ann_index` stores its IVF quantizer as one group;
+:func:`build_ann_index_2level` shards the cells over several. The
+corpus tables are partitioned by ``(group, cell)`` (:data:`_PARTS`),
+so a probe prunes on group at the top directory level and cell below.
 
-- ``centroids/``   (cell, c_emb) — single-level only: the IVF coarse
-  quantizer, tiny.
-- ``coarse/``      (group, g_emb) — two-level only: the coarse groups,
-  tiny. Its presence marks the layout (:func:`_is_2level`).
-- ``fine/``        (cell, c_emb) **partitioned by group** — two-level
-  only: the fine centroids, sharded by their nearest coarse group, so a
-  reader fetches only the probed groups' shards.
+- ``coarse/``      (group, g_emb) — the coarse groups, tiny.
+- ``fine/``        (cell, c_emb) **partitioned by group** — the fine
+  centroids, sharded by their coarse group, so a reader fetches only
+  the probed groups' shards.
 - ``codebook/``    (subspace, dim, cell, ic) — PQ centroid components in
   the exact-integer domain (PQ_INT_SCALE), m×k×sub rows, tiny.
-- ``vectors/``     (vec_id, codes array<int>) **partitioned by the
-  layout's columns** — the PQ-encoded corpus, ONE row per vector with
-  the PQ_M codes packed into an array (the long form repeated the
-  8-byte vec_id per subspace — 4x the rows and bytes for 4x 4-bit
-  payloads). Probing n_probe of n_centroids cells is a partition-pruned
-  scan reading ~n_probe/n_centroids of log2(PQ_K)·PQ_M bits per vector:
-  both IVF-PQ pruning axes fall out of the layout, and ADC scoring is a
-  MAP-SIDE array expression over the broadcast flattened LUT (no
-  per-subspace join, no (q_id, vec_id) re-aggregation shuffle).
-- ``raw/``         (vec_id, embedding) **partitioned by the layout's
-  columns** — the IVF-Flat rerank arm: exact cosine inside probed cells
-  only.
-- ``lsh_buckets/`` (vec_id, bucket) **partitioned by table_id** —
-  single-level only: the random-hyperplane bands for candidate
-  generation.
-- Derived arms, present once added and listed in the manifest:
+- ``vectors/``     (vec_id, codes array<int>) — the PQ-encoded corpus,
+  ONE row per vector with the PQ_M codes packed into an array (the long
+  form repeated the 8-byte vec_id per subspace — 4x the rows and bytes
+  for 4x 4-bit payloads). Probing n_probe of the cells is a
+  partition-pruned scan reading ~n_probe/n_cells of log2(PQ_K)·PQ_M
+  bits per vector: both IVF-PQ pruning axes fall out of the layout, and
+  ADC scoring is a MAP-SIDE array expression over the broadcast
+  flattened LUT (no per-subspace join, no (q_id, vec_id) re-aggregation
+  shuffle).
+- ``raw/``         (vec_id, embedding) — the IVF-Flat rerank arm: exact
+  cosine inside probed cells only.
+- Flagged arms, present once added and listed in the manifest (each
+  reader fails loudly without its flag): ``lsh_buckets/`` (vec_id,
+  bucket) **partitioned by table_id**, the random-hyperplane bands for
+  candidate generation, written by :func:`build_ann_index` only;
   ``sq8/`` (vec_id, codes array<int>) and ``sq8_prefix/`` (its leading
   codes) with their grid ``sq_stats/`` (dim, vmin, vmax); ``binary/``
   (vec_id, words array<long>) with its thresholds ``bin_stats/`` (dim,
-  thresh). The code tables are partitioned by the layout's columns;
-  the grids are tiny.
+  thresh). The code tables are partitioned by ``(group, cell)``; the
+  grids are tiny.
 - ``tombstones/``  (vec_id) — logically deleted ids, applied at
   compaction.
 
@@ -56,15 +54,15 @@ by the numpy kernels the UDFs wrap and written with pyarrow, one file
 per partition value, as Spark's partitionBy lays them out
 (:func:`_land_local`). A larger input runs the SPARK plan: map-only UDF
 passes and partitionBy writes (:func:`_land_corpus`). On both sides the
-metadata-sized quantizer tables (``centroids/``, ``codebook/``,
-``coarse/``, ``fine/``) are written and read with pyarrow, except that
-the distributed two-level build writes ``fine/`` with Spark. The
+metadata-sized quantizer tables (``coarse/``, ``fine/``,
+``codebook/``) are written and read with pyarrow, except that the
+distributed two-level build writes ``fine/`` with Spark. The
 derived-arm verbs (``add_sq8_to_ann_index`` and friends) and compaction
 always run on Spark, so a table can hold files of both writers.
 
 Query-side terms (probe selection, the per-query ADC lookup table, the
 query's LSH bucket signatures) are computed on the DRIVER from the tiny
-centroid/codebook tables: queries × n_centroids cosines and
+quantizer/codebook tables: queries × probed-group cells cosines and
 queries × m × k integer distances — metadata-scale by construction, and
 bit-identical to the distributed formulas (same np.round/einsum
 conventions as similarity.cosine_batch / pq_distances), so results
@@ -118,36 +116,35 @@ N_CELLS_2L = 16
 N_PROBE_GROUPS = 2
 
 # On-disk layout version, stamped into the generation manifest by every
-# build and checked by append/read/compact. Version 2 = the packed
-# ``vectors/`` schema (one (vec_id, codes array<int>) row per vector;
-# 2-level dirs additionally require vectors/ + codebook/). Artifacts
-# from before the stamp existed (or from the long-form (vec_id,
-# subspace, code) era) have no marker and fail loudly with a rebuild
-# message instead of, e.g., an append writing mixed-schema parquet into
-# one table — a corruption that only surfaces at read time.
-LAYOUT_VERSION = 2
+# build and checked by append/read/compact. Version 3 = one layout:
+# ``coarse/`` + ``fine/`` quantizers, corpus tables partitioned by
+# (group, cell), packed ``vectors/`` rows (version 2 also had a
+# single-level layout: one centroid table, cell-partitioned tables).
+# Any other stamp, or none (the long-form (vec_id, subspace, code) era),
+# fails loudly with a rebuild message instead of, e.g., an append
+# writing mixed-layout parquet into one table — a corruption that only
+# surfaces at read time.
+LAYOUT_VERSION = 3
 _LAYOUT_KEY = "__ann_layout__"
-_LAYOUT_OK: set[str] = set()  # per-process memo: one manifest read per dir
-
-
-def _stamp_layout(index_dir: str) -> None:
-    M.write_meta(index_dir, _LAYOUT_KEY, LAYOUT_VERSION)
-    _LAYOUT_OK.add(index_dir)
+# The partition columns every corpus table (vectors/, raw/, sq8/,
+# sq8_prefix/, binary/) is written under.
+_PARTS = ("group", "cell")
 
 
 def _check_layout(index_dir: str) -> None:
-    if index_dir in _LAYOUT_OK:
-        return
+    """Raise unless the manifest's layout stamp is LAYOUT_VERSION. Read
+    on every call: searches pass here on a quantizer cache miss
+    (:func:`_read_coarse`), the write and maintenance verbs on entry."""
     got = M.read_meta(index_dir, _LAYOUT_KEY)
     if got != LAYOUT_VERSION:
         raise ValueError(
             f"ANN index at {index_dir!r} has layout version {got!r}, "
-            f"expected {LAYOUT_VERSION} (the packed vectors/ schema). "
-            "It predates the current on-disk format — rebuild it with "
-            "build_ann_index / build_ann_index_2level before appending, "
-            "searching, or compacting."
+            f"expected {LAYOUT_VERSION} (coarse/ + fine/ quantizers, "
+            "tables partitioned by (group, cell)). It predates the "
+            "current on-disk format — rebuild it with build_ann_index / "
+            "build_ann_index_2level before appending, searching, or "
+            "compacting."
         )
-    _LAYOUT_OK.add(index_dir)
 
 
 def auto_n_centroids(n_vecs: int, n_probe: int = S.N_PROBE) -> int:
@@ -168,8 +165,9 @@ def auto_n_centroids(n_vecs: int, n_probe: int = S.N_PROBE) -> int:
     Power-of-two so cell counts are stable across nearby corpus sizes;
     floored at N_CENTROIDS; capped at AUTO_MAX_CELLS (~270M rows on) —
     past the cap, cells fatten again and a deployment should shard the
-    quantizer instead (IMI / two-level IVF), which changes the layout,
-    not this rule. ``n_probe`` is accepted for signature stability but
+    quantizer over several groups instead (:func:`auto_quantizer_shape`,
+    :func:`build_ann_index_2level`), which changes no table, only the
+    number of groups. ``n_probe`` is accepted for signature stability but
     the volume rule does not depend on it.
     """
     import math
@@ -181,10 +179,10 @@ def auto_n_centroids(n_vecs: int, n_probe: int = S.N_PROBE) -> int:
 
 def auto_quantizer_shape(n_vecs: int) -> tuple[int, int]:
     """Quantizer shape past the AUTO_MAX_CELLS wall: ``(n_groups,
-    n_cells)``; ``n_groups == 1`` means single-level (use
-    :func:`build_ann_index` with :func:`auto_n_centroids`).
+    n_cells)``; ``n_groups == 1`` is the shape :func:`build_ann_index`
+    writes with :func:`auto_n_centroids` (one group over every cell).
 
-    Single-level IVF holds cell volume at ~AUTO_CELL_ROWS up to
+    One-group IVF holds cell volume at ~AUTO_CELL_ROWS up to
     AUTO_MAX_CELLS cells (~270M vectors); past the cap cells fatten
     linearly and per-probe scan cost grows with the corpus again. The
     two-level quantizer (coarse groups over fine cells — IMI/two-level
@@ -202,7 +200,7 @@ def auto_quantizer_shape(n_vecs: int) -> tuple[int, int]:
     because the SHIPPED build trains the quantizers driver-side
     (build_ann_index_2level's prefix collect + _group_of_cells matmul),
     which is feasible to ~1M cells. Past the clamp, cells fatten
-    linearly exactly as single-level does past ITS cap; recovering
+    linearly exactly as one group does past ITS cap; recovering
     constant volume means distributing the quantizer-assignment pass,
     which changes no reader and no layout.
     """
@@ -394,8 +392,7 @@ def _pq_encode(
     """PQ codes of the float64 rows ``x`` against the integer codebook
     ``ic``: quantize (HALF_UP), then :func:`similarity.pq_argmin`. With
     ``res`` = (sorted cell ids, their integer centroid rows), each row's
-    RESIDUAL against its own cell (``cells``) is encoded instead; a
-    single-level index passes ids ``arange(n_cells)``."""
+    RESIDUAL against its own cell (``cells``) is encoded instead."""
     iv = S._half_up(x * S.PQ_INT_SCALE)
     if res is not None:
         iv = iv - res[1][np.searchsorted(res[0], cells)]
@@ -421,19 +418,21 @@ def build_ann_index(
     emb: DataFrame,
     index_dir: str,
     n_centroids: int | None = S.N_CENTROIDS,
-    n_tables: int = S.N_TABLES,
-    n_planes: int = S.N_PLANES,
     refine_iters: int = 0,
     residual: bool | str = "auto",
     train_fraction: float | None = None,
 ) -> None:
     """Encode the corpus once and land every staging table on disk.
 
-    One IVF assignment pass + one PQ encode pass + one LSH banding pass
-    over ``emb``, all with the vectorized numpy kernels over the
-    metadata-sized quantizers. An input whose plan estimate fits one
-    scan split (:func:`_collect_small`) is collected once and landed on
-    the driver with pyarrow writes; a larger one runs as map-only Spark
+    The IVF quantizer is stored as ONE group of the layout (module
+    docstring): ``coarse/`` gets one row (cell 0's centroid), ``fine/``
+    every cell under ``group=0``. Then one assignment pass + one PQ
+    encode pass + one LSH banding pass over ``emb`` (this build alone
+    writes ``lsh_buckets/`` and stamps the ``__lsh__`` flag), all with
+    the vectorized numpy kernels over the metadata-sized quantizers.
+    An input whose plan estimate fits one scan split
+    (:func:`_collect_small`) is collected once and landed on the driver
+    with pyarrow writes; a larger one runs as map-only Spark
     UDF passes whose only exchanges are the partitionBy writes. Either
     way a re-run overwrites every table it writes.
 
@@ -443,11 +442,11 @@ def build_ann_index(
     default S.N_CENTROIDS keeps fixture corpora and registered-query
     artifacts deterministic.
 
-    ``refine_iters > 0`` trains the coarse quantizer with Lloyd's
-    k-means (similarity.kmeans_centroids — the production refinement the
+    ``refine_iters > 0`` trains the quantizer with Lloyd's k-means
+    (similarity.kmeans_centroids — the production refinement the
     ivf_cells docstring describes) before assignment; the artifact
     layout and every reader are unchanged, because readers derive
-    probes from the STORED centroid table, whatever produced it.
+    probes from the STORED quantizer tables, whatever produced them.
 
     ``residual=True`` PQ-encodes each vector's RESIDUAL against its own
     IVF centroid instead of the raw vector (module comment above) —
@@ -479,7 +478,7 @@ def build_ann_index(
         # kmeans drops cells that lose every member (clustered corpora
         # with a biased init), leaving non-contiguous init-id labels —
         # relabel 0..n-1 (stable by original id). Readers never care:
-        # they derive probes from the STORED table, and cell ids are
+        # they derive probes from the STORED tables, and cell ids are
         # opaque to every downstream consumer.
         cents = (
             S.kmeans_centroids(train, n_centroids, refine_iters + 1)
@@ -496,16 +495,21 @@ def build_ann_index(
         )
     else:
         head = _prefix(emb, local, n_centroids)
-        cents = pa.table(
-            {"cell": head["vec_id"].cast(pa.int32()), "c_emb": head["embedding"]}
-        )
-    _write_pa(index_dir, "centroids", cents, overwrite=True)
-    # assignment against the JUST-WRITTEN centroid table (the same
-    # kernel and semantics as similarity.ivf_cells; for refine_iters=0
-    # the matrix is identical, so so are the cells)
+        cents = pa.table({"cell": head["vec_id"], "c_emb": head["embedding"]})
+    cents = cents.sort_by("cell")
+    cells = cents["cell"].to_numpy().astype("int64")
+    c_mat = _matrix(cents["c_emb"])
+    _write_coarse(index_dir, [0], c_mat[:1], pa.float32())
+    _write_fine(
+        index_dir, cells, np.zeros(len(cells), "int64"), c_mat, pa.float32()
+    )
+    M.write_meta(index_dir, _LSH_KEY, True)
+    # assignment against the JUST-WRITTEN quantizer tables (with one
+    # group, the nearest-cell kernel of similarity.ivf_cells; for
+    # refine_iters=0 the matrix is identical, so so are the cells)
     _land(
         spark, index_dir, emb, local, _stored_assigner(spark, index_dir),
-        residual, "overwrite", n_tables, n_planes,
+        residual, "overwrite",
     )
 
 
@@ -528,10 +532,12 @@ def _train_sample(
 
 def _start_build(index_dir: str) -> None:
     """What every build does first: stamp the layout version, and orphan
-    the derived SQ8, prefix and binary arms — their grids and thresholds
-    were trained on the old corpus, so readers fail loudly until the
-    arms are re-added."""
-    _stamp_layout(index_dir)
+    the flagged arms — the LSH bands until :func:`build_ann_index`
+    writes them again; the SQ8, prefix and binary arms because their
+    grids and thresholds were trained on the old corpus — so readers
+    fail loudly until the arms are re-added."""
+    M.write_meta(index_dir, _LAYOUT_KEY, LAYOUT_VERSION)
+    M.write_meta(index_dir, _LSH_KEY, False)
     M.write_meta(index_dir, _SQ8_KEY, False)
     M.write_meta(index_dir, _SQ8_PREFIX_DIMS_KEY, None)
     M.write_meta(index_dir, _BINARY_KEY, False)
@@ -701,62 +707,39 @@ def _read_pa(index_dir: str, table: str, where=None) -> pa.Table:
 
 
 class _Assigner(NamedTuple):
-    """A coarse quantizer as the numpy kernel both landings run:
-    ``nearest`` maps float64 rows to their fine cell ids; ``cells``
-    (sorted) and ``c_mat`` (their FLOAT rows) feed the residual encoder
-    and the variance diagnostic; ``cell_groups`` is each cell's group on
-    the two-level layout, None on the single-level one."""
+    """A quantizer as the numpy kernel both landings run: ``nearest``
+    maps float64 rows to their fine cell ids; ``cells`` (sorted) and
+    ``c_mat`` (their FLOAT rows) feed the residual encoder and the
+    variance diagnostic; ``cell_groups`` is each cell's group."""
 
     nearest: Callable[[np.ndarray], np.ndarray]
     cells: np.ndarray
     c_mat: np.ndarray
-    cell_groups: np.ndarray | None = None
+    cell_groups: np.ndarray
 
     @property
     def centroids(self) -> tuple[np.ndarray, np.ndarray]:
         return self.cells, self.c_mat
 
-    @property
-    def names(self) -> tuple[str, ...]:
-        return ("cell",) if self.cell_groups is None else ("group", "cell")
-
     def parts(self, x: np.ndarray) -> dict[str, np.ndarray]:
         """The partition columns of the rows ``x``."""
         cell = self.nearest(x).astype("int64")
-        if self.cell_groups is None:
-            return {"cell": cell}
         group = self.cell_groups[np.searchsorted(self.cells, cell)]
         return {"group": group, "cell": cell}
 
 
-def _assigner_1level(c_mat: np.ndarray) -> _Assigner:
-    """Nearest cell by rounded cosine, ties to the lower id — the kernel
-    of similarity.nearest_cell_udf over cells ``0..n-1``."""
-    c_norm = S.row_norms(c_mat)
-    return _Assigner(
-        lambda x: S.nearest_rounded(x, S.row_norms(x), c_mat, c_norm),
-        np.arange(len(c_mat), dtype="int64"),
-        c_mat,
-    )
-
-
 def _stored_assigner(spark: SparkSession, index_dir: str) -> _Assigner:
-    """The STORED quantizer of the layout at ``index_dir``: single-level
-    ``centroids/``, or the composed two-level assignment
+    """The STORED quantizer at ``index_dir``: the composed assignment
     (:func:`_assigner_2level`) against ``coarse/`` and ``fine/``."""
-    if _is_2level(index_dir):
-        groups, g_mat = _read_coarse(spark, index_dir)
-        fine = _read_pa(index_dir, "fine").sort_by("cell")
-        return _assigner_2level(
-            groups,
-            g_mat,
-            fine["cell"].to_numpy().astype("int64"),
-            fine["group"].to_numpy().astype("int64"),
-            _matrix(fine["c_emb"]),
-        )
-    cell_ids, cent_matrix = _read_centroids(spark, index_dir)
-    assert cell_ids == list(range(len(cell_ids))), "non-contiguous cells"
-    return _assigner_1level(cent_matrix)
+    groups, g_mat = _read_coarse(spark, index_dir)
+    fine = _read_pa(index_dir, "fine").sort_by("cell")
+    return _assigner_2level(
+        groups,
+        g_mat,
+        fine["cell"].to_numpy().astype("int64"),
+        fine["group"].to_numpy().astype("int64"),
+        _matrix(fine["c_emb"]),
+    )
 
 
 def _cells_udf(nearest: Callable[[np.ndarray], np.ndarray]):
@@ -776,11 +759,9 @@ def _cells_udf(nearest: Callable[[np.ndarray], np.ndarray]):
 
 def _assigned_df(spark: SparkSession, emb: DataFrame, a: _Assigner) -> DataFrame:
     """``emb`` assigned by ``a`` as a map-only Spark pass: rows
-    (vec_id, embedding, *partition columns); on the two-level layout the
-    cell's group joins back from the metadata-sized cell map."""
+    (vec_id, embedding, group, cell); the cell's group joins back from
+    the metadata-sized cell map."""
     cell = _cells_udf(a.nearest)(F.col("embedding"))
-    if a.cell_groups is None:
-        return emb.select("vec_id", "embedding", cell.cast("int").alias("cell"))
     gmap = _local_df(
         spark,
         list(zip(a.cells.tolist(), a.cell_groups.tolist())),
@@ -806,7 +787,7 @@ def _assign_local(
     chunks = [a.parts(x) for _, _, x in _batches(spark, t)]
     return {
         c: np.concatenate([ch[c] for ch in chunks] or [np.empty(0, "int64")])
-        for c in a.names
+        for c in _PARTS
     }
 
 
@@ -833,8 +814,6 @@ def _land(
     a: _Assigner,
     residual: bool | str,
     mode: str,
-    n_tables: int = S.N_TABLES,
-    n_planes: int = S.N_PLANES,
 ) -> None:
     """Assign ``emb`` by ``a`` and land every corpus table: on the driver
     when ``local`` holds the collected input (:func:`_land_local`), else
@@ -855,7 +834,7 @@ def _land(
                 )
             _land_local(
                 spark, index_dir, local, parts, mode,
-                a.centroids if residual else None, n_tables, n_planes,
+                a.centroids if residual else None,
             )
         return
     with _persisted(_assigned_df(spark, emb, a)) as assigned:
@@ -867,7 +846,7 @@ def _land(
             )
         _land_corpus(
             spark, index_dir, assigned, mode,
-            a.centroids if residual else None, n_tables, n_planes,
+            a.centroids if residual else None,
         )
 
 
@@ -877,12 +856,10 @@ def _land_corpus(
     assigned: DataFrame,
     mode: str,
     centroids: tuple[np.ndarray, np.ndarray] | None,
-    n_tables: int = S.N_TABLES,
-    n_planes: int = S.N_PLANES,
 ) -> None:
-    """Write the assigned rows (vec_id, embedding, *:func:`_parts`) —
+    """Write the assigned rows (vec_id, embedding, group, cell) —
     persisted by the caller: every table reads them — into each corpus
-    table :func:`_table_map` lists for the layout at ``index_dir``.
+    table :func:`_table_map` lists for the index at ``index_dir``.
     ``mode="overwrite"`` is a build: the PQ ``codebook/`` lands first,
     from the rows with vec_id < PQ_K (the deterministic-sample
     convention); ``mode="append"`` encodes against the STORED codebook
@@ -900,9 +877,8 @@ def _land_corpus(
       present, encoded against its stored grid or thresholds, with the
       drift counters accumulated by one O(new) aggregate. A build finds
       none: :func:`_start_build` orphaned them.
-    - ``lsh_buckets/``: the single-level layout's hyperplane bands."""
+    - ``lsh_buckets/``: the hyperplane bands, when flagged."""
     tables = _table_map(index_dir)
-    parts = tables["raw"]
 
     def write(df: DataFrame, table: str) -> None:
         (
@@ -928,13 +904,13 @@ def _land_corpus(
     codes = _pq_encode_udf(
         _load_codebook(spark, index_dir), _residual_rows(centroids)
     )(F.col("embedding"), F.col("cell"))
-    write(assigned.select("vec_id", *parts, codes.alias("codes")), "vectors")
-    write(assigned.select("vec_id", "embedding", *parts), "raw")
+    write(assigned.select("vec_id", *_PARTS, codes.alias("codes")), "vectors")
+    write(assigned.select("vec_id", "embedding", *_PARTS), "raw")
     if "sq8" in tables:
         vmin, scale = _read_sq_stats(spark, index_dir)
         sq8_new = assigned.select(
             "vec_id",
-            *parts,
+            *_PARTS,
             _sq8_encode_udf(vmin, scale)(F.col("embedding")).alias("codes"),
         )
         write(sq8_new, "sq8")
@@ -943,7 +919,7 @@ def _land_corpus(
             pdims = int(M.read_meta(index_dir, _SQ8_PREFIX_DIMS_KEY))
             write(
                 sq8_new.select(
-                    "vec_id", *parts, F.slice("codes", 1, pdims).alias("codes")
+                    "vec_id", *_PARTS, F.slice("codes", 1, pdims).alias("codes")
                 ),
                 "sq8_prefix",
             )
@@ -951,7 +927,7 @@ def _land_corpus(
         thresh = _read_bin_thresh(spark, index_dir)
         bin_new = assigned.select(
             "vec_id",
-            *parts,
+            *_PARTS,
             _binary_encode_udf(thresh)(F.col("embedding")).alias("words"),
         )
         write(bin_new, "binary")
@@ -960,9 +936,9 @@ def _land_corpus(
         )
     if "lsh_buckets" in tables:
         write(
-            S.lsh_buckets_long(
-                assigned.select("vec_id", "embedding"), n_tables, n_planes
-            ).select("vec_id", "bucket", "table_id"),
+            S.lsh_buckets_long(assigned.select("vec_id", "embedding")).select(
+                "vec_id", "bucket", "table_id"
+            ),
             "lsh_buckets",
         )
 
@@ -974,8 +950,6 @@ def _land_local(
     parts: dict[str, np.ndarray],
     mode: str,
     centroids: tuple[np.ndarray, np.ndarray] | None,
-    n_tables: int = S.N_TABLES,
-    n_planes: int = S.N_PLANES,
 ) -> None:
     """:func:`_land_corpus` on the driver, for the collected rows ``t``
     assigned to ``parts``: the same tables from the same numpy kernels,
@@ -1024,14 +998,14 @@ def _land_local(
             out["binary"].append(rows(words=_list_array(words)))
             ones += int(np.unpackbits(words.view(np.uint8)).sum())
         if "lsh_buckets" in out:
-            b = S.lsh_bucket_strings(x, n_tables, n_planes)
+            b = S.lsh_bucket_strings(x)
             out["lsh_buckets"].append(
                 pa.table(
                     {
-                        "vec_id": np.repeat(ids[off : off + len(x)], n_tables),
+                        "vec_id": np.repeat(ids[off : off + len(x)], S.N_TABLES),
                         "bucket": pa.array(b.ravel(), pa.string()),
                         "table_id": np.tile(
-                            np.arange(n_tables, dtype=np.int32), len(x)
+                            np.arange(S.N_TABLES, dtype=np.int32), len(x)
                         ),
                     }
                 )
@@ -1092,16 +1066,11 @@ def _write_codebook(
 
 
 def append_to_ann_index(
-    spark: SparkSession,
-    emb_new: DataFrame,
-    index_dir: str,
-    n_tables: int = S.N_TABLES,
-    n_planes: int = S.N_PLANES,
+    spark: SparkSession, emb_new: DataFrame, index_dir: str
 ) -> None:
     """Incremental index maintenance — the corpus grows, the index never
-    rebuilds, on either layout (read from disk, like every search). New
-    vectors are assigned and encoded against the STORED quantizers
-    (centroids or coarse/fine tables, PQ codebook, derived-arm grids are
+    rebuilds. New vectors are assigned and encoded against the STORED
+    quantizers (coarse/fine tables, PQ codebook, derived-arm grids are
     immutable once built: the IVF-PQ invariant that makes append O(new),
     and what keeps old and new codes comparable under one ADC LUT), then
     their rows APPEND into the partitioned tables — existing partitions'
@@ -1110,15 +1079,12 @@ def append_to_ann_index(
     A residual index (the manifest flag) encodes residuals against the
     stored cells. Equivalence with a from-scratch build over the union
     corpus is pinned by tests/test_ann_index.py (same quantizers ⇒
-    identical assignments, codes, bands, and search results).
-    ``n_tables``/``n_planes`` shape the single-level layout's LSH
-    bands."""
+    identical assignments, codes, bands, and search results)."""
     _check_layout(index_dir)
     a = _stored_assigner(spark, index_dir)
     _land(
         spark, index_dir, emb_new, _collect_small(spark, emb_new), a,
         M.read_meta(index_dir, _RESIDUAL_KEY, False), "append",
-        n_tables, n_planes,
     )
 
 
@@ -1133,8 +1099,8 @@ def delete_from_ann_index(spark: SparkSession, vec_ids, index_dir: str) -> None:
     the operational contract: bulk deletes should be followed by
     :func:`compact_ann_index`, which applies tombstones physically
     during its partition rewrite and then clears them). The quantizers
-    are untouched — centroids/codebook derive from the build-time
-    corpus and stay valid for the survivors, exactly as with append."""
+    are untouched — they derive from the build-time corpus and stay
+    valid for the survivors, exactly as with append."""
     M.write_tombstones(spark, vec_ids, index_dir, "vec_id")
 
 
@@ -1157,21 +1123,12 @@ def _rounded_cosines(q: np.ndarray, mat: np.ndarray) -> np.ndarray:
     return np.round(dots / norms, 6)
 
 
-# The quantizer tables (centroids, PQ codebook, SQ8 grid, binary
-# thresholds, two-level coarse/fine) are metadata-sized — every real ANN
+# The quantizer tables (coarse/fine, PQ codebook, SQ8 grid, binary
+# thresholds) are metadata-sized — every real ANN
 # service pins them in memory. They are cached per process through
 # M.cached_table, keyed on the files they were read from, so repeated
 # searches pay each tiny collect job once and a table rewritten by any
 # process is read again.
-
-
-def _read_centroids(spark: SparkSession, index_dir: str):
-    def load():
-        _check_layout(index_dir)  # every single-level reader passes here
-        t = _read_pa(index_dir, "centroids").sort_by("cell")
-        return t["cell"].to_pylist(), _matrix(t["c_emb"])
-
-    return M.cached_table(index_dir, "centroids", load)
 
 
 def _load_codebook(spark: SparkSession, index_dir: str) -> np.ndarray:
@@ -1185,19 +1142,6 @@ def _load_codebook(spark: SparkSession, index_dir: str) -> np.ndarray:
         return ic
 
     return M.cached_table(index_dir, "codebook", load)
-
-
-def _probe_cells(
-    queries: list[Query], cells: list[int], mat: np.ndarray, n_probe: int
-) -> list[tuple[int, int]]:
-    """(q_id, cell) pairs: the n_probe nearest centroids per query,
-    ordered by (sim desc, cell asc) like ivf_topk's probe window."""
-    out = []
-    for q_id, vec in queries:
-        sims = _rounded_cosines(np.asarray(vec, dtype=np.float64), mat)
-        ranked = sorted(zip(cells, sims), key=lambda cs: (-cs[1], cs[0]))
-        out.extend((q_id, c) for c, _ in ranked[:n_probe])
-    return out
 
 
 def _adc_lut(ic: np.ndarray, iq: np.ndarray) -> np.ndarray:
@@ -1217,14 +1161,12 @@ def _search_luts(
     index_dir: str,
     queries: list[Query],
     probes: list[tuple],
-    int_centroids_of,
 ) -> tuple[np.ndarray, bool]:
     """The search's ADC lookup tables and the index's residual flag.
     Standard index: one row per query, in query order. Residual index
     (the manifest flag): the query's residual DEPENDS ON THE PROBED
     CELL (r = q - c), so one row per probe, in probe order, against the
-    residual codebook; ``int_centroids_of(probes)`` gives the probed
-    cells' integer centroids."""
+    residual codebook, less the probed cells' integer centroids."""
     ic = _load_codebook(spark, index_dir)
     width = ic.shape[0] * ic.shape[2]
     # HALF_UP, not np.round: every other PQ quantization path
@@ -1244,7 +1186,7 @@ def _search_luts(
         row_of = {q_id: i for i, (q_id, _) in enumerate(queries)}
         iq = iq[[row_of[p[0]] for p in probes]]
         if probes:
-            iq = iq - int_centroids_of(probes)[:, :width]
+            iq = iq - _probed_int_centroids(spark, index_dir, probes)[:, :width]
     return _adc_lut(ic, iq), residual
 
 
@@ -1263,26 +1205,20 @@ def _adc_dist_col(n_cells: int = S.PQ_K):
     )
 
 
-def _probe_predicate(parts: list[str], probes: list[tuple]):
-    """Partition filter for probe rows ``(q_id, *parts)``: each
+def _probe_predicate(probes: list[tuple]):
+    """Partition filter for probe rows ``(q_id, group, cell)``: each
     partition column IN its probed values (what reaches the scan as
     PartitionFilters)."""
-    pred = F.col(parts[0]).isin(sorted({p[1] for p in probes}))
-    for i, c in enumerate(parts[1:], 2):
-        pred = pred & F.col(c).isin(sorted({p[i] for p in probes}))
-    return pred
+    group, cell = (sorted({p[i] for p in probes}) for i in (1, 2))
+    return F.col("group").isin(group) & F.col("cell").isin(cell)
 
 
 def _scan(
-    spark: SparkSession,
-    index_dir: str,
-    table: str,
-    parts: list[str],
-    probes: list[tuple],
+    spark: SparkSession, index_dir: str, table: str, probes: list[tuple]
 ) -> DataFrame:
     """``table`` read with only the probed partitions."""
     return spark.read.parquet(M.table_path(index_dir, table)).where(
-        _probe_predicate(parts, probes)
+        _probe_predicate(probes)
     )
 
 
@@ -1298,12 +1234,8 @@ def _queries_df(spark: SparkSession, queries: list[Query]) -> DataFrame:
     )
 
 
-# Probe-row schemas of the two layouts: q_id, then the partition columns
-# every probed table (raw/, vectors/, sq8/, binary/) is written under.
-_PQ_PROBES = T.StructType(
-    [T.StructField("q_id", T.LongType()), T.StructField("cell", T.IntegerType())]
-)
-_PQ_PROBES_2L = T.StructType(
+# The probe-row schema: q_id, then the partition columns (_PARTS).
+_PROBES = T.StructType(
     [
         T.StructField("q_id", T.LongType()),
         T.StructField("group", T.LongType()),
@@ -1347,25 +1279,21 @@ def _spark_adc_topk(
     index_dir: str,
     queries: list[Query],
     probes: list[tuple],
-    schema: T.StructType,
     lut: np.ndarray,
     residual: bool,
     k: int,
 ) -> DataFrame:
     """IVF-PQ scoring as a Spark plan over the probe rows ``(q_id,
-    *partition columns)``: a scan of ``vectors/`` pruned to the probed
+    group, cell)``: a scan of ``vectors/`` pruned to the probed
     partitions, broadcast probe and LUT joins (the LUT keyed on q_id, or
     on the whole probe row for a residual index), the map-side ADC sum,
     and a per-query top-k by (adc_dist, vec_id)."""
-    parts = schema.names[1:]
-    lut_schema = schema if residual else T.StructType(schema.fields[:1])
+    lut_schema = _PROBES if residual else T.StructType(_PROBES.fields[:1])
     lut_keys = probes if residual else [(q_id,) for q_id, _ in queries]
     lut_df = _local_df(spark, lut_keys, lut_schema, lut)
-    vectors = _live(
-        spark, index_dir, _scan(spark, index_dir, "vectors", parts, probes)
-    )
+    vectors = _live(spark, index_dir, _scan(spark, index_dir, "vectors", probes))
     scored = (
-        vectors.join(F.broadcast(_local_df(spark, probes, schema)), parts)
+        vectors.join(F.broadcast(_local_df(spark, probes, _PROBES)), list(_PARTS))
         .filter(F.col("vec_id") != F.col("q_id"))
         .join(F.broadcast(lut_df), lut_schema.names)
         .select("q_id", "vec_id", _adc_dist_col(
@@ -1378,7 +1306,7 @@ def _spark_adc_topk(
 
 
 def _probed_files(
-    index_dir: str, parts: list[str], probes: list[tuple]
+    index_dir: str, probes: list[tuple]
 ) -> dict[tuple, list[tuple[str, int]]]:
     """(path, bytes) of every data file in each probed ``vectors/``
     partition, listed as Spark lists them: names starting with ``.`` or
@@ -1387,7 +1315,7 @@ def _probed_files(
     root = M.table_path(index_dir, "vectors")
     out = {}
     for part in {p[1:] for p in probes}:
-        d = os.path.join(root, *(f"{c}={v}" for c, v in zip(parts, part)))
+        d = os.path.join(root, *(f"{c}={v}" for c, v in zip(_PARTS, part)))
         if not os.path.isdir(d):
             out[part] = []
             continue
@@ -1469,70 +1397,78 @@ def _ivfpq_topk(
     index_dir: str,
     queries: list[Query],
     probes: list[tuple],
-    schema: T.StructType,
-    int_centroids_of,
     k: int,
 ) -> DataFrame:
-    """IVF-PQ top-k over the probe rows of either layout. A search whose
+    """IVF-PQ top-k over the probe rows. A search whose
     probed partitions' data-file bytes, summed over the (query,
     partition) pairs, are at most ``spark.sql.files.maxPartitionBytes``
     is scored on the driver with no Spark job; a larger one runs the
     Spark plan. The bound sits below the measured crossover:
-    ``tools/ivfpq_serving_rehearsal.py`` on 2M-vector indexes of both
-    layouts and 4 cores timed the driver tail faster than the Spark
+    ``tools/ivfpq_serving_rehearsal.py`` on 2M-vector indexes (one and
+    16 groups) and 4 cores timed the driver tail faster than the Spark
     tail at every probed size from 0.5 MB to 178 MB, by 7-29x in wall
     time, although Spark scans inputs past a few MB with parallel
     tasks."""
-    lut, residual = _search_luts(
-        spark, index_dir, queries, probes, int_centroids_of
-    )
-    files = _probed_files(index_dir, schema.names[1:], probes)
+    lut, residual = _search_luts(spark, index_dir, queries, probes)
+    files = _probed_files(index_dir, probes)
     probed_bytes = sum(b for p in probes for _, b in files[p[1:]])
     if probed_bytes <= max_partition_bytes(spark):
         return _driver_adc_topk(
             spark, index_dir, queries, probes, files, lut, residual, k
         )
-    return _spark_adc_topk(
-        spark, index_dir, queries, probes, schema, lut, residual, k
-    )
+    return _spark_adc_topk(spark, index_dir, queries, probes, lut, residual, k)
 
 
 def _probes(
     spark: SparkSession,
     index_dir: str,
     queries: list[Query],
-    n_probe: int,
-    n_probe_groups: int,
-) -> tuple[list[tuple], T.StructType, Callable[[list[tuple]], np.ndarray]]:
-    """The probe step every search arm shares, for whichever layout
-    lives at ``index_dir``: the probe rows ``(q_id, *partition
-    columns)``, their schema (``_PQ_PROBES`` or ``_PQ_PROBES_2L``), and
-    a function giving the probed cells' integer centroids for a list of
-    probe rows (the residual LUT's input). A single-level index ranks
-    all its centroids per query; a two-level one ranks its coarse
-    groups, then the fine cells of its ``n_probe_groups`` nearest
-    groups (:func:`_probe_cells_2level`). Both keep ``n_probe`` cells
-    by (rounded sim desc, cell asc), so a two-level index with one
-    group answers exactly like the single-level index over the same
-    centroids."""
-    if _is_2level(index_dir):
-        probes = _probe_cells_2level(
-            spark, index_dir, queries, n_probe_groups, n_probe
+    n_probe: int = S.N_PROBE,
+    n_probe_groups: int = N_PROBE_GROUPS,
+) -> list[tuple[int, int, int]]:
+    """The probe step every search arm shares: (q_id, group, cell) probe
+    triples. Coarse-probe the groups (driver, n_groups cosines per
+    query), fetch ONLY the probed groups' fine-centroid shards
+    (partition-pruned ``fine/`` read), then keep each query's ``n_probe``
+    cells of its ``n_probe_groups`` groups by (rounded sim desc, cell
+    asc) — n_groups + n_probe_groups*(n_cells/n_groups) cosines per
+    query, never n_cells."""
+    groups, g_mat = _read_coarse(spark, index_dir)
+    q_groups: dict[int, list[int]] = {}
+    for q_id, vec in queries:
+        sims = _rounded_cosines(np.asarray(vec, dtype=np.float64), g_mat)
+        ranked = sorted(zip(groups, sims), key=lambda gs: (-gs[1], gs[0]))
+        q_groups[q_id] = [g for g, _ in ranked[:n_probe_groups]]
+    probed_groups = sorted({g for gs in q_groups.values() for g in gs})
+
+    by_group = _fine_shards(spark, index_dir, probed_groups)
+    probes = []  # (q_id, group, cell)
+    for q_id, vec in queries:
+        cand = [
+            (g, c, emb)
+            for g in q_groups[q_id]
+            for c, emb in by_group.get(g, [])
+        ]
+        if not cand:
+            continue
+        mat = np.array([emb for _, _, emb in cand], dtype=np.float64)
+        sims = _rounded_cosines(np.asarray(vec, dtype=np.float64), mat)
+        ranked = sorted(
+            zip((g for g, _, _ in cand), (c for _, c, _ in cand), sims),
+            key=lambda gcs: (-gcs[2], gcs[1]),
         )
+        probes.extend((q_id, g, c) for g, c, _ in ranked[:n_probe])
+    return probes
 
-        def int_centroids(rows: list[tuple]) -> np.ndarray:
-            groups = sorted({g for _, g, _ in rows})
-            shards = _fine_shards(spark, index_dir, groups)
-            emb = {c: e for shard in shards.values() for c, e in shard}
-            return _int_centroids(np.array([emb[c] for _, _, c in rows]))
 
-        return probes, _PQ_PROBES_2L, int_centroids
-    cells, mat = _read_centroids(spark, index_dir)
-    return (
-        _probe_cells(queries, cells, mat, n_probe),
-        _PQ_PROBES,
-        lambda rows: _int_centroids(mat)[[c for _, c in rows]],
-    )
+def _probed_int_centroids(
+    spark: SparkSession, index_dir: str, probes: list[tuple]
+) -> np.ndarray:
+    """The integer centroid of each probe row's cell (the residual
+    LUT's input), from the probed groups' cached fine shards."""
+    shards = _fine_shards(spark, index_dir, sorted({g for _, g, _ in probes}))
+    emb = {c: e for shard in shards.values() for c, e in shard}
+    return _int_centroids(np.array([emb[c] for _, _, c in probes]))
 
 
 def _with_field(schema: T.StructType, name: str, dtype) -> T.StructType:
@@ -1543,7 +1479,6 @@ def _exact_rerank(
     spark: SparkSession,
     index_dir: str,
     queries: list[Query],
-    parts: list[str],
     probes: list[tuple],
     short: DataFrame,
     k: int,
@@ -1555,7 +1490,7 @@ def _exact_rerank(
     is bounded (≤ queries × shortlist rows), so a JVM cosine and a
     single-window top-k serve it with no Arrow boundary."""
     reranked = (
-        _scan(spark, index_dir, "raw", parts, probes)
+        _scan(spark, index_dir, "raw", probes)
         .join(F.broadcast(short), "vec_id")
         .join(F.broadcast(_queries_df(spark, queries)), "q_id")
         .select(
@@ -1584,16 +1519,12 @@ def ann_index_ivfpq_topk(
     corpus access. Residual indexes (the manifest flag) swap in the
     per-(query, probed cell) residual LUT. Small searches are scored on
     the driver, larger ones by a partition-pruned Spark scan
-    (:func:`_ivfpq_topk`). On the two-level layout — the billion-vector
-    arm it exists for — the codes are the only per-vector bytes read,
-    ~100x less probed IO than raw floats. ``n_probe_groups`` applies to
-    a two-level index only (:func:`_probes`), like in every arm."""
-    probes, schema, int_centroids_of = _probes(
-        spark, index_dir, queries, n_probe, n_probe_groups
-    )
-    return _ivfpq_topk(
-        spark, index_dir, queries, probes, schema, int_centroids_of, k
-    )
+    (:func:`_ivfpq_topk`). The codes are the only per-vector bytes
+    read, ~100x less probed IO than raw floats. ``n_probe_groups`` is
+    the number of coarse groups probed (:func:`_probes`), in every arm;
+    a one-group index probes its group whatever the value."""
+    probes = _probes(spark, index_dir, queries, n_probe, n_probe_groups)
+    return _ivfpq_topk(spark, index_dir, queries, probes, k)
 
 
 # Two-stage search: ADC shortlist + exact rerank — the standard
@@ -1621,22 +1552,16 @@ def ann_index_ivfpq_rerank_topk(
     the probed cells (partition-pruned, 2 bytes/vector), rank by the
     broadcast integer LUT, keep ``shortlist`` candidates per query
     (ties to lower vec_id — the ivfpq contract), then exact cosine ONLY
-    on those candidates' raw rows. At billion-vector scale on the
-    two-level layout this is THE search. Output contract matches
+    on those candidates' raw rows. At billion-vector scale over many
+    groups this is THE search. Output contract matches
     ann_index_ivf_topk: (q_id, vec_id, sim, rank)."""
     shortlist = 4 * k if shortlist is None else shortlist
-    probes, schema, int_centroids_of = _probes(
-        spark, index_dir, queries, n_probe, n_probe_groups
-    )
-    lut, residual = _search_luts(
-        spark, index_dir, queries, probes, int_centroids_of
-    )
+    probes = _probes(spark, index_dir, queries, n_probe, n_probe_groups)
+    lut, residual = _search_luts(spark, index_dir, queries, probes)
     short = _spark_adc_topk(
-        spark, index_dir, queries, probes, schema, lut, residual, shortlist
+        spark, index_dir, queries, probes, lut, residual, shortlist
     ).select("q_id", "vec_id")
-    return _exact_rerank(
-        spark, index_dir, queries, schema.names[1:], probes, short, k
-    )
+    return _exact_rerank(spark, index_dir, queries, probes, short, k)
 
 
 def ann_index_ivf_topk(
@@ -1651,13 +1576,10 @@ def ann_index_ivf_topk(
     """IVF-Flat search from the artifact: exact cosine inside the probed
     cells' raw partitions only (same output contract as
     similarity.ivf_topk: q_id, vec_id, sim, rank)."""
-    probes, schema, _ = _probes(
-        spark, index_dir, queries, n_probe, n_probe_groups
-    )
-    parts = schema.names[1:]
-    raw = _live(spark, index_dir, _scan(spark, index_dir, "raw", parts, probes))
+    probes = _probes(spark, index_dir, queries, n_probe, n_probe_groups)
+    raw = _live(spark, index_dir, _scan(spark, index_dir, "raw", probes))
     scored = (
-        raw.join(F.broadcast(_local_df(spark, probes, schema)), parts)
+        raw.join(F.broadcast(_local_df(spark, probes, _PROBES)), list(_PARTS))
         .filter(F.col("vec_id") != F.col("q_id"))
         .join(F.broadcast(_queries_df(spark, queries)), "q_id")
         .select(
@@ -1720,16 +1642,13 @@ def ann_index_truncated_topk(
     0/0 = NaN truncated cosine (which Spark sorts above every real
     similarity) can never pollute the shortlist."""
     queries = _nonzero_prefix_queries(queries, dims)
-    probes, schema, _ = _probes(
-        spark, index_dir, queries, n_probe, n_probe_groups
-    )
-    parts = schema.names[1:]
+    probes = _probes(spark, index_dir, queries, n_probe, n_probe_groups)
     q_sliced = _queries_df(spark, queries).select(
         "q_id", F.slice("q_emb", 1, dims).alias("q_emb")
     )
-    raw = _live(spark, index_dir, _scan(spark, index_dir, "raw", parts, probes))
+    raw = _live(spark, index_dir, _scan(spark, index_dir, "raw", probes))
     tscored = (
-        raw.join(F.broadcast(_local_df(spark, probes, schema)), parts)
+        raw.join(F.broadcast(_local_df(spark, probes, _PROBES)), list(_PARTS))
         .filter(F.col("vec_id") != F.col("q_id"))
         .filter(_nonzero_prefix_col(dims))
         .join(F.broadcast(q_sliced), "q_id")
@@ -1744,40 +1663,44 @@ def ann_index_truncated_topk(
     short = S.topk_per_key(
         tscored, "q_id", [F.col("tsim").desc(), F.col("vec_id")], shortlist
     ).select("q_id", "vec_id")
-    return _exact_rerank(spark, index_dir, queries, parts, probes, short, k)
+    return _exact_rerank(spark, index_dir, queries, probes, short, k)
 
 
-def _query_buckets(
-    queries: list[Query], n_tables: int, n_planes: int
-) -> list[tuple[int, int, str]]:
+# The LSH arm: ``lsh_buckets/`` holds S.N_TABLES bands of S.N_PLANES
+# hyperplanes per vector. build_ann_index writes it and stamps the flag;
+# appends maintain it off the flag, like the derived arms.
+_LSH_KEY = "__lsh__"
+
+
+def _query_buckets(queries: list[Query]) -> list[tuple[int, int, str]]:
     """(q_id, table_id, bucket) — the query's band signatures, computed
     locally with the lsh_buckets_long kernel
     (:func:`similarity.lsh_bucket_strings`)."""
     x = np.array([v for _, v in queries], dtype=np.float64)
-    b = S.lsh_bucket_strings(x.reshape(len(queries), S.DIM), n_tables, n_planes)
+    b = S.lsh_bucket_strings(x.reshape(len(queries), S.DIM))
     return [
         (q_id, t, b[i, t])
         for i, (q_id, _) in enumerate(queries)
-        for t in range(n_tables)
+        for t in range(S.N_TABLES)
     ]
 
 
 def ann_index_lsh_topk(
-    spark: SparkSession,
-    index_dir: str,
-    queries: list[Query],
-    k: int = 5,
-    n_tables: int = S.N_TABLES,
-    n_planes: int = S.N_PLANES,
+    spark: SparkSession, index_dir: str, queries: list[Query], k: int = 5
 ) -> DataFrame:
     """LSH search from the artifact: candidates collide with the query's
     band signature in ANY stored table (partition-pruned to the query's
     (table_id, bucket) pairs), exact cosine rerank against the raw
     partitions joined by id (same output contract as similarity.lsh_topk:
-    q_id, vec_id, sim, rank)."""
+    q_id, vec_id, sim, rank). Only an index built by
+    :func:`build_ann_index` carries the bands; any other fails loudly."""
     from functools import reduce
 
-    qb = _query_buckets(queries, n_tables, n_planes)
+    if not M.read_meta(index_dir, _LSH_KEY, False):
+        raise ValueError(
+            f"no LSH table at {index_dir}: it is written by build_ann_index"
+        )
+    qb = _query_buckets(queries)
     qb_df = spark.createDataFrame(qb, "q_id long, table_id int, bucket string")
     pairs = sorted({(t, b) for _, t, b in qb})
     pred = reduce(
@@ -1990,10 +1913,9 @@ def add_sq8_to_ann_index(spark: SparkSession, index_dir: str) -> None:
     """Derive the SQ8 arm from the stored ``raw/`` partitions: one
     64-row min/max aggregate (map-side combined) trains the grid, one
     map-only encode pass lands ``sq8/`` (vec_id, codes array<int>)
-    under the layout's own pruning key — ``cell`` on the single-level
-    index, ``(group, cell)`` on the two-level one — so probed reads
-    stay partition-pruned on either layout. Idempotent (overwrite);
-    re-run after a rebuild to retrain the grid.
+    under the layout's pruning key ``(group, cell)``, so probed reads
+    stay partition-pruned. Idempotent (overwrite); re-run after a
+    rebuild to retrain the grid.
 
     RETRAIN RULE: the grid is immutable once built (appends encode
     against it, unclipped, so search stays exact), but a drifting
@@ -2007,7 +1929,6 @@ def add_sq8_to_ann_index(spark: SparkSession, index_dir: str) -> None:
     grid AND re-encodes every stored vector from ``raw/``, so the arm
     comes back clean in one idempotent pass."""
     _check_layout(index_dir)
-    pcols = _parts(index_dir)
     raw = _live(
         spark, index_dir, spark.read.parquet(M.table_path(index_dir, "raw"))
     )
@@ -2024,12 +1945,12 @@ def add_sq8_to_ann_index(spark: SparkSession, index_dir: str) -> None:
     (
         raw.select(
             "vec_id",
-            *pcols,
+            *_PARTS,
             _sq8_encode_udf(vmin, scale)(F.col("embedding")).alias("codes"),
         )
-        .repartition(*pcols)
+        .repartition(*_PARTS)
         .write.mode("overwrite")
-        .partitionBy(*pcols)
+        .partitionBy(*_PARTS)
         .parquet(M.table_path(index_dir, "sq8"))
     )
     # drift-age anchor + counter baseline: one aggregate over the
@@ -2070,22 +1991,21 @@ def add_sq8_prefix_to_ann_index(
     prefix; pinned by test).
 
     Derived state over ``sq8/`` (one map-only slice pass, idempotent
-    overwrite, layout-dispatched partitioning), so the lifecycle rides
+    overwrite, ``(group, cell)`` partitioning), so the lifecycle rides
     the existing verbs: appends land sliced rows alongside the full
     codes, compaction includes the table in the layout map, tombstones
     filter it through the same ``_live`` anti-join, and a grid retrain
     re-derives it automatically (:func:`add_sq8_to_ann_index`)."""
     _check_layout(index_dir)
     _require_sq8(index_dir)
-    pcols = _parts(index_dir)
     sq8 = spark.read.parquet(M.table_path(index_dir, "sq8"))
     (
         sq8.select(
-            "vec_id", *pcols, F.slice("codes", 1, dims).alias("codes")
+            "vec_id", *_PARTS, F.slice("codes", 1, dims).alias("codes")
         )
-        .repartition(*pcols)
+        .repartition(*_PARTS)
         .write.mode("overwrite")
-        .partitionBy(*pcols)
+        .partitionBy(*_PARTS)
         .parquet(M.table_path(index_dir, "sq8_prefix"))
     )
     M.write_meta(index_dir, _SQ8_PREFIX_DIMS_KEY, int(dims))
@@ -2135,10 +2055,7 @@ def ann_index_sq8_topk(
     full-dimension cosine."""
     _require_sq8(index_dir)
     shortlist = 4 * k if shortlist is None else shortlist
-    probes, schema, _ = _probes(
-        spark, index_dir, queries, n_probe, n_probe_groups
-    )
-    parts = schema.names[1:]
+    probes = _probes(spark, index_dir, queries, n_probe, n_probe_groups)
     vmin, scale = _read_sq_stats(spark, index_dir)
     q_mat = np.vstack(
         [_sq8_encode_np(vec, vmin, scale) for _, vec in queries]
@@ -2151,19 +2068,17 @@ def ann_index_sq8_topk(
     probes_df = _local_df(
         spark,
         [(*p, q_pos[p[0]]) for p in probes],
-        _with_field(schema, "q_idx", T.IntegerType()),
+        _with_field(_PROBES, "q_idx", T.IntegerType()),
     )
 
     scan_table, needs_slice = _sq8_scan_table(index_dir, dims)
-    sq8 = _live(
-        spark, index_dir, _scan(spark, index_dir, scan_table, parts, probes)
-    )
+    sq8 = _live(spark, index_dir, _scan(spark, index_dir, scan_table, probes))
     code_col = (
         F.slice("codes", 1, dims) if needs_slice else F.col("codes")
     )
     scored = (
         sq8.withColumn("dists", _sq8_dists_udf(q_mat)(code_col))
-        .join(F.broadcast(probes_df), parts)
+        .join(F.broadcast(probes_df), list(_PARTS))
         .filter(F.col("vec_id") != F.col("q_id"))
         .select(
             "q_id",
@@ -2174,7 +2089,7 @@ def ann_index_sq8_topk(
     short = S.topk_per_key(
         scored, "q_id", [F.col("sq_dist"), F.col("vec_id")], shortlist
     ).select("q_id", "vec_id")
-    return _exact_rerank(spark, index_dir, queries, parts, probes, short, k)
+    return _exact_rerank(spark, index_dir, queries, probes, short, k)
 
 
 # --------------------------------------------------------------------------
@@ -2331,10 +2246,9 @@ def add_binary_to_ann_index(spark: SparkSession, index_dir: str) -> None:
     """Derive the binary arm from the stored ``raw/`` partitions: one
     per-dim min/max aggregate trains the midrange thresholds
     (``bin_stats/``), one map-only encode pass lands ``binary/``
-    (vec_id, words array<long>) under the layout's own pruning key —
-    ``cell`` single-level, ``(group, cell)`` two-level — so probed
-    reads stay partition-pruned on either layout. Idempotent
-    (overwrite); re-run to retrain after a rebuild.
+    (vec_id, words array<long>) under the layout's pruning key
+    ``(group, cell)``, so probed reads stay partition-pruned.
+    Idempotent (overwrite); re-run to retrain after a rebuild.
 
     RETRAIN RULE: the thresholds are immutable once trained (appends
     encode against them, so old and new words stay comparable), and —
@@ -2350,7 +2264,6 @@ def add_binary_to_ann_index(spark: SparkSession, index_dir: str) -> None:
     re-runs this verb automatically (same no-knob contract as the SQ8
     drift retrain)."""
     _check_layout(index_dir)
-    pcols = _parts(index_dir)
     raw = _live(
         spark, index_dir, spark.read.parquet(M.table_path(index_dir, "raw"))
     )
@@ -2367,12 +2280,12 @@ def add_binary_to_ann_index(spark: SparkSession, index_dir: str) -> None:
     (
         raw.select(
             "vec_id",
-            *pcols,
+            *_PARTS,
             _binary_encode_udf(thresh)(F.col("embedding")).alias("words"),
         )
-        .repartition(*pcols)
+        .repartition(*_PARTS)
         .write.mode("overwrite")
-        .partitionBy(*pcols)
+        .partitionBy(*_PARTS)
         .parquet(M.table_path(index_dir, "binary"))
     )
     ones, n_trained = _binary_ones_aggregate(
@@ -2395,25 +2308,21 @@ def _binary_scored(
     index_dir: str,
     queries: list[Query],
     probes: list[tuple],
-    schema: T.StructType,
 ) -> DataFrame:
     """The Hamming stage of the binary arm and the cascade: pruned scan
     of ``binary/``, broadcast probe join (each probe row carries its
     query's packed words, so no second join attaches them), and the
     codegen Hamming column. Returns (q_id, vec_id, ham)."""
-    parts = schema.names[1:]
     thresh = _read_bin_thresh(spark, index_dir)
     q_words = {int(q): _binary_encode_np(vec, thresh) for q, vec in queries}
     probes_df = _local_df(
         spark,
         [(*p, q_words[p[0]]) for p in probes],
-        _with_field(schema, "q_words", T.ArrayType(T.LongType())),
+        _with_field(_PROBES, "q_words", T.ArrayType(T.LongType())),
     )
-    words = _live(
-        spark, index_dir, _scan(spark, index_dir, "binary", parts, probes)
-    )
+    words = _live(spark, index_dir, _scan(spark, index_dir, "binary", probes))
     return (
-        words.join(F.broadcast(probes_df), parts)
+        words.join(F.broadcast(probes_df), list(_PARTS))
         .filter(F.col("vec_id") != F.col("q_id"))
         .select(
             "q_id",
@@ -2441,16 +2350,12 @@ def ann_index_binary_topk(
     contract matches ann_index_ivf_topk: (q_id, vec_id, sim, rank)."""
     _require_binary(index_dir)
     shortlist = 4 * k if shortlist is None else shortlist
-    probes, schema, _ = _probes(
-        spark, index_dir, queries, n_probe, n_probe_groups
-    )
-    scored = _binary_scored(spark, index_dir, queries, probes, schema)
+    probes = _probes(spark, index_dir, queries, n_probe, n_probe_groups)
+    scored = _binary_scored(spark, index_dir, queries, probes)
     short = S.topk_per_key(
         scored, "q_id", [F.col("ham"), F.col("vec_id")], shortlist
     ).select("q_id", "vec_id")
-    return _exact_rerank(
-        spark, index_dir, queries, schema.names[1:], probes, short, k
-    )
+    return _exact_rerank(spark, index_dir, queries, probes, short, k)
 
 
 def ann_index_cascade_topk(
@@ -2485,12 +2390,9 @@ def ann_index_cascade_topk(
     coarse_shortlist = (
         4 * shortlist if coarse_shortlist is None else coarse_shortlist
     )
-    probes, schema, _ = _probes(
-        spark, index_dir, queries, n_probe, n_probe_groups
-    )
-    parts = schema.names[1:]
+    probes = _probes(spark, index_dir, queries, n_probe, n_probe_groups)
     short1 = S.topk_per_key(
-        _binary_scored(spark, index_dir, queries, probes, schema),
+        _binary_scored(spark, index_dir, queries, probes),
         "q_id",
         [F.col("ham"), F.col("vec_id")],
         coarse_shortlist,
@@ -2503,7 +2405,7 @@ def ann_index_cascade_topk(
         ],
         "q_id long, q_codes array<int>",
     )
-    sq8 = _live(spark, index_dir, _scan(spark, index_dir, "sq8", parts, probes))
+    sq8 = _live(spark, index_dir, _scan(spark, index_dir, "sq8", probes))
     # (a-b)^2 summed as int: bounded by dims * 255^2 (~4.2M at dims=64,
     # overflow-safe far past any real embedding width)
     sq_dist = F.aggregate(
@@ -2521,45 +2423,27 @@ def ann_index_cascade_topk(
     short2 = S.topk_bounded(
         sq_scored, "q_id", [F.col("sq_dist"), F.col("vec_id")], shortlist
     ).select("q_id", "vec_id")
-    return _exact_rerank(spark, index_dir, queries, parts, probes, short2, k)
+    return _exact_rerank(spark, index_dir, queries, probes, short2, k)
 
 
 # --------------------------------------------------------------------------
 # Index maintenance: compaction + layout audit.
 
-def _parts(index_dir: str) -> tuple[str, ...]:
-    """Partition columns of the corpus tables (``raw/``, ``vectors/``
-    and the derived arms) of the layout at ``index_dir``."""
-    return ("group", "cell") if _is_2level(index_dir) else ("cell",)
-
-
 def _table_map(index_dir: str) -> dict:
-    """The partitioned tables of whichever layout (and optional derived
-    arms) live at ``index_dir``, with their partition columns — what
-    appends, compaction and the layout audit iterate. The quantizer
-    shard table ``fine/`` is the two-level layout's, ``lsh_buckets/`` the
-    single-level one's."""
-    parts = _parts(index_dir)
-    tables = {"vectors": parts, "raw": parts}
-    if "group" in parts:
-        tables["fine"] = ("group",)
-    else:
+    """The partitioned tables at ``index_dir`` — ``vectors/``, ``raw/``,
+    the quantizer shard table ``fine/`` and the flagged arms — with
+    their partition columns: what appends, compaction and the layout
+    audit iterate."""
+    tables = {"vectors": _PARTS, "raw": _PARTS, "fine": ("group",)}
+    if M.read_meta(index_dir, _LSH_KEY, False):
         tables["lsh_buckets"] = ("table_id",)
     if M.read_meta(index_dir, _SQ8_KEY, False):
-        tables["sq8"] = parts
+        tables["sq8"] = _PARTS
         if M.read_meta(index_dir, _SQ8_PREFIX_DIMS_KEY, None) is not None:
-            tables["sq8_prefix"] = parts
+            tables["sq8_prefix"] = _PARTS
     if M.read_meta(index_dir, _BINARY_KEY, False):
-        tables["binary"] = parts
+        tables["binary"] = _PARTS
     return tables
-
-
-def _is_2level(index_dir: str) -> bool:
-    """Which layout lives at ``index_dir`` — the two schemes' table sets
-    are disjoint markers (2-level has ``coarse/``, single-level has
-    ``centroids/``), so maintenance verbs can dispatch without a flag.
-    (Local-FS probe, like ann_index_exists.)"""
-    return os.path.isdir(M.table_path(index_dir, "coarse"))
 
 
 _data_files = M.data_files
@@ -2699,10 +2583,9 @@ def compact_ann_index(
     compactions keep the tombstones (the anti-join is idempotent, so a
     survivor table stays correct either way).
 
-    Works on BOTH layouts: the single-level (cell / table_id) tables and
-    the two-level (group, cell) tables — dispatch is by the on-disk
-    marker (:func:`_is_2level`); ``tables=None`` compacts every
-    partitioned table of whichever layout is present.
+    ``tables=None`` compacts every table appends grow: the corpus
+    tables and the flagged arms. ``fine/`` is left alone: it is
+    immutable, and every build writes it one file per group.
 
     DRIFT-TRIGGERED SQ8 RETRAIN (``sq8_drift_check``, default on): the
     engine's no-knob principle applied to the grid-drift audit — an
@@ -2726,6 +2609,7 @@ def compact_ann_index(
     no-drift compaction restamps the balance counters exactly."""
     _check_layout(index_dir)
     table_map = _table_map(index_dir)
+    del table_map["fine"]
     todo = tables or tuple(table_map)
     retrain = (
         _sq8_drift_retrain_due(spark, index_dir)
@@ -2773,7 +2657,8 @@ def ann_index_stats(
     ``max_part_files``) and whether the partitioning is balanced
     (``max_part_rows`` vs ``avg_part_rows``). Rows-only by design: the
     physical file layout is Spark-side state with no SQL-expressible
-    DuckDB twin. Layout-dispatched like :func:`compact_ann_index`.
+    DuckDB twin. Lists every table of :func:`_table_map`, ``fine/``
+    included.
 
     When the SQ8 arm is present its row additionally carries the GRID
     DRIFT audit (null on every other table): ``sq8_oob_code_frac`` =
@@ -2881,25 +2766,22 @@ def sq8_drift_stats(
 
 
 # --------------------------------------------------------------------------
-# Two-level IVF (IMI-style quantizer shard) — the layout past the
-# AUTO_MAX_CELLS wall that auto_n_centroids' docstring defers to.
+# The two-level quantizer (IMI-style quantizer shard) with several
+# groups — the shape past the AUTO_MAX_CELLS wall that auto_n_centroids'
+# docstring defers to.
 #
-# Its tables are listed in the module docstring: ``coarse/`` and
-# ``fine/`` replace ``centroids/``, and the corpus tables are
-# partitioned by the COMPOSED assignment (nearest group, then nearest
-# fine cell within it), so search prunes on group at the top directory
-# level and cell below it. The layout exists for corpora past ~270M
-# vectors, where a probed-cell scan of raw floats (256 B/vector at
-# DIM=64 float32) costs ~100x the IO of 2-byte PQ codes.
+# The corpus tables are partitioned by the COMPOSED assignment (nearest
+# group, then nearest fine cell within it), so search prunes on group
+# at the top directory level and cell below it. Many groups pay off
+# past ~270M vectors, where a probed-cell scan of raw floats (256
+# B/vector at DIM=64 float32) costs ~100x the IO of 2-byte PQ codes.
 #
-# The write verbs are shared with the single-level layout past the
-# assignment (:func:`_land_corpus`, :func:`append_to_ann_index`).
-# The search arms are the single-level ones: each reads the layout from
-# disk (:func:`_probes`) and scans its tables over (group, cell) probe
-# rows. Assignment, probe selection, and scoring all use the same
-# rounded-6 cosine + (sim desc, id asc) tie-break as the single-level
-# layout, so the DuckDB twin (_ANN_2LEVEL_SQL in plans/llm_ops.py)
-# reproduces every step bit-identically.
+# Past the quantizer training, every build shares the write verbs
+# (:func:`_land_corpus`, :func:`append_to_ann_index`) and every search
+# arm probes (group, cell) rows (:func:`_probes`). Assignment, probe
+# selection, and scoring all use the rounded-6 cosine + (sim desc, id
+# asc) tie-break, so the DuckDB twins (_ANN_IVF_SQL, _ANN_2LEVEL_SQL in
+# plans/llm_ops.py) reproduce every step bit-identically.
 
 
 def _group_of_cells(c_mat: np.ndarray, g_mat: np.ndarray) -> np.ndarray:
@@ -3126,8 +3008,8 @@ def _write_coarse(
     index_dir: str, groups: list[int], g_rows: np.ndarray, elem: pa.DataType
 ) -> None:
     """Land ``coarse/`` (group, g_emb array<elem>) from ``groups`` and
-    their rows. Refined quantizers are DOUBLES (see
-    _refined_quantizers_2level), prefix ones floats."""
+    their rows. The two-level refined quantizers are DOUBLES (see
+    _refined_quantizers_2level), every other build's floats."""
     _write_pa(
         index_dir,
         "coarse",
@@ -3186,11 +3068,11 @@ def build_ann_index_2level(
     build_ann_index already has), allocating n_cells/n_groups fine
     cells per live group; the layout and readers never care what
     produced the centroid tables. ``n_groups=None`` sizes both levels
-    with :func:`auto_quantizer_shape` (one count job); shapes the rule
-    maps to single-level still build fine here (n_groups=1 is just one
-    coarse shard). Corpus assignment is ONE map-only pass
-    (:func:`_nearest_2level` — no join, no shuffle; the only exchange is
-    the partitionBy write), feeding BOTH partitioned layouts: ``raw/``
+    with :func:`auto_quantizer_shape` (one count job); ``n_groups=1`` is
+    one coarse shard, the shape :func:`build_ann_index` writes. Corpus
+    assignment is ONE map-only pass (:func:`_nearest_2level` — no join,
+    no shuffle; the only exchange is the partitionBy write), feeding
+    BOTH partitioned tables: ``raw/``
     (the exact-rerank arm) and ``vectors/`` (PQ codes — the arm a
     billion-vector probe actually scans; codebook convention identical
     to :func:`build_ann_index`, so quantizer immutability and code
@@ -3223,7 +3105,7 @@ def build_ann_index_2level(
         mat = _matrix(_prefix(emb, local, max(n_groups, n_cells))["embedding"])
         # corpora whose low ids are sparse (a half-built fixture, a
         # slice) may yield fewer quantizer rows than requested — clamp,
-        # as the single-level filter(vec_id < n) implicitly does
+        # as build_ann_index's filter(vec_id < n) implicitly does
         n_groups = min(n_groups, len(mat))
         n_cells = min(n_cells, len(mat))
         g_mat = mat[:n_groups]
@@ -3288,55 +3170,11 @@ def _fine_shards(
 
 def _read_coarse(spark: SparkSession, index_dir: str):
     def load():
-        _check_layout(index_dir)  # every two-level reader passes here
+        _check_layout(index_dir)  # every reader passes here
         t = _read_pa(index_dir, "coarse").sort_by("group")
         return t["group"].to_pylist(), _matrix(t["g_emb"])
 
     return M.cached_table(index_dir, "coarse", load)
-
-
-def _probe_cells_2level(
-    spark: SparkSession,
-    index_dir: str,
-    queries: list[Query],
-    n_probe_groups: int = N_PROBE_GROUPS,
-    n_probe: int = S.N_PROBE,
-) -> list[tuple[int, int, int]]:
-    """(q_id, group, cell) probe triples for the sharded quantizer:
-    coarse-probe the live groups (driver, n_groups cosines per query),
-    fetch ONLY the probed groups' fine-centroid shards (partition-pruned
-    ``fine/`` read), then rank each query's candidate cells within its
-    own probed groups — n_groups + n_probe_groups*(n_cells/n_groups)
-    cosines per query, never n_cells. Every search arm probes a
-    two-level index through here (:func:`_probes`), with the same
-    rounded-6 cosine + (sim desc, cell asc) tie-break as the
-    single-level _probe_cells."""
-    groups, g_mat = _read_coarse(spark, index_dir)
-    q_groups: dict[int, list[int]] = {}
-    for q_id, vec in queries:
-        sims = _rounded_cosines(np.asarray(vec, dtype=np.float64), g_mat)
-        ranked = sorted(zip(groups, sims), key=lambda gs: (-gs[1], gs[0]))
-        q_groups[q_id] = [g for g, _ in ranked[:n_probe_groups]]
-    probed_groups = sorted({g for gs in q_groups.values() for g in gs})
-
-    by_group = _fine_shards(spark, index_dir, probed_groups)
-    probes = []  # (q_id, group, cell)
-    for q_id, vec in queries:
-        cand = [
-            (g, c, emb)
-            for g in q_groups[q_id]
-            for c, emb in by_group.get(g, [])
-        ]
-        if not cand:
-            continue
-        mat = np.array([emb for _, _, emb in cand], dtype=np.float64)
-        sims = _rounded_cosines(np.asarray(vec, dtype=np.float64), mat)
-        ranked = sorted(
-            zip((g for g, _, _ in cand), (c for _, c, _ in cand), sims),
-            key=lambda gcs: (-gcs[2], gcs[1]),
-        )
-        probes.extend((q_id, g, c) for g, c, _ in ranked[:n_probe])
-    return probes
 
 
 # --------------------------------------------------------------------------

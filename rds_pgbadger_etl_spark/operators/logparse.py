@@ -93,7 +93,15 @@ def release_parse_caches() -> None:
 # The windowed plan sorts each file inside ONE task; past a couple of
 # splits per file that task is a straggler and the splitwise plan's
 # per-split parallelism wins (BENCH_NOTES.md: 20x less shuffle, memory
-# bounded by split not file).
+# bounded by split not file). Below the bound the windowed plan is the
+# cheaper one at cron size: with every parse forced through splitwise,
+# perfbench pgbadger_cron (0.43 MB hour files, 4 vCPUs, all runs
+# correct) rose from 10.26/11.23/10.34 to 17.52/17.58/17.33 CPU-s per
+# tick (op_cpu_s, seeds 901-903, +69 % median), from 14.17/14.13/14.00
+# to 19.92/17.74/20.37 CPU-s per backfill (bulk_cpu_s, +41 %), and
+# tick_p50_s from 3.50/3.63/3.37 to 5.36/5.54/5.55 s; a re-run at seed
+# 904 read 16.14 -> 21.85 (op_cpu_s, +35 %), 20.71 -> 27.76
+# (bulk_cpu_s, +34 %) and 5.47 -> 6.88 s. So both plans stay.
 SPLITWISE_SIZE_FACTOR = 2
 
 

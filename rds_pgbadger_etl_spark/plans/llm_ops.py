@@ -4219,7 +4219,7 @@ _SQ8_PREFIX_READY: set[str] = set()
 
 
 def _ann_index_sq8_shared(spark: SparkSession, sf_dir: str) -> str:
-    """The shared single-level artifact with its derived SQ8 arm added
+    """The shared one-group artifact with its derived SQ8 arm added
     (once per staged dir — the arm is derived state over raw/, so
     adding it disturbs no other reader of the shared index)."""
     from rds_pgbadger_etl_spark.operators.ann_index import (
@@ -4778,7 +4778,7 @@ def ann_index_refined_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         # ADC variants: shortlist == k makes the returned SET the top-k
         # by integer code-space distance (the rerank only reorders
         # within it, and recall@k is set membership) — same
-        # centroids/probes as first_n, so the delta isolates
+        # centroids and probes as first_n, so the delta isolates
         # 8-bit-per-dim vs 4-bit-subspace resolution
         (
             "sq8",
@@ -5073,18 +5073,18 @@ def ann_2level_flag_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors (the benchmark query ids, withheld from the build) against
     the sharded-quantizer store — distributed two-stage broadcast probe
     + cogrouped per-cell matmul (streaming/incremental_ann.
-    flag_against_index_2level). Oracle = the 2-level search math with
+    flag_against_index). Oracle = the 2-level search math with
     the quantizer prefixes taken from the WITHHELD corpus (first rows
     by id among vec_id not in the batch), which is exactly what the
     build stored."""
     from rds_pgbadger_etl_spark.streaming.incremental_ann import (
-        flag_against_index_2level,
+        flag_against_index,
     )
 
     batch = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id").isin(_QUERY_IDS)
     )
-    return flag_against_index_2level(
+    return flag_against_index(
         spark, batch, _ann_index_2level_flag_shared(spark, sf_dir), k=_TOPK
     )
 
@@ -5213,7 +5213,7 @@ def ann_index_2level_upsert_topk(
 def _ann_index_2level_delete_shared(spark: SparkSession, sf_dir: str) -> str:
     """Full 2-level index with a block of ids tombstoned — the
     layout-agnostic delete verb (the same tombstone side table and
-    reader anti-join as the single-level family)."""
+    reader anti-join as the one-group family)."""
     from rds_pgbadger_etl_spark.operators.ann_index import (
         build_ann_index_2level,
         delete_from_ann_index,
@@ -5600,7 +5600,7 @@ _2L_RECALL_K = 10
 def ann_index_2level_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@10 vs exact brute-force truth for the TWO-LEVEL artifact
     under both quantizer trainings (prefix first-N and kmeans-refined),
-    with the kmeans-refined SINGLE-level index as the same-probe-budget
+    with the kmeans-refined ONE-group index as the same-probe-budget
     anchor (both probe S.N_PROBE cells; the 2-level variants reach them
     through N_PROBE_GROUPS coarse shards). Rows-only by design — the
     metric grades approximation quality, same contract as
@@ -5637,7 +5637,7 @@ def ann_index_2level_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         # the 2-level SQ8 arm's quantized ranking (shortlist == k: the
         # returned SET is the code-space top-k — same apples-to-apples
-        # contract as the single-level audit's sq8 variant)
+        # contract as the one-group audit's sq8 variant)
         (
             "2level_sq8",
             lambda: AI.ann_index_sq8_topk(
@@ -5682,7 +5682,7 @@ def ann_index_2level_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # The 2-level twin's quantizer/membership/probe CTEs with the
-# single-level ADC scoring grafted on: members come from the COMPOSED
+# one-group ADC scoring grafted on: members come from the COMPOSED
 # assignment (nearest live group, then nearest fine cell within it),
 # probes from the two-level selection, distances from the shared PQ
 # codebook (corpus rows with vec_id < PQ_K — the same convention both
@@ -5783,7 +5783,7 @@ _RERANK_SHORTLIST = 3 * _TOPK
 
 
 def ann_index_ivfpq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X3: the two-stage search over the single-level artifact — rank
+    """X3: the two-stage search over the one-group artifact — rank
     the probed cells by 2-byte ADC codes, keep a 3k shortlist, exact
     cosine ONLY on those rows. Oracle = the IVFPQ twin's scored CTE cut
     at the shortlist, reranked by the exact rounded cosine."""
@@ -6120,9 +6120,9 @@ _ANN_2LEVEL_SQ8_SQL = _ann_2level_sq8_sql()
 def ann_index_2level_sq8_trunc_topk(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """X3: the composed SQ8 × truncation arm on the sharded-quantizer
-    layout — same 16-of-64-codes shortlist as the single-level
-    composition, so BOTH ladders exist composed on BOTH layouts."""
+    """X3: the composed SQ8 × truncation arm over several groups — same
+    16-of-64-codes shortlist as the one-group composition, so BOTH
+    ladders exist composed for one group and for several."""
     from rds_pgbadger_etl_spark.operators import ann_index as AI
 
     return AI.ann_index_sq8_topk(
@@ -6137,7 +6137,7 @@ def ann_index_2level_sq8_trunc_topk(
     )
 
 
-# same one-filter surgery as the single-level truncated twin
+# same one-filter surgery as the one-group truncated twin
 assert _SQD_TAIL in _ANN_2LEVEL_SQ8_SQL
 _ANN_2LEVEL_SQ8_TRUNC_SQL = _ANN_2LEVEL_SQ8_SQL.replace(
     _SQD_TAIL,
@@ -6162,7 +6162,7 @@ _BINARY_2L_READY: set[str] = set()
 
 
 def _ann_index_binary_shared(spark: SparkSession, sf_dir: str) -> str:
-    """The shared single-level artifact with its derived binary arm
+    """The shared one-group artifact with its derived binary arm
     added (once per staged dir, like the SQ8 arm)."""
     from rds_pgbadger_etl_spark.operators.ann_index import (
         add_binary_to_ann_index,
@@ -6274,10 +6274,10 @@ SELECT q_id, vec_id, sim, cast(rnk AS int) AS rank FROM (
 def ann_index_2level_binary_topk(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """X3: the binary arm on the sharded-quantizer layout — same
-    Hamming-shortlist + exact-rerank contract over the (group, cell)
-    pruned scan, so the 1-bit rung exists on BOTH layouts like every
-    other rung of the ladder."""
+    """X3: the binary arm over several groups — same Hamming-shortlist
+    + exact-rerank contract over the (group, cell) pruned scan, so the
+    1-bit rung exists for one group and for several like every other
+    rung of the ladder."""
     from rds_pgbadger_etl_spark.operators import ann_index as AI
 
     return AI.ann_index_binary_topk(
@@ -6354,7 +6354,7 @@ _CASCADE_COARSE = 4 * _RERANK_SHORTLIST
 
 
 def _ann_index_cascade_shared(spark: SparkSession, sf_dir: str) -> str:
-    """The shared single-level artifact carrying BOTH derived arms the
+    """The shared one-group artifact carrying BOTH derived arms the
     cascade needs (each derive is once-per-dir idempotent)."""
     d = _ann_index_sq8_shared(spark, sf_dir)
     assert _ann_index_binary_shared(spark, sf_dir) == d  # same staged dir
@@ -6482,8 +6482,8 @@ def _ann_index_2level_cascade_shared(
 def ann_index_2level_cascade_topk(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """X3: the three-stage cascade on the sharded-quantizer layout —
-    the composed ladder exists on BOTH layouts like each rung."""
+    """X3: the three-stage cascade over several groups — the composed
+    ladder exists for one group and for several like each rung."""
     from rds_pgbadger_etl_spark.operators import ann_index as AI
 
     return AI.ann_index_cascade_topk(

@@ -552,7 +552,8 @@ _STREAM_ANN_SQL = _stream_ann_sql()
 
 def stream_ann_2level_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL incremental ANN ingestion over the TWO-LEVEL
-    (sharded-quantizer) store (run_incremental_ann_2level): the corpus
+    (sharded-quantizer) store (run_incremental_ann bootstrapping
+    N_GROUPS_2L groups of N_CELLS_2L cells in all): the corpus
     arrives as three micro-batches; the first bootstraps the 2-level
     index (coarse/fine quantizers + PQ codebook train on it), each later
     batch is flagged with its top-3 already-indexed neighbors (two-stage
@@ -565,9 +566,10 @@ def stream_ann_2level_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
+    from rds_pgbadger_etl_spark.operators import ann_index as AI
     from rds_pgbadger_etl_spark.plans._shared import shared_df
     from rds_pgbadger_etl_spark.streaming.incremental_ann import (
-        run_incremental_ann_2level,
+        run_incremental_ann,
     )
 
     def build() -> DataFrame:
@@ -583,12 +585,14 @@ def stream_ann_2level_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
                 emb.filter(
                     (F.col("vec_id") >= lo) & (F.col("vec_id") < hi)
                 ).write.mode("append").parquet(src)
-                run_incremental_ann_2level(
+                run_incremental_ann(
                     spark.readStream.schema(emb.schema).parquet(src),
                     store,
                     ckpt,
                     flags,
                     k=3,
+                    n_groups=AI.N_GROUPS_2L,
+                    n_cells=AI.N_CELLS_2L,
                 )
             out = (
                 spark.read.parquet(flags)

@@ -10,20 +10,22 @@ migration.
 
 Per micro-batch (foreachBatch):
 
-- FIRST batch bootstraps the index (``build_ann_index`` — the coarse
-  quantizer and PQ codebook train on it and are immutable afterwards:
-  the IVF-PQ invariant that keeps append O(new) and all codes
-  comparable), emitting no flags (nothing indexed yet);
+- FIRST batch bootstraps the index (``build_ann_index_2level``, one
+  group of ``S.N_CENTROIDS`` cells by default — the quantizers and PQ
+  codebook train on it and are immutable afterwards: the IVF-PQ
+  invariant that keeps append O(new) and all codes comparable),
+  emitting no flags (nothing indexed yet);
 - later batches are flagged against the STORE — per new vector, probe
-  the ``n_probe`` nearest cells (batch × centroids, centroid side
-  broadcast — metadata-sized), scan ONLY those cells of the
-  cell-partitioned ``raw`` table (partition-pruned, tombstone-filtered),
-  then score via the cogrouped per-cell matmul
+  the ``n_probe`` nearest cells of its ``n_probe_groups`` nearest
+  groups (a map-only kernel over the metadata-sized quantizer), scan
+  ONLY those (group, cell) partitions of the ``raw`` table
+  (partition-pruned, tombstone-filtered), then score via the cogrouped
+  per-cell matmul
   (similarity.knn_join_cells — each side's rows shuffle once, dense
   linear algebra inside the cell) and keep the top-k per new vector —
   then admitted via ``append_to_ann_index`` (encoded against the
-  stored quantizers, appended into the cell partitions, nothing
-  rewritten);
+  stored quantizers, appended into the (group, cell) partitions,
+  nothing rewritten);
 - exactly-once per batch via the streaming checkpoint.
 
 Scale: flagging is O(batch × probed-cell volume) FLOPs — the same
@@ -31,9 +33,11 @@ pruning ratio as a search (~n_probe/n_centroids of the corpus per
 batch), never batch × corpus — executed as one matmul per cell, with
 shuffle bytes O(batch + probed cells), not O(batch × cell volume). At
 a fixed quantizer this cost still grows with the corpus (cells fatten);
-production holds it constant by scaling n_centroids ~ √corpus, which
-changes only the stored centroid table. State grows in the index's
-partitioned layout, compacted on the operator's schedule.
+a stream that expects to grow sizes its bootstrap with
+``ann_index.auto_quantizer_shape(expected corpus size)``, which holds
+cell volume constant (:func:`ann_index.auto_n_centroids`), so the
+per-batch cost stays flat. State grows in the index's partitioned
+layout, compacted on the operator's schedule.
 """
 
 from __future__ import annotations
@@ -52,19 +56,18 @@ from rds_pgbadger_etl_spark.operators import similarity as S
 
 _FLAG_SCHEMA = "vec_id long, neighbor_id long, cosine double, rank int"
 
-# Probe-selection metadata of a flag verb — the distinct probed cell
-# set (single-level) / (group, cell) pair set (two-level) — is a pure
-# function of (quantizer tables, batch, probe widths): cached in
-# M.cached_meta under that fingerprint, so a repeated flag of the same
-# batch against an unchanged store (the registered batch verbs
-# re-evaluated; re-run analyst flagging) skips its driver-side
-# distinct+collect job. The key embeds the quantizer tables' data-file
+# Probe-selection metadata of the flag verb — the distinct probed
+# (group, cell) pair set — is a pure function of (quantizer tables,
+# batch, probe widths): cached in M.cached_meta under that fingerprint,
+# so a repeated flag of the same batch against an unchanged store (the
+# registered batch verbs re-evaluated; re-run analyst flagging) skips
+# its driver-side distinct+collect job. The key embeds the quantizer tables' data-file
 # lists (M.table_fingerprint: a rebuild/retrain rewrites them; appends
 # never touch quantizers, so entries correctly survive them) plus the
 # batch plan's semanticHash AND leaf input files (a re-read of a mutated
 # external path must miss). Only metadata lists are cached, never rows.
 
-# Plan-capture hook for the flag verbs: they return an EAGER
+# Plan-capture hook for the flag verb: it returns an EAGER
 # localCheckpoint (mutation-safety — see _flag_probed), so a
 # post-hoc .explain() shows only the checkpoint stub (Scan ExistingRDD).
 # Profiling tools set this to a callable(df) and receive the REAL
@@ -73,51 +76,22 @@ _FLAG_SCHEMA = "vec_id long, neighbor_id long, cosine double, rank int"
 PRE_CHECKPOINT_PLAN_HOOK = None
 
 
-def _probe_cells_udf(cell_ids: list[int], cent_mat: np.ndarray, n_probe: int):
-    """Map-only probe selection for the batch flag verbs: per Arrow
-    batch, ONE matmul against the closure-held quantizer and a per-row
-    (sim desc, cell asc) cut to the ``n_probe`` nearest cells — the
-    nearest_cell_udf convention (the documented dense-numeric-kernel
-    exception), generalized to top-n. Replaces the previous broadcast
-    crossJoin + per-query window: same round-6 cosine, same tie-break,
-    but the batch never shuffles and no window stage runs — probe
-    selection becomes a projection over the stream."""
-    ids = np.asarray(cell_ids, dtype=np.int64)
-    c = cent_mat.astype(np.float64)
-    cn = np.sqrt(np.einsum("ij,ij->i", c, c))
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def topn(col: pd.Series) -> pd.Series:
-        if len(col) == 0:
-            return pd.Series([], dtype=object)
-        x = np.vstack(col.to_numpy()).astype(np.float64)
-        xn = np.sqrt(np.einsum("ij,ij->i", x, x))
-        sims = np.round((x @ c.T) / (xn[:, None] * cn[None, :]), 6)
-        out = []
-        for row in sims:
-            order = np.lexsort((ids, -row))[:n_probe]
-            out.append([int(ids[i]) for i in order])
-        return pd.Series(out)
-
-    return topn
-
-
-def _probe_pairs_udf_2level(
+def _probe_pairs_udf(
     group_ids: list[int],
     g_mat: np.ndarray,
     fine_by_group: dict[int, list],
     n_probe_groups: int,
     n_probe: int,
 ):
-    """Two-level twin of :func:`_probe_cells_udf`: per row, rank the
+    """Map-only probe selection for the flag verb: per row, rank the
     coarse groups ((gsim desc, group asc), keep ``n_probe_groups``),
     then rank the candidate cells of exactly those groups
-    ((sim desc, cell asc), keep ``n_probe``) — the same two-stage
-    selection the previous crossJoin + two-window formulation computed,
-    now one map-only kernel. The closure holds the same data the old
-    plan BROADCAST (coarse table + fine shards), so the memory envelope
-    is unchanged; past broadcast-sized fine quantizers the distributed
-    build/assign path is the tool either way."""
+    ((sim desc, cell asc), keep ``n_probe``) — the same round-6 cosine
+    and tie-break as the search arms' driver-side probe, so the batch
+    never shuffles for probe selection and no window stage runs. The
+    closure holds the coarse table and the fine shards; past
+    broadcast-sized fine quantizers the distributed build/assign path
+    is the tool."""
     gids = np.asarray(group_ids, dtype=np.int64)
     g = g_mat.astype(np.float64)
     gn = np.sqrt(np.einsum("ij,ij->i", g, g))
@@ -180,10 +154,10 @@ def _probe_pairs_udf_2level(
 
 
 def ann_index_exists(index_dir: str) -> bool:
-    """Whether the index has been bootstrapped (its centroid table is on
-    disk) — the first-batch probe. (Local-FS check; an object-store
-    deployment would swap in the Hadoop FileSystem API.)"""
-    return os.path.isdir(M.table_path(index_dir, "centroids"))
+    """Whether the index has been bootstrapped (its coarse quantizer
+    table is on disk) — the first-batch probe. (Local-FS check; an
+    object-store deployment would swap in the Hadoop FileSystem API.)"""
+    return os.path.isdir(M.table_path(index_dir, "coarse"))
 
 
 def _flag_probed(
@@ -191,19 +165,17 @@ def _flag_probed(
     emb_batch: DataFrame,
     index_dir: str,
     probes: DataFrame,
-    parts: list[str],
-    quantizers: tuple[str, ...],
     widths: tuple[int, ...],
     k: int,
     threshold: float | None,
 ) -> DataFrame:
-    """The scoring tail both flag verbs share, after their layout's
-    probe kernel: ``probes`` is (q_id, q_emb, *parts) with ``cell``
-    last. The distinct probed partitions (cached in M.cached_meta) prune
-    a tombstone-filtered scan of ``raw/``; a cogrouped per-cell matmul
-    (similarity.knn_join_cells — cell ids are unique on both layouts)
-    scores the batch against it, and each vector keeps its top-``k``
-    neighbors at or above ``threshold``. Returns an eagerly
+    """The flag verb's scoring tail, after its probe kernel: ``probes``
+    is (q_id, q_emb, group, cell). The distinct probed partitions
+    (cached in M.cached_meta) prune a tombstone-filtered scan of
+    ``raw/``; a cogrouped per-cell matmul (similarity.knn_join_cells —
+    cell ids are unique across groups) scores the batch against it, and
+    each vector keeps its top-``k`` neighbors at or above
+    ``threshold``. Returns an eagerly
     local-checkpointed DataFrame: lineage is truncated, so the result
     (and any plan derived from it) is safe against subsequent index
     mutation — the append that follows in the ingestion cycle cannot
@@ -214,22 +186,21 @@ def _flag_probed(
         probed = M.cached_meta(
             index_dir,
             (
-                tuple(parts),
-                M.table_fingerprint(index_dir, quantizers),
+                M.table_fingerprint(index_dir, ("coarse", "fine")),
                 emb_batch.semanticHash(),
                 M.batch_plan_files(emb_batch),
                 widths,
             ),
             lambda: sorted(
-                tuple(r) for r in probes.select(*parts).distinct().collect()
+                tuple(r) for r in probes.select(*AI._PARTS).distinct().collect()
             ),
         )
         raw = AI._live(
             spark,
             index_dir,
             spark.read.parquet(M.table_path(index_dir, "raw")).where(
-                # probe-row shape (q_id, *parts) for the shared predicate
-                AI._probe_predicate(parts, [(None, *p) for p in probed])
+                # probe-row shape (q_id, group, cell) for the shared predicate
+                AI._probe_predicate([(None, *p) for p in probed])
             ),
         )
         # cogrouped per-cell matmul (knn_join_cells): each side's rows
@@ -274,50 +245,24 @@ def flag_against_index(
     k: int = 3,
     n_probe: int = S.N_PROBE,
     threshold: float | None = None,
+    *,
+    n_probe_groups: int = AI.N_PROBE_GROUPS,
 ) -> DataFrame:
     """(vec_id, neighbor_id, cosine, rank): the top-``k`` already-indexed
     neighbors of each new vector, searched the IVF way — semantic
     near-dup flagging at ingest (also the batch kNN-join entry point:
     plans/llm_ops.ann_knn_join runs corpus-slice query sets through it).
-    Probing is MAP-ONLY — one matmul per Arrow batch against the cached
-    metadata-sized quantizer (the nearest_cell_udf convention), so the
-    batch never shuffles for probe selection and no window stage runs;
-    scoring is :func:`_flag_probed` (eagerly local-checkpointed)."""
-    cell_ids, cent_mat = AI._read_centroids(spark, index_dir)
-    topn = _probe_cells_udf(cell_ids, cent_mat, n_probe)
-    probes = emb_batch.select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.explode(topn(F.col("embedding"))).alias("cell"),
-    )
-    return _flag_probed(
-        spark, emb_batch, index_dir, probes, ["cell"], ("centroids",),
-        (n_probe,), k, threshold,
-    )
-
-
-def flag_against_index_2level(
-    spark: SparkSession,
-    emb_batch: DataFrame,
-    index_dir: str,
-    k: int = 3,
-    n_probe_groups: int = AI.N_PROBE_GROUPS,
-    n_probe: int = S.N_PROBE,
-    threshold: float | None = None,
-) -> DataFrame:
-    """:func:`flag_against_index` for the two-level (sharded-quantizer)
-    layout — the streaming/batch flag verb that keeps working past the
-    4096-cell cap. Probe selection is MAP-ONLY, never collecting the
-    batch: one Arrow kernel holds the coarse matrix plus the fine
-    shards and emits each vector's top coarse groups -> top ``n_probe``
-    cells directly, so the batch neither shuffles nor passes a window
-    for probing. Per-vector quantizer work is
+    Probe selection is MAP-ONLY, never collecting the batch: one Arrow
+    kernel (:func:`_probe_pairs_udf`) holds the coarse matrix plus the
+    fine shards and emits each vector's top ``n_probe_groups`` groups ->
+    top ``n_probe`` cells, so the batch neither shuffles nor passes a
+    window for probing. Per-vector quantizer work is
     n_groups + n_probe_groups*(n_cells/n_groups) cosines — the same
-    term the driver-side reader saves. Scoring is the same
-    :func:`_flag_probed` tail over the (group, cell)-pruned scan."""
+    term the driver-side reader saves. Scoring is :func:`_flag_probed`
+    (eagerly local-checkpointed) over the (group, cell)-pruned scan."""
     group_ids, g_mat = AI._read_coarse(spark, index_dir)
     fine_by_group = AI._fine_shards(spark, index_dir, group_ids)
-    pairs_udf = _probe_pairs_udf_2level(
+    pairs_udf = _probe_pairs_udf(
         group_ids, g_mat, fine_by_group, n_probe_groups, n_probe
     )
     probes = emb_batch.select(
@@ -331,8 +276,8 @@ def flag_against_index_2level(
         F.col("pc.cell").alias("cell"),
     )
     return _flag_probed(
-        spark, emb_batch, index_dir, probes, ["group", "cell"],
-        ("coarse", "fine"), (n_probe_groups, n_probe), k, threshold,
+        spark, emb_batch, index_dir, probes, (n_probe_groups, n_probe), k,
+        threshold,
     )
 
 
@@ -344,26 +289,37 @@ def run_incremental_ann(
     k: int = 3,
     n_probe: int = S.N_PROBE,
     threshold: float | None = None,
-    n_centroids: int | None = S.N_CENTROIDS,
-    sq8: bool = False,
+    n_groups: int | None = 1,
+    n_cells: int | None = S.N_CENTROIDS,
     residual: bool | str = False,
+    sq8: bool = False,
     sq8_prefix_dims: int | None = None,
     binary: bool = False,
+    *,
+    n_probe_groups: int = AI.N_PROBE_GROUPS,
 ) -> None:
     """The ingestion pipeline: per micro-batch, flag each new embedding's
-    nearest already-indexed neighbors, write the flags, then admit the
-    batch into the index (bootstrap-build on the first batch). Runs with
+    nearest already-indexed neighbors (:func:`flag_against_index`,
+    eagerly checkpointed so the append below cannot leak into the
+    flags), write the flags, then admit the batch into the index
+    (``append_to_ann_index``: assignment + PQ encode against the STORED
+    quantizers, appended into the (group, cell) partitions, nothing
+    rewritten). While the index does not exist a batch writes no flags
+    and bootstraps it with ``build_ann_index_2level``. Runs with
     availableNow; exactly-once per batch via the streaming checkpoint.
 
-    ``n_centroids`` sizes the bootstrap build only (the quantizer is
-    immutable afterwards). NOTE the bootstrap sees just the FIRST
+    ``n_groups``/``n_cells`` size the bootstrap build only (the
+    quantizers are immutable afterwards); the default is one group of
+    ``S.N_CENTROIDS`` cells. NOTE the bootstrap sees just the FIRST
     micro-batch, so ``None`` (auto) would size for the batch, not the
     eventual corpus — a stream expecting to grow should pass
-    ``ann_index.auto_n_centroids(expected_corpus_size)`` explicitly.
+    ``ann_index.auto_quantizer_shape(expected_corpus_size)`` explicitly.
 
-    ``residual`` passes to the bootstrap build. The STREAMING default is
-    explicit ``False`` — NOT the batch builds' ``"auto"`` — for the same
-    first-batch reason as ``n_centroids``: the variance-ratio diagnostic
+    ``residual`` passes to the bootstrap build; a store that already
+    exists keeps whatever encoding it was built with (appends dispatch
+    off the stored manifest flag). The STREAMING default is explicit
+    ``False`` — NOT the batch builds' ``"auto"`` — for the same
+    first-batch reason as the shape: the variance-ratio diagnostic
     would measure one unrepresentative micro-batch and stamp the
     encoding immutably (a batch at or below the centroid count measures
     ratio 0 and would lock residual encoding for a corpus where raw
@@ -392,18 +348,37 @@ def run_incremental_ann(
     drifting stream shows up in the bit-balance audit, never as an
     inexact search), appends maintain the words table off the manifest
     flag, and a resume over a store lacking the arm derives it once."""
-    _run_ingest(
-        emb_stream, index_dir, checkpoint_dir, flags_out_dir,
-        exists=ann_index_exists,
-        flag=lambda spark, batch: flag_against_index(
-            spark, batch, index_dir, k, n_probe, threshold
-        ),
-        bootstrap=lambda spark, batch: AI.build_ann_index(
-            spark, batch, index_dir, n_centroids=n_centroids,
-            residual=residual,
-        ),
-        sq8=sq8, sq8_prefix_dims=sq8_prefix_dims, binary=binary,
+    if sq8_prefix_dims is not None and not sq8:
+        raise ValueError("sq8_prefix_dims requires sq8=True")
+
+    def process(batch: DataFrame, batch_id: int) -> None:
+        spark = batch.sparkSession
+        if ann_index_exists(index_dir):
+            flags = flag_against_index(
+                spark, batch, index_dir, k, n_probe, threshold,
+                n_probe_groups=n_probe_groups,
+            )
+            flags.withColumn("batch_id", F.lit(batch_id)).write.mode(
+                "append"
+            ).parquet(flags_out_dir)
+            AI.append_to_ann_index(spark, batch, index_dir)
+        else:
+            spark.createDataFrame([], _FLAG_SCHEMA).withColumn(
+                "batch_id", F.lit(batch_id)
+            ).write.mode("append").parquet(flags_out_dir)
+            AI.build_ann_index_2level(
+                spark, batch, index_dir, n_groups=n_groups, n_cells=n_cells,
+                residual=residual,
+            )
+        _ensure_arms(spark, index_dir, sq8, sq8_prefix_dims, binary)
+
+    q = (
+        emb_stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
+    q.awaitTermination()
 
 
 def _ensure_arms(
@@ -425,113 +400,3 @@ def _ensure_arms(
         AI.add_sq8_prefix_to_ann_index(spark, index_dir, sq8_prefix_dims)
     if binary and not M.read_meta(index_dir, AI._BINARY_KEY, False):
         AI.add_binary_to_ann_index(spark, index_dir)
-
-
-def _run_ingest(
-    emb_stream: DataFrame,
-    index_dir: str,
-    checkpoint_dir: str,
-    flags_out_dir: str,
-    exists,
-    flag,
-    bootstrap,
-    sq8: bool,
-    sq8_prefix_dims: int | None,
-    binary: bool,
-) -> None:
-    """The foreachBatch driver both layouts share: while ``exists(
-    index_dir)`` is false, a batch writes no flags and ``bootstrap``
-    builds the index from it; afterwards each batch's ``flag`` rows
-    (checkpointed, so the append below cannot leak into them) are
-    written, then the batch is appended. Either way the requested
-    derived arms are ensured (:func:`_ensure_arms`). Runs with
-    availableNow; exactly-once per batch via the streaming
-    checkpoint."""
-    if sq8_prefix_dims is not None and not sq8:
-        raise ValueError("sq8_prefix_dims requires sq8=True")
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        if exists(index_dir):
-            flags = flag(spark, batch)
-            flags.withColumn("batch_id", F.lit(batch_id)).write.mode(
-                "append"
-            ).parquet(flags_out_dir)
-            AI.append_to_ann_index(spark, batch, index_dir)
-        else:
-            spark.createDataFrame([], _FLAG_SCHEMA).withColumn(
-                "batch_id", F.lit(batch_id)
-            ).write.mode("append").parquet(flags_out_dir)
-            bootstrap(spark, batch)
-        _ensure_arms(spark, index_dir, sq8, sq8_prefix_dims, binary)
-
-    q = (
-        emb_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def ann_index_2level_exists(index_dir: str) -> bool:
-    """Whether the two-level index has been bootstrapped (its coarse
-    quantizer table is on disk) — the first-batch probe for the sharded
-    layout."""
-    return os.path.isdir(M.table_path(index_dir, "coarse"))
-
-
-def run_incremental_ann_2level(
-    emb_stream: DataFrame,
-    index_dir: str,
-    checkpoint_dir: str,
-    flags_out_dir: str,
-    k: int = 3,
-    n_probe_groups: int = AI.N_PROBE_GROUPS,
-    n_probe: int = S.N_PROBE,
-    threshold: float | None = None,
-    n_groups: int | None = AI.N_GROUPS_2L,
-    n_cells: int | None = AI.N_CELLS_2L,
-    residual: bool | str = False,
-    sq8: bool = False,
-    sq8_prefix_dims: int | None = None,
-    binary: bool = False,
-) -> None:
-    """:func:`run_incremental_ann` for the two-level (sharded-quantizer)
-    layout — the exactly-once ingestion path past the 4096-cell cap:
-    per micro-batch, flag each new embedding against everything indexed
-    before it (:func:`flag_against_index_2level` — distributed two-stage
-    broadcast probe, cogrouped per-cell matmul, eagerly checkpointed so
-    the append below can't leak into the flags), write the flags, then
-    admit the batch (``append_to_ann_index`` — on this layout, composed
-    assignment + PQ encode against the STORED quantizers, appended into
-    the (group, cell) partitions, nothing rewritten). First batch
-    bootstraps with ``build_ann_index_2level`` and emits no flags;
-    ``residual`` selects the residual-PQ arm for that bootstrap — a
-    store that already exists keeps whatever encoding it was built
-    with (appends dispatch off the stored manifest flag), so streaming
-    into a pre-built residual store needs no flag here at all. The
-    streaming default is explicit ``False``, not the batch builds'
-    ``"auto"`` — the diagnostic would measure one unrepresentative
-    first micro-batch (see :func:`run_incremental_ann`).
-
-    ``n_groups``/``n_cells`` size the bootstrap build only (quantizers
-    are immutable afterwards); as with the single-level driver, a stream
-    expecting to grow should pass ``auto_quantizer_shape(expected_corpus
-    _size)`` explicitly rather than ``None`` (which would size for the
-    first batch). ``sq8``/``sq8_prefix_dims`` carry the same derived-arm
-    contract as the single-level driver: derived at bootstrap,
-    maintained per batch off the manifest keys, derived-once on a
-    resume that requests an absent arm; ``binary`` likewise."""
-    _run_ingest(
-        emb_stream, index_dir, checkpoint_dir, flags_out_dir,
-        exists=ann_index_2level_exists,
-        flag=lambda spark, batch: flag_against_index_2level(
-            spark, batch, index_dir, k, n_probe_groups, n_probe, threshold
-        ),
-        bootstrap=lambda spark, batch: AI.build_ann_index_2level(
-            spark, batch, index_dir, n_groups=n_groups, n_cells=n_cells,
-            residual=residual,
-        ),
-        sq8=sq8, sq8_prefix_dims=sq8_prefix_dims, binary=binary,
-    )

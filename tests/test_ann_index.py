@@ -89,7 +89,9 @@ def test_lsh_reader_matches_in_session(spark, index_dir):
     assert got == expected and len(got) > 0
 
 
-# Each layout's build verb; append and every search arm serve both.
+# The two build verbs: "1level" stores one group (build_ann_index),
+# "2level" shards the cells over N_GROUPS_2L groups; append and every
+# search arm serve both.
 _LAYOUTS = {
     "1level": (AI.build_ann_index, AI.append_to_ann_index),
     "2level": (AI.build_ann_index_2level, AI.append_to_ann_index),
@@ -97,18 +99,15 @@ _LAYOUTS = {
 
 
 def _pq_probes(spark, d, qs):
-    """The default search's probe rows and their partition columns."""
-    probes, schema, _ = AI._probes(
-        spark, d, qs, S.N_PROBE, AI.N_PROBE_GROUPS
-    )
-    return probes, schema.names[1:]
+    """The default search's probe rows (q_id, group, cell)."""
+    return AI._probes(spark, d, qs)
 
 
 def _probed_bytes(spark, d, qs):
     """The driver-path rule's input: data-file bytes of the probed
     ``vectors/`` partitions, summed over (query, partition) pairs."""
-    probes, parts = _pq_probes(spark, d, qs)
-    files = AI._probed_files(d, parts, probes)
+    probes = _pq_probes(spark, d, qs)
+    files = AI._probed_files(d, probes)
     return sum(b for p in probes for _, b in files[p[1:]])
 
 
@@ -211,7 +210,7 @@ def test_refined_build_and_recall_query(spark, index_dir, tmp_path):
     # the stored quantizer is the refined one, not the first-N sample
     stored = {
         r.cell: list(r.c_emb)
-        for r in spark.read.parquet(M.table_path(d, "centroids")).collect()
+        for r in spark.read.parquet(M.table_path(d, "fine")).collect()
     }
     first_n = {
         int(r.vec_id): [float(x) for x in r.embedding]
@@ -247,7 +246,7 @@ def test_layout_version_guard(spark, tmp_path):
     emb = load_table(spark, SF_SMOKE, "embeddings")
     AI.build_ann_index(spark, emb, d)
     assert M.read_meta(d, AI._LAYOUT_KEY) == AI.LAYOUT_VERSION
-    # simulate a pre-stamp artifact: drop the marker, clear the memos
+    # simulate a pre-stamp artifact: drop the marker, clear the caches
     import json
     import os
 
@@ -257,7 +256,6 @@ def test_layout_version_guard(spark, tmp_path):
     manifest.pop(AI._LAYOUT_KEY)
     with open(mpath, "w") as fh:
         json.dump(manifest, fh)
-    AI._LAYOUT_OK.discard(d)
     M.clear_table_cache()
     with pytest.raises(ValueError, match="rebuild"):
         AI.append_to_ann_index(spark, emb.limit(1), d)
@@ -269,6 +267,22 @@ def test_layout_version_guard(spark, tmp_path):
     AI.build_ann_index(spark, emb, d)
     got = AI.ann_index_ivfpq_topk(spark, d, _queries(spark), K)
     assert got.count() == len(QUERY_IDS) * K
+
+
+def test_layout_guard_reads_the_stamp_each_time(spark, index_dir, tmp_path):
+    """The guard keeps no per-process verdict: a directory that passed a
+    check and is then restamped with an older layout version (say, an
+    old build written over it by another process) fails the next
+    append."""
+    import shutil
+
+    d = str(tmp_path / "restamped")
+    shutil.copytree(index_dir, d)
+    AI._check_layout(d)
+    M.write_meta(d, AI._LAYOUT_KEY, AI.LAYOUT_VERSION - 1)
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    with pytest.raises(ValueError, match="rebuild"):
+        AI.append_to_ann_index(spark, emb.limit(1), d)
 
 
 def test_adc_handles_short_codebook_prefix(spark, tmp_path):
@@ -542,7 +556,7 @@ def test_auto_n_centroids_rule(spark, index_dir, tmp_path):
     emb = load_table(spark, SF_SMOKE, "embeddings")
     d_auto = str(tmp_path / "auto_idx")
     AI.build_ann_index(spark, emb, d_auto, n_centroids=None)
-    cents = spark.read.parquet(M.table_path(d_auto, "centroids"))
+    cents = spark.read.parquet(M.table_path(d_auto, "fine"))
     assert cents.count() == AI.auto_n_centroids(emb.count()) == S.N_CENTROIDS
     got = _rows(AI.ann_index_ivfpq_topk(spark, d_auto, _queries(spark), K))
     expected = _rows(
@@ -745,12 +759,12 @@ def test_2level_delete_tombstones_filter_results(spark, tmp_path):
 
 
 def test_2level_flag_matches_reader(spark, tmp_path):
-    """flag_against_index_2level (distributed two-stage broadcast probe
-    + cogrouped per-cell matmul) must answer exactly what the
-    driver-probe reader answers for the same query vectors — the
-    ingest-flag verb and the search verb are one semantics."""
+    """flag_against_index (distributed two-stage probe + cogrouped
+    per-cell matmul) must answer exactly what the driver-probe reader
+    answers for the same query vectors — the ingest-flag verb and the
+    search verb are one semantics."""
     from rds_pgbadger_etl_spark.streaming.incremental_ann import (
-        flag_against_index_2level,
+        flag_against_index,
     )
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
@@ -759,7 +773,7 @@ def test_2level_flag_matches_reader(spark, tmp_path):
     batch = emb.filter(F.col("vec_id") < 10)
     flags = {
         (r.vec_id, r.rank): (r.neighbor_id, r.cosine)
-        for r in flag_against_index_2level(spark, batch, d, k=K).collect()
+        for r in flag_against_index(spark, batch, d, k=K).collect()
     }
     rows = emb.filter(F.col("vec_id") < 10).collect()
     queries = [(int(r.vec_id), list(r.embedding)) for r in rows]
@@ -872,7 +886,7 @@ def test_2level_compaction_preserves_search_and_reduces_files(spark, tmp_path):
     before_pq = _rows(AI.ann_index_ivfpq_topk(spark, d, qs, K))
 
     stats = AI.compact_ann_index(spark, d)
-    assert set(stats) == {"vectors", "raw", "fine"}
+    assert set(stats) == {"vectors", "raw"}  # fine/ is immutable
     for t in ("vectors", "raw"):
         assert stats[t]["files_after"] < stats[t]["files_before"], (t, stats)
     # one file-set per (group, cell) partition after the rewrite
@@ -1331,6 +1345,13 @@ def test_sq8_reader_requires_arm(spark, index_dir):
         AI.ann_index_sq8_topk(spark, index_dir, _queries(spark), K)
 
 
+def test_lsh_reader_requires_arm(spark, index2_dir):
+    """Only build_ann_index writes the LSH bands: the LSH search over a
+    build_ann_index_2level index fails loudly, like the SQ8 reader."""
+    with pytest.raises(ValueError, match="LSH"):
+        AI.ann_index_lsh_topk(spark, index2_dir, _queries(spark), K)
+
+
 def test_sq8_rerank_with_full_shortlist_equals_ivf_flat(spark, sq8_dir):
     """Semantics anchor, same contract as the PQ rerank twin: with the
     shortlist covering the probed population, SQ8-shortlist +
@@ -1617,21 +1638,21 @@ def test_2level_rebuild_invalidates_sq8_arm(spark, tmp_path):
     assert got == _rows(AI.ann_index_ivf_topk(spark, d, _queries(spark), K))
 
 
-def _check_sq8_prefix_arm(spark, tmp_path, layout):
+@pytest.mark.parametrize("layout", sorted(_LAYOUTS))
+def test_sq8_prefix_arm_bit_identity_and_lifecycle(spark, tmp_path, layout):
     """The materialized prefix-codes arm (sq8_prefix/) must be
     INVISIBLE in results, on ``layout``: a store carrying it answers
     every truncated width at or under the materialized width
     bit-identically to a twin store without it (per-dim grid
     independence), while the probed scan actually switches to the
     prefix table (plan-pinned — the scan-side IO cut is the arm's whole
-    point). It is partitioned under the layout's own key. Lifecycle:
+    point). It is partitioned by (group, cell). Lifecycle:
     appends land sliced rows alongside the full codes, compaction
     covers the table, a grid retrain re-derives it, a rebuild
     invalidates it."""
     emb = load_table(spark, SF_SMOKE, "embeddings")
     half = emb.count() // 2
     qs = _queries(spark)
-    part_cols = {"1level": {("cell",)}, "2level": {("cell", "group")}}
     build, append = _LAYOUTS[layout]
     d_arm = str(tmp_path / f"with_arm_{layout}")
     d_twin = str(tmp_path / f"no_arm_{layout}")
@@ -1643,7 +1664,7 @@ def _check_sq8_prefix_arm(spark, tmp_path, layout):
     assert {
         tuple(sorted(c for c in ("group", "cell") if f"{c}=" in p))
         for p in AI._data_files(M.table_path(d_arm, "sq8_prefix"))
-    } == part_cols[layout]
+    } == {("cell", "group")}
 
     def trunc(d, dims):
         return _rows(AI.ann_index_sq8_topk(spark, d, qs, K, dims=dims))
@@ -1704,14 +1725,6 @@ def _check_sq8_prefix_arm(spark, tmp_path, layout):
     # and the verb refuses a store with no SQ8 arm
     with pytest.raises(ValueError, match="SQ8"):
         AI.add_sq8_prefix_to_ann_index(spark, d_arm)
-
-
-def test_sq8_prefix_arm_bit_identity_and_lifecycle(spark, tmp_path):
-    _check_sq8_prefix_arm(spark, tmp_path, "1level")
-
-
-def test_2level_sq8_prefix_arm_bit_identity(spark, tmp_path):
-    _check_sq8_prefix_arm(spark, tmp_path, "2level")
 
 
 def test_sq8_drift_counters_match_exact_scan(spark, tmp_path):
@@ -2265,15 +2278,15 @@ def test_driver_scoring_matches_spark_plan(spark, tmp_path, layout, residual):
         ranks = [r.rank for r in every if r.q_id == q]
         assert sorted(ranks) == list(range(1, len(ranks) + 1))
 
-    probes, parts = _pq_probes(spark, d, qs)
+    probes = _pq_probes(spark, d, qs)
     emptied = probes[0][1:]
-    files = [path for path, _ in AI._probed_files(d, parts, probes)[emptied]]
+    files = [path for path, _ in AI._probed_files(d, probes)[emptied]]
     removed = set(pq.read_table(files, columns=["vec_id"])["vec_id"].to_pylist())
     for path in files:
         os.remove(path)
     part_dir = os.path.join(
         M.table_path(d, "vectors"),
-        *(f"{c}={v}" for c, v in zip(parts, emptied)),
+        *(f"{c}={v}" for c, v in zip(AI._PARTS, emptied)),
     )
     # only hidden names (checksums) are left, which both paths skip
     assert all(n.startswith((".", "_")) for n in os.listdir(part_dir))
@@ -2313,10 +2326,10 @@ def test_driver_scoring_opens_only_probed_codes(
     d = index_dir if layout == "1level" else index2_dir
     search = AI.ann_index_ivfpq_topk
     qs = _queries(spark)
-    probes, parts = _pq_probes(spark, d, qs)
+    probes = _pq_probes(spark, d, qs)
     vectors = M.table_path(d, "vectors")
     probed_dirs = {
-        os.path.join(vectors, *(f"{c}={v}" for c, v in zip(parts, p[1:])))
+        os.path.join(vectors, *(f"{c}={v}" for c, v in zip(AI._PARTS, p[1:])))
         for p in probes
     }
     opened = []
@@ -2374,15 +2387,12 @@ def _index_state(d):
     import pyarrow.dataset as pads
 
     state = {"manifest": M.manifest_snapshot(d)}
-    quantizers = ("coarse", "fine") if AI._is_2level(d) else ("centroids",)
-    for t in (*quantizers, "codebook", "sq_stats", "bin_stats",
-              *AI._CORPUS_TABLES):
-        if t == "fine" or t in AI._table_map(d) or t not in AI._CORPUS_TABLES:
-            tbl = pads.dataset(
-                M.table_path(d, t), format="parquet", partitioning="hive"
-            ).to_table()
-            state[t] = sorted(map(repr, tbl.select(sorted(tbl.column_names))
-                                  .to_pylist()))
+    for t in ("coarse", "codebook", "sq_stats", "bin_stats", *AI._table_map(d)):
+        tbl = pads.dataset(
+            M.table_path(d, t), format="parquet", partitioning="hive"
+        ).to_table()
+        state[t] = sorted(map(repr, tbl.select(sorted(tbl.column_names))
+                              .to_pylist()))
     return state
 
 

@@ -268,13 +268,19 @@ def test_incremental_dedup_mid_stream_compaction_identical(spark, tmp_path):
     assert {(d, o) for d, o, _ in plain} >= {(3, 1), (5, 1)}
 
 
-def test_incremental_ann_stream_matches_batch_lifecycle(spark, tmp_path):
+@pytest.mark.parametrize("n_groups", [1, 4])
+def test_incremental_ann_stream_matches_batch_lifecycle(spark, tmp_path, n_groups):
     """Streamed ANN ingestion (bootstrap-build + flag + append per
-    micro-batch) must (1) emit exactly the flags the batch verbs produce
-    when interleaved the same way, and (2) leave behind the same
-    artifact — ivfpq search over the stream-built index equals search
-    over the batch-built twin."""
+    micro-batch), bootstrapped as one group of N_CENTROIDS cells or as
+    N_GROUPS_2L groups, must (1) emit exactly the flags the batch verbs
+    produce when interleaved the same way, (2) leave behind the same
+    artifact — BOTH search arms (IVF-Flat and PQ/ADC) over the
+    stream-built index equal the batch-built twin (build_ann_index for
+    one group) — and (3) resume idempotently: a re-drain from the same
+    checkpoint with no new files appends nothing."""
     from rds_pgbadger_etl_spark.operators import ann_index as AI
+    from rds_pgbadger_etl_spark.operators import index_maintenance as M
+    from rds_pgbadger_etl_spark.operators import similarity as S
     from rds_pgbadger_etl_spark.plans.llm_ops import _query_vectors
     from rds_pgbadger_etl_spark.sources.tables import load_table
     from rds_pgbadger_etl_spark.streaming.incremental_ann import (
@@ -282,6 +288,11 @@ def test_incremental_ann_stream_matches_batch_lifecycle(spark, tmp_path):
         run_incremental_ann,
     )
 
+    assert n_groups in (1, AI.N_GROUPS_2L)
+    shape = {
+        "n_groups": n_groups,
+        "n_cells": S.N_CENTROIDS if n_groups == 1 else AI.N_CELLS_2L,
+    }
     sf = "/root/testdata/sf0.001"
     emb = load_table(spark, sf, "embeddings")
     n = emb.count()
@@ -296,82 +307,25 @@ def test_incremental_ann_stream_matches_batch_lifecycle(spark, tmp_path):
     src, store, ckpt, flags = (
         str(tmp_path / d) for d in ("src", "store", "ckpt", "flags")
     )
-    for s in slices:
-        s.write.mode("append").parquet(src)
+
+    def drain():
         run_incremental_ann(
             spark.readStream.schema(emb.schema).parquet(src),
-            store, ckpt, flags, k=3,
+            store, ckpt, flags, k=3, **shape,
         )
 
+    for s in slices:
+        s.write.mode("append").parquet(src)
+        drain()
+
     twin = str(tmp_path / "twin")
-    AI.build_ann_index(spark, slices[0], twin)
+    if n_groups == 1:
+        AI.build_ann_index(spark, slices[0], twin)
+    else:
+        AI.build_ann_index_2level(spark, slices[0], twin)
     want = []
     for s in slices[1:]:
         f = flag_against_index(spark, s, twin, k=3)
-        want.append(f)
-        AI.append_to_ann_index(spark, s, twin)
-    cols = ["vec_id", "neighbor_id", "cosine", "rank"]
-    want_rows = sorted(
-        str(r) for df in want for r in df.select(*cols).collect()
-    )
-    got_rows = sorted(
-        str(r)
-        for r in spark.read.parquet(flags)
-        .filter("vec_id IS NOT NULL")
-        .select(*cols)
-        .collect()
-    )
-    assert got_rows == want_rows
-    assert len(got_rows) == 3 * (n - n // 3)  # top-3 per later-batch vector
-
-    q = _query_vectors(spark, sf)
-    a = sorted(map(str, AI.ann_index_ivfpq_topk(spark, store, q, 5).collect()))
-    b = sorted(map(str, AI.ann_index_ivfpq_topk(spark, twin, q, 5).collect()))
-    assert a == b and a
-
-
-def test_incremental_ann_2level_stream_matches_batch_lifecycle(spark, tmp_path):
-    """run_incremental_ann_2level (bootstrap-build + flag + append per
-    micro-batch over the sharded-quantizer store) must (1) emit exactly
-    the flags the 2-level batch verbs produce when interleaved the same
-    way, (2) leave behind the same artifact — BOTH search arms
-    (IVF-Flat and PQ/ADC) over the stream-built index equal the
-    batch-built twin — and (3) resume idempotently: a re-drain from the
-    same checkpoint with no new files appends nothing."""
-    from rds_pgbadger_etl_spark.operators import ann_index as AI
-    from rds_pgbadger_etl_spark.plans.llm_ops import _query_vectors
-    from rds_pgbadger_etl_spark.sources.tables import load_table
-    from rds_pgbadger_etl_spark.streaming.incremental_ann import (
-        flag_against_index_2level,
-        run_incremental_ann_2level,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    emb = load_table(spark, sf, "embeddings")
-    n = emb.count()
-    slices = [
-        emb.filter(
-            (F.col("vec_id") >= b * n // 3)
-            & (F.col("vec_id") < (b + 1) * n // 3)
-        )
-        for b in range(3)
-    ]
-
-    src, store, ckpt, flags = (
-        str(tmp_path / d) for d in ("src", "store", "ckpt", "flags")
-    )
-    for s in slices:
-        s.write.mode("append").parquet(src)
-        run_incremental_ann_2level(
-            spark.readStream.schema(emb.schema).parquet(src),
-            store, ckpt, flags, k=3,
-        )
-
-    twin = str(tmp_path / "twin")
-    AI.build_ann_index_2level(spark, slices[0], twin)
-    want = []
-    for s in slices[1:]:
-        f = flag_against_index_2level(spark, s, twin, k=3)
         want.append(f)
         AI.append_to_ann_index(spark, s, twin)
     cols = ["vec_id", "neighbor_id", "cosine", "rank"]
@@ -396,14 +350,9 @@ def test_incremental_ann_2level_stream_matches_batch_lifecycle(spark, tmp_path):
 
     # resume: same checkpoint, no new source files → nothing flagged,
     # nothing appended (exactly-once per batch)
-    from rds_pgbadger_etl_spark.operators import index_maintenance as M
-
     rows_before = spark.read.parquet(flags).count()
     store_rows = spark.read.parquet(M.table_path(store, "raw")).count()
-    run_incremental_ann_2level(
-        spark.readStream.schema(emb.schema).parquet(src),
-        store, ckpt, flags, k=3,
-    )
+    drain()
     assert spark.read.parquet(flags).count() == rows_before
     assert (
         spark.read.parquet(M.table_path(store, "raw")).count() == store_rows
@@ -710,7 +659,8 @@ def test_exact_store_legacy_root_layout_migrates(spark, tmp_path):
 
 def test_incremental_ann_2level_residual_stream(spark, tmp_path):
     """Streaming ingestion with the RESIDUAL two-level store: the first
-    batch bootstraps build_ann_index_2level(residual=True); later
+    batch bootstraps build_ann_index_2level(residual=True) with
+    N_GROUPS_2L groups; later
     batches append, dispatching the residual encoder off the STORED
     manifest flag. The stream-built artifact's PQ/ADC arm (the arm the
     encoding changes) must equal the one-shot residual build over the
@@ -721,7 +671,7 @@ def test_incremental_ann_2level_residual_stream(spark, tmp_path):
     from rds_pgbadger_etl_spark.plans.llm_ops import _query_vectors
     from rds_pgbadger_etl_spark.sources.tables import load_table
     from rds_pgbadger_etl_spark.streaming.incremental_ann import (
-        run_incremental_ann_2level,
+        run_incremental_ann,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -739,9 +689,10 @@ def test_incremental_ann_2level_residual_stream(spark, tmp_path):
             .write.mode("append")
             .parquet(src)
         )
-        run_incremental_ann_2level(
+        run_incremental_ann(
             spark.readStream.schema(emb.schema).parquet(src),
             store, ckpt, flags, k=3, residual=True,
+            n_groups=AI.N_GROUPS_2L, n_cells=AI.N_CELLS_2L,
         )
     assert M.read_meta(store, AI._RESIDUAL_KEY) is True
 

@@ -6,7 +6,7 @@ AUTO_MAX_CELLS wall (~270M vectors). A corpus past the wall is not
 buildable locally, so this rehearsal proves the layout's COST CLAIM at
 the largest affordable scale instead: at 8M vectors it builds BOTH
 
-- the single-level index at the auto shape (C = 128 cells, the
+- the one-group index at the auto shape (C = 128 cells, the
   auto_n_centroids value for 8M), and
 - the two-level index FORCED to the same total cell count
   (G = 16 groups x 8 cells/group = 128 fine cells, same ~65k-row cell
@@ -17,12 +17,13 @@ and measures the same search and 2000-query flag-batch legs on each.
 Round-10 legs: the PQ arm vs the flat arm on the SAME probed (group,
 cell) partitions — probed bytes measured from the partition dirs (codes
 must be ~100x smaller than raw floats), an append-O(new) leg, and a
-two-batch run_incremental_ann_2level drain (per-batch cost flat).
+two-batch run_incremental_ann drain over the two-level store
+(per-batch cost flat).
 Flat-cost claim: per-query scan volume is identical (n_probe cells of
-the same volume), so search/flag must match the single-level row while
+the same volume), so search/flag must match the one-group row while
 the quantizer work per query drops from C cosines to
 G + n_probe_groups*(C/G) — the term that walls at 270M. Also compared
-against the 4M single-level row from BENCH_NOTES (search 1.48 s /
+against the 4M one-group row from BENCH_NOTES (search 1.48 s /
 flag 9.4 s): cost must stay flat as the corpus doubles again, because
 cell volume is held constant.
 
@@ -132,7 +133,6 @@ def main() -> None:
     # --- search + flag legs -------------------------------------------
     from rds_pgbadger_etl_spark.streaming.incremental_ann import (
         flag_against_index,
-        flag_against_index_2level,
     )
 
     q_rows = emb.filter(F.col("vec_id") < 5).collect()
@@ -182,7 +182,7 @@ def main() -> None:
     probe_pairs = sorted(
         {
             (g, c)
-            for _, g, c in AI._probe_cells_2level(spark, idx2, queries)
+            for _, g, c in AI._probes(spark, idx2, queries)
         }
     )
     raw_root = IM.table_path(idx2, "raw")
@@ -207,7 +207,7 @@ def main() -> None:
     # the pruned raw scan — one matmul per cell, not a per-pair UDF
     t_flag1, t_flag2 = best_of_3_pair(
         lambda: flag_against_index(spark, flag_batch, idx1, k=3),
-        lambda: flag_against_index_2level(spark, flag_batch, idx2, k=3),
+        lambda: flag_against_index(spark, flag_batch, idx2, k=3),
     )
 
     # result parity: same scoring (exact cosine in probed ~65k-row
@@ -242,11 +242,11 @@ def main() -> None:
     AI.append_to_ann_index(spark, flag_batch, idx2)
     t_append2 = round(time.perf_counter() - t0, 3)
 
-    # streaming two-batch leg (run_incremental_ann_2level over the SAME
+    # streaming two-batch leg (run_incremental_ann over the SAME
     # store): per-batch drain cost must be flat batch-to-batch — the
     # store grows by only the batch size between them.
     from rds_pgbadger_etl_spark.streaming.incremental_ann import (
-        run_incremental_ann_2level,
+        run_incremental_ann,
     )
 
     stream_src = f"{BASE}/stream2l_src_{n_vecs}"
@@ -267,7 +267,7 @@ def main() -> None:
             .parquet(stream_src)
         )
         t0 = time.perf_counter()
-        run_incremental_ann_2level(
+        run_incremental_ann(
             spark.readStream.schema(emb.schema).parquet(stream_src),
             idx2,
             stream_ckpt,

@@ -199,7 +199,7 @@ def main() -> None:
             probe_pairs = sorted(
                 {
                     (g, c)
-                    for _, g, c in AI._probe_cells_2level(
+                    for _, g, c in AI._probes(
                         spark, idx, queries, n_probe=n_probe
                     )
                 }

@@ -17,9 +17,10 @@ same manifest keys. The last line names the smallest input at which the
 Spark landing was faster (``null``: the driver won at every point) next
 to the session's ``maxPartitionBytes``.
 
-Usage:  python tools/ann_landing_rehearsal.py [n_vecs] [layout] [reps]
+Usage:  python tools/ann_landing_rehearsal.py [n_vecs] [n_groups] [reps]
         n_vecs is the largest corpus (default 480000, ~128 MB);
-        layout is ``1level`` (default) or ``2level`` (16 groups).
+        n_groups is 1 (default: build_ann_index, one group) or more
+        (build_ann_index_2level over that many groups).
 Corpora (perfbench's seeded clustered vectors) live under
 $REHEARSAL_DIR (default /tmp/ann_landing) and are reused when present.
 Memory: the largest point holds the collected input and its tables on
@@ -38,7 +39,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 BASE = os.environ.get("REHEARSAL_DIR", "/tmp/ann_landing")
-N_GROUPS = 16
 FRACTIONS = (1 / 400, 1 / 100, 1 / 25, 1 / 8, 1 / 3, 1)
 
 
@@ -90,7 +90,7 @@ def _same(a: dict, b: dict) -> bool:
 
 def main() -> None:
     n_vecs = int(sys.argv[1]) if len(sys.argv) > 1 else 480_000
-    layout = sys.argv[2] if len(sys.argv) > 2 else "1level"
+    n_groups = int(sys.argv[2]) if len(sys.argv) > 2 else 1
     reps = int(sys.argv[3]) if len(sys.argv) > 3 else 3
 
     from perfbench import vecgen
@@ -119,9 +119,9 @@ def main() -> None:
         shutil.rmtree(index, ignore_errors=True)
         c0, t0 = tree_seconds(), time.perf_counter()
         try:
-            if layout == "2level":
+            if n_groups > 1:
                 AI.build_ann_index_2level(
-                    spark, emb, index, n_groups=N_GROUPS,
+                    spark, emb, index, n_groups=n_groups,
                     n_cells=AI.auto_n_centroids(n),
                 )
             else:
@@ -145,7 +145,7 @@ def main() -> None:
             return round(statistics.median(r[i] for r in runs), 3)
 
         point = {
-            "layout": layout, "n_vecs": n, "input_bytes": d[0][2],
+            "n_groups": n_groups, "n_vecs": n, "input_bytes": d[0][2],
             "driver_wall_s": med(d, 0), "driver_cpu_s": med(d, 1),
             "spark_wall_s": med(s, 0), "spark_cpu_s": med(s, 1),
         }

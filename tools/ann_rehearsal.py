@@ -104,7 +104,7 @@ def main() -> None:
     t_build = time.perf_counter() - t0
     sizes = {
         part: round(_dir_bytes(f"{index_dir}/{part}") / 1e6, 1)
-        for part in ("vectors", "raw", "lsh_buckets", "centroids", "codebook")
+        for part in ("vectors", "raw", "lsh_buckets", "coarse", "fine", "codebook")
     }
 
     # --- search --------------------------------------------------------

@@ -16,8 +16,9 @@ The last line names the smallest probed size at which the Spark plan
 was faster (``null``: the driver won at every point) next to the
 session's ``maxPartitionBytes``.
 
-Usage:  python tools/ivfpq_serving_rehearsal.py [n_vecs] [layout] [reps]
-        layout is ``1level`` (default) or ``2level`` (16 groups).
+Usage:  python tools/ivfpq_serving_rehearsal.py [n_vecs] [n_groups] [reps]
+        n_groups is 1 (default: build_ann_index, one group) or more
+        (build_ann_index_2level over that many groups).
 Corpus (perfbench's seeded clustered vectors) and index live under
 $REHEARSAL_DIR (default /tmp/ivfpq_serving) and are reused when present.
 Memory: the 2M-vector build fits a 4g driver.
@@ -34,14 +35,13 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 BASE = os.environ.get("REHEARSAL_DIR", "/tmp/ivfpq_serving")
-N_GROUPS = 16
 K = 10
 BATCHES = (1, 2, 4, 8, 16)
 
 
 def main() -> None:
     n_vecs = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
-    layout = sys.argv[2] if len(sys.argv) > 2 else "1level"
+    n_groups = int(sys.argv[2]) if len(sys.argv) > 2 else 1
     reps = int(sys.argv[3]) if len(sys.argv) > 3 else 3
 
     from perfbench import vecgen
@@ -51,7 +51,7 @@ def main() -> None:
 
     spark = get_spark(app_name="ivfpq-serving-rehearsal", cpus=os.cpu_count())
     corpus = f"{BASE}/corpus_{n_vecs}"
-    index = f"{BASE}/index_{layout}_{n_vecs}"
+    index = f"{BASE}/index_g{n_groups}_{n_vecs}"
     src = vecgen.VectorSource(3)
     if not os.path.isdir(corpus):
         os.makedirs(corpus)
@@ -64,24 +64,24 @@ def main() -> None:
     if not os.path.isdir(f"{index}/vectors"):
         emb = spark.read.parquet(corpus)
         t0 = time.perf_counter()
-        if layout == "2level":
+        if n_groups > 1:
             AI.build_ann_index_2level(
-                spark, emb, index, n_groups=N_GROUPS, n_cells=n_cells
+                spark, emb, index, n_groups=n_groups, n_cells=n_cells
             )
         else:
             AI.build_ann_index(spark, emb, index, n_centroids=n_cells)
         print(json.dumps({"build_s": round(time.perf_counter() - t0, 1)}))
 
     def run(qs, n_probe, driver):
-        probes, schema, cents = AI._probes(spark, index, qs, n_probe, N_GROUPS)
-        lut, residual = AI._search_luts(spark, index, qs, probes, cents)
-        files = AI._probed_files(index, schema.names[1:], probes)
+        probes = AI._probes(spark, index, qs, n_probe, n_groups)
+        lut, residual = AI._search_luts(spark, index, qs, probes)
+        files = AI._probed_files(index, probes)
         args = (spark, index, qs, probes)
         c0, t0 = tree_seconds(), time.perf_counter()
         if driver:
             df = AI._driver_adc_topk(*args, files, lut, residual, K)
         else:
-            df = AI._spark_adc_topk(*args, schema, lut, residual, K)
+            df = AI._spark_adc_topk(*args, lut, residual, K)
         rows = df.collect()
         wall, cpu = time.perf_counter() - t0, tree_seconds() - c0
         probed = sum(b for p in probes for _, b in files[p[1:]])
@@ -104,7 +104,7 @@ def main() -> None:
             return round(statistics.median(r[i] for r in runs), 3)
 
         point = {
-            "layout": layout, "n_vecs": n_vecs, "n_probe": n_probe,
+            "n_groups": n_groups, "n_vecs": n_vecs, "n_probe": n_probe,
             "queries": batch, "probed_bytes": d[0][2],
             "driver_wall_s": med(d, 0), "driver_cpu_s": med(d, 1),
             "spark_wall_s": med(s, 0), "spark_cpu_s": med(s, 1),

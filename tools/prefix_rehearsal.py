@@ -159,10 +159,9 @@ def main() -> None:
         return times, res
 
     # record the probed-cell fraction (the pruning this layout buys)
-    cells, mat = AI._read_centroids(spark, d)
-    probes = AI._probe_cells(queries, cells, mat, 4)
-    out["probed_cells"] = len({c for _, c in probes})
-    out["total_cells"] = len(cells)
+    probes = AI._probes(spark, d, queries, 4)
+    out["probed_cells"] = len({c for *_, c in probes})
+    out["total_cells"] = len(AI._stored_assigner(spark, d).cells)
 
     # (1) trunc16 via projection slice (no arm)
     t_slice, r_slice = timed(

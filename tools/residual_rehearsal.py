@@ -230,8 +230,8 @@ def main() -> None:
 
     import numpy as np  # noqa: F811
 
-    _, m1 = AI._read_centroids(spark, dirs["raw"])
-    _, m2 = AI._read_centroids(spark, dirs["residual"])
+    m1 = AI._stored_assigner(spark, dirs["raw"]).c_mat
+    m2 = AI._stored_assigner(spark, dirs["residual"]).c_mat
     out["same_centroids"] = bool(np.array_equal(m1, m2))
 
     # chosen == best: the auto arm's manifest choice must match the
