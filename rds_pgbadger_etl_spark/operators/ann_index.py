@@ -53,8 +53,14 @@ one job and landed on the DRIVER: ``vectors/``, ``raw/``,
 by the numpy kernels the UDFs wrap and written with pyarrow, one file
 per partition value, as Spark's partitionBy lays them out
 (:func:`_land_local`). A larger input runs the SPARK plan: map-only UDF
-passes and partitionBy writes (:func:`_land_corpus`). On both sides the
-metadata-sized quantizer tables (``coarse/``, ``fine/``,
+passes and partitionBy writes (:func:`_land_corpus`), with each row
+joined to its own centroid (broadcast) where the residual encoder, the
+codebook or the variance diagnostic needs it. That one Spark landing
+also serves :func:`build_ann_index_2level_distributed`, the path past
+the AUTO_MAX_CELLS_2L clamp: its cogrouped assignment never collects
+the fine quantizer, and on a residual index it encodes each row in the
+cogroup, where the row's ``fine/`` shard already is. On
+both sides the metadata-sized quantizer tables (``coarse/``, ``fine/``,
 ``codebook/``) are written and read with pyarrow, except that the
 distributed two-level build writes ``fine/`` with Spark. The
 derived-arm verbs (``add_sq8_to_ann_index`` and friends) and compaction
@@ -105,8 +111,9 @@ AUTO_MAX_CELLS = 4_096
 # _group_of_cells does a dense n_cells x n_groups matmul — ~1M cells
 # (256 MB of float64 centroids at DIM=64) is where that pass stops
 # being driver-feasible. The (group, cell) LAYOUT itself would carry
-# AUTO_MAX_CELLS**2 cells; raising this cap means distributing the
-# quantizer-assignment pass, not changing the layout or any reader.
+# AUTO_MAX_CELLS**2 cells; past this cap build_ann_index_2level_distributed
+# builds them (distributed gmap and cogrouped assignment, the same
+# landing), with no change to the layout or any reader.
 AUTO_MAX_CELLS_2L = 2**20
 
 # Two-level IVF defaults for the registered benchmark queries (tiny
@@ -197,12 +204,13 @@ def auto_quantizer_shape(n_vecs: int) -> tuple[int, int]:
 
     The rule clamps at AUTO_MAX_CELLS_2L fine cells (~6.9e10 rows at
     constant volume) — not the layout's theoretical AUTO_MAX_CELLS**2 —
-    because the SHIPPED build trains the quantizers driver-side
+    because the driver build trains the quantizers driver-side
     (build_ann_index_2level's prefix collect + _group_of_cells matmul),
     which is feasible to ~1M cells. Past the clamp, cells fatten
-    linearly exactly as one group does past ITS cap; recovering
-    constant volume means distributing the quantizer-assignment pass,
-    which changes no reader and no layout.
+    linearly exactly as one group does past ITS cap, unless the caller
+    passes the uncapped shape to :func:`build_ann_index_2level_distributed`,
+    which never collects the fine quantizer and lands through the same
+    :func:`_land_corpus`; neither changes a reader or the layout.
     """
     import math
 
@@ -253,33 +261,37 @@ def _sampled():
     )
 
 
-def _variance_sample(df: DataFrame) -> DataFrame:
-    return df.filter(_sampled())
-
-
-def _assignment_variance_ratio(
-    cells: DataFrame, cell_ids: np.ndarray, cents: np.ndarray
-) -> float:
+def _assignment_variance_ratio(assigned: DataFrame, cents: DataFrame) -> float:
     """Intra-cell / global variance ratio of an assigned corpus — the
-    residual="auto" diagnostic, computed from the assignment pass the
-    build already materializes (no extra shuffle: one map-only pass over
-    a deterministic hash sample, one metadata-sized partial per
-    partition). intra = mean ||x - c(x)||^2 against the ASSIGNED
-    centroid; global = mean ||x||^2 - ||mean x||^2 (the standard
-    decomposition, so no second pass for the mean). ``cents`` is the
-    FLOAT centroid matrix aligned with sorted ``cell_ids`` (non-
-    contiguous fine-cell ids from a refined 2-level train are fine)."""
-    sample = _variance_sample(cells).select("embedding", "cell")
-    ids = np.asarray(cell_ids, dtype="int64")
-    cmat = np.asarray(cents, dtype=np.float64)
+    residual="auto" diagnostic, over the rows :func:`_land` persists or
+    the distributed build's assigned sample: a deterministic hash sample
+    joined to each row's own centroid (``cents``: (group, cell, c_emb),
+    broadcast from :func:`_land`, ``fine/`` itself from
+    :func:`build_ann_index_2level_distributed`), one metadata-sized
+    partial per Arrow batch. intra = mean ||x - c(x)||^2 against the
+    ASSIGNED centroid; global = mean ||x||^2 - ||mean x||^2 (the standard
+    decomposition, so no second pass for the mean)."""
+    sample = assigned.filter(_sampled()).join(cents, list(_PARTS))
 
-    def xc(pdf):
-        x = np.vstack(pdf["embedding"].map(np.asarray).to_numpy()).astype(
-            np.float64
-        )
-        return x, cmat[np.searchsorted(ids, pdf["cell"].to_numpy("int64"))]
+    def partials(it):
+        for pdf in it:
+            if len(pdf) == 0:
+                continue
+            p = _partial(_stack(pdf["embedding"]), _stack(pdf["c_emb"]))
+            yield pd.DataFrame(
+                {
+                    "n": pd.Series([p.n], dtype="int64"),
+                    "ss": [p.ss],
+                    "rss": [p.rss],
+                    "sv": [p.sv],
+                }
+            )
 
-    return _ratio_from_partials(_variance_partials(sample, xc))
+    return _ratio_from_partials(
+        sample.select("embedding", "c_emb")
+        .mapInPandas(partials, _VAR_PARTIAL_SCHEMA)
+        .collect()
+    )
 
 
 _VAR_PARTIAL_SCHEMA = "n bigint, ss double, rss double, sv array<double>"
@@ -302,29 +314,6 @@ def _partial(x: np.ndarray, c: np.ndarray) -> _Partial:
     )
 
 
-def _variance_partials(df: DataFrame, xc_of) -> list:
-    """One :func:`_partial` per Arrow batch of ``df``; ``xc_of(pdf)``
-    returns the batch's (vector, assigned-centroid) float64 matrices —
-    the ONLY piece that differs between the diagnostics, so the
-    statistics themselves cannot diverge."""
-
-    def partials(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            p = _partial(*xc_of(pdf))
-            yield pd.DataFrame(
-                {
-                    "n": pd.Series([p.n], dtype="int64"),
-                    "ss": [p.ss],
-                    "rss": [p.rss],
-                    "sv": [p.sv],
-                }
-            )
-
-    return df.mapInPandas(partials, _VAR_PARTIAL_SCHEMA).collect()
-
-
 def _ratio_from_partials(rows) -> float:
     """Reduce the metadata-sized (n, ss, rss, sv) partials into the
     intra-cell / global variance ratio."""
@@ -345,11 +334,14 @@ def _resolve_residual_auto(
 ) -> bool:
     """Resolve the residual knob AFTER the assignment exists: explicit
     bools pass through; ``"auto"`` measures the variance ratio
-    (``ratio()`` — the driver builds' :func:`_assignment_variance_ratio`
-    or the distributed build's :func:`_distributed_variance_ratio`) and
-    chooses. Either way the choice and how it was made are stamped in
-    the manifest (readers and appends dispatch off _RESIDUAL_KEY;
-    _RESIDUAL_MODE_KEY is the audit trail)."""
+    (``ratio()`` — :func:`_local_variance_ratio` on the driver landing,
+    :func:`_assignment_variance_ratio` on the Spark one and on
+    :func:`build_ann_index_2level_distributed`, the path past the
+    AUTO_MAX_CELLS_2L clamp, which measures its assigned sample before
+    its one assignment pass) and chooses. Either way the choice
+    and how it was made are stamped in the manifest (readers and appends
+    dispatch off _RESIDUAL_KEY; _RESIDUAL_MODE_KEY is the audit
+    trail)."""
     if residual == "auto":
         value = ratio()
         chosen = bool(value < RESIDUAL_AUTO_RATIO)
@@ -371,46 +363,41 @@ def _int_centroids(mat: np.ndarray) -> np.ndarray:
     return S._half_up(np.asarray(mat, dtype=np.float64) * S.PQ_INT_SCALE)
 
 
-def _residual_rows(
-    centroids: tuple[np.ndarray, np.ndarray] | None,
-) -> tuple[np.ndarray, np.ndarray] | None:
-    """(sorted cell ids, integer centroid rows) of ``centroids`` = (cell
-    ids, FLOAT rows): the residual encoder's input; None for raw PQ."""
-    if centroids is None:
-        return None
-    ids = np.asarray(centroids[0], dtype="int64")
-    assert (np.diff(ids) > 0).all(), "cell ids must be sorted"
-    return ids, _int_centroids(centroids[1])
+def _stack(col: pd.Series) -> np.ndarray:
+    """A pandas column of equal-length vectors as a float64 matrix."""
+    return np.vstack(col.to_numpy()).astype(np.float64)
 
 
-def _pq_encode(
-    x: np.ndarray,
-    ic: np.ndarray,
-    res: tuple[np.ndarray, np.ndarray] | None,
-    cells: np.ndarray,
-) -> np.ndarray:
+def _pq_encode(x: np.ndarray, ic: np.ndarray, ci: np.ndarray | None) -> np.ndarray:
     """PQ codes of the float64 rows ``x`` against the integer codebook
-    ``ic``: quantize (HALF_UP), then :func:`similarity.pq_argmin`. With
-    ``res`` = (sorted cell ids, their integer centroid rows), each row's
-    RESIDUAL against its own cell (``cells``) is encoded instead."""
+    ``ic``: quantize (HALF_UP), then :func:`similarity.pq_argmin`. Given
+    ``ci``, each row's own centroid as :func:`_int_centroids`, the row's
+    RESIDUAL is encoded instead."""
     iv = S._half_up(x * S.PQ_INT_SCALE)
-    if res is not None:
-        iv = iv - res[1][np.searchsorted(res[0], cells)]
+    if ci is not None:
+        iv = iv - ci
     return S.pq_argmin(iv, ic)
 
 
-def _pq_encode_udf(ic: np.ndarray, res: tuple[np.ndarray, np.ndarray] | None):
-    """:func:`_pq_encode` over the (embedding, cell) columns."""
+def _pq_codes(df: DataFrame, ic: np.ndarray, residual: bool) -> DataFrame:
+    """(vec_id, group, cell, codes) of ``df``'s rows: :func:`_pq_encode`
+    over whole Arrow batches of the (embedding, c_emb) columns, with no
+    per-row conversion; ``c_emb``, each row's own centroid, is read for
+    a residual index only."""
 
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def encode(emb: pd.Series, cell: pd.Series) -> pd.Series:
-        if len(emb) == 0:
-            return pd.Series([], dtype=object)
-        x = np.vstack(emb.to_numpy()).astype(np.float64)
-        out = _pq_encode(x, ic, res, cell.to_numpy().astype("int64"))
-        return pd.Series([row.tolist() for row in out])
+    def encode(batches):
+        for b in batches:
+            c = _int_centroids(_matrix(b.column("c_emb"))) if residual else None
+            codes = _pq_encode(_matrix(b.column("embedding")), ic, c)
+            yield pa.RecordBatch.from_arrays(
+                [*(b.column(k) for k in ("vec_id", *_PARTS)), _list_array(codes)],
+                names=["vec_id", *_PARTS, "codes"],
+            )
 
-    return encode
+    cols = ["vec_id", *_PARTS, "embedding", *(["c_emb"] if residual else [])]
+    return df.select(*cols).mapInArrow(
+        encode, "vec_id long, group long, cell long, codes array<int>"
+    )
 
 
 def build_ann_index(
@@ -717,15 +704,31 @@ class _Assigner(NamedTuple):
     c_mat: np.ndarray
     cell_groups: np.ndarray
 
-    @property
-    def centroids(self) -> tuple[np.ndarray, np.ndarray]:
-        return self.cells, self.c_mat
-
     def parts(self, x: np.ndarray) -> dict[str, np.ndarray]:
         """The partition columns of the rows ``x``."""
         cell = self.nearest(x).astype("int64")
         group = self.cell_groups[np.searchsorted(self.cells, cell)]
         return {"group": group, "cell": cell}
+
+    def centroids_of(self, cell: np.ndarray) -> np.ndarray:
+        """The FLOAT centroid row of each fine cell id in ``cell``."""
+        return self.c_mat[np.searchsorted(self.cells, cell)]
+
+    def centroids_df(self, spark: SparkSession, c_emb: bool) -> DataFrame:
+        """The cells as a (group, cell) LocalRelation: the cell map the
+        Spark assignment joins each row's group from; with ``c_emb``,
+        also each cell's FLOAT row (array<double>), the centroid frame a
+        residual landing joins each assigned row to."""
+        cols = {
+            "group": pa.array(self.cell_groups, pa.int64()),
+            "cell": pa.array(self.cells, pa.int64()),
+        }
+        if c_emb:
+            cols["c_emb"] = _list_array(self.c_mat)
+        return spark.createDataFrame(
+            pa.table(cols),
+            "group long, cell long" + (", c_emb array<double>" if c_emb else ""),
+        )
 
 
 def _stored_assigner(spark: SparkSession, index_dir: str) -> _Assigner:
@@ -750,33 +753,9 @@ def _cells_udf(nearest: Callable[[np.ndarray], np.ndarray]):
     def cells(col: pd.Series) -> pd.Series:
         if len(col) == 0:
             return pd.Series([], dtype="int64")
-        return pd.Series(
-            nearest(np.vstack(col.to_numpy()).astype(np.float64)).astype("int64")
-        )
+        return pd.Series(nearest(_stack(col)).astype("int64"))
 
     return cells
-
-
-def _assigned_df(spark: SparkSession, emb: DataFrame, a: _Assigner) -> DataFrame:
-    """``emb`` assigned by ``a`` as a map-only Spark pass: rows
-    (vec_id, embedding, group, cell); the cell's group joins back from
-    the metadata-sized cell map."""
-    cell = _cells_udf(a.nearest)(F.col("embedding"))
-    gmap = _local_df(
-        spark,
-        list(zip(a.cells.tolist(), a.cell_groups.tolist())),
-        T.StructType(
-            [
-                T.StructField("cell", T.LongType()),
-                T.StructField("group", T.LongType()),
-            ]
-        ),
-    )
-    return (
-        emb.select("vec_id", "embedding", cell.alias("cell"))
-        .join(F.broadcast(gmap), "cell")
-        .select("vec_id", "embedding", "group", "cell")
-    )
 
 
 def _assign_local(
@@ -801,8 +780,8 @@ def _local_variance_ratio(
     for off, sl, x in _batches(spark, t):
         m = sl["sampled"].to_numpy()
         if m.any():
-            pos = np.searchsorted(a.cells, cells[off : off + len(x)][m])
-            partials.append(_partial(x[m], a.c_mat[pos]))
+            c = a.centroids_of(cells[off : off + len(x)][m])
+            partials.append(_partial(x[m], c))
     return _ratio_from_partials(partials)
 
 
@@ -817,8 +796,8 @@ def _land(
 ) -> None:
     """Assign ``emb`` by ``a`` and land every corpus table: on the driver
     when ``local`` holds the collected input (:func:`_land_local`), else
-    the Spark plan over the persisted assignment (:func:`_land_corpus`).
-    A build (``mode="overwrite"``) first resolves ``residual`` on the
+    as a map-only Spark pass whose rows :func:`_land_corpus` lands. A
+    build (``mode="overwrite"``) first resolves ``residual`` on the
     assignment (``"auto"`` measures the intra-cell / global variance
     ratio); an append passes the stored flag."""
     if local is not None:
@@ -833,29 +812,38 @@ def _land(
                     ),
                 )
             _land_local(
-                spark, index_dir, local, parts, mode,
-                a.centroids if residual else None,
+                spark, index_dir, local, parts, mode, a if residual else None
             )
         return
-    with _persisted(_assigned_df(spark, emb, a)) as assigned:
+    cell = _cells_udf(a.nearest)(F.col("embedding"))
+    # the cell's group joins back from the metadata-sized cell map
+    assigned = (
+        emb.select("vec_id", "embedding", cell.alias("cell"))
+        .join(F.broadcast(a.centroids_df(spark, False)), "cell")
+        .select("vec_id", "embedding", *_PARTS)
+    )
+    # only a residual (or "auto") landing reads centroid rows; they are
+    # broadcast, as the assignment closure already carries them, so the
+    # encode stays map-only whatever size Spark estimates for the frame
+    cents = F.broadcast(a.centroids_df(spark, True)) if residual else None
+    with _persisted(assigned) as assigned:
         if mode == "overwrite":
             residual = _resolve_residual_auto(
                 index_dir,
                 residual,
-                lambda: _assignment_variance_ratio(assigned, *a.centroids),
+                lambda: _assignment_variance_ratio(assigned, cents),
             )
-        _land_corpus(
-            spark, index_dir, assigned, mode,
-            a.centroids if residual else None,
-        )
+        _land_corpus(spark, index_dir, assigned, cents, residual, mode)
 
 
 def _land_corpus(
     spark: SparkSession,
     index_dir: str,
     assigned: DataFrame,
+    cents: DataFrame | None,
+    residual: bool,
     mode: str,
-    centroids: tuple[np.ndarray, np.ndarray] | None,
+    codes: DataFrame | None = None,
 ) -> None:
     """Write the assigned rows (vec_id, embedding, group, cell) —
     persisted by the caller: every table reads them — into each corpus
@@ -868,10 +856,14 @@ def _land_corpus(
 
     - ``vectors/``: packed PQ codes, encoded map-only on the assigned
       rows (a codes-by-id join would shuffle corpus-sized tables; fused,
-      the only exchange is the partitionBy write). With ``centroids`` =
-      (sorted cell ids, FLOAT rows), each row's RESIDUAL against its own
-      cell's centroid is encoded instead (the FAISS IndexIVFPQ
-      composition), against a codebook of residuals.
+      the only exchange is the partitionBy write). On a residual index
+      each row joins its own centroid from ``cents`` — the broadcast
+      (group, cell, c_emb) LocalRelation :func:`_land` builds — and its
+      RESIDUAL is encoded instead (the FAISS IndexIVFPQ composition),
+      against a codebook of residuals. Given ``codes`` (vec_id, group,
+      cell, codes), the caller encoded the rows and wrote the codebook
+      itself (the cogroup of :func:`build_ann_index_2level_distributed`),
+      and ``raw/`` is the only table that reads ``assigned``.
     - ``raw/``: the embeddings.
     - ``sq8/`` (and ``sq8_prefix/``), ``binary/``: when the arm is
       present, encoded against its stored grid or thresholds, with the
@@ -888,23 +880,12 @@ def _land_corpus(
             .parquet(M.table_path(index_dir, table))
         )
 
-    if mode == "overwrite":
-        head = (
-            assigned.filter(F.col("vec_id") < S.PQ_K)
-            .select("vec_id", "embedding", "cell")
-            .toArrow()
-        )
-        _write_codebook(
-            index_dir,
-            head["vec_id"].to_numpy(),
-            _matrix(head["embedding"]),
-            head["cell"].to_numpy(),
-            centroids,
-        )
-    codes = _pq_encode_udf(
-        _load_codebook(spark, index_dir), _residual_rows(centroids)
-    )(F.col("embedding"), F.col("cell"))
-    write(assigned.select("vec_id", *_PARTS, codes.alias("codes")), "vectors")
+    if codes is None:
+        encoded = assigned.join(cents, list(_PARTS)) if residual else assigned
+        if mode == "overwrite":
+            _write_codebook_of(index_dir, encoded)
+        codes = _pq_codes(encoded, _load_codebook(spark, index_dir), residual)
+    write(codes.select("vec_id", *_PARTS, "codes"), "vectors")
     write(assigned.select("vec_id", "embedding", *_PARTS), "raw")
     if "sq8" in tables:
         vmin, scale = _read_sq_stats(spark, index_dir)
@@ -949,13 +930,14 @@ def _land_local(
     t: pa.Table,
     parts: dict[str, np.ndarray],
     mode: str,
-    centroids: tuple[np.ndarray, np.ndarray] | None,
+    a: _Assigner | None,
 ) -> None:
     """:func:`_land_corpus` on the driver, for the collected rows ``t``
     assigned to ``parts``: the same tables from the same numpy kernels,
     encoded one UDF batch at a time and written with :func:`_write_pa`
     (a build clears each table first); the drift counters are counted on
-    the same codes."""
+    the same codes. A residual index passes its assigner ``a``, whose
+    ``c_mat`` gives each row its own centroid; a raw one passes None."""
     tables = _table_map(index_dir)
     ids = t["vec_id"].to_numpy()
     if mode == "overwrite":
@@ -964,11 +946,9 @@ def _land_local(
             index_dir,
             ids[head],
             _matrix(t["embedding"].take(head)),
-            parts["cell"][head],
-            centroids,
+            None if a is None else a.centroids_of(parts["cell"][head]),
         )
     ic = _load_codebook(spark, index_dir)
-    res = _residual_rows(centroids)
     if "sq8" in tables:
         vmin, scale = _read_sq_stats(spark, index_dir)
         pdims = M.read_meta(index_dir, _SQ8_PREFIX_DIMS_KEY, None)
@@ -982,7 +962,8 @@ def _land_local(
         def rows(**cols) -> pa.Table:
             return pa.table({"vec_id": sl["vec_id"], **cols, **p})
 
-        codes = _pq_encode(x, ic, res, p["cell"])
+        c = None if a is None else _int_centroids(a.centroids_of(p["cell"]))
+        codes = _pq_encode(x, ic, c)
         out["vectors"].append(rows(codes=_list_array(codes)))
         out["raw"].append(rows(embedding=sl["embedding"]))
         if "sq8" in out:
@@ -1027,26 +1008,20 @@ _CORPUS_TABLES = ("vectors", "raw", "sq8", "sq8_prefix", "binary", "lsh_buckets"
 
 
 def _write_codebook(
-    index_dir: str,
-    ids: np.ndarray,
-    x: np.ndarray,
-    cells: np.ndarray,
-    centroids: tuple[np.ndarray, np.ndarray] | None,
+    index_dir: str, ids: np.ndarray, x: np.ndarray, c: np.ndarray | None
 ) -> None:
     """Land the PQ codebook (subspace, dim, cell, ic) from the rows with
-    vec_id < PQ_K (``ids``, their float64 rows ``x`` and ``cells``):
-    their integer components at cell = vec_id; or — given ``centroids``
-    = (sorted cell ids, FLOAT rows) — their residuals against their own
-    cells' integer centroids, at positional cells 0..k-1 in vec_id order
-    (which coincides with the vec_ids on a dense prefix, as the SQL
-    twins assume)."""
+    vec_id < PQ_K (``ids`` and their float64 rows ``x``): their integer
+    components at cell = vec_id; or — given ``c``, each row's own FLOAT
+    centroid — their residuals against its integer components, at
+    positional cells 0..k-1 in vec_id order (which coincides with the
+    vec_ids on a dense prefix, as the SQL twins assume)."""
     order = np.argsort(ids, kind="stable")
     iv = S._half_up(x[order] * S.PQ_INT_SCALE)
     cell = ids[order]
-    if centroids is not None:
+    if c is not None:
         width = S.PQ_M * S.PQ_SUB
-        pos = np.searchsorted(centroids[0], cells[order])
-        iv = iv[:, :width] - _int_centroids(centroids[1])[pos, :width]
+        iv = iv[:, :width] - _int_centroids(c[order, :width])
         cell = np.arange(len(iv))
     n, width = iv.shape
     comp = np.arange(width)
@@ -1062,6 +1037,19 @@ def _write_codebook(
             }
         ),
         overwrite=True,
+    )
+
+
+def _write_codebook_of(index_dir: str, rows: DataFrame) -> None:
+    """:func:`_write_codebook` from the Spark rows with vec_id < PQ_K
+    (vec_id, embedding; and ``c_emb``, each row's own centroid, on a
+    residual index)."""
+    head = rows.filter(F.col("vec_id") < S.PQ_K).toArrow()
+    _write_codebook(
+        index_dir,
+        head["vec_id"].to_numpy(),
+        _matrix(head["embedding"]),
+        _matrix(head["c_emb"]) if "c_emb" in head.column_names else None,
     )
 
 
@@ -2181,8 +2169,7 @@ def _binary_encode_udf(thresh: np.ndarray):
     def encode(emb: pd.Series) -> pd.Series:
         if len(emb) == 0:
             return pd.Series([], dtype=object)
-        x = np.vstack(emb.to_numpy()).astype(np.float64)
-        return pd.Series(list(_pack_bits(x > thresh[None, :])))
+        return pd.Series(list(_pack_bits(_stack(emb) > thresh[None, :])))
 
     return encode
 
@@ -2790,7 +2777,8 @@ def _group_of_cells(c_mat: np.ndarray, g_mat: np.ndarray) -> np.ndarray:
     n_cells x n_groups cosines over the two metadata-sized quantizer
     matrices (33 MB of centroids at the 65k-cell shape) — feasible to
     ~1M cells, which is exactly where auto_quantizer_shape clamps
-    (AUTO_MAX_CELLS_2L); past that this pass must distribute."""
+    (AUTO_MAX_CELLS_2L); past that build_ann_index_2level_distributed
+    runs it as a map-side pass."""
     return S.nearest_rounded(
         c_mat, S.row_norms(c_mat), g_mat, S.row_norms(g_mat)
     ).astype("int64")
@@ -2832,35 +2820,39 @@ def _nearest_2level(
     return nearest
 
 
+# The rows a cogroup assignment kernel returns: IDS ONLY. Carrying the
+# embedding back out of the cogroup doubled the Arrow payload (full
+# float arrays serialized both ways), measured as the dominant cost of
+# the distributed build at 8M; callers re-attach embeddings with one
+# JVM-side join keyed by vec_id instead.
+_ASSIGNED_SCHEMA = "vec_id long, group long, cell long"
+
+
+def _assigned_ids(vec_id, group: int, cell) -> pd.DataFrame:
+    return pd.DataFrame(
+        {
+            "vec_id": np.asarray(vec_id, dtype="int64"),
+            "group": np.full(len(vec_id), group, dtype="int64"),
+            "cell": np.asarray(cell, dtype="int64"),
+        }
+    )
+
+
 def _assign_sqdist_in_group(key, left: pd.DataFrame, right: pd.DataFrame):
     """Cogroup kernel: one group's corpus rows × that group's fine
     shard — ONE rounded-squared-distance matrix per cogroup, first
     minimum over cells sorted ascending (exactly the (dist asc, cell
-    asc) convention of similarity._assign_cells). Returns IDS ONLY
-    (vec_id, group, cell) — the _assign_cells_in_group payload
-    doctrine: carrying embeddings back out of the cogroup doubles the
-    Arrow payload, so the caller re-attaches them JVM-side."""
+    asc) convention of similarity._assign_cells)."""
     if left.empty or right.empty:
-        return pd.DataFrame(
-            {
-                "vec_id": pd.Series(dtype="int64"),
-                "group": pd.Series(dtype="int64"),
-                "cell": pd.Series(dtype="int64"),
-            }
-        )
+        return _assigned_ids([], 0, [])
     order = np.argsort(right["cell"].to_numpy(), kind="stable")
     cells = right["cell"].to_numpy()[order]
-    c = np.vstack(right["c_emb"].to_numpy()[order]).astype(np.float64)
-    x = np.vstack(left["embedding"].to_numpy()).astype(np.float64)
+    c = _stack(right["c_emb"].iloc[order])
+    x = _stack(left["embedding"])
     d = x[:, None, :] - c[None, :, :]
     dists = np.round(np.einsum("nkd,nkd->nk", d, d), 6)
-    sel = np.argmin(dists, axis=1)
-    return pd.DataFrame(
-        {
-            "vec_id": left["vec_id"].to_numpy(),
-            "group": np.full(len(left), int(key[0]), dtype="int64"),
-            "cell": cells[sel],
-        }
+    return _assigned_ids(
+        left["vec_id"].to_numpy(), int(key[0]), cells[np.argmin(dists, axis=1)]
     )
 
 
@@ -2881,9 +2873,7 @@ def _assign_cells_grouped(members: DataFrame, cents: DataFrame) -> DataFrame:
         members.select("vec_id", "embedding", "group")
         .groupBy("group")
         .cogroup(cents.select("group", "cell", "c_emb").groupBy("group"))
-        .applyInPandas(
-            _assign_sqdist_in_group, "vec_id long, group long, cell long"
-        )
+        .applyInPandas(_assign_sqdist_in_group, _ASSIGNED_SCHEMA)
     )
     return ids.join(
         members.select("vec_id", "embedding"), "vec_id"
@@ -3196,6 +3186,13 @@ def _read_coarse(spark: SparkSession, index_dir: str):
 #   a full-quantizer broadcast. One extra corpus shuffle (by group) is
 #   the price; for a one-time build at the scales that need it, the
 #   right trade.
+# - past the assignment it lands through :func:`_land_corpus`, the
+#   landing every Spark-side build and append runs. A residual index
+#   encodes in the assignment cogroup, against the shard it already
+#   holds: joining every row to ``fine/`` afterwards would shuffle and
+#   sort the corpus once more whenever ``fine/`` passes the broadcast
+#   bound. The variance diagnostic and the codebook join only the
+#   sample and the PQ_K prefix to ``fine/``.
 #
 # Same rounded-6 cosine / first-maximum / positional-pool conventions as
 # the driver build, so the artifacts are search-identical (test-pinned,
@@ -3215,80 +3212,33 @@ def _nearest_group_udf(g_ids: np.ndarray, g_mat: np.ndarray):
     )
 
 
-_ASSIGNED_SCHEMA = "vec_id long, group long, cell long"
-_ASSIGNED_CODES_SCHEMA = (
-    "vec_id long, group long, cell long, codes array<int>"
-)
-
-
-def _nearest_in_shard(left: pd.DataFrame, right: pd.DataFrame):
-    """One group's corpus rows (``left``) x that group's fine shard
-    (``right``): the shard's cells sorted ascending, their FLOAT rows,
-    the corpus rows, and each row's nearest-cell position — ONE
-    rounded-cosine matmul, first maximum (the _nearest_2level
-    tie-break)."""
+def _assign_cells_in_group(
+    key, left: pd.DataFrame, right: pd.DataFrame, ic: np.ndarray | None = None
+):
+    """Cogroup kernel: one group's corpus rows (``left``) x that group's
+    fine shard (``right``) — ONE rounded-cosine matmul over the shard's
+    cells sorted ascending, first maximum (the _nearest_2level
+    tie-break). Given the residual codebook ``ic``, each row's residual
+    PQ ``codes`` against the chosen cell ride along: the shard already
+    holds the centroid, where joining every row to ``fine/`` afterwards
+    costs one more corpus shuffle and sort once ``fine/`` outgrows the
+    broadcast bound."""
+    if left.empty or right.empty:
+        out = _assigned_ids([], 0, [])
+        if ic is not None:
+            out["codes"] = pd.Series(dtype=object)
+        return out
     order = np.argsort(right["cell"].to_numpy(), kind="stable")
     cells = right["cell"].to_numpy()[order]
-    c = np.vstack(right["c_emb"].to_numpy()[order]).astype(np.float64)
-    x = np.vstack(left["embedding"].to_numpy()).astype(np.float64)
-    return cells, c, x, S.nearest_rounded(x, S.row_norms(x), c, S.row_norms(c))
-
-
-def _assign_encode_in_group(rcb: np.ndarray):
-    """Cogroup kernel factory for the distributed RESIDUAL build:
-    :func:`_assign_cells_in_group`'s assignment PLUS the residual-PQ
-    encode against the selected cell's centroid (whose components the
-    shard carries — the fine quantizer never leaves the executors).
-    Returns (vec_id, group, cell, codes)."""
-
-    def kern(key, left: pd.DataFrame, right: pd.DataFrame):
-        if left.empty or right.empty:
-            return pd.DataFrame(
-                {
-                    "vec_id": pd.Series(dtype="int64"),
-                    "group": pd.Series(dtype="int64"),
-                    "cell": pd.Series(dtype="int64"),
-                    "codes": pd.Series(dtype=object),
-                }
-            )
-        cells, c, x, sel = _nearest_in_shard(left, right)
-        ir = S._half_up(x * S.PQ_INT_SCALE) - _int_centroids(c)[sel]
-        return pd.DataFrame(
-            {
-                "vec_id": left["vec_id"].to_numpy(),
-                "group": np.full(len(left), int(key[0]), dtype="int64"),
-                "cell": cells[sel],
-                "codes": [row.tolist() for row in S.pq_argmin(ir, rcb)],
-            }
-        )
-
-    return kern
-
-
-def _assign_cells_in_group(key, left: pd.DataFrame, right: pd.DataFrame):
-    """Cogroup kernel: one group's corpus rows x that group's fine
-    shard (:func:`_nearest_in_shard`). Returns IDS ONLY (vec_id, group,
-    cell): carrying the embedding back out of the cogroup doubled the
-    Arrow payload (full float arrays serialized both ways), measured as
-    the dominant cost of the distributed build at 8M — the caller
-    re-attaches embeddings from the corpus with one JVM-side join keyed
-    by vec_id instead."""
-    if left.empty or right.empty:
-        return pd.DataFrame(
-            {
-                "vec_id": pd.Series(dtype="int64"),
-                "group": pd.Series(dtype="int64"),
-                "cell": pd.Series(dtype="int64"),
-            }
-        )
-    cells, _c, _x, sel = _nearest_in_shard(left, right)
-    return pd.DataFrame(
-        {
-            "vec_id": left["vec_id"].to_numpy(),
-            "group": np.full(len(left), int(key[0]), dtype="int64"),
-            "cell": cells[sel],
-        }
-    )
+    c = _stack(right["c_emb"].iloc[order])
+    x = _stack(left["embedding"])
+    sel = S.nearest_rounded(x, S.row_norms(x), c, S.row_norms(c))
+    out = _assigned_ids(left["vec_id"].to_numpy(), int(key[0]), cells[sel])
+    if ic is not None:
+        # the shard's centroids quantize once, not once per row
+        ci = _int_centroids(c)[sel]
+        out["codes"] = [r.tolist() for r in _pq_encode(x, ic, ci)]
+    return out
 
 
 def build_ann_index_2level_distributed(
@@ -3305,17 +3255,19 @@ def build_ann_index_2level_distributed(
     distributed (module comment above) — artifacts are search-identical
     to the driver-side build; use this past ~1M fine cells, where the
     driver-side pool collect and full-quantizer UDF closure stop being
-    feasible. ``residual="auto"`` (the default, same contract as the
-    driver builds) measures the variance-ratio diagnostic WITHOUT
-    collecting the fine quantizer: a deterministic corpus sample takes
-    the same cogrouped assignment and joins its fine centroid back
-    JVM-side (:func:`_distributed_variance_ratio`). The pool-position window runs over quantizer-scale rows
-    only (<= n_cells), never the corpus. ``refine_iters > 0`` trains
-    both quantizer levels with Lloyd's k-means
-    (:func:`_refined_quantizers_2level` — the fine level's training is
-    itself distributed: group-equi-join assignment rounds, never a
-    driver-side quantizer), then lands the corpus through the same
-    cogrouped assignment tail as the prefix path."""
+    feasible. ``residual`` — ``"auto"`` by default, the same contract
+    as the driver builds — resolves on the same sample with the same
+    diagnostic (:func:`_assignment_variance_ratio` against ``fine/``);
+    a residual index encodes in the assignment cogroup without
+    collecting the fine quantizer, and every table lands through the
+    landing of every Spark-side build (:func:`_land_corpus`). The
+    pool-position window
+    runs over quantizer-scale rows only (<= n_cells), never the corpus.
+    ``refine_iters > 0`` trains both quantizer levels with Lloyd's
+    k-means (:func:`_refined_quantizers_2level` — the fine level's
+    training is itself distributed: group-equi-join assignment rounds,
+    never a driver-side quantizer), then lands the corpus through the
+    same cogrouped assignment tail as the prefix path."""
     from pyspark.sql import Window
 
     if n_groups is None or n_cells is None:
@@ -3405,154 +3357,69 @@ def _write_fine_df(index_dir: str, fine: DataFrame) -> None:
     )
 
 
-def _distributed_variance_ratio(
-    spark: SparkSession, with_group: DataFrame, fine_shards: DataFrame
-) -> float:
-    """The residual="auto" diagnostic for the DISTRIBUTED build — the
-    same intra-cell / global variance ratio as
-    :func:`_assignment_variance_ratio`, computed without ever
-    collecting the fine quantizer: a deterministic hash sample of the
-    corpus takes the same cogrouped per-group assignment, re-attaches
-    its embedding and its fine centroid JVM-side (sample-sized joins;
-    the centroid join key is the metadata-sized fine table), and emits
-    one metadata-sized partial per partition."""
-    sample = _variance_sample(with_group)
-    s_ids = (
-        sample.groupBy("group")
-        .cogroup(fine_shards.groupBy("group"))
-        .applyInPandas(_assign_cells_in_group, _ASSIGNED_SCHEMA)
-    )
-    joined = (
-        s_ids.join(sample.select("vec_id", "embedding"), "vec_id")
-        .join(
-            fine_shards.select("group", "cell", "c_emb"),
-            ["group", "cell"],
-        )
-        .select("embedding", "c_emb")
-    )
-
-    def xc(pdf):
-        x = np.vstack(pdf["embedding"].map(np.asarray).to_numpy()).astype(
-            np.float64
-        )
-        c = np.vstack(pdf["c_emb"].map(np.asarray).to_numpy()).astype(
-            np.float64
-        )
-        return x, c
-
-    return _ratio_from_partials(_variance_partials(joined, xc))
-
-
 def _assign_and_land_2level_distributed(
     spark: SparkSession,
     emb: DataFrame,
     index_dir: str,
     live: list[int],
     g_live_mat: np.ndarray,
-    residual: bool | str = False,
+    residual: bool | str,
 ) -> None:
-    """The distributed builds' shared corpus-assignment tail: nearest
-    LIVE group map-side (tiny broadcast), nearest cell WITHIN the group
-    via the cogrouped per-group matmul against the just-written fine
-    shards, then land raw/ + vectors/. The cogroup emits IDS ONLY
-    (vec_id, group, cell) — embeddings re-attach from the corpus with
-    one JVM-side shuffle join keyed by vec_id, which is cheaper than
-    Arrow-serializing every float array back OUT of the Python worker
-    (the r10 rehearsal measured the two-way Arrow payload as the
-    distributed build's dominant term). ``residual`` resolves here
-    ("auto" via the sampled distributed diagnostic) and the choice is
-    stamped in the manifest like the driver builds'."""
+    """The distributed builds' shared tail: nearest LIVE group map-side
+    (tiny broadcast), nearest cell WITHIN the group via the cogrouped
+    per-group matmul against the just-written fine shards; the cogroup
+    emits ids (and a residual index's codes) only, and the embeddings
+    re-attach from the corpus with one JVM-side join keyed by vec_id.
+    ``residual`` resolves first, on the
+    sample the driver builds measure (the cogroup must know whether to
+    encode); a residual index takes its codebook from the PQ_K prefix
+    pushed through the same assignment and encodes in the cogroup
+    itself. :func:`_land_corpus` then lands every table."""
     nearest_live = _nearest_group_udf(
         np.array(live, dtype="int64"), g_live_mat
     )
-    with_group = emb.select(
-        "vec_id",
-        "embedding",
-        nearest_live(F.col("embedding")).alias("group"),
-    )
-    # the partition column reads back as int — cast to long so the
-    # cogroup keys match with_group's UDF-typed long (mismatched key
-    # types silently cogroup as disjoint keys and drop rows)
-    fine_shards = spark.read.parquet(
-        M.table_path(index_dir, "fine")
-    ).select(
+    # the partition column reads back as int (and a prefix build's cell
+    # too) — cast to long so the cogroup keys match the UDF-typed group
+    # (mismatched key types silently cogroup as disjoint keys and drop
+    # rows) and the centroid join matches the assigned (group, cell)
+    fine = spark.read.parquet(M.table_path(index_dir, "fine")).select(
         F.col("group").cast("long").alias("group"),
         F.col("cell").cast("long").alias("cell"),
         "c_emb",
     )
+
+    def assign(rows: DataFrame, ic: np.ndarray | None = None) -> DataFrame:
+        return (
+            rows.select(
+                "vec_id",
+                "embedding",
+                nearest_live(F.col("embedding")).alias("group"),
+            )
+            .groupBy("group")
+            .cogroup(fine.groupBy("group"))
+            .applyInPandas(
+                functools.partial(_assign_cells_in_group, ic=ic),
+                _ASSIGNED_SCHEMA + ("" if ic is None else ", codes array<int>"),
+            )
+        )
+
+    def attach(ids: DataFrame, rows: DataFrame) -> DataFrame:
+        return ids.join(rows.select("vec_id", "embedding"), "vec_id")
+
+    sample = emb.filter(_sampled())
     residual = _resolve_residual_auto(
         index_dir,
         residual,
-        lambda: _distributed_variance_ratio(spark, with_group, fine_shards),
+        lambda: _assignment_variance_ratio(attach(assign(sample), sample), fine),
     )
-    if residual:
-        # the residual arm, fully distributed: the codebook derives
-        # from the PQ_K prefix pushed through the SAME two-stage
-        # assignment (metadata-sized collects only), then ONE cogroup
-        # assigns AND residual-encodes every row — each group's fine
-        # shard supplies the centroid components in-kernel, so the
-        # quantizer still never leaves the executors.
-        prefix = emb.filter(F.col("vec_id") < S.PQ_K)
-        pref_group = prefix.select(
-            "vec_id",
-            "embedding",
-            nearest_live(F.col("embedding")).alias("group"),
-        )
-        pref_ids = (
-            pref_group.groupBy("group")
-            .cogroup(fine_shards.groupBy("group"))
-            .applyInPandas(_assign_cells_in_group, _ASSIGNED_SCHEMA)
-            .collect()
-        )
-        pref_emb = {
-            int(r.vec_id): list(r.embedding) for r in prefix.collect()
-        }
-        probed = sorted({int(r.group) for r in pref_ids})
-        frows = fine_shards.where(F.col("group").isin(probed)).collect()
-        frows.sort(key=lambda r: r.cell)
-        _write_codebook(
-            index_dir,
-            np.array([int(r.vec_id) for r in pref_ids], dtype="int64"),
-            np.array([pref_emb[int(r.vec_id)] for r in pref_ids], np.float64),
-            np.array([int(r.cell) for r in pref_ids], dtype="int64"),
-            (
-                np.array([int(r.cell) for r in frows], dtype="int64"),
-                np.array([r.c_emb for r in frows], dtype=np.float64),
-            ),
-        )
-        rcb = _load_codebook(spark, index_dir)
-        assigned_codes = (
-            with_group.groupBy("group")
-            .cogroup(fine_shards.groupBy("group"))
-            .applyInPandas(
-                _assign_encode_in_group(rcb), _ASSIGNED_CODES_SCHEMA
-            )
-        )
-        with _persisted(assigned_codes) as assigned_codes:
-            (
-                assigned_codes.repartition("group", "cell")
-                .write.mode("overwrite")
-                .partitionBy("group", "cell")
-                .parquet(M.table_path(index_dir, "vectors"))
-            )
-            (
-                assigned_codes.select("vec_id", "group", "cell")
-                .join(emb.select("vec_id", "embedding"), "vec_id")
-                .select("vec_id", "embedding", "group", "cell")
-                .repartition("group", "cell")
-                .write.mode("overwrite")
-                .partitionBy("group", "cell")
-                .parquet(M.table_path(index_dir, "raw"))
-            )
+    if not residual:
+        with _persisted(attach(assign(emb), emb)) as assigned:
+            _land_corpus(spark, index_dir, assigned, None, False, "overwrite")
         return
-
-    assigned_ids = (
-        with_group.groupBy("group")
-        .cogroup(fine_shards.groupBy("group"))
-        .applyInPandas(_assign_cells_in_group, _ASSIGNED_SCHEMA)
-    )
-    assigned = assigned_ids.join(
-        emb.select("vec_id", "embedding"), "vec_id"
-    ).select("vec_id", "embedding", "group", "cell")
-    with _persisted(assigned) as assigned:
-        _land_corpus(spark, index_dir, assigned, "overwrite", None)
+    head = emb.filter(F.col("vec_id") < S.PQ_K)
+    _write_codebook_of(index_dir, attach(assign(head), head).join(fine, list(_PARTS)))
+    # only the codes persist: raw/ is the one table that reads embeddings
+    with _persisted(assign(emb, _load_codebook(spark, index_dir))) as codes:
+        _land_corpus(
+            spark, index_dir, attach(codes, emb), None, True, "overwrite", codes
+        )

@@ -5439,8 +5439,8 @@ def _ann_index_2level_residual_shared(
 ) -> str:
     """Two-level index whose PQ arm is RESIDUAL-encoded against each
     vector's FINE centroid — the billion-vector arm with the FAISS
-    IndexIVFPQ encoding (operators/ann_index._land_corpus with the fine
-    cells as centroids)."""
+    IndexIVFPQ encoding (operators/ann_index's landing, each row against
+    its own fine centroid)."""
     from rds_pgbadger_etl_spark.operators.ann_index import (
         build_ann_index_2level,
     )

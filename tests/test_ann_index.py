@@ -1027,20 +1027,19 @@ def test_2level_truncated_reader_with_full_shortlist_equals_flat(
 
 
 def test_sq8_arm_on_distributed_build_matches_driver_build(
-    spark, index2_dir, tmp_path
+    spark, sq8_2l_dir, tmp_path
 ):
     """add_sq8_to_ann_index is layout-agnostic by design (grid from
     raw/, codes under the layout's own pruning key) — pin that deriving
     it on a DISTRIBUTED-built two-level store yields the same grid and
-    search-identical SQ8 results as on the driver-built store, so the
-    past-the-clamp build path keeps the full arm ladder."""
+    search-identical SQ8 results as on the driver-built store
+    (``sq8_2l_dir``: the same build plus the arm), so the past-the-clamp
+    build path keeps the full arm ladder."""
     emb = load_table(spark, SF_SMOKE, "embeddings")
     d = str(tmp_path / "idx2l_dist_sq8")
     AI.build_ann_index_2level_distributed(spark, emb, d)
     AI.add_sq8_to_ann_index(spark, d)
-    d_ref = str(tmp_path / "idx2l_drv_sq8")
-    AI.build_ann_index_2level(spark, emb, d_ref)
-    AI.add_sq8_to_ann_index(spark, d_ref)
+    d_ref = sq8_2l_dir
     qs = _queries(spark)
     assert _rows(AI.ann_index_sq8_topk(spark, d, qs, K)) == _rows(
         AI.ann_index_sq8_topk(spark, d_ref, qs, K)
@@ -1108,7 +1107,7 @@ def _clustered_emb(spark, n=2000, dim=S.DIM, spread=0.02):
     )
 
 
-def test_residual_auto_selection_picks_the_regime(spark, tmp_path):
+def test_residual_auto_selection_picks_the_regime(spark, index2_dir, tmp_path):
     """residual="auto" — the build DEFAULT — must pick raw on a corpus
     whose cells capture no locality (the fixture's hash-uniform
     embeddings: measured ratio ~1.5) and residual on a clustered corpus
@@ -1116,7 +1115,9 @@ def test_residual_auto_selection_picks_the_regime(spark, tmp_path):
     variance ratio stamped in the manifest; an explicit bool overrides
     and stamps mode="explicit". The auto-chosen residual store must be
     artifact-equivalent to an explicitly-residual build (same decision
-    path downstream of the flag)."""
+    path downstream of the flag). The distributed build measures the
+    same ratio as the driver build on both corpora: one sample, one
+    diagnostic."""
     emb = load_table(spark, SF_SMOKE, "embeddings")
     qs = _queries(spark)
 
@@ -1149,8 +1150,8 @@ def test_residual_auto_selection_picks_the_regime(spark, tmp_path):
     )
 
     # the 2-level layout makes the same call in both regimes
-    d2_u = str(tmp_path / "auto2l_uniform")
-    AI.build_ann_index_2level(spark, emb, d2_u)
+    # (index2_dir is the default-argument driver build of the fixture)
+    d2_u = index2_dir
     assert (
         M.read_meta(d2_u, AI._RESIDUAL_MODE_KEY)["chosen_residual"]
         is False
@@ -1161,17 +1162,21 @@ def test_residual_auto_selection_picks_the_regime(spark, tmp_path):
     assert m2["mode"] == "auto" and m2["chosen_residual"] is True
 
     # the DISTRIBUTED build makes the same no-knob call via its sampled
-    # diagnostic (no fine-quantizer collect), both regimes
+    # diagnostic (no fine-quantizer collect), both regimes, and stamps
+    # the driver build's ratio
     dd_u = str(tmp_path / "autodist_uniform")
     AI.build_ann_index_2level_distributed(spark, emb, dd_u)
     md = M.read_meta(dd_u, AI._RESIDUAL_MODE_KEY)
     assert md["mode"] == "auto" and md["chosen_residual"] is False
     assert M.read_meta(dd_u, AI._RESIDUAL_KEY) is False
+    assert md["variance_ratio"] == M.read_meta(
+        d2_u, AI._RESIDUAL_MODE_KEY)["variance_ratio"]
     dd_c = str(tmp_path / "autodist_clustered")
     AI.build_ann_index_2level_distributed(spark, clustered, dd_c)
     md = M.read_meta(dd_c, AI._RESIDUAL_MODE_KEY)
     assert md["mode"] == "auto" and md["chosen_residual"] is True
     assert M.read_meta(dd_c, AI._RESIDUAL_KEY) is True
+    assert md["variance_ratio"] == m2["variance_ratio"]
     # distributed auto == driver auto on the same corpus (same choice,
     # same search results)
     assert _rows(
@@ -1187,13 +1192,15 @@ def test_residual_auto_selection_picks_the_regime(spark, tmp_path):
 
 def test_2level_residual_builds_match_and_hold_semantics(spark, tmp_path):
     """Residual PQ on the TWO-LEVEL layout: the driver build (fine
-    collectible → cell-keyed residual encoder) and the distributed
-    build (codebook from the PQ_K prefix through the same two-stage
-    assignment, then ONE cogroup that assigns AND encodes with the
-    group's own shard — the fine quantizer never leaves the executors)
-    must land search-identical artifacts; the rerank anchor holds
-    (shortlist >= population == IVF-Flat exactly); append joins the
-    residual store with comparable codes (== one-shot build)."""
+    collectible, each row's centroid gathered from the assigner) and
+    the distributed build (codebook from the PQ_K prefix through the
+    same two-stage assignment joined to ``fine/``, then ONE cogroup that
+    assigns AND encodes against the group's own shard, landed by the
+    one Spark landing — the fine quantizer is never collected) must
+    land search-identical artifacts with identical codes; the rerank
+    anchor holds (shortlist >= population == IVF-Flat exactly); append
+    joins the residual store with comparable codes (== one-shot
+    build)."""
     emb = load_table(spark, SF_SMOKE, "embeddings")
     n = emb.count()
     d1 = str(tmp_path / "res2l_drv")

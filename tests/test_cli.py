@@ -12,6 +12,7 @@ import os
 import shutil
 from datetime import datetime, timedelta
 
+import pytest
 from tests.test_logparse import FIXTURES
 
 from rds_pgbadger_etl_spark.cli import _parse_reference, main, run_pipeline
@@ -138,6 +139,106 @@ def test_rerun_hour_replaces_its_report_atomically(spark, tmp_path):
     assert [r.normalized_query for r in top] == [
         "insert into users values (?, ?)"
     ]
+
+
+class _Crash(Exception):
+    """The failure injected into a tick."""
+
+
+def _tick_state(out_dir: str) -> dict:
+    """What a tick leaves for the next one and for its readers: the
+    manifest, every stored event row and every per-hour report table."""
+    import pyarrow.dataset as pads
+
+    def rows(path: str) -> list[str]:
+        t = pads.dataset(path, format="parquet", partitioning="hive").to_table()
+        return sorted(map(repr, t.select(sorted(t.column_names)).to_pylist()))
+
+    with open(os.path.join(out_dir, "_processed_files.txt")) as f:
+        state = {"manifest": f.read(), "events": rows(f"{out_dir}/events")}
+    report = os.path.join(out_dir, "report")
+    for day in sorted(os.listdir(report)):
+        for hour in sorted(os.listdir(os.path.join(report, day))):
+            for section in sorted(REPORT_SECTIONS):
+                key = f"{day}/{hour}/{section}"
+                state[key] = rows(os.path.join(report, key))
+    return state
+
+
+_FIRST, _SECOND = datetime(2024, 1, 15, 10, 0), datetime(2024, 1, 15, 12, 0)
+
+
+@pytest.fixture(scope="module")
+def first_tick(spark, tmp_path_factory):
+    """Logs for hours 09-11 (hour 10 with errors), the out dir one tick
+    at 10:00 left, and the state an uninterrupted second tick at 12:00
+    leaves after it."""
+    from rds_pgbadger_etl_spark.cli import run_incremental
+
+    tmp = tmp_path_factory.mktemp("crash")
+    log_dir = _stage(tmp, ["2024-01-15-09", "2024-01-15-10", "2024-01-15-11"])
+    shutil.copy(
+        os.path.join(FIXTURES, "errors.log"),
+        os.path.join(log_dir, "postgresql.log.2024-01-15-10"),
+    )
+    base, clean = str(tmp / "base"), str(tmp / "clean")
+    run_incremental(spark, log_dir, base, _FIRST)
+    shutil.copytree(base, clean)
+    run_incremental(spark, log_dir, clean, _SECOND)
+    return log_dir, base, _tick_state(clean)
+
+
+@pytest.mark.parametrize(
+    "crash", ["after_events", "after_first_section", "before_manifest"]
+)
+def test_rerun_after_a_crash_equals_an_uninterrupted_tick(
+    spark, tmp_path, monkeypatch, first_tick, crash
+):
+    """A tick that dies after its events are written, after the first
+    report section is written, or just before the manifest replace is
+    re-run to the state an uninterrupted tick leaves: the same manifest,
+    the same stored events and the same per-hour reports."""
+    from rds_pgbadger_etl_spark.cli import run_incremental
+    from rds_pgbadger_etl_spark.sinks import report_sink
+
+    log_dir, base, want = first_tick
+    crashed = str(tmp_path / "crashed")
+    shutil.copytree(base, crashed)
+
+    def after(real):
+        def crashing(*args, **kwargs):
+            real(*args, **kwargs)
+            raise _Crash(crash)
+
+        return crashing
+
+    if crash == "after_events":
+        monkeypatch.setattr(
+            report_sink, "write_events_partitioned",
+            after(report_sink.write_events_partitioned),
+        )
+    elif crash == "after_first_section":
+        monkeypatch.setattr(
+            report_sink, "_write_section", after(report_sink._write_section)
+        )
+    else:
+        real_replace = os.replace
+
+        def replace(src, dst):
+            if str(dst).endswith("_processed_files.txt"):
+                raise _Crash(crash)
+            real_replace(src, dst)
+
+        monkeypatch.setattr(os, "replace", replace)
+    with pytest.raises(_Crash):
+        run_incremental(spark, log_dir, crashed, _SECOND)
+    monkeypatch.undo()
+    stats = run_incremental(spark, log_dir, crashed, _SECOND)
+    assert (stats["files"], stats["skipped"]) == (2, 1)
+    got = _tick_state(crashed)
+    assert got.keys() == want.keys()
+    for key in want:
+        assert got[key] == want[key], key
 
 
 def test_cli_incremental_prints_report_rows(capsys, spark, tmp_path):
