@@ -45,26 +45,31 @@ so a probe prunes on group at the top directory level and cell below.
 - ``tombstones/``  (vec_id) — logically deleted ids, applied at
   compaction.
 
-Who writes each table. A build or append whose input Spark estimates at
-most one scan split (``spark.sql.files.maxPartitionBytes``, the bound
-the driver-side search uses; :func:`_collect_small`) is collected in
-one job and landed on the DRIVER: ``vectors/``, ``raw/``,
-``lsh_buckets/``, ``sq8/``, ``sq8_prefix/`` and ``binary/`` are encoded
-by the numpy kernels the UDFs wrap and written with pyarrow, one file
-per partition value, as Spark's partitionBy lays them out
-(:func:`_land_local`). A larger input runs the SPARK plan: map-only UDF
-passes and partitionBy writes (:func:`_land_corpus`), with each row
+Who writes each table. Every corpus table (``vectors/``, ``raw/``,
+``sq8/``, ``sq8_prefix/``, ``binary/``, ``lsh_buckets/``) has ONE numpy
+batch kernel (:func:`_kernels`) from assigned rows — vec_id, float64
+vector, group, cell and, on a residual index, each row's integer
+centroid — to the table's Arrow columns; three callers run it. A build
+or append whose input Spark estimates at most one scan split
+(``spark.sql.files.maxPartitionBytes``, the bound the driver-side
+search uses; :func:`_collect_small`) is collected in one job and landed
+on the DRIVER: the kernels run on each slice and pyarrow writes one
+file per partition value, as Spark's partitionBy lays them out
+(:func:`_land_local`). A larger input runs the SPARK plan: the
+assignment and every kernel run through ``mapInArrow`` and each table
+lands with one partitionBy write (:func:`_land_corpus`), each row
 joined to its own centroid (broadcast) where the residual encoder, the
 codebook or the variance diagnostic needs it. That one Spark landing
 also serves :func:`build_ann_index_2level_distributed`, the path past
 the AUTO_MAX_CELLS_2L clamp: its cogrouped assignment never collects
 the fine quantizer, and on a residual index it encodes each row in the
-cogroup, where the row's ``fine/`` shard already is. On
-both sides the metadata-sized quantizer tables (``coarse/``, ``fine/``,
-``codebook/``) are written and read with pyarrow, except that the
-distributed two-level build writes ``fine/`` with Spark. The
-derived-arm verbs (``add_sq8_to_ann_index`` and friends) and compaction
-always run on Spark, so a table can hold files of both writers.
+cogroup, where the row's ``fine/`` shard already is. The derive verbs
+(``add_sq8_to_ann_index``, ``add_binary_to_ann_index``) run their arm's
+kernel through ``mapInArrow`` over ``raw/``, and compaction rewrites on
+Spark, so a table can hold files of both writers. On both sides the
+metadata-sized quantizer tables (``coarse/``, ``fine/``, ``codebook/``)
+are written and read with pyarrow, except that the distributed
+two-level build writes ``fine/`` with Spark.
 
 Query-side terms (probe selection, the per-query ADC lookup table, the
 query's LSH bucket signatures) are computed on the DRIVER from the tiny
@@ -273,23 +278,15 @@ def _assignment_variance_ratio(assigned: DataFrame, cents: DataFrame) -> float:
     decomposition, so no second pass for the mean)."""
     sample = assigned.filter(_sampled()).join(cents, list(_PARTS))
 
-    def partials(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            p = _partial(_stack(pdf["embedding"]), _stack(pdf["c_emb"]))
-            yield pd.DataFrame(
-                {
-                    "n": pd.Series([p.n], dtype="int64"),
-                    "ss": [p.ss],
-                    "rss": [p.rss],
-                    "sv": [p.sv],
-                }
-            )
+    def partials(batches):
+        for b in batches:
+            if b.num_rows:
+                x, c = (_matrix(b.column(k)) for k in ("embedding", "c_emb"))
+                yield pa.RecordBatch.from_pylist([_partial(x, c)._asdict()])
 
     return _ratio_from_partials(
         sample.select("embedding", "c_emb")
-        .mapInPandas(partials, _VAR_PARTIAL_SCHEMA)
+        .mapInArrow(partials, _VAR_PARTIAL_SCHEMA)
         .collect()
     )
 
@@ -379,24 +376,111 @@ def _pq_encode(x: np.ndarray, ic: np.ndarray, ci: np.ndarray | None) -> np.ndarr
     return S.pq_argmin(iv, ic)
 
 
-def _pq_codes(df: DataFrame, ic: np.ndarray, residual: bool) -> DataFrame:
-    """(vec_id, group, cell, codes) of ``df``'s rows: :func:`_pq_encode`
-    over whole Arrow batches of the (embedding, c_emb) columns, with no
-    per-row conversion; ``c_emb``, each row's own centroid, is read for
-    a residual index only."""
+# --------------------------------------------------------------------------
+# One batch kernel per corpus table. The driver landing runs it on each
+# slice of the collected input; the Spark landing and the derive verbs
+# run it through ``mapInArrow`` (:func:`_encoded`).
 
-    def encode(batches):
-        for b in batches:
-            c = _int_centroids(_matrix(b.column("c_emb"))) if residual else None
-            codes = _pq_encode(_matrix(b.column("embedding")), ic, c)
-            yield pa.RecordBatch.from_arrays(
-                [*(b.column(k) for k in ("vec_id", *_PARTS)), _list_array(codes)],
-                names=["vec_id", *_PARTS, "codes"],
+
+class _Rows(NamedTuple):
+    """One batch of assigned rows, as every table kernel takes them:
+    ``vec_id`` and the stored ``emb`` column as Arrow, ``x`` the float64
+    rows, the partition columns, and ``ci`` each row's integer centroid
+    (:func:`_int_centroids`) on a residual index, else None."""
+
+    vec_id: pa.Array
+    emb: pa.Array
+    x: np.ndarray
+    group: np.ndarray
+    cell: np.ndarray
+    ci: np.ndarray | None
+
+    @classmethod
+    def of(cls, b: pa.RecordBatch) -> _Rows:
+        """The rows of a Spark batch (vec_id, embedding, group, cell, and
+        ``c_emb``, each row's FLOAT centroid, when the batch carries it)."""
+        names = b.schema.names
+        return cls(
+            b.column("vec_id"),
+            b.column("embedding"),
+            _matrix(b.column("embedding")),
+            *(b.column(p).to_numpy().astype(np.int64) for p in _PARTS),
+            _int_centroids(_matrix(b.column("c_emb"))) if "c_emb" in names else None,
+        )
+
+    def with_ids(self, **payload) -> dict:
+        """A partitioned table's rows: vec_id, ``payload``, the parts."""
+        parts = {"group": self.group, "cell": self.cell}
+        return {"vec_id": self.vec_id, **payload, **parts}
+
+
+# Each corpus table's rows as its kernel returns them (and Spark types them).
+_ROW_TYPES = {
+    "vectors": "vec_id long, codes array<int>, group long, cell long",
+    "sq8": "vec_id long, codes array<int>, group long, cell long",
+    "sq8_prefix": "vec_id long, codes array<int>, group long, cell long",
+    "binary": "vec_id long, words array<long>, group long, cell long",
+    "lsh_buckets": "vec_id long, bucket string, table_id int",
+}
+
+
+def _lsh_rows(r: _Rows) -> dict:
+    """``lsh_buckets/`` rows: S.N_TABLES band signatures per vector."""
+    b = S.lsh_bucket_strings(r.x)
+    return {
+        "vec_id": np.repeat(r.vec_id.to_numpy(), S.N_TABLES),
+        "bucket": pa.array(b.ravel(), pa.string()),
+        "table_id": np.tile(np.arange(S.N_TABLES, dtype=np.int32), len(r.x)),
+    }
+
+
+def _kernels(
+    spark: SparkSession, index_dir: str, tables
+) -> dict[str, Callable[[_Rows], dict]]:
+    """The batch kernel of each corpus table in ``tables``, bound to the
+    STORED quantizers at ``index_dir``: the PQ codebook, each derived
+    arm's grid (:func:`_grid`) and the prefix width."""
+    out = {"raw": lambda r: r.with_ids(embedding=r.emb)}
+    if "vectors" in tables:
+        ic = _load_codebook(spark, index_dir)
+        out["vectors"] = lambda r: r.with_ids(
+            codes=_list_array(_pq_encode(r.x, ic, r.ci))
+        )
+    for name, arm in _ARMS.items():
+        if name in tables:
+            out[name] = functools.partial(
+                _arm_rows, arm, _grid(index_dir, arm), None
             )
+    if "sq8_prefix" in tables:
+        pdims = int(M.read_meta(index_dir, _SQ8_PREFIX_DIMS_KEY))
+        out["sq8_prefix"] = functools.partial(
+            _arm_rows, _SQ8, _grid(index_dir, _SQ8), pdims
+        )
+    if "lsh_buckets" in tables:
+        out["lsh_buckets"] = _lsh_rows
+    return out
 
-    cols = ["vec_id", *_PARTS, "embedding", *(["c_emb"] if residual else [])]
-    return df.select(*cols).mapInArrow(
-        encode, "vec_id long, group long, cell long, codes array<int>"
+
+def _encoded(df: DataFrame, kernel: Callable[[_Rows], dict], table: str) -> DataFrame:
+    """``kernel`` over the assigned rows of ``df``, one Arrow batch at a
+    time, typed as ``table``'s rows."""
+
+    def run(batches):
+        for b in batches:
+            yield pa.RecordBatch.from_pydict(kernel(_Rows.of(b)))
+
+    return df.mapInArrow(run, _ROW_TYPES[table])
+
+
+def _write_spark(
+    df: DataFrame, index_dir: str, table: str, parts: tuple[str, ...], mode: str
+) -> None:
+    """Land ``df`` as ``table``, one file-set per value of ``parts``."""
+    (
+        df.repartition(*parts)
+        .write.mode(mode)
+        .partitionBy(*parts)
+        .parquet(M.table_path(index_dir, table))
     )
 
 
@@ -419,9 +503,9 @@ def build_ann_index(
     the vectorized numpy kernels over the metadata-sized quantizers.
     An input whose plan estimate fits one scan split
     (:func:`_collect_small`) is collected once and landed on the driver
-    with pyarrow writes; a larger one runs as map-only Spark
-    UDF passes whose only exchanges are the partitionBy writes. Either
-    way a re-run overwrites every table it writes.
+    with pyarrow writes; a larger one runs the same kernels as map-only
+    ``mapInArrow`` passes whose only exchanges are the partitionBy
+    writes. Either way a re-run overwrites every table it writes.
 
     ``n_centroids=None`` sizes the coarse quantizer with
     :func:`auto_n_centroids` (cells of about AUTO_CELL_ROWS vectors;
@@ -628,9 +712,9 @@ def _one_blas_thread():
         put(before)
 
 
-def _matrix(col) -> np.ndarray:
-    """A list column of equal-length vectors as a float64 matrix."""
-    flat = pc.list_flatten(col).to_numpy().astype(np.float64)
+def _matrix(col, dtype=np.float64) -> np.ndarray:
+    """A list column of equal-length vectors as a ``dtype`` matrix."""
+    flat = pc.list_flatten(col).to_numpy().astype(dtype)
     return flat.reshape(len(col), -1) if len(col) else flat.reshape(0, S.DIM)
 
 
@@ -693,6 +777,11 @@ def _read_pa(index_dir: str, table: str, where=None) -> pa.Table:
     ).to_table(filter=where)
 
 
+def _table(spark: SparkSession, index_dir: str, table: str) -> DataFrame:
+    """``table`` of the index at ``index_dir`` as a Spark scan."""
+    return spark.read.parquet(M.table_path(index_dir, table))
+
+
 class _Assigner(NamedTuple):
     """A quantizer as the numpy kernel both landings run: ``nearest``
     maps float64 rows to their fine cell ids; ``cells`` (sorted) and
@@ -710,24 +799,43 @@ class _Assigner(NamedTuple):
         group = self.cell_groups[np.searchsorted(self.cells, cell)]
         return {"group": group, "cell": cell}
 
+    def assign(self, df: DataFrame) -> DataFrame:
+        """(vec_id, embedding, group, cell) of ``df``'s rows: :meth:`parts`
+        over whole Arrow batches, map-only."""
+
+        def run(batches):
+            for b in batches:
+                emb = b.column("embedding")
+                yield pa.RecordBatch.from_pydict(
+                    {"vec_id": b.column("vec_id"), "embedding": emb,
+                     **self.parts(_matrix(emb))}
+                )
+
+        rows = df.select("vec_id", "embedding")
+        return rows.mapInArrow(
+            run,
+            T.StructType(
+                [*rows.schema.fields, *(T.StructField(p, T.LongType()) for p in _PARTS)]
+            ),
+        )
+
     def centroids_of(self, cell: np.ndarray) -> np.ndarray:
         """The FLOAT centroid row of each fine cell id in ``cell``."""
         return self.c_mat[np.searchsorted(self.cells, cell)]
 
-    def centroids_df(self, spark: SparkSession, c_emb: bool) -> DataFrame:
-        """The cells as a (group, cell) LocalRelation: the cell map the
-        Spark assignment joins each row's group from; with ``c_emb``,
-        also each cell's FLOAT row (array<double>), the centroid frame a
-        residual landing joins each assigned row to."""
-        cols = {
-            "group": pa.array(self.cell_groups, pa.int64()),
-            "cell": pa.array(self.cells, pa.int64()),
-        }
-        if c_emb:
-            cols["c_emb"] = _list_array(self.c_mat)
+    def centroids_df(self, spark: SparkSession) -> DataFrame:
+        """The cells as a (group, cell, c_emb) LocalRelation, each cell's
+        FLOAT row as array<double>: the centroid frame a residual landing
+        joins each assigned row to."""
         return spark.createDataFrame(
-            pa.table(cols),
-            "group long, cell long" + (", c_emb array<double>" if c_emb else ""),
+            pa.table(
+                {
+                    "group": pa.array(self.cell_groups, pa.int64()),
+                    "cell": pa.array(self.cells, pa.int64()),
+                    "c_emb": _list_array(self.c_mat),
+                }
+            ),
+            "group long, cell long, c_emb array<double>",
         )
 
 
@@ -743,19 +851,6 @@ def _stored_assigner(spark: SparkSession, index_dir: str) -> _Assigner:
         fine["group"].to_numpy().astype("int64"),
         _matrix(fine["c_emb"]),
     )
-
-
-def _cells_udf(nearest: Callable[[np.ndarray], np.ndarray]):
-    """``nearest`` over the ``embedding`` column, one Arrow batch at a
-    time."""
-
-    @F.pandas_udf(T.LongType())
-    def cells(col: pd.Series) -> pd.Series:
-        if len(col) == 0:
-            return pd.Series([], dtype="int64")
-        return pd.Series(nearest(_stack(col)).astype("int64"))
-
-    return cells
 
 
 def _assign_local(
@@ -815,18 +910,11 @@ def _land(
                 spark, index_dir, local, parts, mode, a if residual else None
             )
         return
-    cell = _cells_udf(a.nearest)(F.col("embedding"))
-    # the cell's group joins back from the metadata-sized cell map
-    assigned = (
-        emb.select("vec_id", "embedding", cell.alias("cell"))
-        .join(F.broadcast(a.centroids_df(spark, False)), "cell")
-        .select("vec_id", "embedding", *_PARTS)
-    )
     # only a residual (or "auto") landing reads centroid rows; they are
     # broadcast, as the assignment closure already carries them, so the
     # encode stays map-only whatever size Spark estimates for the frame
-    cents = F.broadcast(a.centroids_df(spark, True)) if residual else None
-    with _persisted(assigned) as assigned:
+    cents = F.broadcast(a.centroids_df(spark)) if residual else None
+    with _persisted(a.assign(emb)) as assigned:
         if mode == "overwrite":
             residual = _resolve_residual_auto(
                 index_dir,
@@ -854,74 +942,34 @@ def _land_corpus(
     and grids (immutable quantizers keep old and new codes comparable
     under one LUT), and nothing existing is rewritten.
 
-    - ``vectors/``: packed PQ codes, encoded map-only on the assigned
-      rows (a codes-by-id join would shuffle corpus-sized tables; fused,
-      the only exchange is the partitionBy write). On a residual index
-      each row joins its own centroid from ``cents`` — the broadcast
-      (group, cell, c_emb) LocalRelation :func:`_land` builds — and its
-      RESIDUAL is encoded instead (the FAISS IndexIVFPQ composition),
-      against a codebook of residuals. Given ``codes`` (vec_id, group,
-      cell, codes), the caller encoded the rows and wrote the codebook
-      itself (the cogroup of :func:`build_ann_index_2level_distributed`),
-      and ``raw/`` is the only table that reads ``assigned``.
-    - ``raw/``: the embeddings.
-    - ``sq8/`` (and ``sq8_prefix/``), ``binary/``: when the arm is
-      present, encoded against its stored grid or thresholds, with the
-      drift counters accumulated by one O(new) aggregate. A build finds
-      none: :func:`_start_build` orphaned them.
-    - ``lsh_buckets/``: the hyperplane bands, when flagged."""
+    Each table's rows come from its kernel (:func:`_kernels`):
+    ``vectors/`` packs PQ codes, encoded map-only on the assigned rows;
+    on a residual index each row joins its own centroid from ``cents``
+    (the broadcast LocalRelation :func:`_land` builds) and its RESIDUAL
+    is encoded instead (the FAISS IndexIVFPQ composition). Given
+    ``codes`` (vec_id, group, cell, codes), the caller encoded the rows
+    and wrote the codebook itself (the cogroup of
+    :func:`build_ann_index_2level_distributed`). ``raw/`` is the
+    identity kernel, so it is a plain projection here. A present SQ8,
+    prefix or binary arm encodes against its stored grid and folds its
+    counters in (:func:`_accumulate`); a build finds none, as
+    :func:`_start_build` orphaned them. ``lsh_buckets/`` lands when
+    flagged."""
     tables = _table_map(index_dir)
-
-    def write(df: DataFrame, table: str) -> None:
-        (
-            df.repartition(*tables[table])
-            .write.mode(mode)
-            .partitionBy(*tables[table])
-            .parquet(M.table_path(index_dir, table))
-        )
-
     if codes is None:
         encoded = assigned.join(cents, list(_PARTS)) if residual else assigned
         if mode == "overwrite":
             _write_codebook_of(index_dir, encoded)
-        codes = _pq_codes(encoded, _load_codebook(spark, index_dir), residual)
-    write(codes.select("vec_id", *_PARTS, "codes"), "vectors")
-    write(assigned.select("vec_id", "embedding", *_PARTS), "raw")
-    if "sq8" in tables:
-        vmin, scale = _read_sq_stats(spark, index_dir)
-        sq8_new = assigned.select(
-            "vec_id",
-            *_PARTS,
-            _sq8_encode_udf(vmin, scale)(F.col("embedding")).alias("codes"),
-        )
-        write(sq8_new, "sq8")
-        _accumulate_sq8_counters(index_dir, lambda: _sq8_code_aggregate(sq8_new))
-        if "sq8_prefix" in tables:
-            pdims = int(M.read_meta(index_dir, _SQ8_PREFIX_DIMS_KEY))
-            write(
-                sq8_new.select(
-                    "vec_id", *_PARTS, F.slice("codes", 1, pdims).alias("codes")
-                ),
-                "sq8_prefix",
-            )
-    if "binary" in tables:
-        thresh = _read_bin_thresh(spark, index_dir)
-        bin_new = assigned.select(
-            "vec_id",
-            *_PARTS,
-            _binary_encode_udf(thresh)(F.col("embedding")).alias("words"),
-        )
-        write(bin_new, "binary")
-        _accumulate_binary_counters(
-            index_dir, lambda: _binary_ones_aggregate(bin_new)
-        )
-    if "lsh_buckets" in tables:
-        write(
-            S.lsh_buckets_long(assigned.select("vec_id", "embedding")).select(
-                "vec_id", "bucket", "table_id"
-            ),
-            "lsh_buckets",
-        )
+    for table, kernel in _kernels(spark, index_dir, tables).items():
+        if table == "raw":
+            df = assigned.select("vec_id", "embedding", *_PARTS)
+        elif table == "vectors" and codes is not None:
+            df = codes.select("vec_id", "codes", *_PARTS)
+        else:
+            df = _encoded(encoded if table == "vectors" else assigned, kernel, table)
+        _write_spark(df, index_dir, table, tables[table], mode)
+        if table in _ARMS:
+            _accumulate(index_dir, _ARMS[table], lambda: _count(_ARMS[table], df))
 
 
 def _land_local(
@@ -933,11 +981,11 @@ def _land_local(
     a: _Assigner | None,
 ) -> None:
     """:func:`_land_corpus` on the driver, for the collected rows ``t``
-    assigned to ``parts``: the same tables from the same numpy kernels,
-    encoded one UDF batch at a time and written with :func:`_write_pa`
-    (a build clears each table first); the drift counters are counted on
-    the same codes. A residual index passes its assigner ``a``, whose
-    ``c_mat`` gives each row its own centroid; a raw one passes None."""
+    assigned to ``parts``: the same kernels, run one UDF batch at a time,
+    their rows written with :func:`_write_pa` (a build clears each table
+    first) and the drift counters counted on the same codes. A residual
+    index passes its assigner ``a``, whose ``c_mat`` gives each row its
+    own centroid; a raw one passes None."""
     tables = _table_map(index_dir)
     ids = t["vec_id"].to_numpy()
     if mode == "overwrite":
@@ -948,63 +996,25 @@ def _land_local(
             _matrix(t["embedding"].take(head)),
             None if a is None else a.centroids_of(parts["cell"][head]),
         )
-    ic = _load_codebook(spark, index_dir)
-    if "sq8" in tables:
-        vmin, scale = _read_sq_stats(spark, index_dir)
-        pdims = M.read_meta(index_dir, _SQ8_PREFIX_DIMS_KEY, None)
-    if "binary" in tables:
-        thresh = _read_bin_thresh(spark, index_dir)
-    out = {name: [] for name in _CORPUS_TABLES if name in tables}
-    sq8_counts, ones = np.zeros(3, dtype=np.int64), 0
+    kernels = _kernels(spark, index_dir, tables)
+    out = {name: [] for name in kernels}
     for off, sl, x in _batches(spark, t):
         p = {c: v[off : off + len(x)] for c, v in parts.items()}
-
-        def rows(**cols) -> pa.Table:
-            return pa.table({"vec_id": sl["vec_id"], **cols, **p})
-
-        c = None if a is None else _int_centroids(a.centroids_of(p["cell"]))
-        codes = _pq_encode(x, ic, c)
-        out["vectors"].append(rows(codes=_list_array(codes)))
-        out["raw"].append(rows(embedding=sl["embedding"]))
-        if "sq8" in out:
-            c8 = _sq8_encode_np(x, vmin, scale).astype(np.int32)
-            out["sq8"].append(rows(codes=_list_array(c8)))
-            sq8_counts += (((c8 < 0) | (c8 > 255)).sum(), c8.size, len(c8))
-            if "sq8_prefix" in out:
-                out["sq8_prefix"].append(
-                    rows(codes=_list_array(c8[:, : int(pdims)]))
-                )
-        if "binary" in out:
-            words = _pack_bits(x > thresh[None, :])
-            out["binary"].append(rows(words=_list_array(words)))
-            ones += int(np.unpackbits(words.view(np.uint8)).sum())
-        if "lsh_buckets" in out:
-            b = S.lsh_bucket_strings(x)
-            out["lsh_buckets"].append(
-                pa.table(
-                    {
-                        "vec_id": np.repeat(ids[off : off + len(x)], S.N_TABLES),
-                        "bucket": pa.array(b.ravel(), pa.string()),
-                        "table_id": np.tile(
-                            np.arange(S.N_TABLES, dtype=np.int32), len(x)
-                        ),
-                    }
-                )
-            )
+        ci = None if a is None else _int_centroids(a.centroids_of(p["cell"]))
+        r = _Rows(sl["vec_id"], sl["embedding"], x, p["group"], p["cell"], ci)
+        for name, kernel in kernels.items():
+            out[name].append(pa.table(kernel(r)))
     for table, chunks in out.items():
-        if chunks:
-            _write_pa(
-                index_dir, table, pa.concat_tables(chunks), tables[table],
-                overwrite=mode == "overwrite",
-            )
-    if "sq8" in out:
-        _accumulate_sq8_counters(index_dir, lambda: tuple(sq8_counts))
-    if "binary" in out:
-        _accumulate_binary_counters(index_dir, lambda: (ones, len(ids)))
-
-
-# The corpus tables a landing writes, where :func:`_table_map` lists them.
-_CORPUS_TABLES = ("vectors", "raw", "sq8", "sq8_prefix", "binary", "lsh_buckets")
+        if not chunks:
+            continue
+        rows = pa.concat_tables(chunks)
+        _write_pa(
+            index_dir, table, rows, tables[table], overwrite=mode == "overwrite"
+        )
+        if table in _ARMS:
+            arm = _ARMS[table]
+            codes = _matrix(rows[arm.col], np.int64)
+            _accumulate(index_dir, arm, lambda: arm.count(codes))
 
 
 def _write_codebook(
@@ -1205,7 +1215,7 @@ def _scan(
     spark: SparkSession, index_dir: str, table: str, probes: list[tuple]
 ) -> DataFrame:
     """``table`` read with only the probed partitions."""
-    return spark.read.parquet(M.table_path(index_dir, table)).where(
+    return _table(spark, index_dir, table).where(
         _probe_predicate(probes)
     )
 
@@ -1698,7 +1708,7 @@ def ann_index_lsh_topk(
         F.lit(False),
     )
     buckets = _live(
-        spark, index_dir, spark.read.parquet(M.table_path(index_dir, "lsh_buckets")).where(pred)
+        spark, index_dir, _table(spark, index_dir, "lsh_buckets").where(pred)
     )
     cands = (
         buckets.join(F.broadcast(qb_df), ["table_id", "bucket"])
@@ -1706,7 +1716,7 @@ def ann_index_lsh_topk(
         .select("q_id", "vec_id")
         .dropDuplicates(["q_id", "vec_id"])
     )
-    raw = spark.read.parquet(M.table_path(index_dir, "raw")).select("vec_id", "embedding")
+    raw = _table(spark, index_dir, "raw").select("vec_id", "embedding")
     scored = (
         cands.join(raw, "vec_id")
         .join(F.broadcast(_queries_df(spark, queries)), "q_id")
@@ -1719,6 +1729,199 @@ def ann_index_lsh_topk(
     return S.topk_per_key(
         scored, "q_id", [F.col("sim").desc(), F.col("vec_id")], k
     )
+
+
+# --------------------------------------------------------------------------
+# The drift-audited derived arms (SQ8 and binary, below). Each is one
+# :class:`_Arm` record: a per-dim grid trained on the live ``raw/`` rows,
+# a code table encoded against it by one numpy kernel, and manifest
+# counters that track how far appends have walked from the grid. The
+# verbs below serve every arm; each arm's docstrings give its rule.
+
+
+class _Arm(NamedTuple):
+    """What tells one drift-audited arm from another."""
+
+    name: str  # the code table, and the stem of its retrain keys
+    label: str  # its name in the missing-arm error
+    key: str  # manifest flag: the arm is present and consistent
+    col: str  # the code column
+    dtype: type  # the code column's element type
+    stats: str  # the grid table
+    train: Callable  # per-dim (min, max) columns -> the grid's columns
+    load: Callable[[pa.Table], np.ndarray]  # grid rows -> (k, dims) grid
+    encode: Callable[[np.ndarray, np.ndarray], np.ndarray]  # grid, x -> codes
+    counters: tuple[str, ...]  # manifest counter keys; the last counts rows
+    count: Callable[[np.ndarray], tuple]  # codes -> counter increments
+    dims_key: str | None  # grid width stamp, when the fraction needs it
+    trained_rows: str  # manifest key: rows the grid trained on
+    trained_frac: str | None  # manifest key: the fraction at training
+    limit: float  # retrain once the fraction walks further than this
+    growth: float  # ... or the rows grow past this multiple of trained
+    evidence: tuple[str, str]  # names of the fraction and the growth
+    stat_cols: tuple[str, str]  # the same, as ann_index_stats columns
+
+
+def _require(index_dir: str, arm: _Arm) -> None:
+    if not M.read_meta(index_dir, arm.key, False):
+        raise ValueError(
+            f"no {arm.label} arm at {index_dir}: run "
+            f"add_{arm.name}_to_ann_index first"
+        )
+
+
+def _grid(index_dir: str, arm: _Arm) -> np.ndarray:
+    """``arm``'s stored grid — metadata-sized, cached like the other
+    quantizers."""
+    return M.cached_table(
+        index_dir,
+        arm.stats,
+        lambda: arm.load(_read_pa(index_dir, arm.stats).sort_by("dim")),
+    )
+
+
+def _encode(index_dir: str, arm: _Arm, x) -> np.ndarray:
+    """``arm``'s codes of the vector or rows ``x`` on the stored grid: the
+    query side of the arm's kernel."""
+    x = np.atleast_2d(np.asarray(x, dtype=np.float64))
+    return arm.encode(_grid(index_dir, arm), x)
+
+
+def _arm_rows(arm: _Arm, grid: np.ndarray, width: int | None, r: _Rows) -> dict:
+    """The kernel of ``arm``'s code table (of its leading ``width`` codes,
+    when given: the SQ8 prefix arm)."""
+    codes = arm.encode(grid, r.x)[:, :width].astype(arm.dtype)
+    return r.with_ids(**{arm.col: _list_array(codes)})
+
+
+def _count(arm: _Arm, df: DataFrame) -> tuple[int, ...]:
+    """``arm``'s counters over the code column of ``df``: the arm's count
+    kernel once per Arrow batch, the partials summed on the driver."""
+    count, names = arm.count, [f"c{i}" for i in range(len(arm.counters))]
+
+    def partials(batches):
+        for b in batches:
+            counts = count(_matrix(b.column(0), np.int64))
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([v], pa.int64()) for v in counts], names=names
+            )
+
+    schema = ", ".join(f"{n} long" for n in names)
+    t = df.select(arm.col).mapInArrow(partials, schema).toArrow()
+    return tuple(sum(t[n].to_pylist()) for n in names)
+
+
+def _stamp(index_dir: str, arm: _Arm, counts) -> None:
+    for key, value in zip(arm.counters, counts):
+        M.write_meta(index_dir, key, int(value))
+
+
+def _accumulate(index_dir: str, arm: _Arm, counts: Callable[[], tuple]) -> None:
+    """Append-time half of the drift accounting: fold the new rows'
+    counters — ``counts()``, one O(new) pass or the driver landing's
+    tally — into the manifest instead of an O(corpus) rescan per stats
+    call. No-op when the counters were never stamped (a store from
+    before this accounting): the exact-scan fallback covers it."""
+    if M.read_meta(index_dir, arm.counters[-1], None) is None:
+        return
+    old = [M.read_meta(index_dir, key, 0) for key in arm.counters]
+    _stamp(index_dir, arm, [a + b for a, b in zip(old, counts())])
+
+
+def _frac(index_dir: str, arm: _Arm, counts) -> float:
+    """The drift fraction of ``counts``: out-of-range components over
+    components (SQ8), set bits over rows x dims (binary)."""
+    dims = int(M.read_meta(index_dir, arm.dims_key, 0) or 0) if arm.dims_key else 1
+    den = counts[1] * dims
+    return float(counts[0]) / float(den) if den else 0.0
+
+
+def _drift_numbers(
+    spark: SparkSession, index_dir: str, arm: _Arm, exact: bool = False
+) -> tuple[float, int, int | None]:
+    """(frac, n_rows, rows_past_train) of ``arm`` — O(metadata) by
+    default: the manifest counters stamped at (re)train, accumulated at
+    append, and recomputed at compaction carry the exact physical-table
+    numbers, so a monitoring call reads a few keys instead of rescanning
+    a corpus-sized codes table (the r12 regression: the stats query
+    doubled in cost and scaled with the corpus). ``exact=True`` — and
+    the fallback for a store whose counters were never stamped — runs
+    the count kernel over the table; the two paths agree exactly
+    because every counter transition is counted on the same codes
+    (pinned by test). ``rows_past_train`` is the NET row growth since
+    the grid trained — deletes applied physically by a later compaction
+    shrink it and can make it negative (the corpus is smaller than the
+    grid ever saw: no drift pressure)."""
+    counts = [M.read_meta(index_dir, key, None) for key in arm.counters]
+    if exact or None in counts:
+        counts = _count(arm, _table(spark, index_dir, arm.name))
+    n_rows = int(counts[-1])
+    trained = M.read_meta(index_dir, arm.trained_rows, None)
+    past = None if trained is None else n_rows - int(trained)
+    return _frac(index_dir, arm, counts), n_rows, past
+
+
+def _retrain_due(spark: SparkSession, index_dir: str, arm: _Arm) -> dict | None:
+    """The drift check :func:`compact_ann_index` runs before its rewrite
+    — O(metadata) — returning the evidence dict when ``arm``'s retrain
+    rule fires, else None: the fraction walked more than ``arm.limit``
+    from its trained value (zero for SQ8, whose grid is the corpus's own
+    range), or the corpus grew past ``arm.growth`` times the rows the
+    grid trained on."""
+    frac, _, past = _drift_numbers(spark, index_dir, arm)
+    trained = M.read_meta(index_dir, arm.trained_rows, None)
+    base = M.read_meta(index_dir, arm.trained_frac) if arm.trained_frac else 0.0
+    walked = base is not None and abs(frac - float(base)) > arm.limit
+    grown = int(trained or 0) > 0 and past > arm.growth * int(trained)
+    if not (walked or grown):
+        return None
+    frac_name, past_name = arm.evidence
+    return {
+        frac_name: frac,
+        **({f"trained_{frac_name}": base} if arm.trained_frac else {}),
+        past_name: past,
+        "trained_rows": trained,
+    }
+
+
+def _derive(spark: SparkSession, index_dir: str, arm: _Arm) -> None:
+    """(Re)derive ``arm`` from the live ``raw/`` rows: one per-dim
+    min/max aggregate (map-side combined) trains the grid, the arm's
+    kernel re-encodes every stored vector map-only under the layout's
+    ``(group, cell)`` key, and the counters are stamped from the written
+    codes (with the rows and, where the rule reads one, the fraction the
+    grid trained on). The flag is lowered before the grid is touched and
+    raised only once the codes and counters have landed — for SQ8, also
+    a present prefix arm, re-derived at its width — so a crash in between
+    leaves searches failing loudly instead of scoring old codes against
+    a new grid, and re-running the verb completes it."""
+    _check_layout(index_dir)
+    M.write_meta(index_dir, arm.key, False)
+    raw = _live(spark, index_dir, _table(spark, index_dir, "raw"))
+    (
+        raw.select(F.posexplode("embedding").alias("dim", "xf"))
+        .select("dim", F.col("xf").cast("double").alias("x"))
+        .groupBy("dim")
+        .agg(*arm.train(F.min("x"), F.max("x")))
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(M.table_path(index_dir, arm.stats))
+    )
+    kernel = _kernels(spark, index_dir, (arm.name,))[arm.name]
+    _write_spark(
+        _encoded(raw, kernel, arm.name), index_dir, arm.name, _PARTS, "overwrite"
+    )
+    counts = _count(arm, _table(spark, index_dir, arm.name))
+    if arm.dims_key:
+        M.write_meta(index_dir, arm.dims_key, int(_grid(index_dir, arm).shape[1]))
+    M.write_meta(index_dir, arm.trained_rows, int(counts[-1]))
+    if arm.trained_frac:
+        M.write_meta(index_dir, arm.trained_frac, _frac(index_dir, arm, counts))
+    _stamp(index_dir, arm, counts)
+    pdims = M.read_meta(index_dir, _SQ8_PREFIX_DIMS_KEY, None)
+    if arm is _SQ8 and pdims is not None:
+        _write_sq8_prefix(spark, index_dir, int(pdims))
+    M.write_meta(index_dir, arm.key, True)
 
 
 # --------------------------------------------------------------------------
@@ -1776,51 +1979,52 @@ _SQ8_PREFIX_DIMS_KEY = "__sq8_prefix_dims__"
 # add_sq8_to_ann_index so the stats audit can report how far the corpus
 # has grown past the grid (the drift-age signal).
 _SQ8_TRAINED_ROWS_KEY = "__sq8_trained_rows__"
-def _read_sq_stats(spark: SparkSession, index_dir: str):
-    """(vmin, scale) per dim from the stored ``sq_stats/`` table —
-    metadata-sized, cached like the centroid/codebook quantizers."""
-
-    def load():
-        t = _read_pa(index_dir, "sq_stats").sort_by("dim")
-        vmin = t["vmin"].to_numpy().astype(np.float64)
-        vmax = t["vmax"].to_numpy().astype(np.float64)
-        return vmin, (vmax - vmin) / 255.0
-
-    return M.cached_table(index_dir, "sq_stats", load)
+# The documented SQ8 retrain rule (add_sq8_to_ann_index docstring) as
+# thresholds the maintenance pass acts on: retrain when more than ~1%
+# of code components sit outside the byte range, or when the corpus
+# has more than doubled past what the grid trained on.
+SQ8_RETRAIN_OOB_FRAC = 0.01
+SQ8_RETRAIN_GROWTH = 1.0
 
 
-def _require_sq8(index_dir: str) -> None:
-    if not M.read_meta(index_dir, _SQ8_KEY, False):
-        raise ValueError(
-            f"no SQ8 arm at {index_dir}: run add_sq8_to_ann_index first"
-        )
+def _sq8_grid(t: pa.Table) -> np.ndarray:
+    """The ``sq_stats/`` rows as the (vmin, scale) per-dim grid."""
+    vmin, vmax = (t[c].to_numpy().astype(np.float64) for c in ("vmin", "vmax"))
+    return np.stack([vmin, (vmax - vmin) / 255.0])
 
 
-def _sq8_encode_udf(vmin: np.ndarray, scale: np.ndarray):
-    """Vectorized SQ8 encoder over the ``embedding`` column — the same
-    Arrow-batched numpy-kernel convention as pq_encode_udf (a per-
-    element SQL ``transform`` lambda measured ~5x slower at 1M rows).
-    HALF_UP rounding (S._half_up ≡ Spark/DuckDB ``round``); a
+def _sq8_codes(grid: np.ndarray, x: np.ndarray) -> np.ndarray:
+    """SQ8 codes of the float64 rows ``x`` on the (vmin, scale) ``grid``:
+    HALF_UP rounding (S._half_up ≡ Spark/DuckDB ``round``), unclipped; a
     degenerate dimension (vmax == vmin ⇒ scale 0) encodes to 0 by
     convention."""
-
-    @F.pandas_udf("array<int>")
-    def encode(emb: pd.Series) -> pd.Series:
-        x = np.array(emb.tolist(), dtype=np.float64)
-        return pd.Series(list(_sq8_encode_np(x, vmin, scale).astype(np.int32)))
-
-    return encode
-
-
-def _sq8_encode_np(vec, vmin: np.ndarray, scale: np.ndarray) -> np.ndarray:
-    """SQ8 codes of a vector or of the rows of a matrix — the kernel of
-    :func:`_sq8_encode_udf`, the driver landing and the query side:
-    same grid, same HALF_UP rounding (S._half_up ≡ Spark round)."""
-    x = np.asarray(vec, dtype=np.float64)
+    vmin, scale = grid
     safe = np.where(scale == 0.0, 1.0, scale)
     return np.where(
         scale == 0.0, 0, S._half_up((x - vmin) / safe)
     ).astype(np.int64)
+
+
+_SQ8 = _Arm(
+    name="sq8",
+    label="SQ8",
+    key=_SQ8_KEY,
+    col="codes",
+    dtype=np.int32,
+    stats="sq_stats",
+    train=lambda lo, hi: [lo.alias("vmin"), hi.alias("vmax")],
+    load=_sq8_grid,
+    encode=_sq8_codes,
+    counters=(_SQ8_OOB_KEY, _SQ8_COMP_KEY, _SQ8_ROWS_KEY),
+    count=lambda c: (int(((c < 0) | (c > 255)).sum()), int(c.size), len(c)),
+    dims_key=None,
+    trained_rows=_SQ8_TRAINED_ROWS_KEY,
+    trained_frac=None,
+    limit=SQ8_RETRAIN_OOB_FRAC,
+    growth=SQ8_RETRAIN_GROWTH,
+    evidence=("oob_frac", "rows_past_grid"),
+    stat_cols=("sq8_oob_code_frac", "sq8_rows_past_grid"),
+)
 
 
 def _sq8_dists_udf(q_mat: np.ndarray):
@@ -1855,55 +2059,15 @@ def _sq8_dists_udf(q_mat: np.ndarray):
     return dists
 
 
-def _sq8_code_aggregate(codes_df: DataFrame) -> tuple[int, int, int]:
-    """(oob_components, total_components, n_rows) over a codes table or
-    batch — ONE map-side-combined aggregate; the per-element HOF is
-    fine because this runs at maintenance/append time, not on the
-    probe path."""
-    oob = F.size(
-        F.filter("codes", lambda c: (c < F.lit(0)) | (c > F.lit(255)))
-    )
-    row = codes_df.agg(
-        F.sum(oob).alias("oob"),
-        F.sum(F.size("codes")).alias("comp"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    return int(row.oob or 0), int(row.comp or 0), int(row.n)
-
-
-def _stamp_sq8_counters(index_dir: str, oob: int, comp: int, n: int) -> None:
-    M.write_meta(index_dir, _SQ8_OOB_KEY, int(oob))
-    M.write_meta(index_dir, _SQ8_COMP_KEY, int(comp))
-    M.write_meta(index_dir, _SQ8_ROWS_KEY, int(n))
-
-
-def _accumulate_sq8_counters(
-    index_dir: str, counts: Callable[[], tuple[int, int, int]]
-) -> None:
-    """Append-time half of the incremental drift accounting: fold the
-    new batch's (oob, components, rows) — ``counts()``, one O(new)
-    aggregate or the driver landing's tally — into the manifest counters
-    instead of an O(corpus) rescan per stats call. No-op when the
-    counters were never stamped (a store from before this accounting):
-    the exact-scan fallback covers it."""
-    if M.read_meta(index_dir, _SQ8_ROWS_KEY, None) is None:
-        return
-    oob, comp, n = counts()
-    _stamp_sq8_counters(
-        index_dir,
-        M.read_meta(index_dir, _SQ8_OOB_KEY, 0) + oob,
-        M.read_meta(index_dir, _SQ8_COMP_KEY, 0) + comp,
-        M.read_meta(index_dir, _SQ8_ROWS_KEY, 0) + n,
-    )
-
-
 def add_sq8_to_ann_index(spark: SparkSession, index_dir: str) -> None:
     """Derive the SQ8 arm from the stored ``raw/`` partitions: one
     64-row min/max aggregate (map-side combined) trains the grid, one
     map-only encode pass lands ``sq8/`` (vec_id, codes array<int>)
     under the layout's pruning key ``(group, cell)``, so probed reads
     stay partition-pruned. Idempotent (overwrite); re-run after a
-    rebuild to retrain the grid.
+    rebuild to retrain the grid. Until the new codes and counters have
+    landed the arm reads as absent, so a crash mid-derive makes the SQ8
+    searches fail loudly until the verb is re-run (:func:`_derive`).
 
     RETRAIN RULE: the grid is immutable once built (appends encode
     against it, unclipped, so search stays exact), but a drifting
@@ -1916,47 +2080,7 @@ def add_sq8_to_ann_index(spark: SparkSession, index_dir: str) -> None:
     than doubled past the grid, re-run this verb — it re-derives the
     grid AND re-encodes every stored vector from ``raw/``, so the arm
     comes back clean in one idempotent pass."""
-    _check_layout(index_dir)
-    raw = _live(
-        spark, index_dir, spark.read.parquet(M.table_path(index_dir, "raw"))
-    )
-    (
-        raw.select(F.posexplode("embedding").alias("dim", "xf"))
-        .select("dim", F.col("xf").cast("double").alias("x"))
-        .groupBy("dim")
-        .agg(F.min("x").alias("vmin"), F.max("x").alias("vmax"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(M.table_path(index_dir, "sq_stats"))
-    )
-    vmin, scale = _read_sq_stats(spark, index_dir)
-    (
-        raw.select(
-            "vec_id",
-            *_PARTS,
-            _sq8_encode_udf(vmin, scale)(F.col("embedding")).alias("codes"),
-        )
-        .repartition(*_PARTS)
-        .write.mode("overwrite")
-        .partitionBy(*_PARTS)
-        .parquet(M.table_path(index_dir, "sq8"))
-    )
-    # drift-age anchor + counter baseline: one aggregate over the
-    # just-written codes table stamps the trained row count AND the
-    # incremental drift counters (oob is 0 by construction right after
-    # a retrain — the grid is the corpus's own min/max — but it is
-    # measured, not assumed)
-    oob, comp, n_trained = _sq8_code_aggregate(
-        spark.read.parquet(M.table_path(index_dir, "sq8"))
-    )
-    M.write_meta(index_dir, _SQ8_TRAINED_ROWS_KEY, int(n_trained))
-    _stamp_sq8_counters(index_dir, oob, comp, n_trained)
-    M.write_meta(index_dir, _SQ8_KEY, True)
-    # a retrain moves the grid, so a materialized prefix arm re-derives
-    # from the fresh codes (same dims; no-op when no arm is present)
-    pdims = M.read_meta(index_dir, _SQ8_PREFIX_DIMS_KEY, None)
-    if pdims is not None:
-        add_sq8_prefix_to_ann_index(spark, index_dir, int(pdims))
+    _derive(spark, index_dir, _SQ8)
 
 
 def add_sq8_prefix_to_ann_index(
@@ -1985,16 +2109,17 @@ def add_sq8_prefix_to_ann_index(
     filter it through the same ``_live`` anti-join, and a grid retrain
     re-derives it automatically (:func:`add_sq8_to_ann_index`)."""
     _check_layout(index_dir)
-    _require_sq8(index_dir)
-    sq8 = spark.read.parquet(M.table_path(index_dir, "sq8"))
-    (
-        sq8.select(
-            "vec_id", *_PARTS, F.slice("codes", 1, dims).alias("codes")
-        )
-        .repartition(*_PARTS)
-        .write.mode("overwrite")
-        .partitionBy(*_PARTS)
-        .parquet(M.table_path(index_dir, "sq8_prefix"))
+    _require(index_dir, _SQ8)
+    _write_sq8_prefix(spark, index_dir, dims)
+
+
+def _write_sq8_prefix(spark: SparkSession, index_dir: str, dims: int) -> None:
+    """Land ``sq8_prefix/`` as the leading ``dims`` codes of ``sq8/`` and
+    stamp its width."""
+    sq8 = _table(spark, index_dir, "sq8")
+    _write_spark(
+        sq8.select("vec_id", *_PARTS, F.slice("codes", 1, dims).alias("codes")),
+        index_dir, "sq8_prefix", _PARTS, "overwrite",
     )
     M.write_meta(index_dir, _SQ8_PREFIX_DIMS_KEY, int(dims))
 
@@ -2041,13 +2166,10 @@ def ann_index_sq8_topk(
     codes column. Results are bit-identical either way (per-dim grid
     independence; pinned by test). The rerank stays exact
     full-dimension cosine."""
-    _require_sq8(index_dir)
+    _require(index_dir, _SQ8)
     shortlist = 4 * k if shortlist is None else shortlist
     probes = _probes(spark, index_dir, queries, n_probe, n_probe_groups)
-    vmin, scale = _read_sq_stats(spark, index_dir)
-    q_mat = np.vstack(
-        [_sq8_encode_np(vec, vmin, scale) for _, vec in queries]
-    )
+    q_mat = _encode(index_dir, _SQ8, [vec for _, vec in queries])
     if dims is not None:
         q_mat = q_mat[:, :dims]
     # probe rows carry the query's position in the closure matrix so the
@@ -2122,24 +2244,13 @@ _BINARY_ONES_KEY = "__binary_ones__"
 _BINARY_ROWS_KEY = "__binary_rows__"
 
 
-def _read_bin_thresh(spark: SparkSession, index_dir: str) -> np.ndarray:
-    """Per-dim midrange thresholds from the stored ``bin_stats/`` table
-    — metadata-sized, cached like the centroid/codebook/SQ-grid
-    quantizers."""
-
-    def load():
-        t = _read_pa(index_dir, "bin_stats").sort_by("dim")
-        return t["thresh"].to_numpy().astype(np.float64)
-
-    return M.cached_table(index_dir, "bin_stats", load)
-
-
-def _require_binary(index_dir: str) -> None:
-    if not M.read_meta(index_dir, _BINARY_KEY, False):
-        raise ValueError(
-            f"no binary arm at {index_dir}: run add_binary_to_ann_index"
-            " first"
-        )
+# The binary retrain rule (add_binary_to_ann_index docstring):
+# re-derive the thresholds when the corpus bit balance has walked more
+# than 5 points from the trained balance, or the corpus has more than
+# doubled past what the thresholds trained on. Search is exact either
+# way (a bit is a bit) — the rule protects shortlist DISCRIMINATION.
+BINARY_RETRAIN_BALANCE_DELTA = 0.05
+BINARY_RETRAIN_GROWTH = 1.0
 
 
 def _pack_bits(bits: np.ndarray) -> np.ndarray:
@@ -2160,25 +2271,28 @@ def _pack_bits(bits: np.ndarray) -> np.ndarray:
     return words.view(np.int64)
 
 
-def _binary_encode_udf(thresh: np.ndarray):
-    """Vectorized sign-bit encoder over the ``embedding`` column —
-    Arrow-batched numpy kernel, same convention as the SQ8/PQ encoders.
-    Build/append-time only: the probe path never runs Python."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def encode(emb: pd.Series) -> pd.Series:
-        if len(emb) == 0:
-            return pd.Series([], dtype=object)
-        return pd.Series(list(_pack_bits(_stack(emb) > thresh[None, :])))
-
-    return encode
-
-
-def _binary_encode_np(vec, thresh: np.ndarray) -> list[int]:
-    """Driver-side twin of :func:`_binary_encode_udf` for query
-    vectors — same thresholds, same strict >, same packing."""
-    x = np.asarray(vec, dtype=np.float64)
-    return [int(w) for w in _pack_bits((x > thresh)[None, :])[0]]
+_BINARY = _Arm(
+    name="binary",
+    label="binary",
+    key=_BINARY_KEY,
+    col="words",
+    dtype=np.int64,
+    stats="bin_stats",
+    train=lambda lo, hi: [((lo + hi) / F.lit(2.0)).alias("thresh")],
+    load=lambda t: t["thresh"].to_numpy().astype(np.float64)[None, :],
+    encode=lambda thresh, x: _pack_bits(x > thresh),
+    counters=(_BINARY_ONES_KEY, _BINARY_ROWS_KEY),
+    count=lambda w: (int(np.unpackbits(w.view(np.uint8)).sum()), len(w)),
+    dims_key=_BINARY_DIMS_KEY,
+    trained_rows=_BINARY_TRAINED_ROWS_KEY,
+    trained_frac=_BINARY_TRAINED_ONES_KEY,
+    limit=BINARY_RETRAIN_BALANCE_DELTA,
+    growth=BINARY_RETRAIN_GROWTH,
+    evidence=("ones_frac", "rows_past_train"),
+    stat_cols=("binary_ones_frac", "binary_rows_past_train"),
+)
+# The drift-audited arms by code table, in the order they are reported.
+_ARMS = {arm.name: arm for arm in (_SQ8, _BINARY)}
 
 
 def _hamming_col(words, q_words):
@@ -2195,47 +2309,15 @@ def _hamming_col(words, q_words):
     )
 
 
-def _binary_ones_aggregate(words_df: DataFrame) -> tuple[int, int]:
-    """(set_bits, n_rows) over a binary table or batch — one
-    map-side-combined aggregate; pad bits are zero so only real
-    components count. Maintenance/append-time only."""
-    ones = F.aggregate(
-        "words", F.lit(0), lambda acc, w: acc + F.bit_count(w)
-    )
-    row = words_df.agg(
-        F.sum(ones).alias("ones"), F.count(F.lit(1)).alias("n")
-    ).collect()[0]
-    return int(row.ones or 0), int(row.n)
-
-
-def _stamp_binary_counters(index_dir: str, ones: int, n: int) -> None:
-    M.write_meta(index_dir, _BINARY_ONES_KEY, int(ones))
-    M.write_meta(index_dir, _BINARY_ROWS_KEY, int(n))
-
-
-def _accumulate_binary_counters(
-    index_dir: str, counts: Callable[[], tuple[int, int]]
-) -> None:
-    """Append-time half of the bit-balance accounting: fold the new
-    batch's (ones, rows) — ``counts()`` — into the manifest counters,
-    so the balance audit stays O(metadata)."""
-    if M.read_meta(index_dir, _BINARY_ROWS_KEY, None) is None:
-        return
-    ones, n = counts()
-    _stamp_binary_counters(
-        index_dir,
-        M.read_meta(index_dir, _BINARY_ONES_KEY, 0) + ones,
-        M.read_meta(index_dir, _BINARY_ROWS_KEY, 0) + n,
-    )
-
-
 def add_binary_to_ann_index(spark: SparkSession, index_dir: str) -> None:
     """Derive the binary arm from the stored ``raw/`` partitions: one
     per-dim min/max aggregate trains the midrange thresholds
     (``bin_stats/``), one map-only encode pass lands ``binary/``
     (vec_id, words array<long>) under the layout's pruning key
     ``(group, cell)``, so probed reads stay partition-pruned.
-    Idempotent (overwrite); re-run to retrain after a rebuild.
+    Idempotent (overwrite); re-run to retrain after a rebuild. Until
+    the new words and counters have landed the arm reads as absent (the
+    same crash rule as :func:`add_sq8_to_ann_index`).
 
     RETRAIN RULE: the thresholds are immutable once trained (appends
     encode against them, so old and new words stay comparable), and —
@@ -2250,44 +2332,7 @@ def add_binary_to_ann_index(spark: SparkSession, index_dir: str) -> None:
     past the thresholds' training set, :func:`compact_ann_index`
     re-runs this verb automatically (same no-knob contract as the SQ8
     drift retrain)."""
-    _check_layout(index_dir)
-    raw = _live(
-        spark, index_dir, spark.read.parquet(M.table_path(index_dir, "raw"))
-    )
-    (
-        raw.select(F.posexplode("embedding").alias("dim", "xf"))
-        .select("dim", F.col("xf").cast("double").alias("x"))
-        .groupBy("dim")
-        .agg(((F.min("x") + F.max("x")) / F.lit(2.0)).alias("thresh"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(M.table_path(index_dir, "bin_stats"))
-    )
-    thresh = _read_bin_thresh(spark, index_dir)
-    (
-        raw.select(
-            "vec_id",
-            *_PARTS,
-            _binary_encode_udf(thresh)(F.col("embedding")).alias("words"),
-        )
-        .repartition(*_PARTS)
-        .write.mode("overwrite")
-        .partitionBy(*_PARTS)
-        .parquet(M.table_path(index_dir, "binary"))
-    )
-    ones, n_trained = _binary_ones_aggregate(
-        spark.read.parquet(M.table_path(index_dir, "binary"))
-    )
-    n_bits = n_trained * len(thresh)
-    M.write_meta(index_dir, _BINARY_DIMS_KEY, int(len(thresh)))
-    M.write_meta(index_dir, _BINARY_TRAINED_ROWS_KEY, int(n_trained))
-    M.write_meta(
-        index_dir,
-        _BINARY_TRAINED_ONES_KEY,
-        float(ones) / float(n_bits) if n_bits else 0.0,
-    )
-    _stamp_binary_counters(index_dir, ones, n_trained)
-    M.write_meta(index_dir, _BINARY_KEY, True)
+    _derive(spark, index_dir, _BINARY)
 
 
 def _binary_scored(
@@ -2300,8 +2345,8 @@ def _binary_scored(
     of ``binary/``, broadcast probe join (each probe row carries its
     query's packed words, so no second join attaches them), and the
     codegen Hamming column. Returns (q_id, vec_id, ham)."""
-    thresh = _read_bin_thresh(spark, index_dir)
-    q_words = {int(q): _binary_encode_np(vec, thresh) for q, vec in queries}
+    words = _encode(index_dir, _BINARY, [vec for _, vec in queries])
+    q_words = {int(q): w.tolist() for (q, _), w in zip(queries, words)}
     probes_df = _local_df(
         spark,
         [(*p, q_words[p[0]]) for p in probes],
@@ -2335,7 +2380,7 @@ def ann_index_binary_topk(
     query words ENTIRELY in whole-stage codegen (ties to lower
     vec_id), exact cosine rerank on the shortlist only. Output
     contract matches ann_index_ivf_topk: (q_id, vec_id, sim, rank)."""
-    _require_binary(index_dir)
+    _require(index_dir, _BINARY)
     shortlist = 4 * k if shortlist is None else shortlist
     probes = _probes(spark, index_dir, queries, n_probe, n_probe_groups)
     scored = _binary_scored(spark, index_dir, queries, probes)
@@ -2371,8 +2416,8 @@ def ann_index_cascade_topk(
     per-pair L2 is a ``zip_with`` square-sum in whole-stage codegen —
     so no stage evaluates Python. Requires both derived arms. Output
     contract matches ann_index_ivf_topk: (q_id, vec_id, sim, rank)."""
-    _require_binary(index_dir)
-    _require_sq8(index_dir)
+    _require(index_dir, _BINARY)
+    _require(index_dir, _SQ8)
     shortlist = 4 * k if shortlist is None else shortlist
     coarse_shortlist = (
         4 * shortlist if coarse_shortlist is None else coarse_shortlist
@@ -2384,12 +2429,9 @@ def ann_index_cascade_topk(
         [F.col("ham"), F.col("vec_id")],
         coarse_shortlist,
     ).select("q_id", "vec_id")
-    vmin, scale = _read_sq_stats(spark, index_dir)
+    q_codes = _encode(index_dir, _SQ8, [vec for _, vec in queries])
     q_codes_df = spark.createDataFrame(
-        [
-            (int(q), [int(c) for c in _sq8_encode_np(vec, vmin, scale)])
-            for q, vec in queries
-        ],
+        [(int(q), c.tolist()) for (q, _), c in zip(queries, q_codes)],
         "q_id long, q_codes array<int>",
     )
     sq8 = _live(spark, index_dir, _scan(spark, index_dir, "sq8", probes))
@@ -2433,113 +2475,9 @@ def _table_map(index_dir: str) -> dict:
     return tables
 
 
-_data_files = M.data_files
-
-
-# The documented SQ8 retrain rule (add_sq8_to_ann_index docstring) as
-# thresholds the maintenance pass acts on: retrain when more than ~1%
-# of code components sit outside the byte range, or when the corpus
-# has more than doubled past what the grid trained on.
-SQ8_RETRAIN_OOB_FRAC = 0.01
-SQ8_RETRAIN_GROWTH = 1.0
-
-# The binary retrain rule (add_binary_to_ann_index docstring):
-# re-derive the thresholds when the corpus bit balance has walked more
-# than 5 points from the trained balance, or the corpus has more than
-# doubled past what the thresholds trained on. Search is exact either
-# way (a bit is a bit) — the rule protects shortlist DISCRIMINATION.
-BINARY_RETRAIN_BALANCE_DELTA = 0.05
-BINARY_RETRAIN_GROWTH = 1.0
-
-
-def _binary_drift_numbers(
-    spark: SparkSession, index_dir: str, exact: bool = False
-) -> tuple[float, int, int | None]:
-    """(ones_frac, n_rows, rows_past_train) for the binary arm —
-    O(metadata) off the manifest counters; ``exact=True`` (and the
-    fallback for an unstamped store) recomputes from the table. Same
-    contract as :func:`_sq8_drift_numbers`."""
-    dims = int(M.read_meta(index_dir, _BINARY_DIMS_KEY, 0) or 0)
-    trained = M.read_meta(index_dir, _BINARY_TRAINED_ROWS_KEY, None)
-    if not exact:
-        ones = M.read_meta(index_dir, _BINARY_ONES_KEY, None)
-        n_rows = M.read_meta(index_dir, _BINARY_ROWS_KEY, None)
-        if ones is not None and n_rows is not None:
-            bits = int(n_rows) * dims
-            frac = float(ones) / float(bits) if bits else 0.0
-            past = (
-                int(n_rows) - int(trained) if trained is not None else None
-            )
-            return frac, int(n_rows), past
-    ones_n, n_rows = _binary_ones_aggregate(
-        spark.read.parquet(M.table_path(index_dir, "binary"))
-    )
-    bits = n_rows * dims
-    frac = float(ones_n) / float(bits) if bits else 0.0
-    past = int(n_rows) - int(trained) if trained is not None else None
-    return frac, int(n_rows), past
-
-
-def _binary_drift_retrain_due(
-    spark: SparkSession, index_dir: str
-) -> dict | None:
-    """The binary-arm drift check :func:`compact_ann_index` runs —
-    O(metadata), returning the evidence dict when the documented rule
-    fires, else None."""
-    if not M.read_meta(index_dir, _BINARY_KEY, False):
-        return None
-    frac, _n_rows, past = _binary_drift_numbers(spark, index_dir)
-    trained_frac = M.read_meta(index_dir, _BINARY_TRAINED_ONES_KEY, None)
-    trained = M.read_meta(index_dir, _BINARY_TRAINED_ROWS_KEY, None)
-    walked = (
-        trained_frac is not None
-        and abs(frac - float(trained_frac)) > BINARY_RETRAIN_BALANCE_DELTA
-    )
-    grown = (
-        past is not None
-        and trained is not None
-        and int(trained) > 0
-        and past > BINARY_RETRAIN_GROWTH * int(trained)
-    )
-    if walked or grown:
-        return {
-            "ones_frac": frac,
-            "trained_ones_frac": trained_frac,
-            "rows_past_train": past,
-            "trained_rows": trained,
-        }
-    return None
-
-
-def _sq8_drift_retrain_due(
-    spark: SparkSession, index_dir: str
-) -> dict | None:
-    """The drift check :func:`compact_ann_index` runs before its
-    rewrite — O(metadata) (manifest counters), returning the evidence
-    dict when the documented retrain rule fires, else None."""
-    if not M.read_meta(index_dir, _SQ8_KEY, False):
-        return None
-    frac, _n_rows, past = _sq8_drift_numbers(spark, index_dir)
-    trained = M.read_meta(index_dir, _SQ8_TRAINED_ROWS_KEY, None)
-    grown = (
-        past is not None
-        and trained is not None
-        and int(trained) > 0
-        and past > SQ8_RETRAIN_GROWTH * int(trained)
-    )
-    if frac > SQ8_RETRAIN_OOB_FRAC or grown:
-        return {
-            "oob_frac": frac,
-            "rows_past_grid": past,
-            "trained_rows": trained,
-        }
-    return None
-
-
 def compact_ann_index(
     spark: SparkSession,
     index_dir: str,
-    tables: tuple[str, ...] | None = None,
     sq8_drift_check: bool = True,
 ) -> dict:
     """Rewrite each partitioned artifact table so every partition holds
@@ -2566,13 +2504,11 @@ def compact_ann_index(
     PHYSICALLY here — the rewrite anti-joins each table against them,
     and once every partitioned table has been rewritten the tombstone
     side table is cleared: readers stop paying the logical filter, and
-    the deleted rows' storage is actually reclaimed. Partial-table
-    compactions keep the tombstones (the anti-join is idempotent, so a
-    survivor table stays correct either way).
+    the deleted rows' storage is actually reclaimed.
 
-    ``tables=None`` compacts every table appends grow: the corpus
-    tables and the flagged arms. ``fine/`` is left alone: it is
-    immutable, and every build writes it one file per group.
+    Every table appends grow is compacted: the corpus tables and the
+    flagged arms. ``fine/`` is left alone: it is immutable, and every
+    build writes it one file per group.
 
     DRIFT-TRIGGERED SQ8 RETRAIN (``sq8_drift_check``, default on): the
     engine's no-knob principle applied to the grid-drift audit — an
@@ -2597,41 +2533,21 @@ def compact_ann_index(
     _check_layout(index_dir)
     table_map = _table_map(index_dir)
     del table_map["fine"]
-    todo = tables or tuple(table_map)
-    retrain = (
-        _sq8_drift_retrain_due(spark, index_dir)
-        if sq8_drift_check and "sq8" in todo
-        else None
-    )
-    bin_retrain = (
-        _binary_drift_retrain_due(spark, index_dir)
-        if sq8_drift_check and "binary" in todo
-        else None
-    )
-    stats = M.compact_index(
-        spark, index_dir, table_map, todo, "vec_id"
-    )
-    if retrain:
-        add_sq8_to_ann_index(spark, index_dir)
-        M.write_meta(index_dir, "__sq8_last_retrain__", retrain)
-        stats["sq8_retrain"] = retrain
-    elif "sq8" in todo and M.read_meta(index_dir, _SQ8_KEY, False):
-        # the rewrite applied tombstones physically: restamp the drift
-        # counters exactly from the compacted table (one aggregate over
-        # data the compaction just rewrote anyway)
-        oob, comp, n = _sq8_code_aggregate(
-            spark.read.parquet(M.table_path(index_dir, "sq8"))
-        )
-        _stamp_sq8_counters(index_dir, oob, comp, n)
-    if bin_retrain:
-        add_binary_to_ann_index(spark, index_dir)
-        M.write_meta(index_dir, "__binary_last_retrain__", bin_retrain)
-        stats["binary_retrain"] = bin_retrain
-    elif "binary" in todo and M.read_meta(index_dir, _BINARY_KEY, False):
-        ones, n = _binary_ones_aggregate(
-            spark.read.parquet(M.table_path(index_dir, "binary"))
-        )
-        _stamp_binary_counters(index_dir, ones, n)
+    arms = [arm for name, arm in _ARMS.items() if name in table_map]
+    due = {
+        arm.name: sq8_drift_check and _retrain_due(spark, index_dir, arm)
+        for arm in arms
+    }
+    stats = M.compact_index(spark, index_dir, table_map, None, "vec_id")
+    for arm in arms:
+        if due[arm.name]:
+            _derive(spark, index_dir, arm)
+            M.write_meta(index_dir, f"__{arm.name}_last_retrain__", due[arm.name])
+            stats[f"{arm.name}_retrain"] = due[arm.name]
+        else:
+            # the rewrite applied tombstones physically: restamp the
+            # counters exactly from the table it just rewrote
+            _stamp(index_dir, arm, _count(arm, _table(spark, index_dir, arm.name)))
     return stats
 
 
@@ -2656,8 +2572,8 @@ def ann_index_stats(
     trained (negative after compacted deletes shrink the corpus below
     what the grid saw — read as max(0, value)). The drift numbers come
     from the O(metadata) manifest counters (see
-    :func:`_sq8_drift_numbers`); ``exact_drift=True`` recomputes them
-    with the full-table aggregate for audits. The retrain rule lives
+    :func:`_drift_numbers`); ``exact_drift=True`` recomputes them with
+    the full-table count for audits. The retrain rule lives
     on :func:`add_sq8_to_ann_index` and fires automatically from
     :func:`compact_ann_index`.
 
@@ -2668,71 +2584,15 @@ def ann_index_stats(
     retrain rule lives on :func:`add_binary_to_ann_index`."""
     _check_layout(index_dir)
     stats = M.index_stats(spark, index_dir, _table_map(index_dir))
-    if not M.read_meta(index_dir, _SQ8_KEY, False):
+    for arm in _ARMS.values():
+        frac = past = None
+        if M.read_meta(index_dir, arm.key, False):
+            frac, _, past = _drift_numbers(spark, index_dir, arm, exact_drift)
+        on = F.col("table") == arm.name
         stats = stats.withColumn(
-            "sq8_oob_code_frac", F.lit(None).cast("double")
-        ).withColumn("sq8_rows_past_grid", F.lit(None).cast("long"))
-    else:
-        frac, _n_rows, past = _sq8_drift_numbers(
-            spark, index_dir, exact=exact_drift
-        )
-        stats = stats.withColumn(
-            "sq8_oob_code_frac",
-            F.when(F.col("table") == "sq8", F.lit(frac)).cast("double"),
-        ).withColumn(
-            "sq8_rows_past_grid",
-            F.when(F.col("table") == "sq8", F.lit(past)).cast("long"),
-        )
-    if not M.read_meta(index_dir, _BINARY_KEY, False):
-        return stats.withColumn(
-            "binary_ones_frac", F.lit(None).cast("double")
-        ).withColumn("binary_rows_past_train", F.lit(None).cast("long"))
-    bfrac, _bn, bpast = _binary_drift_numbers(
-        spark, index_dir, exact=exact_drift
-    )
-    return stats.withColumn(
-        "binary_ones_frac",
-        F.when(F.col("table") == "binary", F.lit(bfrac)).cast("double"),
-    ).withColumn(
-        "binary_rows_past_train",
-        F.when(F.col("table") == "binary", F.lit(bpast)).cast("long"),
-    )
-
-
-def _sq8_drift_numbers(
-    spark: SparkSession, index_dir: str, exact: bool = False
-) -> tuple[float, int, int | None]:
-    """(oob_frac, n_rows, rows_past_grid) — O(metadata) by default: the
-    manifest counters stamped at retrain, accumulated at append, and
-    recomputed at compaction carry the exact physical-table numbers, so
-    a monitoring call reads three keys instead of rescanning a
-    corpus-sized codes table (the r12 regression: the stats query
-    doubled in cost and scaled with the corpus). ``exact=True`` — and
-    the fallback for a store whose counters were never stamped — runs
-    the one-aggregate scan; the two paths agree exactly because every
-    counter transition is measured from the same codes (pinned by
-    test). ``rows_past_grid`` is the NET row growth since the grid
-    trained — deletes applied physically by a later compaction shrink
-    it and can make it negative (the corpus is smaller than the grid
-    ever saw: no drift pressure); the retrain rule reads it as
-    max(0, value)."""
-    trained = M.read_meta(index_dir, _SQ8_TRAINED_ROWS_KEY, None)
-    if not exact:
-        oob = M.read_meta(index_dir, _SQ8_OOB_KEY, None)
-        comp = M.read_meta(index_dir, _SQ8_COMP_KEY, None)
-        n_rows = M.read_meta(index_dir, _SQ8_ROWS_KEY, None)
-        if oob is not None and comp is not None and n_rows is not None:
-            frac = float(oob) / float(comp) if comp else 0.0
-            past = (
-                int(n_rows) - int(trained) if trained is not None else None
-            )
-            return frac, int(n_rows), past
-    oob_n, comp_n, n_rows = _sq8_code_aggregate(
-        spark.read.parquet(M.table_path(index_dir, "sq8"))
-    )
-    frac = float(oob_n) / float(comp_n) if comp_n else 0.0
-    past = int(n_rows) - int(trained) if trained is not None else None
-    return frac, int(n_rows), past
+            arm.stat_cols[0], F.when(on, F.lit(frac)).cast("double")
+        ).withColumn(arm.stat_cols[1], F.when(on, F.lit(past)).cast("long"))
+    return stats
 
 
 def sq8_drift_stats(
@@ -2743,8 +2603,8 @@ def sq8_drift_stats(
     keep one row) — O(metadata) from the manifest counters by default,
     ``exact=True`` for the full-scan audit. Raises if the store has no
     SQ8 arm, like the sq8 readers."""
-    _require_sq8(index_dir)
-    frac, n_rows, past = _sq8_drift_numbers(spark, index_dir, exact=exact)
+    _require(index_dir, _SQ8)
+    frac, n_rows, past = _drift_numbers(spark, index_dir, _SQ8, exact)
     return spark.createDataFrame(
         [("sq8", n_rows, frac, past)],
         "table string, rows bigint, sq8_oob_code_frac double, "
@@ -3207,9 +3067,15 @@ def _nearest_group_udf(g_ids: np.ndarray, g_mat: np.ndarray):
     assert list(ids) == sorted(ids)
     g = g_mat.astype(np.float64)
     g_norm = S.row_norms(g)
-    return _cells_udf(
-        lambda x: ids[S.nearest_rounded(x, S.row_norms(x), g, g_norm)]
-    )
+
+    @F.pandas_udf(T.LongType())
+    def nearest(col: pd.Series) -> pd.Series:
+        if len(col) == 0:
+            return pd.Series([], dtype="int64")
+        x = _stack(col)
+        return pd.Series(ids[S.nearest_rounded(x, S.row_norms(x), g, g_norm)])
+
+    return nearest
 
 
 def _assign_cells_in_group(
@@ -3348,12 +3214,9 @@ def build_ann_index_2level_distributed(
 def _write_fine_df(index_dir: str, fine: DataFrame) -> None:
     """``fine/`` from a Spark frame (cell, group, c_emb): the distributed
     builds never collect the fine quantizer."""
-    (
-        fine.select("cell", "group", "c_emb")
-        .repartition("group")
-        .write.mode("overwrite")
-        .partitionBy("group")
-        .parquet(M.table_path(index_dir, "fine"))
+    _write_spark(
+        fine.select("cell", "group", "c_emb"), index_dir, "fine", ("group",),
+        "overwrite",
     )
 
 
@@ -3382,7 +3245,7 @@ def _assign_and_land_2level_distributed(
     # too) — cast to long so the cogroup keys match the UDF-typed group
     # (mismatched key types silently cogroup as disjoint keys and drop
     # rows) and the centroid join matches the assigned (group, cell)
-    fine = spark.read.parquet(M.table_path(index_dir, "fine")).select(
+    fine = _table(spark, index_dir, "fine").select(
         F.col("group").cast("long").alias("group"),
         F.col("cell").cast("long").alias("cell"),
         "c_emb",

@@ -492,10 +492,10 @@ def test_delete_tombstones_then_compaction_applies(spark, tmp_path):
     baseline = AI.ann_index_ivfpq_topk(spark, d, qs, K).collect()
     victims = sorted({int(r.vec_id) for r in baseline})
     assert victims
-    files_before = len(AI._data_files(M.table_path(d, "vectors")))
+    files_before = len(M.data_files(M.table_path(d, "vectors")))
     AI.delete_from_ann_index(spark, victims, d)
     # logical: nothing rewritten
-    assert len(AI._data_files(M.table_path(d, "vectors"))) == files_before
+    assert len(M.data_files(M.table_path(d, "vectors"))) == files_before
 
     for reader in (
         AI.ann_index_ivfpq_topk,
@@ -1044,8 +1044,8 @@ def test_sq8_arm_on_distributed_build_matches_driver_build(
     assert _rows(AI.ann_index_sq8_topk(spark, d, qs, K)) == _rows(
         AI.ann_index_sq8_topk(spark, d_ref, qs, K)
     )
-    va, sa = AI._read_sq_stats(spark, d)
-    vb, sb = AI._read_sq_stats(spark, d_ref)
+    va, sa = AI._grid(d, AI._SQ8)
+    vb, sb = AI._grid(d_ref, AI._SQ8)
     assert (va == vb).all() and (sa == sb).all()
 
 
@@ -1409,11 +1409,11 @@ def test_sq8_codes_match_driver_encoder_and_fit_byte_grid(spark, sq8_dir):
     the same grid bit for bit (the convention pair every quantized arm
     pins: F.round HALF_UP == S._half_up), and training-corpus codes all
     land in [0, 255] — the 1-byte/dim storage claim."""
-    vmin, scale = AI._read_sq_stats(spark, sq8_dir)
+    vmin, scale = AI._grid(sq8_dir, AI._SQ8)
     emb = load_table(spark, SF_SMOKE, "embeddings")
     want = {
         int(r.vec_id): [
-            int(c) for c in AI._sq8_encode_np(r.embedding, vmin, scale)
+            int(c) for c in AI._sq8_codes((vmin, scale), r.embedding)
         ]
         for r in emb.filter(F.col("vec_id").isin(QUERY_IDS)).collect()
     }
@@ -1446,11 +1446,11 @@ def test_sq8_append_uses_stored_grid_and_stays_exact(spark, tmp_path):
         == stats_before
     )
     # appended rows carry stored-grid codes (driver re-encode agrees)
-    vmin, scale = AI._read_sq_stats(spark, d)
+    vmin, scale = AI._grid(d, AI._SQ8)
     probe_ids = [int(half), int(half) + 1]
     want = {
         int(r.vec_id): [
-            int(c) for c in AI._sq8_encode_np(r.embedding, vmin, scale)
+            int(c) for c in AI._sq8_codes((vmin, scale), r.embedding)
         ]
         for r in emb.filter(F.col("vec_id").isin(probe_ids)).collect()
     }
@@ -1585,7 +1585,7 @@ def test_2level_sq8_arm_lifecycle(spark, tmp_path):
     # partitioned under the layout's composed key
     part_cols = {
         tuple(sorted(c for c in ("group", "cell") if f"{c}=" in p))
-        for p in AI._data_files(M.table_path(d, "sq8"))
+        for p in M.data_files(M.table_path(d, "sq8"))
     }
     assert part_cols == {("cell", "group")}
     assert _rows(AI.ann_index_sq8_topk(spark, d, qs, K, 10**9)) == (
@@ -1670,7 +1670,7 @@ def test_sq8_prefix_arm_bit_identity_and_lifecycle(spark, tmp_path, layout):
     assert M.read_meta(d_arm, AI._SQ8_PREFIX_DIMS_KEY) == S.MRL_DIMS
     assert {
         tuple(sorted(c for c in ("group", "cell") if f"{c}=" in p))
-        for p in AI._data_files(M.table_path(d_arm, "sq8_prefix"))
+        for p in M.data_files(M.table_path(d_arm, "sq8_prefix"))
     } == {("cell", "group")}
 
     def trunc(d, dims):
@@ -1746,8 +1746,8 @@ def test_sq8_drift_counters_match_exact_scan(spark, tmp_path):
     AI.add_sq8_to_ann_index(spark, d)
 
     def agree():
-        inc = AI._sq8_drift_numbers(spark, d)
-        ex = AI._sq8_drift_numbers(spark, d, exact=True)
+        inc = AI._drift_numbers(spark, d, AI._SQ8)
+        ex = AI._drift_numbers(spark, d, AI._SQ8, exact=True)
         assert inc == ex
         return inc
 
@@ -1798,14 +1798,14 @@ def test_compaction_auto_retrains_drifted_sq8(spark, tmp_path):
         ).alias("embedding"),
     )
     AI.append_to_ann_index(spark, drifted, d)
-    frac_before, _, _ = AI._sq8_drift_numbers(spark, d)
+    frac_before, _, _ = AI._drift_numbers(spark, d, AI._SQ8)
     assert frac_before > AI.SQ8_RETRAIN_OOB_FRAC
     res = AI.compact_ann_index(spark, d)
     assert res["sq8_retrain"]["oob_frac"] == frac_before
     assert M.read_meta(d, "__sq8_last_retrain__") == res["sq8_retrain"]
-    frac_after, n_rows, past = AI._sq8_drift_numbers(spark, d)
+    frac_after, n_rows, past = AI._drift_numbers(spark, d, AI._SQ8)
     assert frac_after == 0.0 and past == 0 and n_rows == n
-    assert AI._sq8_drift_numbers(spark, d, exact=True) == (0.0, n, 0)
+    assert AI._drift_numbers(spark, d, AI._SQ8, exact=True) == (0.0, n, 0)
     # the prefix arm re-derived against the retrained grid
     assert M.read_meta(d, AI._SQ8_PREFIX_DIMS_KEY) == S.MRL_DIMS
     assert (
@@ -1821,11 +1821,11 @@ def test_compaction_auto_retrains_drifted_sq8(spark, tmp_path):
     AI.build_ann_index(spark, emb.filter(F.col("vec_id") < 100), d2)
     AI.add_sq8_to_ann_index(spark, d2)
     AI.append_to_ann_index(spark, emb.filter(F.col("vec_id") >= 100), d2)
-    _, _, past2 = AI._sq8_drift_numbers(spark, d2)
+    _, _, past2 = AI._drift_numbers(spark, d2, AI._SQ8)
     assert past2 > AI.SQ8_RETRAIN_GROWTH * 100
     res2 = AI.compact_ann_index(spark, d2)
     assert res2["sq8_retrain"]["rows_past_grid"] == past2
-    assert AI._sq8_drift_numbers(spark, d2) == (0.0, n, 0)
+    assert AI._drift_numbers(spark, d2, AI._SQ8) == (0.0, n, 0)
     # and a clean store does NOT retrain
     res3 = AI.compact_ann_index(spark, d2)
     assert "sq8_retrain" not in res3
@@ -1886,7 +1886,7 @@ def test_binary_words_match_driver_encoder_and_midrange(spark, binary_dir):
         dtype=np.float64,
     )
     want_thresh = (mat.min(axis=0) + mat.max(axis=0)) / 2.0
-    thresh = AI._read_bin_thresh(spark, binary_dir)
+    thresh = AI._grid(binary_dir, AI._BINARY)[0]
     assert np.array_equal(thresh, want_thresh)
     stored = {
         int(r.vec_id): list(r.words)
@@ -1896,7 +1896,8 @@ def test_binary_words_match_driver_encoder_and_midrange(spark, binary_dir):
     }
     assert len(stored) == mat.shape[0]
     for vid in (0, 1, 17, len(stored) - 1):
-        assert stored[vid] == AI._binary_encode_np(mat[vid], thresh), vid
+        want = AI._encode(binary_dir, AI._BINARY, mat[vid])[0].tolist()
+        assert stored[vid] == want, vid
 
 
 def test_binary_rerank_with_full_shortlist_equals_ivf_flat(
@@ -1958,10 +1959,9 @@ def _check_binary_arm_lifecycle(spark, tmp_path, layout):
         _rows(spark.read.parquet(M.table_path(d, "bin_stats")))
         == stats_before
     ), layout
-    thresh = AI._read_bin_thresh(spark, d)
     probe_ids = [int(half), int(half) + 1]
     want = {
-        int(r.vec_id): AI._binary_encode_np(r.embedding, thresh)
+        int(r.vec_id): AI._encode(d, AI._BINARY, r.embedding)[0].tolist()
         for r in emb.filter(F.col("vec_id").isin(probe_ids)).collect()
     }
     got = {
@@ -1972,8 +1972,8 @@ def _check_binary_arm_lifecycle(spark, tmp_path, layout):
     }
     assert got == want, layout
     # counter-vs-exact equality across the append transition
-    assert AI._binary_drift_numbers(spark, d) == AI._binary_drift_numbers(
-        spark, d, exact=True
+    assert AI._drift_numbers(spark, d, AI._BINARY) == AI._drift_numbers(
+        spark, d, AI._BINARY, exact=True
     ), layout
     assert _rows(AI.ann_index_binary_topk(spark, d, qs, K, 10**9)) == _rows(
         AI.ann_index_ivf_topk(spark, d, qs, K)
@@ -2015,8 +2015,8 @@ def test_binary_tombstones_compaction_and_growth_retrain(spark, tmp_path):
     assert "binary" in res
     assert "binary_retrain" not in res  # balance unchanged, no growth
     assert _rows(AI.ann_index_binary_topk(spark, d, qs, K, 10**9)) == after
-    assert AI._binary_drift_numbers(spark, d) == AI._binary_drift_numbers(
-        spark, d, exact=True
+    assert AI._drift_numbers(spark, d, AI._BINARY) == AI._drift_numbers(
+        spark, d, AI._BINARY, exact=True
     )
 
     # growth-rule trigger: tiny trained prefix, large clean append
@@ -2024,11 +2024,11 @@ def test_binary_tombstones_compaction_and_growth_retrain(spark, tmp_path):
     AI.build_ann_index(spark, emb.filter(F.col("vec_id") < 100), d2)
     AI.add_binary_to_ann_index(spark, d2)
     AI.append_to_ann_index(spark, emb.filter(F.col("vec_id") >= 100), d2)
-    _, _, past = AI._binary_drift_numbers(spark, d2)
+    _, _, past = AI._drift_numbers(spark, d2, AI._BINARY)
     assert past > AI.BINARY_RETRAIN_GROWTH * 100
     res2 = AI.compact_ann_index(spark, d2)
     assert res2["binary_retrain"]["rows_past_train"] == past
-    frac, rows, past2 = AI._binary_drift_numbers(spark, d2)
+    frac, rows, past2 = AI._drift_numbers(spark, d2, AI._BINARY)
     assert (rows, past2) == (n, 0)
     # retrained thresholds are the FULL corpus's midrange now
     assert M.read_meta(d2, AI._BINARY_TRAINED_ROWS_KEY) == n
@@ -2487,6 +2487,54 @@ def test_small_build_and_append_start_one_job(spark, tmp_path, layout):
     with _max_partition_bytes(spark, est - 1):
         assert _jobs(spark, lambda: build(spark, first, d)) > 1
         assert _jobs(spark, lambda: append(spark, rest, d)) > 1
+
+
+@pytest.mark.parametrize("arm", ["sq8", "binary"])
+def test_rederive_crash_after_grid_write_fails_loudly_then_reruns_clean(
+    spark, tmp_path, monkeypatch, arm
+):
+    """A re-derive that dies after writing the new grid, before the codes
+    land, leaves the arm's search failing with the missing-arm error
+    instead of scoring the old codes against the new grid; re-running
+    the verb leaves every table and the manifest equal to an
+    uninterrupted re-derive (the SQ8 prefix arm included)."""
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    half = emb.count() // 2
+    derive = getattr(AI, f"add_{arm}_to_ann_index")
+    drifted = emb.filter(F.col("vec_id") >= half).select(
+        "vec_id",
+        F.transform(
+            "embedding", lambda x: (x * F.lit(3.0)).cast("float")
+        ).alias("embedding"),
+    )
+    crashed, clean = str(tmp_path / "crashed"), str(tmp_path / "clean")
+    for d in (crashed, clean):
+        AI.build_ann_index(spark, emb.filter(F.col("vec_id") < half), d)
+        AI.add_sq8_to_ann_index(spark, d)
+        AI.add_sq8_prefix_to_ann_index(spark, d)
+        AI.add_binary_to_ann_index(spark, d)
+        AI.append_to_ann_index(spark, drifted, d)
+    grid = {"sq8": "sq_stats", "binary": "bin_stats"}[arm]
+    before = _rows(spark.read.parquet(M.table_path(crashed, grid)))
+    load = M.cached_table
+
+    def crash(index_dir, table, fn):
+        if table == grid:
+            raise RuntimeError("crashed after the grid write")
+        return load(index_dir, table, fn)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(M, "cached_table", crash)
+        with pytest.raises(RuntimeError, match="crashed after the grid write"):
+            derive(spark, crashed)
+    assert _rows(spark.read.parquet(M.table_path(crashed, grid))) != before
+    search = getattr(AI, f"ann_index_{arm}_topk")
+    with pytest.raises(ValueError, match=f"run add_{arm}_to_ann_index first"):
+        search(spark, crashed, _queries(spark), K).collect()
+    derive(spark, crashed)
+    derive(spark, clean)
+    assert _index_state(crashed) == _index_state(clean)
+    assert _rows(search(spark, crashed, _queries(spark), K))
 
 
 def test_driver_rebuild_is_seen_by_the_next_search(spark, tmp_path):

@@ -692,14 +692,14 @@ def test_cli_maintain_index_verb(capsys, spark, tmp_path):
     AI.append_to_ann_index(spark, drifted, d)
     victims = [int(r.vec_id) for r in emb.limit(3).collect()]
     AI.delete_from_ann_index(spark, victims, d)
-    assert AI._sq8_drift_numbers(spark, d)[0] > AI.SQ8_RETRAIN_OOB_FRAC
+    assert AI._drift_numbers(spark, d, AI._SQ8)[0] > AI.SQ8_RETRAIN_OOB_FRAC
 
     cli.main(["--maintain-index", d, "--cpus", "8"])
     msg = capsys.readouterr().out
     assert "sq8 grid retrained" in msg
     assert "raw:" in msg and "files" in msg
     # healed: counters reset, tombstones applied physically
-    frac, n_rows, past = AI._sq8_drift_numbers(spark, d)
+    frac, n_rows, past = AI._drift_numbers(spark, d, AI._SQ8)
     assert frac == 0.0 and n_rows == n - len(victims)
     assert M.tombstones(spark, d) is None
     # prefix arm re-derived against the retrained grid

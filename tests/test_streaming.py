@@ -764,11 +764,11 @@ def test_incremental_ann_sq8_bootstrap_stream(spark, tmp_path):
     assert got == flat and got
 
     # appended (batch 2) rows carry BATCH-0-grid codes
-    vmin, scale = AI._read_sq_stats(spark, store)
+    vmin, scale = AI._grid(store, AI._SQ8)
     probe_ids = [int(2 * n // 3), int(2 * n // 3) + 1]
     want = {
         int(r.vec_id): [
-            int(c) for c in AI._sq8_encode_np(r.embedding, vmin, scale)
+            int(c) for c in AI._sq8_codes((vmin, scale), r.embedding)
         ]
         for r in emb.filter(F.col("vec_id").isin(probe_ids)).collect()
     }
@@ -980,7 +980,7 @@ def test_incremental_ann_binary_stream_and_resume_derive(spark, tmp_path):
     # stored thresholds are batch 0's midrange — not the union's
     import numpy as np
 
-    thresh = AI._read_bin_thresh(spark, store)
+    thresh = AI._grid(store, AI._BINARY)[0]
     b0 = np.array(
         emb.filter(F.col("vec_id") < n // 2)
         .select("embedding")
@@ -992,7 +992,7 @@ def test_incremental_ann_binary_stream_and_resume_derive(spark, tmp_path):
     )
     probe_ids = [int(n // 2), int(n // 2) + 1]
     want = {
-        int(r.vec_id): AI._binary_encode_np(r.embedding, thresh)
+        int(r.vec_id): AI._encode(store, AI._BINARY, r.embedding)[0].tolist()
         for r in emb.filter(F.col("vec_id").isin(probe_ids)).collect()
     }
     stored = {
@@ -1003,8 +1003,8 @@ def test_incremental_ann_binary_stream_and_resume_derive(spark, tmp_path):
     }
     assert stored == want
     # counters held exact across the streamed appends
-    assert AI._binary_drift_numbers(spark, store) == (
-        AI._binary_drift_numbers(spark, store, exact=True)
+    assert AI._drift_numbers(spark, store, AI._BINARY) == (
+        AI._drift_numbers(spark, store, AI._BINARY, exact=True)
     )
 
     # resume-derive: a store bootstrapped WITHOUT the arm gains it on

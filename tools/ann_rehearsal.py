@@ -179,7 +179,7 @@ def main() -> None:
     # The lifecycle a real user runs hourly: append_to_ann_index lands
     # one file-set per cell per batch, so files/cell grows with batch
     # count until compact_ann_index rewrites each partition to one set.
-    files_fresh = len(AI._data_files(M.table_path(index_dir, "vectors")))
+    files_fresh = len(M.data_files(M.table_path(index_dir, "vectors")))
     n_new = n_vecs // 10
     new_cols = F.array(
         *[F.rand(seed=2000 + j).cast("float") for j in range(DIM)]
@@ -192,14 +192,14 @@ def main() -> None:
     t0 = time.perf_counter()
     AI.append_to_ann_index(spark, emb_new, index_dir)
     t_append = time.perf_counter() - t0
-    files_appended = len(AI._data_files(M.table_path(index_dir, "vectors")))
+    files_appended = len(M.data_files(M.table_path(index_dir, "vectors")))
     t_search_post_append = best_of_3(
         lambda: AI.ann_index_ivfpq_topk(spark, index_dir, queries, 10)
     )
     t0 = time.perf_counter()
     compact_stats = AI.compact_ann_index(spark, index_dir)
     t_compact = time.perf_counter() - t0
-    files_compacted = len(AI._data_files(M.table_path(index_dir, "vectors")))
+    files_compacted = len(M.data_files(M.table_path(index_dir, "vectors")))
     t_search_post_compact = best_of_3(
         lambda: AI.ann_index_ivfpq_topk(spark, index_dir, queries, 10)
     )
